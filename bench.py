@@ -727,10 +727,13 @@ def bench_queries(spark: SparkSession) -> dict[str, float]:
 
     def _release_quant(key):
         # drop the family's index state the moment its timing + recall are
-        # done: unpersist the explicit codes cache and release the Python
-        # refs so broadcasts / checkpointed tuner frames become collectable
+        # done: release the resident cell table (IVF family), unpersist the
+        # explicit codes cache and release the Python refs so broadcasts /
+        # checkpointed tuner frames become collectable
         def _r():
             idx, _ = quant_state.pop(key, (None, None))
+            if hasattr(idx, "release"):
+                idx.release()
             df = getattr(idx, "codes", None)
             if df is not None:
                 try:

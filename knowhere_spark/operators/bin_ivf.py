@@ -9,7 +9,9 @@ Spark-first split of the reference's binary IVF:
   the driver safe at 100 TB while the full assignment pass stays
   distributed.
 - **Add**: hamming argmin against broadcast centroids via ``mapInPandas``
-  (Arrow-batched numpy popcount), assignments partitioned by ``cell_id``.
+  (Arrow-batched numpy popcount); the assignment table is the index's
+  resident cell table (operators/ivf.ResidentCells) and is saved
+  partitioned by ``cell_id``.
 - **Search**: probe ``nprobe`` nearest cells per query (driver-side over
   the tiny centroid matrix), broadcast the probe list, scan only probed
   cells with the binary distance kernel, partial-then-final top-k — the
@@ -35,6 +37,7 @@ from pyspark.sql.types import (
 
 from knowhere_spark.config import IndexType, IvfConfig, MetricType
 from knowhere_spark.functions.binary import binary_distance_expr
+from knowhere_spark.operators.ivf import ResidentCells, table_bytes
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 
 _TRAIN_SAMPLE_MAX = 100_000
@@ -71,7 +74,7 @@ def _binary_kmeans(X: np.ndarray, nlist: int, seed: int, n_iter: int = 10) -> np
     return C
 
 
-class BinaryIVFIndex:
+class BinaryIVFIndex(ResidentCells):
     """Built BIN_IVF_FLAT: packed-byte centroids + cell-partitioned rows."""
 
     def __init__(self, centroids: np.ndarray, assignments: DataFrame, config: IvfConfig):
@@ -146,7 +149,12 @@ class BinaryIVFIndex:
         import dataclasses
 
         cfg = dataclasses.replace(config, nlist=nlist)
-        return cls(centroids, assignments, cfg)
+        idx = cls(centroids, assignments, cfg)
+        idx.assignments = idx._make_resident(
+            assignments,
+            table_bytes(assignments.schema, n, {"vec": centroids.shape[1]}),
+        )
+        return idx
 
     def _scalar_payload(self) -> list[str]:
         return [
@@ -170,9 +178,10 @@ class BinaryIVFIndex:
             *scalars,
         )
         assigned = _assign_binary(new, self.centroids, tuple(scalars))
-        return BinaryIVFIndex(
-            self.centroids, self.assignments.unionByName(assigned), self.config
-        )
+        child = BinaryIVFIndex(self.centroids, self.assignments, self.config)
+        batch = child._append_resident(self, assigned)
+        child.assignments = self.assignments.unionByName(batch)
+        return child
 
     def probe_assign(self, queries: DataFrame, nprobe: int) -> DataFrame:
         """Distributed probe assignment: ``mapInPandas`` over the query set

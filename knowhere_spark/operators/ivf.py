@@ -12,16 +12,26 @@ Spark-first design (SURVEY.md §2.3):
   MLlib KMeans fit takes over only when ``nlist`` is so large the sample
   exceeds driver memory.  Either way the driver ends up holding only the
   ``nlist × dim`` centroid matrix.
-- **Add** = assign every row to its nearest centroid and persist the
-  assignment table **partitioned by cell_id**.  On disk this is Hive-style
-  Parquet partitioning, so a probe of ``nprobe`` cells prunes to
-  ``nprobe/nlist`` of the bytes — the scan-what-you-probe behavior that
-  makes IVF the DiskANN analog at 100 TB (index ≫ RAM, SURVEY.md §2.3).
-- **Search** = pick top-``nprobe`` cells per query (a driver-side numpy
-  computation over the tiny centroid matrix), broadcast the
-  ``(query, cell)`` probe list, join on ``cell_id`` (broadcast hash join,
-  no shuffle of the base side), exact distance within probed cells,
-  partial-then-final top-k.
+- **Add** = assign every row to its nearest centroid.  The assignment
+  table ``(id, cell_id, vec [, scalars])`` is the index's **resident
+  cell table**: ``build()``/``add()`` mark it persisted lazily
+  (``MEMORY_AND_DISK``, arrival-order layout, under a size gate — see
+  :class:`ResidentCells`), the first search fills it and every later
+  search, ``count()`` and ``save()`` read the cache instead of re-running
+  the read → round-robin Exchange → assignment GEMM tail.  ``save()``
+  writes it **partitioned by cell_id** (Hive-style Parquet), so a loaded
+  index probing ``nprobe`` cells prunes to ``nprobe/nlist`` of the bytes
+  — the scan-what-you-probe behavior that makes IVF the DiskANN analog
+  at 100 TB (index ≫ RAM, SURVEY.md §2.3).  Loaded indexes stay on that
+  pruned parquet path and are never made resident.
+- **Search** (``driver``) = pick top-``nprobe`` cells per query (a
+  driver-side numpy computation over the tiny centroid matrix), prune
+  the cell table to the probed cells with a literal IN-list, and score
+  them in one ``mapInArrow`` GEMM kernel that reads the query matrix and
+  the ``(nlist, nq)`` probe-membership matrix from a broadcast variable
+  (no join of the base side), then partial-then-final top-k.
+  ``distributed`` cogroups a cell-clustered view with the probe table
+  (:func:`clustered_search_view`).
 - **ensure_topk_full** (ivf.cc:753-762): queries that got fewer than k
   results re-probe all cells (driver loop, one extra job).
 
@@ -30,7 +40,7 @@ COSINE follows the reference's normalize-at-train contract
 becomes IP on normalized queries.  Centroids are kmeans means of the
 normalized vectors (not themselves unit-norm), which is why probe
 ranking uses the L2 assignment geometry, never raw IP against the
-centroids (see _probe_pairs).
+centroids (see probe_pairs).
 """
 
 from __future__ import annotations
@@ -42,6 +52,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knowhere_spark.config import IndexType, IvfConfig, MetricType
+from knowhere_spark.functions.arrowio import list_matrix
 from knowhere_spark.functions.distance import (
     distance_expr,
     normalize_expr,
@@ -50,9 +61,117 @@ from knowhere_spark.functions.distance import (
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 from knowhere_spark.sources.index_store import IndexStore
 
+#: Spark's "no estimate" size (``defaultSizeInBytes`` = Long.MaxValue):
+#: what the optimizer reports for Python-row and other RDD-backed frames
+_UNKNOWN_SIZE = (1 << 63) - 1
 
-class IVFFlatIndex:
-    """Built IVF_FLAT index: centroid matrix + cell-partitioned assignments."""
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` — plan statistics only (file
+    sizes for a parquet read), no Spark job.  ``None`` when Spark has no
+    estimate."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    size = int(stats.sizeInBytes())
+    return size if size < _UNKNOWN_SIZE else None
+
+
+def table_bytes(schema, n: int, widths: dict[str, int]) -> int:
+    """Size of ``n`` rows of ``schema``: ``widths`` gives the element count
+    of each array column (the byte length of a binary one); every other
+    column counts the width of its type (Spark's default sizes: 8 for
+    long/double, 4 for int/float, 20 for a string)."""
+    from pyspark.sql.types import ArrayType
+
+    def size(t) -> int:
+        return {"bigint": 8, "double": 8, "int": 4, "float": 4, "smallint": 2,
+                "tinyint": 1, "boolean": 1, "string": 20}.get(t.simpleString(), 8)
+
+    row = 0
+    for f in schema.fields:
+        t = f.dataType
+        if f.name in widths:
+            elem = size(t.elementType) if isinstance(t, ArrayType) else 1
+            row += widths[f.name] * elem
+        else:
+            row += size(t)
+    return n * row
+
+
+def persist_gated(frame: DataFrame, est_bytes: int | None) -> tuple[DataFrame, bool]:
+    """Mark ``frame`` persisted (lazily, ``MEMORY_AND_DISK``) when its
+    estimated size is known and within ``_BROADCAST_MAX_BYTES`` — the bound
+    HNSW applies to its resident graph.  Persisting keeps the frame's
+    partitions and row order; nothing runs until the first action fills
+    it.  Returns the frame and whether it was persisted."""
+    from pyspark import StorageLevel
+
+    from knowhere_spark.operators import hnsw
+
+    if est_bytes is None or est_bytes > hnsw._BROADCAST_MAX_BYTES:
+        return frame, False
+    return frame.persist(StorageLevel.MEMORY_AND_DISK), True
+
+
+class ResidentCells:
+    """Lifecycle of an IVF-family index's resident cell table.
+
+    ``build()`` marks the whole table resident (estimate: its row count ×
+    the row width); ``add()`` keeps the parent's resident segments and
+    marks only the new batch (estimate: the optimizer's, so a batch of
+    unknown size stays lazy) — no full-corpus copy.  An index derived by
+    ``add()`` shares its parent's segments, so ``release()`` on either
+    drops them for both; the other keeps answering from lineage.  Nested
+    builds (SQ/PQ/SCANN train through IVF_FLAT) make only the outer
+    family's encoded table resident."""
+
+    #: ``(frame, estimated bytes)`` per persisted segment this index reads
+    _segments: tuple[tuple[DataFrame, int], ...] = ()
+    #: every row of the table reads from a resident segment
+    resident: bool = False
+    _clustered_assign: DataFrame | None = None
+
+    @property
+    def resident_bytes_est(self) -> int:
+        """Estimated bytes of the segments this index keeps resident."""
+        return sum(est for _, est in self._segments)
+
+    def _make_resident(self, table: DataFrame, est_bytes: int | None) -> DataFrame:
+        table, ok = persist_gated(table, est_bytes)
+        self._segments = ((table, est_bytes),) if ok else ()
+        self.resident = ok
+        return table
+
+    def _append_resident(self, parent: "ResidentCells", batch: DataFrame) -> DataFrame:
+        """Adopt ``parent``'s segments plus ``batch`` (persisted under the
+        gate); ``parent``'s superseded clustered view is unpersisted."""
+        est = estimated_bytes(batch)
+        batch, ok = persist_gated(batch, est)
+        self._segments = parent._segments + (((batch, est),) if ok else ())
+        self.resident = parent.resident and ok
+        parent._drop_clustered_view()
+        return batch
+
+    def resident_metrics(self) -> dict:
+        return {"resident": self.resident,
+                "resident_bytes_est": self.resident_bytes_est}
+
+    def release(self) -> None:
+        """Unpersist the resident segments and the clustered search view;
+        the index stays usable and recomputes from lineage."""
+        for frame, _ in self._segments:
+            frame.unpersist()
+        self._segments = ()
+        self.resident = False
+        self._drop_clustered_view()
+
+    def _drop_clustered_view(self) -> None:
+        if self._clustered_assign is not None:
+            self._clustered_assign.unpersist()
+            self._clustered_assign = None
+
+
+class IVFFlatIndex(ResidentCells):
+    """Built IVF_FLAT index: centroid matrix + resident cell table."""
 
     #: train-sample collect threshold: rows*dim <= 2^25 (~268 MB fp64).
     #: At 256 points/centroid this covers nlist up to ~1024 at dim 128 —
@@ -107,7 +226,35 @@ class IVFFlatIndex:
         scalar_partition_cols=...)``, prunes parquet partitions outright
         (the reference's scalar-filter-aware MaterializedViewSearchInfo,
         include/knowhere/comp/materialized_view.h:23-36, re-expressed as
-        Spark partition layout)."""
+        Spark partition layout).
+
+        The assignment table is made resident lazily (no extra job)."""
+        idx = cls._train_assign(
+            base_df, config, id_col=id_col, vec_col=vec_col,
+            index_type=index_type, scalar_cols=scalar_cols,
+        )
+        m = idx.last_metrics
+        idx.assignments = idx._make_resident(
+            idx.assignments,
+            table_bytes(idx.assignments.schema, m["n"], {"vec": m["dim"]}),
+        )
+        m.update(idx.resident_metrics())
+        return idx
+
+    @classmethod
+    def _train_assign(
+        cls,
+        base_df: DataFrame,
+        config: IvfConfig,
+        *,
+        id_col: str = "id",
+        vec_col: str = "vec",
+        index_type: IndexType = IndexType.IVF_FLAT,
+        scalar_cols: tuple[str, ...] | list[str] = (),
+    ) -> "IVFFlatIndex":
+        """:meth:`build` without residency: the assignment table stays a
+        lazy plan.  The quantized families train through this and make
+        only their own encoded table resident."""
         from knowhere_spark.functions.distance import numpy_kmeans
         from knowhere_spark.tracing import OpMetrics, op_description
 
@@ -239,13 +386,13 @@ class IVFFlatIndex:
         )
         if metric == MetricType.COSINE:
             new = new.select("id", normalize_expr(F.col("vec")).alias("vec"), *extra)
-        assigned = _assign_cells(new, self.centroids, extra)
-        return IVFFlatIndex(
-            self.centroids,
-            self.assignments.unionByName(assigned),
-            self.config,
+        child = IVFFlatIndex(
+            self.centroids, self.assignments, self.config,
             index_type=self.index_type,
         )
+        batch = child._append_resident(self, _assign_cells(new, self.centroids, extra))
+        child.assignments = self.assignments.unionByName(batch)
+        return child
 
     #: auto-strategy cutover: beyond this many queries the driver no longer
     #: collects the query set; probe assignment and scoring both distribute
@@ -305,6 +452,7 @@ class IVFFlatIndex:
             op=f"{self.index_type.value}.search", k=k, nprobe=nprobe,
             nlist=self.config.nlist, strategy=strategy,
             rows_scanned=spark.sparkContext.accumulator(0),
+            **self.resident_metrics(),
         )
         m["description"] = op_description(
             spark.sparkContext, m["op"], k=k, nprobe=nprobe, strategy=strategy
@@ -324,13 +472,13 @@ class IVFFlatIndex:
             qmat = qmat / qnorm
 
         with timer.stage("probe_sec"):
-            pairs = self._probe_pairs(qids, qmat, nprobe)
+            pairs = probe_pairs(self.centroids, qids, qmat, nprobe)
         m["nq"] = len(qids)
         m["cells_probed"] = len(pairs)
         with timer.stage("scan_plan_sec"):
-            out = self._search_probed(
-                spark, pairs, qids, qmat, k, metric, filter_expr,
-                rows_acc=m["rows_scanned"],
+            out = scan_probed_topk(
+                self.assignments, self.config.nlist, pairs, qids, qmat, k,
+                metric, filter_expr, rows_acc=m["rows_scanned"],
             )
 
         if self.config.ensure_topk_full:
@@ -355,9 +503,9 @@ class IVFFlatIndex:
                     for c in range(self.config.nlist)
                 ]
                 m["cells_probed"] = m.get("cells_probed", 0) + len(all_pairs)
-                refill_out = self._search_probed(
-                    spark, all_pairs, qids, qmat, k, metric, filter_expr,
-                    rows_acc=m["rows_scanned"],
+                refill_out = scan_probed_topk(
+                    self.assignments, self.config.nlist, all_pairs, qids,
+                    qmat, k, metric, filter_expr, rows_acc=m["rows_scanned"],
                 )
                 kept = out.filter(~F.col("query_id").isin([int(qids[i]) for i in refill]))
                 out = kept.unionByName(refill_out)
@@ -374,24 +522,6 @@ class IVFFlatIndex:
                 .collect()
             }
         return self._cell_counts
-
-    def _probe_pairs(self, qids: np.ndarray, qmat: np.ndarray, nprobe: int):
-        """Driver-side top-nprobe cells per query over the tiny centroid
-        matrix → bare (query_id, cell_id) pairs.
-
-        Probe ranking uses **L2 — the assignment geometry** — for every
-        float metric: cells are L2-Voronoi regions (_assign_cells), and
-        COSINE data/queries are already normalized, so nearest-by-L2 IS
-        the cell ordering consistent with where vectors live.  Ranking by
-        raw IP against unnormalized centroids would disagree with
-        assignment (a query equal to a stored vector could miss its own
-        cell).  faiss probes with the quantizer's own metric for the same
-        reason; scoring inside cells still uses the true metric."""
-        d = pairwise_distances(self.centroids, qmat, MetricType.L2)   # (nlist, nq)
-        order = np.argsort(d, axis=0, kind="stable")[:nprobe, :]      # (nprobe, nq)
-        return [
-            (int(qids[qi]), int(c)) for qi in range(len(qids)) for c in order[:, qi]
-        ]
 
     def probe_assign(self, queries: DataFrame, nprobe: int) -> DataFrame:
         """Distributed probe assignment — see :func:`probe_assign_df`."""
@@ -483,105 +613,6 @@ class IVFFlatIndex:
         )
         return apply_range_bounds(out, self.config, already_bounded=True)
 
-    def _search_probed(self, spark, pairs, qids, qmat, k, metric, filter_expr,
-                       rows_acc=None):
-        """Partial-then-final top-k over probed cells.
-
-        The scan is a GEMM kernel per partition emitting at most
-        ``partitions·nq·k`` rows into the final window — the same
-        parallelism inversion as BruteForce's gemm path (SURVEY.md §3.2);
-        a naive SQL-distance + global window would shuffle every scored
-        candidate instead."""
-        import pandas as pd
-
-        from knowhere_spark.operators.brute_force import RESULT_SCHEMA
-
-        cells = sorted({c for _, c in pairs})
-        cand = self.assignments
-        if filter_expr is not None:
-            cand = cand.filter(filter_expr)
-        # literal IN-list → partition pruning when assignments are read from
-        # a cell-partitioned parquet index (see save/load)
-        cand = cand.filter(F.col("cell_id").isin(cells))
-
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        qids_arr = np.asarray(qids, dtype=np.int64)
-        qmat = np.asarray(qmat, dtype=np.float64)
-        # (nlist, nq) boolean probe-membership matrix: one fancy-index per
-        # partition batch replaces the former per-query np.isin over the
-        # cell column (O(nq·n) Python-side mask work per batch)
-        qcol = {int(q): i for i, q in enumerate(qids_arr)}
-        probe_matrix = np.zeros((self.config.nlist, len(qids_arr)), dtype=bool)
-        for qid, cell in pairs:
-            probe_matrix[int(cell), qcol[int(qid)]] = True
-        bc = spark.sparkContext.broadcast(
-            (qids_arr, qmat, probe_matrix, dist_metric.value)
-        )
-        largest = dist_metric.is_similarity
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
-            )
-
-            b_qids, b_qmat, b_member, dm = bc.value
-            dm = MetricType(dm)
-            nq = len(b_qids)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                X = list_matrix(tbl, "vec")
-                ids = scalar_column(tbl, "id", np.int64)
-                cell = scalar_column(tbl, "cell_id", np.int64)
-                n = len(ids)
-                if rows_acc is not None:
-                    rows_acc.add(n)
-                dist = pairwise_distances(X, b_qmat, dm)      # (n, nq)
-                member = b_member[cell]                       # (n, nq)
-                key = -dist if largest else dist
-                key = np.where(member, key, np.inf)           # mask non-probed
-                kk = min(k, n)
-                sel = np.zeros((n, nq), dtype=bool)
-                if kk < n:
-                    part = np.argpartition(key, kk - 1, axis=0)[:kk]  # (kk, nq)
-                    col = np.arange(nq)
-                    sel[part, col[None, :]] = True
-                    # widen to rows tied at a FINITE per-query boundary so a
-                    # smallest-id duplicate can't be dropped at the partial
-                    # cut (the final window tie-breaks (distance, id))
-                    bnd = key[part, col[None, :]].max(axis=0)         # (nq,)
-                    finite_b = np.isfinite(bnd)
-                    if finite_b.any():
-                        sel |= (key == bnd[None, :]) & finite_b[None, :]
-                else:
-                    sel[:] = True
-                sel &= member
-                rows_f, q_f = np.nonzero(sel)
-                if len(rows_f) == 0:
-                    continue
-                yield pa.record_batch(
-                    [
-                        pa.array(b_qids[q_f], type=pa.int64()),
-                        pa.array(ids[rows_f], type=pa.int64()),
-                        pa.array(dist[rows_f, q_f], type=pa.float64()),
-                    ],
-                    names=["query_id", "neighbor_id", "distance"],
-                )
-
-        scored = cand.mapInArrow(kernel, RESULT_SCHEMA)
-        return topk_per_key(
-            scored,
-            "query_id",
-            "distance",
-            k,
-            ascending=not metric.is_similarity,
-            tie_breaker="neighbor_id",
-        )
-
     # -- RangeSearch (index_node.h:169-326; ivf.cc range path) ----------------
     def range_search(
         self,
@@ -630,7 +661,7 @@ class IVFFlatIndex:
             [(int(q), [float(x) for x in qmat[i]]) for i, q in enumerate(qids)],
             "query_id long, qvec array<double>",
         )
-        pairs = self._probe_pairs(qids, qmat, nprobe)
+        pairs = probe_pairs(self.centroids, qids, qmat, nprobe)
         probe_df = spark.createDataFrame(pairs, "query_id long, cell_id int")
         cand = self.assignments
         if filter_expr is not None:
@@ -757,6 +788,137 @@ class IVFFlatIndex:
         return cls(centroids, assignments, cfg, index_type=IndexType(m["index_type"]))
 
 
+def probe_pairs(centroids: np.ndarray, qids: np.ndarray, qmat: np.ndarray, nprobe: int):
+    """Driver-side top-nprobe cells per query over the tiny centroid
+    matrix → bare (query_id, cell_id) pairs.
+
+    Probe ranking uses **L2 — the assignment geometry** — for every
+    float metric: cells are L2-Voronoi regions (_assign_cells), and
+    COSINE data/queries are already normalized, so nearest-by-L2 IS
+    the cell ordering consistent with where vectors live.  Ranking by
+    raw IP against unnormalized centroids would disagree with
+    assignment (a query equal to a stored vector could miss its own
+    cell).  faiss probes with the quantizer's own metric for the same
+    reason; scoring inside cells still uses the true metric."""
+    d = pairwise_distances(centroids, qmat, MetricType.L2)   # (nlist, nq)
+    order = np.argsort(d, axis=0, kind="stable")[:nprobe, :]  # (nprobe, nq)
+    return [
+        (int(qids[qi]), int(c)) for qi in range(len(qids)) for c in order[:, qi]
+    ]
+
+
+def scan_probed_topk(
+    table: DataFrame,
+    nlist: int,
+    pairs,
+    qids,
+    qmat,
+    k: int,
+    metric: MetricType,
+    filter_expr: Column | str | None = None,
+    *,
+    rows_acc=None,
+    row_matrix=None,
+) -> DataFrame:
+    """Driver-strategy partial-then-final top-k over the probed cells of
+    a cell table — shared by IVF_FLAT and the quantized families.
+
+    The scan is a GEMM kernel per partition emitting at most
+    ``partitions·nq·k`` rows into the final window — the same
+    parallelism inversion as BruteForce's gemm path (SURVEY.md §3.2);
+    a naive SQL-distance + global window would shuffle every scored
+    candidate instead.  ``row_matrix(tbl) -> (n, dim) float64`` turns a
+    batch into the GEMM operand: raw vectors by default, decoded codes
+    for the quantized families."""
+    from knowhere_spark.operators.brute_force import RESULT_SCHEMA
+
+    if row_matrix is None:
+        row_matrix = lambda tbl: list_matrix(tbl, "vec")
+    spark = table.sparkSession
+    cells = sorted({c for _, c in pairs})
+    cand = table
+    if filter_expr is not None:
+        cand = cand.filter(filter_expr)
+    # literal IN-list → partition pruning when assignments are read from
+    # a cell-partitioned parquet index (see save/load)
+    cand = cand.filter(F.col("cell_id").isin(cells))
+
+    dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
+    qids_arr = np.asarray(qids, dtype=np.int64)
+    qmat = np.asarray(qmat, dtype=np.float64)
+    # (nlist, nq) boolean probe-membership matrix: one fancy-index per
+    # partition batch replaces the former per-query np.isin over the
+    # cell column (O(nq·n) Python-side mask work per batch)
+    qcol = {int(q): i for i, q in enumerate(qids_arr)}
+    probe_matrix = np.zeros((nlist, len(qids_arr)), dtype=bool)
+    for qid, cell in pairs:
+        probe_matrix[int(cell), qcol[int(qid)]] = True
+    bc = spark.sparkContext.broadcast(
+        (qids_arr, qmat, probe_matrix, dist_metric.value)
+    )
+    largest = dist_metric.is_similarity
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        from knowhere_spark.functions.arrowio import scalar_column
+
+        b_qids, b_qmat, b_member, dm = bc.value
+        dm = MetricType(dm)
+        nq = len(b_qids)
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            X = row_matrix(tbl)
+            ids = scalar_column(tbl, "id", np.int64)
+            cell = scalar_column(tbl, "cell_id", np.int64)
+            n = len(ids)
+            if rows_acc is not None:
+                rows_acc.add(n)
+            dist = pairwise_distances(X, b_qmat, dm)      # (n, nq)
+            member = b_member[cell]                       # (n, nq)
+            key = -dist if largest else dist
+            key = np.where(member, key, np.inf)           # mask non-probed
+            kk = min(k, n)
+            sel = np.zeros((n, nq), dtype=bool)
+            if kk < n:
+                part = np.argpartition(key, kk - 1, axis=0)[:kk]  # (kk, nq)
+                col = np.arange(nq)
+                sel[part, col[None, :]] = True
+                # widen to rows tied at a FINITE per-query boundary so a
+                # smallest-id duplicate can't be dropped at the partial
+                # cut (the final window tie-breaks (distance, id))
+                bnd = key[part, col[None, :]].max(axis=0)         # (nq,)
+                finite_b = np.isfinite(bnd)
+                if finite_b.any():
+                    sel |= (key == bnd[None, :]) & finite_b[None, :]
+            else:
+                sel[:] = True
+            sel &= member
+            rows_f, q_f = np.nonzero(sel)
+            if len(rows_f) == 0:
+                continue
+            yield pa.record_batch(
+                [
+                    pa.array(b_qids[q_f], type=pa.int64()),
+                    pa.array(ids[rows_f], type=pa.int64()),
+                    pa.array(dist[rows_f, q_f], type=pa.float64()),
+                ],
+                names=["query_id", "neighbor_id", "distance"],
+            )
+
+    scored = cand.mapInArrow(kernel, RESULT_SCHEMA)
+    return topk_per_key(
+        scored,
+        "query_id",
+        "distance",
+        k,
+        ascending=not metric.is_similarity,
+        tie_breaker="neighbor_id",
+    )
+
+
 def probe_assign_df(
     queries: DataFrame, centroids: np.ndarray, metric: MetricType, nprobe: int
 ) -> DataFrame:
@@ -775,7 +937,7 @@ def probe_assign_df(
         StructType,
     )
 
-    # probe ranking = assignment geometry (L2 — see _probe_pairs); only
+    # probe ranking = assignment geometry (L2 — see probe_pairs); only
     # query normalization depends on the true metric
     spark = queries.sparkSession
     normalize = metric == MetricType.COSINE
@@ -855,29 +1017,30 @@ def probe_assign_df(
     return ensure_parallelism(queries).mapInArrow(kernel, schema)
 
 
-def clustered_search_view(index, frame: DataFrame | None = None) -> DataFrame:
-    """Cell-clustered, SEARCH-ONLY view of an index's assignments.
+def clustered_search_view(index: ResidentCells, frame: DataFrame | None = None) -> DataFrame:
+    """Cell-clustered, SEARCH-ONLY view of an index's cell table.
 
-    Lazily repartitions by ``cell_id`` and persists on the index object,
-    so every distributed cogroup search after the first reads a corpus
-    side that already satisfies the cogroup's clustering — the
+    Lazily repartitions by ``cell_id`` and, under the same size gate as
+    the resident table (:func:`persist_gated`), persists it on the index
+    object, so every distributed cogroup search after the first reads a
+    corpus side that already satisfies the cogroup's clustering — the
     per-search corpus Exchange disappears (guide §2.4; the serving
     memoization analog of the sharded-HNSW graph-broadcast cache, and of
     ``save()``'s physical cell layout).  The first search pays one
-    exchange + persist; repeats skip both.
+    exchange + persist; repeats skip both.  ``add()`` unpersists the
+    parent's view and ``release()`` the index's own.
 
     CRITICAL: this view must never feed a trainer.  Sub-cap PQ/SQ trains
     are arrival-order-exact ("existing artifacts keep their exact
     centroids"), and re-laying out the frame they consume re-draws their
-    codebooks (r12 A/B: pq recall 0.7264 → 0.726).  Only the search
-    cogroups read it; ``index.assignments`` keeps the arrival-order
-    layout for trainers, save(), metadata and the driver scan path."""
-    cached = getattr(index, "_clustered_assign", None)
-    if cached is None:
+    codebooks (r12 A/B: pq recall 0.7264 → 0.726).  Only the distributed
+    search cogroups read it; ``index.assignments`` keeps the arrival-order
+    layout for trainers, save(), metadata and the driver-strategy scan."""
+    if index._clustered_assign is None:
         src = frame if frame is not None else index.assignments
-        cached = src.repartition("cell_id").persist()
-        index._clustered_assign = cached
-    return cached
+        est = index.resident_bytes_est if index.resident else estimated_bytes(src)
+        index._clustered_assign, _ = persist_gated(src.repartition("cell_id"), est)
+    return index._clustered_assign
 
 
 def cogroup_cells_topk(

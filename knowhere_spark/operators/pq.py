@@ -50,7 +50,7 @@ from pyspark.sql.types import (
 
 from knowhere_spark.config import IndexType, IvfPqConfig, MetricType
 from knowhere_spark.functions.distance import normalize_expr
-from knowhere_spark.operators.ivf import IVFFlatIndex
+from knowhere_spark.operators.ivf import IVFFlatIndex, ResidentCells, table_bytes
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 
 _TRAIN_SAMPLE_MAX = 100_000
@@ -117,7 +117,7 @@ def _encode_df(
     return assigned.mapInPandas(encode, StructType(fields))
 
 
-class IVFPqIndex:
+class IVFPqIndex(ResidentCells):
     """Built IVF_PQ: coarse centroids + per-subspace codebooks + codes table."""
 
     def __init__(
@@ -183,13 +183,13 @@ class IVFPqIndex:
             F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
         )
         # coarse quantizer shared with IVF_FLAT (normalizes for COSINE)
-        flat = IVFFlatIndex.build(base, config, index_type=IndexType.IVF_PQ)
+        flat = IVFFlatIndex._train_assign(base, config, index_type=IndexType.IVF_PQ)
         dim = flat.dim()
         config.validate_dim(dim)
         m, ksub = config.m, 1 << config.nbits
         subdim = dim // m
 
-        n = flat.assignments.count()
+        n = flat.last_metrics["n"]
         if codebooks is not None:
             codebooks = np.ascontiguousarray(np.asarray(codebooks, dtype=np.float64))
             if codebooks.shape[0] != m or codebooks.shape[2] != subdim:
@@ -221,10 +221,14 @@ class IVFPqIndex:
         import dataclasses
 
         cfg = dataclasses.replace(config, nlist=flat.config.nlist)
-        return cls(
+        idx = cls(
             flat.centroids, codebooks, codes_df, cfg,
             with_raw_data=config.with_raw_data, n_rows=int(n),
         )
+        idx.codes = idx._make_resident(
+            codes_df, table_bytes(codes_df.schema, n, {"codes": m, "vec": dim})
+        )
+        return idx
 
     def add(
         self, new_df: DataFrame, *, id_col: str = "id", vec_col: str = "vec"
@@ -242,10 +246,10 @@ class IVFPqIndex:
             new = new.select("id", normalize_expr(F.col("vec")).alias("vec"))
         assigned = _assign_cells(new, self.centroids)
         encoded = _encode_df(assigned, self.codebooks, self.with_raw_data)
-        return IVFPqIndex(
+        child = IVFPqIndex(
             self.centroids,
             self.codebooks,
-            self.codes.unionByName(encoded),
+            self.codes,
             self.config,
             with_raw_data=self.with_raw_data,
             # the appended count is unknown without an action; the stale
@@ -254,6 +258,9 @@ class IVFPqIndex:
             # disable it entirely)
             n_rows=self.n_rows,
         )
+        batch = child._append_resident(self, encoded)
+        child.codes = self.codes.unionByName(batch)
+        return child
 
     def search(
         self,
@@ -322,7 +329,7 @@ class IVFPqIndex:
         m, ksub, subdim = self.codebooks.shape
         sim = metric.is_similarity
         # probe cells on the (tiny) coarse centroid matrix — same rule as
-        # IVF: L2 = the assignment geometry (see IVFFlatIndex._probe_pairs)
+        # IVF: L2 = the assignment geometry (see ivf.probe_pairs)
         from knowhere_spark.functions.distance import pairwise_distances
 
         d = pairwise_distances(self.centroids, qmat, MetricType.L2)  # (nlist, nq)

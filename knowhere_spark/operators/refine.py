@@ -137,6 +137,10 @@ class ScannIndex:
     def count(self) -> int:
         return self.sq.count()
 
+    def release(self) -> None:
+        """Unpersist the inner quantized index's resident cell table."""
+        self.sq.release()
+
     def dim(self) -> int:
         return self.sq.dim()
 

@@ -58,7 +58,7 @@ _POSTING_ROW_BYTES = 48                # term string + doc_id + value + overhead
 _DOC_STAT_ROW_BYTES = 24
 
 
-def _right_size_index_caches(postings, doc_stats, n_docs, avgdl, scalar_cols):
+def _right_size_index_caches(postings, doc_stats, n_docs, avgdl):
     """Shrink the cached postings/doc_stats to a SIZE-derived partition
     count (guide §2.2/§6: partitions sized by bytes, never by the
     session's ``spark.sql.shuffle.partitions``).
@@ -125,6 +125,7 @@ class SparseInvertedIndex:
         avgdl: float | None = None,
         n_term_buckets: int | None = None,
         scalar_cols: tuple[str, ...] = (),
+        n_partitions: int | None = None,
     ):
         self.postings = postings
         self.doc_stats = doc_stats
@@ -139,6 +140,8 @@ class SparseInvertedIndex:
         # hot scalar payload denormalized onto postings (and carried on
         # doc_stats): a filter_expr over these evaluates join-free
         self.scalar_cols = tuple(scalar_cols)
+        # explicit term-partition count chosen at build; add() keeps it
+        self._n_partitions = n_partitions
 
     # -- Build ---------------------------------------------------------------
     @classmethod
@@ -175,8 +178,7 @@ class SparseInvertedIndex:
         ).collect()[0]
         if not n_partitions:
             postings, doc_stats = _right_size_index_caches(
-                postings, doc_stats, int(row["n"]), float(row["avgdl"]),
-                scalar_cols,
+                postings, doc_stats, int(row["n"]), float(row["avgdl"])
             )
         # bind to the FINAL postings cache (the right-sized one when it
         # applies) so lazy reads never fall back to the source lineage
@@ -187,7 +189,7 @@ class SparseInvertedIndex:
         return cls(
             postings, doc_stats, term_stats, config,
             n_docs=int(row["n"]), avgdl=float(row["avgdl"]),
-            scalar_cols=scalar_cols,
+            scalar_cols=scalar_cols, n_partitions=n_partitions,
         )
 
     @classmethod
@@ -234,8 +236,7 @@ class SparseInvertedIndex:
         ).collect()[0]
         if not n_partitions:
             postings, doc_stats = _right_size_index_caches(
-                postings, doc_stats, int(row["n"]), float(row["avgdl"]),
-                scalar_cols,
+                postings, doc_stats, int(row["n"]), float(row["avgdl"])
             )
         term_stats = postings.groupBy("term").agg(
             F.max("value").alias("max_value"),
@@ -244,7 +245,7 @@ class SparseInvertedIndex:
         return cls(
             postings, doc_stats, term_stats, config,
             n_docs=int(row["n"]), avgdl=float(row["avgdl"]),
-            scalar_cols=scalar_cols,
+            scalar_cols=scalar_cols, n_partitions=n_partitions,
         )
 
     # -- Add (index_node.h:120-121; batch form of the CC growing segment) -----
@@ -268,7 +269,11 @@ class SparseInvertedIndex:
             new_postings = new_postings.withColumn(
                 "term_bucket", F.pmod(F.hash("term"), F.lit(self._n_term_buckets))
             )
-        postings = self.postings.unionByName(new_postings).cache()
+        postings = self.postings.unionByName(new_postings)
+        if self._n_partitions:
+            # an explicitly chosen term layout survives the append
+            postings = postings.repartition(self._n_partitions, "term")
+        postings = postings.cache()
         doc_stats = postings.groupBy("doc_id").agg(
             F.sum("value").alias("doc_len"),
             *(F.first(c).alias(c) for c in self.scalar_cols),
@@ -276,10 +281,10 @@ class SparseInvertedIndex:
         row = doc_stats.agg(
             F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
         ).collect()[0]
-        postings, doc_stats = _right_size_index_caches(
-            postings, doc_stats, int(row["n"]), float(row["avgdl"]),
-            self.scalar_cols,
-        )
+        if not self._n_partitions:
+            postings, doc_stats = _right_size_index_caches(
+                postings, doc_stats, int(row["n"]), float(row["avgdl"])
+            )
         term_stats = postings.groupBy("term").agg(
             F.max("value").alias("max_value"),
             F.count("*").alias("df"),
@@ -289,6 +294,7 @@ class SparseInvertedIndex:
             n_docs=int(row["n"]), avgdl=float(row["avgdl"]),
             n_term_buckets=self._n_term_buckets,
             scalar_cols=self.scalar_cols,
+            n_partitions=self._n_partitions,
         )
 
     def add_from_text(

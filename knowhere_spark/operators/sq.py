@@ -2,17 +2,23 @@
 faiss QT_8bit semantics: per-dimension min/max affine quantization; the
 ``code_size`` axis 4/6/8/16 mirrors IVF_SQ_CC, ivf.cc:621-648).
 
-Storage: the assignment table keeps ``codes ARRAY<SMALLINT>`` (uint8 range)
+Storage: the cell table keeps ``codes ARRAY<SMALLINT>`` (uint8 range)
 instead of raw floats — 4× smaller scans at probe time; the per-dim
-``(vmin, vdiff)`` training stats live in the manifest and are broadcast to
-the decode kernel.  Decode+distance runs in an Arrow-batched pandas kernel
-(the quantized-scan analog of the reference's SQ distance computers).
+``(vmin, vdiff)`` training stats live in the manifest.  The min/max
+statistics (run by ``build()``) and the encode pass are ``mapInArrow``
+kernels; the encoded table is the index's resident cell table
+(operators/ivf.ResidentCells), so the encode runs once, on the first
+search that fills the cache.  Decode+distance runs inside
+the shared IVF scan kernels (``scan_probed_topk`` / the cogroup), with
+the decode as their ``row_matrix`` (the quantized-scan analog of the
+reference's SQ distance computers).
 """
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -26,18 +32,19 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import IndexType, IvfSq8Config, MetricType
-from knowhere_spark.functions.distance import (
-    normalize_expr,
-    pairwise_distances,
+from knowhere_spark.functions.distance import normalize_expr, pairwise_distances
+from knowhere_spark.operators.ivf import (
+    IVFFlatIndex,
+    ResidentCells,
+    table_bytes,
 )
-from knowhere_spark.operators.ivf import IVFFlatIndex
-from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 from knowhere_spark.sources.index_store import IndexStore
 
 
 def array_minmax(df: DataFrame, col: str, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """Element-wise min/max over an array column: per-partition numpy
-    partials combined on the driver (no dim×n explode shuffle)."""
+    partials (one Arrow kernel) combined on the driver (no dim×n explode
+    shuffle)."""
     schema = StructType(
         [
             StructField("mins", ArrayType(DoubleType())),
@@ -46,20 +53,28 @@ def array_minmax(df: DataFrame, col: str, dim: int) -> tuple[np.ndarray, np.ndar
     )
 
     def kernel(batches):
+        import pyarrow as pa
+
+        from knowhere_spark.functions.arrowio import list_matrix, matrix_to_list_array
+
         lo = np.full(dim, np.inf)
         hi = np.full(dim, -np.inf)
         seen = False
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = np.array(list(pdf[col].to_numpy()), dtype=np.float64)
+            X = list_matrix(pa.Table.from_batches([rb]), col)
             lo = np.minimum(lo, X.min(axis=0))
             hi = np.maximum(hi, X.max(axis=0))
             seen = True
         if seen:
-            yield pd.DataFrame({"mins": [lo.tolist()], "maxs": [hi.tolist()]})
+            yield pa.record_batch(
+                [matrix_to_list_array(lo[None, :], pa.float64()),
+                 matrix_to_list_array(hi[None, :], pa.float64())],
+                names=["mins", "maxs"],
+            )
 
-    parts = df.select(col).mapInPandas(kernel, schema).collect()
+    parts = df.select(col).mapInArrow(kernel, schema).collect()
     lo = np.min([r["mins"] for r in parts], axis=0)
     hi = np.max([r["maxs"] for r in parts], axis=0)
     return lo, hi
@@ -73,62 +88,106 @@ def _levels(code_size: int) -> int:
     return (1 << code_size) - 1
 
 
+def _decoder(vmin: np.ndarray, vdiff: np.ndarray, code_size: int):
+    """``row_matrix`` for the shared scan kernels: codes → decoded float64
+    rows (the per-dim arrays are tiny and ride the task closure)."""
+    lv = float(_levels(code_size))
+
+    def decode(tbl):
+        from knowhere_spark.functions.arrowio import list_matrix
+
+        codes = list_matrix(tbl, "codes", np.float64)
+        return vmin + codes / lv * vdiff
+
+    return decode
+
+
 def _quantize_df(
-    assigned: DataFrame,
+    rows: DataFrame,
+    centroids: np.ndarray,
     lo: np.ndarray,
     vdiff: np.ndarray,
     with_raw_data: bool,
     code_size: int = 8,
     scalar_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, cell_id, vec[, scalars]) → (id, cell_id, codes[, vec][, scalars]):
-    per-dim affine quantization at ``code_size`` bits with a FIXED scale
-    (the trained ``vmin/vdiff``) — shared by build and Add, so added rows
-    are encoded exactly like the original corpus (faiss QT train-once
-    contract).  ``scalar_cols`` ride along untouched (the hot-scalar
-    filtered-search layout)."""
-    spark = assigned.sparkSession
+    """(id, vec[, scalars]) → (id, cell_id, codes[, vec][, scalars]): one
+    Arrow kernel assigns each row its nearest cell (the same L2 argmin as
+    ``ivf._assign_cells``, over the same batches) and quantizes it per dim
+    at ``code_size`` bits with a FIXED scale (the trained ``vmin/vdiff``)
+    — shared by build, Add and the streaming growing segment, so added
+    rows are encoded exactly like the original corpus (faiss QT
+    train-once contract).  ``id``, ``vec`` and the ``scalar_cols`` pass
+    through as Arrow buffers (the hot-scalar filtered-search layout)."""
+    import pyarrow as pa
+
+    from knowhere_spark.session import ensure_parallelism
+
+    spark = rows.sparkSession
     levels = _levels(code_size)
-    bc = spark.sparkContext.broadcast((lo, vdiff, float(levels)))
+    bc = spark.sparkContext.broadcast((centroids, lo, vdiff, float(levels)))
 
     # SMALLINT holds codes up to 2^8 (and 2^14); 16-bit codes reach 65535
     # and need INT storage (parquet bit-packs either way on disk)
-    code_type = ShortType() if levels <= 32767 else IntegerType()
-    np_type = np.int16 if levels <= 32767 else np.int32
+    small = levels <= 32767
+    code_type = ShortType() if small else IntegerType()
+    np_type = np.int16 if small else np.int32
+    pa_type = pa.int16() if small else pa.int32()
     out_fields = [
         StructField("id", LongType()),
         StructField("cell_id", IntegerType()),
         StructField("codes", ArrayType(code_type)),
     ]
     if with_raw_data:
-        out_fields.append(assigned.schema["vec"])
-    out_fields.extend(assigned.schema[c] for c in scalar_cols)
+        out_fields.append(rows.schema["vec"])
+    out_fields.extend(rows.schema[c] for c in scalar_cols)
     schema = StructType(out_fields)
+    names = [f.name for f in out_fields]
 
     def quantize(batches):
-        lo_, diff_, lv = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        import pyarrow as pa
+
+        from knowhere_spark.functions.arrowio import list_matrix, matrix_to_list_array
+
+        C, lo_, diff_, lv = bc.value
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = np.array(list(pdf["vec"].to_numpy()), dtype=np.float64)
+            tbl = pa.Table.from_batches([rb])
+            X = list_matrix(tbl, "vec")
+            cell = pairwise_distances(X, C, MetricType.L2).argmin(axis=1)
             codes = np.clip(
                 np.round((X - lo_) / diff_ * lv), 0, lv
             ).astype(np_type)
-            out = {
-                "id": pdf["id"].to_numpy(),
-                "cell_id": pdf["cell_id"].to_numpy(),
-                "codes": list(codes),
+            computed = {
+                "id": tbl.column("id").combine_chunks().cast(pa.int64()),
+                "cell_id": pa.array(cell.astype(np.int32), type=pa.int32()),
+                "codes": matrix_to_list_array(codes, pa_type),
             }
-            if with_raw_data:
-                out["vec"] = pdf["vec"]
-            for c in scalar_cols:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            yield pa.record_batch(
+                [computed[c] if c in computed else tbl.column(c).combine_chunks()
+                 for c in names],
+                names=names,
+            )
 
-    return assigned.mapInPandas(quantize, schema)
+    return ensure_parallelism(rows).mapInArrow(quantize, schema)
 
 
-class IVFSq8Index:
+def _vector_rows(
+    df: DataFrame, id_col: str, vec_col: str, scalars, metric: MetricType
+) -> DataFrame:
+    """``(id, vec[, scalars])`` as the index stores them: long ids and,
+    for COSINE, normalized vectors (the normalize-at-train contract,
+    ivf.cc:462-470) — the same projection IVF_FLAT assigns."""
+    rows = df.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"), *scalars
+    )
+    if metric == MetricType.COSINE:
+        rows = rows.select("id", normalize_expr(F.col("vec")).alias("vec"), *scalars)
+    return rows
+
+
+class IVFSq8Index(ResidentCells):
     """IVF probe plan over quantized codes; optionally keeps raw vectors
     (``with_raw_data``) to serve SCANN-style refine (ivf_config.h:101-162)."""
 
@@ -196,31 +255,59 @@ class IVFSq8Index:
         AND quantization into the codes table (the dense-IVF
         materialized_view.h:23-36 contract) — a ``filter_expr`` over them
         is join-free, and ``save(scalar_partition_cols=...)`` prunes
-        parquet partitions on the loaded index."""
+        parquet partitions on the loaded index.
+
+        Only the codes table is made resident (lazily, no extra job); the
+        raw-vector assignment table it encodes stays a plan."""
+        from knowhere_spark.tracing import OpMetrics, op_description
+
+        t_build0 = time.monotonic()
         scalar_cols = tuple(scalar_cols)
         clash = {"codes", "qvec"} & set(scalar_cols)
         if clash:
             raise ValueError(f"scalar_cols collide with index columns: {sorted(clash)}")
-        flat = IVFFlatIndex.build(
-            base_df, config, id_col=id_col, vec_col=vec_col, scalar_cols=scalar_cols
+        flat = IVFFlatIndex._train_assign(
+            base_df, config, id_col=id_col, vec_col=vec_col,
+            index_type=index_type, scalar_cols=scalar_cols,
         )
         dim = flat.dim()
-        lo, hi = array_minmax(flat.assignments, "vec", dim)
+        # the trained centroids are all SQ takes from the IVF_FLAT build:
+        # the per-dim statistics do not depend on the cell, and the encode
+        # kernel assigns cells itself
+        rows = _vector_rows(
+            base_df, id_col, vec_col, scalar_cols, MetricType(config.metric_type)
+        )
+        lo, hi = array_minmax(rows, "vec", dim)
         vdiff = hi - lo
         vdiff[vdiff == 0] = 1.0
-        b_lo, b_diff = lo, vdiff
 
         import dataclasses
 
         assignments = _quantize_df(
-            flat.assignments, lo, vdiff, with_raw_data, config.code_size,
+            rows, flat.centroids, lo, vdiff, with_raw_data, config.code_size,
             scalar_cols,
         )
         cfg = dataclasses.replace(config, nlist=flat.config.nlist)
-        return cls(
+        idx = cls(
             flat.centroids, assignments, lo, vdiff, cfg,
             with_raw_data=with_raw_data, index_type=index_type,
         )
+        fm = flat.last_metrics
+        idx.assignments = idx._make_resident(
+            assignments,
+            table_bytes(assignments.schema, fm["n"], {"codes": dim, "vec": dim}),
+        )
+        m = OpMetrics(
+            op=f"{index_type.value}.build", n=fm["n"], dim=dim,
+            nlist=cfg.nlist, train_backend=fm["train_backend"],
+            stages={"build_plan_sec": round(time.monotonic() - t_build0, 6)},
+            **idx.resident_metrics(),
+        )
+        m["description"] = op_description(
+            base_df.sparkSession.sparkContext, m["op"], n=fm["n"], nlist=cfg.nlist
+        )
+        idx.last_metrics = m
+        return idx
 
     def add(
         self, new_df: DataFrame, *, id_col: str = "id", vec_col: str = "vec"
@@ -229,36 +316,25 @@ class IVFSq8Index:
         the cell, the trained ``vmin/vdiff`` scale encodes the codes
         (``IndexNode::Add``, index_node.h:120-121; out-of-range values
         clip exactly as faiss SQ8 does)."""
-        from knowhere_spark.operators.ivf import _assign_cells
-
-        metric = MetricType(self.config.metric_type)
         scalars = self._scalar_payload()
         missing = [c for c in scalars if c not in new_df.columns]
         if missing:
             raise ValueError(f"Add batch is missing the index's scalar_cols: {missing}")
-        new = new_df.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).alias("vec"),
-            *scalars,
+        new = _vector_rows(
+            new_df, id_col, vec_col, scalars, MetricType(self.config.metric_type)
         )
-        if metric == MetricType.COSINE:
-            new = new.select(
-                "id", normalize_expr(F.col("vec")).alias("vec"), *scalars
-            )
-        assigned = _assign_cells(new, self.centroids, tuple(scalars))
         quantized = _quantize_df(
-            assigned, self.vmin, self.vdiff, self.with_raw_data,
+            new, self.centroids, self.vmin, self.vdiff, self.with_raw_data,
             self.config.code_size, tuple(scalars),
         )
-        return IVFSq8Index(
-            self.centroids,
-            self.assignments.unionByName(quantized),
-            self.vmin,
-            self.vdiff,
-            self.config,
-            with_raw_data=self.with_raw_data,
+        child = IVFSq8Index(
+            self.centroids, self.assignments, self.vmin, self.vdiff,
+            self.config, with_raw_data=self.with_raw_data,
             index_type=self.index_type,
         )
+        batch = child._append_resident(self, quantized)
+        child.assignments = self.assignments.unionByName(batch)
+        return child
 
     def search(
         self,
@@ -276,7 +352,10 @@ class IVFSq8Index:
         ``strategy`` mirrors :meth:`IVFFlatIndex.search`: ``distributed``
         never collects the query set — probe assignment distributes and
         scoring cogroups cells with their probing queries, decoding codes
-        inside the GEMM kernel."""
+        inside the GEMM kernel.  ``last_metrics`` carries the IVF_FLAT
+        search schema."""
+        from knowhere_spark.tracing import OpMetrics, StageTimer, op_description
+
         k = k if k is not None else self.config.k
         nprobe = min(nprobe if nprobe is not None else self.config.nprobe, self.config.nlist)
         metric = MetricType(self.config.metric_type)
@@ -293,10 +372,23 @@ class IVFSq8Index:
             )
         elif strategy == "driver":
             qrows = queries.collect()
-        if strategy == "distributed":
-            return self._search_distributed(queries, k, nprobe, metric, filter_expr)
-        if strategy != "driver":
+        if strategy not in ("driver", "distributed"):
             raise ValueError(f"unknown strategy {strategy!r}")
+        m = OpMetrics(
+            op=f"{self.index_type.value}.search", k=k, nprobe=nprobe,
+            nlist=self.config.nlist, strategy=strategy,
+            rows_scanned=spark.sparkContext.accumulator(0),
+            **self.resident_metrics(),
+        )
+        m["description"] = op_description(
+            spark.sparkContext, m["op"], k=k, nprobe=nprobe, strategy=strategy
+        )
+        timer = StageTimer(m)
+        self.last_metrics = m
+        if strategy == "distributed":
+            return self._search_distributed(
+                queries, k, nprobe, metric, filter_expr, rows_acc=m["rows_scanned"]
+            )
         qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
         qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
         if metric == MetricType.COSINE:
@@ -304,104 +396,23 @@ class IVFSq8Index:
             qn[qn == 0] = 1.0
             qmat = qmat / qn
 
-        # probe ranking = assignment geometry (L2, see IVFFlatIndex._probe_pairs);
-        # scoring inside the probed cells uses the true metric below
-        score_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        d = pairwise_distances(self.centroids, qmat, MetricType.L2)
-        order = np.argsort(d, axis=0, kind="stable")[:nprobe, :]
-        cells = sorted({int(c) for c in order.ravel()})
+        from knowhere_spark.operators.ivf import probe_pairs, scan_probed_topk
 
-        cand = self.assignments
-        if filter_expr is not None:
-            cand = cand.filter(filter_expr)
-        cand = cand.filter(F.col("cell_id").isin(cells))
-
-        # broadcast: query matrix + (nlist, nq) probe-membership matrix —
-        # the same batch-vectorized layout as IVFFlatIndex._search_probed.
-        # The former kernel looped PER QUERY (np.isin over the cell column
-        # + a one-column local_topk, nq times per batch) — at nq=1000 that
-        # Python loop was the entry's dominant cost; one fancy-index +
-        # one masked argpartition over the whole (n, nq) matrix does the
-        # identical selection (tie-widened at the finite boundary, so the
-        # final (distance, id) window sees every contender — result
-        # bit-equal, pinned by the exact-operating-point oracle gates).
-        nq = len(qids)
-        probe_matrix = np.zeros((self.config.nlist, nq), dtype=bool)
-        probe_matrix[order, np.arange(nq)[None, :]] = True
-        bq = spark.sparkContext.broadcast(
-            (qids, qmat, probe_matrix, self.vmin, self.vdiff,
-             float(_levels(self.config.code_size)), score_metric.value)
-        )
-        largest = score_metric.is_similarity
-
-        out_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("neighbor_id", LongType()),
-                StructField("distance", DoubleType()),
-            ]
-        )
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
+        # probe ranking = assignment geometry (L2, see probe_pairs);
+        # scoring inside the probed cells uses the true metric
+        with timer.stage("probe_sec"):
+            pairs = probe_pairs(self.centroids, qids, qmat, nprobe)
+        m["nq"] = len(qids)
+        m["cells_probed"] = len(pairs)
+        with timer.stage("scan_plan_sec"):
+            return scan_probed_topk(
+                self.assignments, self.config.nlist, pairs, qids, qmat, k,
+                metric, filter_expr, rows_acc=m["rows_scanned"],
+                row_matrix=_decoder(self.vmin, self.vdiff, self.config.code_size),
             )
 
-            b_qids, b_qmat, b_member, lo_, diff_, lv_, pm = bq.value
-            pm = MetricType(pm)
-            b_nq = len(b_qids)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                codes = list_matrix(tbl, "codes", np.float64)
-                X = lo_ + codes / lv_ * diff_
-                ids = scalar_column(tbl, "id", np.int64)
-                cell = scalar_column(tbl, "cell_id", np.int64)
-                n = len(ids)
-                dist = pairwise_distances(X, b_qmat, pm)   # (n, nq)
-                member = b_member[cell]                    # (n, nq)
-                key = -dist if largest else dist
-                key = np.where(member, key, np.inf)
-                kk = min(k, n)
-                sel = np.zeros((n, b_nq), dtype=bool)
-                if kk < n:
-                    part = np.argpartition(key, kk - 1, axis=0)[:kk]
-                    col = np.arange(b_nq)
-                    sel[part, col[None, :]] = True
-                    # widen to rows tied at a FINITE per-query boundary:
-                    # quantized distances tie OFTEN (identical codes
-                    # decode equal) and the final window tie-breaks
-                    # (distance, id)
-                    bnd = key[part, col[None, :]].max(axis=0)
-                    finite_b = np.isfinite(bnd)
-                    if finite_b.any():
-                        sel |= (key == bnd[None, :]) & finite_b[None, :]
-                else:
-                    sel[:] = True
-                sel &= member
-                rows_f, q_f = np.nonzero(sel)
-                if len(rows_f) == 0:
-                    continue
-                yield pa.record_batch(
-                    [
-                        pa.array(b_qids[q_f], type=pa.int64()),
-                        pa.array(ids[rows_f], type=pa.int64()),
-                        pa.array(dist[rows_f, q_f], type=pa.float64()),
-                    ],
-                    names=["query_id", "neighbor_id", "distance"],
-                )
-
-        scored = cand.mapInArrow(kernel, out_schema)
-        return topk_per_key(
-            scored, "query_id", "distance", k,
-            ascending=not largest, tie_breaker="neighbor_id",
-        )
-
-    def _search_distributed(self, queries, k, nprobe, metric, filter_expr):
+    def _search_distributed(self, queries, k, nprobe, metric, filter_expr,
+                            rows_acc=None):
         from knowhere_spark.operators.ivf import (
             clustered_search_view,
             cogroup_cells_topk,
@@ -410,18 +421,10 @@ class IVFSq8Index:
 
         probes = probe_assign_df(queries, self.centroids, metric, nprobe)
         dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        lo_, diff_ = self.vmin, self.vdiff   # tiny per-dim arrays, task-pickled
-        lv_ = float(_levels(self.config.code_size))
-
-        def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
-            codes = list_matrix(tbl, "codes", np.float64)
-            return lo_ + codes / lv_ * diff_
-
         return cogroup_cells_topk(
             clustered_search_view(self), probes, k, dist_metric,
-            filter_expr=filter_expr, row_matrix=decode,
+            filter_expr=filter_expr, rows_acc=rows_acc,
+            row_matrix=_decoder(self.vmin, self.vdiff, self.config.code_size),
         )
 
     def range_search(
@@ -443,7 +446,7 @@ class IVFSq8Index:
             cogroup_cells_range,
             probe_assign_df,
         )
-        from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
+        from knowhere_spark.operators.topk import apply_range_bounds
 
         cfg = config or self.config
         nprobe = min(
@@ -457,18 +460,10 @@ class IVFSq8Index:
         )
         probes = probe_assign_df(queries, self.centroids, metric, nprobe)
         lo, hi, sim = cfg.range_bounds()
-        lo_, diff_ = self.vmin, self.vdiff
-        lv_ = float(_levels(self.config.code_size))
-
-        def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
-            codes = list_matrix(tbl, "codes", np.float64)
-            return lo_ + codes / lv_ * diff_
-
         out = cogroup_cells_range(
             clustered_search_view(self), probes, lo, hi, sim, dist_metric,
-            filter_expr=filter_expr, row_matrix=decode,
+            filter_expr=filter_expr,
+            row_matrix=_decoder(self.vmin, self.vdiff, self.config.code_size),
         )
         return apply_range_bounds(out, cfg, already_bounded=True)
 

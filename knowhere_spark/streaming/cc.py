@@ -219,8 +219,7 @@ class GrowingSQIndex(GrowingIVFIndex):
         if MetricType(sealed.config.metric_type) == MetricType.COSINE:
             rows = rows.select("id", normalize_expr(F.col("vec")).alias("vec"))
         return _quantize_df(
-            _assign_cells(rows, sealed.centroids),
-            sealed.vmin, sealed.vdiff,
+            rows, sealed.centroids, sealed.vmin, sealed.vdiff,
             sealed.with_raw_data, sealed.config.code_size,
         )
 

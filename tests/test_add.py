@@ -194,3 +194,62 @@ def test_sparse_add_matches_full_build(spark):
     a = sorted((r["doc_id"], round(r["score"], 6)) for r in grown.search(q, k=10).collect())
     b = sorted((r["doc_id"], round(r["score"], 6)) for r in full.search(q, k=10).collect())
     assert a == b
+
+
+@pytest.mark.parametrize("family", ["IVF_FLAT", "IVF_SQ8"])
+def test_resident_lifecycle_release_frees_every_cache(spark, tmp_path, family):
+    """build → search → add → search → release leaves no persisted RDD:
+    the build's resident table, the appended batch's segment and the
+    parent's superseded views all have an owner that frees them."""
+    from knowhere_spark.operators.ivf import IVFFlatIndex
+    from knowhere_spark.operators.sq import IVFSq8Index
+
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    base_df, added_df, query = _base_and_added(spark)
+    # parquet inputs: Spark has a size estimate for them, so the added
+    # batch is made resident too
+    base_df.write.parquet(str(tmp_path / "base"))
+    added_df.write.parquet(str(tmp_path / "added"))
+    base_df = spark.read.parquet(str(tmp_path / "base"))
+    added_df = spark.read.parquet(str(tmp_path / "added"))
+    if family == "IVF_FLAT":
+        idx = IVFFlatIndex.build(base_df, IvfConfig(metric_type="L2", nlist=8))
+    else:
+        idx = IVFSq8Index.build(base_df, IvfSq8Config(metric_type="L2", nlist=8))
+    assert idx.resident
+    idx.search(query, k=K, nprobe=8).collect()
+    assert not sc._jsc.getPersistentRDDs().isEmpty()
+    idx2 = idx.add(added_df)
+    assert idx2.resident and idx2.resident_bytes_est > idx.resident_bytes_est
+    _assert_added_found(idx2, query, nprobe=8)
+    assert idx2.count() == NB + 40
+    idx2.release()
+    assert not idx2.resident and idx2.resident_bytes_est == 0
+    assert sc._jsc.getPersistentRDDs().isEmpty()
+    # released indexes still answer, from lineage
+    _assert_added_found(idx2, query, nprobe=8)
+
+
+def test_sparse_add_keeps_explicit_partitions(spark):
+    """An index built with an explicit ``n_partitions`` term layout keeps
+    it across add(), and still answers like a full build."""
+    from knowhere_spark.config import SparseConfig
+    from knowhere_spark.operators.sparse import SparseInvertedIndex
+
+    from conftest import gen_sparse
+
+    rows = gen_sparse(80, 200, 0.9, seed=34)
+    schema = "id long, vec map<int,float>"
+    docs = spark.createDataFrame([(i, r) for i, r in enumerate(rows)], schema)
+    first = docs.filter(F.col("id") < 40)
+    rest = docs.filter(F.col("id") >= 40)
+    cfg = SparseConfig(metric_type="IP", k=10)
+
+    grown = SparseInvertedIndex.build(first, cfg, n_partitions=3).add(rest)
+    assert grown.postings.rdd.getNumPartitions() == 3
+    full = SparseInvertedIndex.build(docs, cfg, n_partitions=3)
+    q = spark.createDataFrame([(0, rows[5])], "query_id long, vec map<int,float>")
+    a = sorted((r["doc_id"], round(r["score"], 6)) for r in grown.search(q, k=10).collect())
+    b = sorted((r["doc_id"], round(r["score"], 6)) for r in full.search(q, k=10).collect())
+    assert a == b

@@ -802,6 +802,70 @@ def test_shard_count_recall_guardrail(spark, recwarn):
     assert not [w for w in rec2 if "rows/shard" in str(w.message)]
 
 
+def _edge_prune_kernel(M: int, is_sim: bool):
+    """Per-shard dedup + M-prune of the raw symmetrized edge union — a
+    measured-and-rejected Arrow-kernel replacement (kept here as the
+    reference; the build keeps its SQL chain, see hnsw_sharded.py) for the
+    ``repartition(src) → groupBy(shard,src,dst).agg(min,min) →
+    row_number window → repartition(__shard)`` chain (guide §2.4, r13:
+    the window's sort AND the second exchange of the pruned rows both
+    disappear; the kernel's output is already shard-clustered for the
+    partitionBy write).
+
+    Exactness: ``min(dist)/min(sel_rank)`` per (src, dst) are
+    ``np.minimum.reduceat`` over contiguous lexsorted runs, and the
+    prune order (sel_rank asc, dist asc — desc for similarity — dst
+    asc) is a TOTAL order within a src once (src, dst) are unique, so
+    one lexsort reproduces the window's row_number assignment
+    byte-for-byte (pinned by test_edge_prune_kernel_equals_sql on
+    dup/reverse/tie-heavy inputs)."""
+    import pyarrow as pa
+
+    from knowhere_spark.functions.arrowio import scalar_column
+
+    empty = pa.schema(
+        [("__shard", pa.int32()), ("src", pa.int64()),
+         ("dst", pa.int64()), ("dist", pa.float64())]
+    )
+
+    def kernel(key, tbl):
+        if tbl.num_rows == 0:
+            return empty.empty_table()
+        src = scalar_column(tbl, "src", np.int64)
+        dst = scalar_column(tbl, "dst", np.int64)
+        dist = scalar_column(tbl, "dist", np.float64)
+        rank = scalar_column(tbl, "sel_rank", np.int64)
+        order = np.lexsort((dst, src))
+        s, d_, di, rk = src[order], dst[order], dist[order], rank[order]
+        new = np.r_[True, (s[1:] != s[:-1]) | (d_[1:] != d_[:-1])]
+        starts = np.flatnonzero(new)
+        dmin = np.minimum.reduceat(di, starts)
+        rmin = np.minimum.reduceat(rk, starts)
+        gs, gd = s[starts], d_[starts]
+        key_d = -dmin if is_sim else dmin
+        sel = np.lexsort((gd, key_d, rmin, gs))
+        ss = gs[sel]
+        newg = np.r_[True, ss[1:] != ss[:-1]]
+        grp_start = np.maximum.accumulate(
+            np.where(newg, np.arange(len(ss)), 0)
+        )
+        keep = (np.arange(len(ss)) - grp_start) < M
+        take = sel[keep]
+        return pa.table(
+            {
+                "__shard": pa.array(
+                    np.full(len(take), int(key[0].as_py()), dtype=np.int32),
+                    type=pa.int32(),
+                ),
+                "src": pa.array(gs[take], type=pa.int64()),
+                "dst": pa.array(gd[take], type=pa.int64()),
+                "dist": pa.array(dmin[take], type=pa.float64()),
+            }
+        )
+
+    return kernel
+
+
 def test_edge_prune_kernel_equals_sql(spark):
     """The Arrow dedup+prune kernel must reproduce the former SQL chain
     (groupBy(shard,src,dst).agg(min,min) -> row_number window) BYTE for
@@ -818,10 +882,7 @@ def test_edge_prune_kernel_equals_sql(spark):
         StructType,
     )
 
-    from knowhere_spark.operators.hnsw_sharded import (
-        _SHARD_EDGE_SCHEMA,
-        _edge_prune_kernel,
-    )
+    from knowhere_spark.operators.hnsw_sharded import _SHARD_EDGE_SCHEMA
 
     rng = random.Random(7)
     rows = []

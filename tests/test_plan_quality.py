@@ -421,3 +421,89 @@ def test_audio_banded_neardup_kernels_run_once(spark):
     plan = _plan(audio_neardup_pairs(media, 0.99))
     assert "MapInPandas" not in plan and "MapInArrow" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _outside_cache(plan: str) -> str:
+    """The plan text minus every InMemoryRelation subtree: what a search
+    runs, not the one-time plan that filled the cache."""
+    import re
+
+    kept, skip_below = [], None
+    for line in plan.splitlines():
+        depth = re.match(r"[\s:|+\-]*", line).end()
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if "InMemoryRelation" in line else None
+        kept.append(line)
+    return "\n".join(kept)
+
+
+def _parquet_base(spark, tmp_path, n=600, dim=16, seed=93):
+    """A single-file parquet corpus: it arrives as one split, so the
+    build's assignment pass round-robins it (ensure_parallelism)."""
+    path = str(tmp_path / "base.parquet")
+    dense_df(spark, gen_dense(n, dim, seed=seed)).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _rows(df):
+    return sorted((r["query_id"], r["neighbor_id"], r["distance"]) for r in df.collect())
+
+
+def test_resident_ivf_search_reads_cache(spark, tmp_path):
+    """After the first driver search fills the resident cell table, the
+    next IVF_FLAT / IVF_SQ8 search scans the cache: no re-read, no
+    round-robin Exchange of the corpus, identical results."""
+    from knowhere_spark.config import IvfSq8Config
+    from knowhere_spark.operators.sq import IVFSq8Index
+
+    base = _parquet_base(spark, tmp_path)
+    qs = dense_df(spark, gen_dense(5, 16, seed=94), QUERY_SCHEMA)
+    cfg = dict(metric_type="L2", nlist=8, nprobe=3)
+    for idx in (
+        IVFFlatIndex.build(base, IvfConfig(**cfg)),
+        IVFSq8Index.build(base, IvfSq8Config(**cfg)),
+    ):
+        assert idx.resident and idx.last_metrics["resident"]
+        assert idx.last_metrics["resident_bytes_est"] > 0
+        first = idx.search(qs, k=5, strategy="driver")
+        assert "RoundRobinPartitioning" in _plan(first)   # the fill
+        want = _rows(first)
+        again = idx.search(qs, k=5, strategy="driver")
+        got = _rows(again)
+        ran = _outside_cache(_plan(again).split("== Initial Plan ==")[0])
+        assert "InMemoryTableScan" in ran, type(idx).__name__
+        assert "RoundRobinPartitioning" not in ran, type(idx).__name__
+        assert got == want
+        idx.release()
+
+
+def test_size_gate_leaves_oversized_table_lazy(spark, tmp_path, monkeypatch):
+    """An estimate above the resident bound leaves the frame un-persisted,
+    and the lazy index answers exactly like the resident one."""
+    from knowhere_spark.operators import hnsw
+    from knowhere_spark.operators.ivf import estimated_bytes, persist_gated
+
+    base = _parquet_base(spark, tmp_path)
+    qs = dense_df(spark, gen_dense(5, 16, seed=95), QUERY_SCHEMA)
+    cfg = IvfConfig(metric_type="L2", nlist=8, nprobe=3)
+    resident = IVFFlatIndex.build(base, cfg)
+    want = _rows(resident.search(qs, k=5))
+    resident.release()
+
+    # parquet reads carry a size estimate; Python-row frames do not, and
+    # an add() batch of unknown size stays lazy
+    assert estimated_bytes(base) > 0
+    assert estimated_bytes(qs) is None
+    frame = base.select("id")
+    out, ok = persist_gated(frame, hnsw._BROADCAST_MAX_BYTES + 1)
+    assert not ok and out is frame and not frame.is_cached
+    assert persist_gated(frame, None) == (frame, False)
+
+    monkeypatch.setattr(hnsw, "_BROADCAST_MAX_BYTES", 1)
+    lazy = IVFFlatIndex.build(base, cfg)
+    assert not lazy.resident and lazy.resident_bytes_est == 0
+    assert not lazy.assignments.is_cached
+    out = lazy.search(qs, k=5)
+    assert "InMemoryTableScan" not in _plan(out)
+    assert _rows(out) == want

@@ -36,6 +36,33 @@ def test_array_minmax(data, spark):
     assert np.allclose(hi, base.max(axis=0), rtol=1e-6)
 
 
+@pytest.mark.parametrize("code_size", [8, 16])
+def test_quantize_codes_match_numpy_reference(data, code_size):
+    """The Arrow encode kernel: cells are the nearest centroids and codes
+    equal the numpy affine quantization exactly (SMALLINT and, at 16 bits,
+    INT storage); ids, raw vectors and scalar payload pass through."""
+    from pyspark.sql import functions as F
+
+    from knowhere_spark.operators.sq import _levels, _quantize_df
+
+    base, _, base_df, _ = data
+    X = base.astype(np.float64)
+    lo = X.min(axis=0)
+    vdiff = X.max(axis=0) - lo
+    C = X[:7]
+    rows = base_df.select("id", "vec", (F.col("id") % 3).alias("label"))
+    out = _quantize_df(rows, C, lo, vdiff, True, code_size, ("label",))
+    got = out.orderBy("id").collect()
+    lv = _levels(code_size)
+    want = np.clip(np.round((X - lo) / vdiff * lv), 0, lv)
+    cells = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    assert np.array_equal(np.array([r["codes"] for r in got]), want)
+    assert [r["cell_id"] for r in got] == cells.tolist()
+    assert [r["id"] for r in got] == list(range(NB))
+    assert all(r["label"] == r["id"] % 3 for r in got)
+    assert np.array_equal(np.array([r["vec"] for r in got], dtype=np.float32), base)
+
+
 def test_sq8_recall_floor(data):
     base, queries, base_df, query_df = data
     cfg = IvfSq8Config(metric_type="L2", nlist=16, nprobe=8, k=K)

@@ -120,3 +120,34 @@ def test_sharded_hnsw_search_span(spark):
     assert sm["op"] == "SHARDED_HNSW.search"
     assert sm["shards_searched"] == 3 and sm["waves"] >= 1
     assert "knowhere:SHARDED_HNSW.search" in sm["description"]
+
+
+def test_sq8_build_and_search_metrics(spark):
+    """IVF_SQ8 fills the IVF_FLAT metrics schema, plus what it caches."""
+    from knowhere_spark.config import IvfSq8Config
+    from knowhere_spark.operators.sq import IVFSq8Index
+
+    base = gen_dense(600, 16, seed=26)
+    qs = gen_dense(7, 16, seed=27)
+    idx = IVFSq8Index.build(
+        dense_df(spark, base), IvfSq8Config(metric_type="L2", nlist=8, nprobe=3)
+    )
+    bm = idx.last_metrics.snapshot()
+    assert bm["op"] == "IVF_SQ8.build" and bm["n"] == 600 and bm["nlist"] == 8
+    assert bm["train_backend"] == "driver" and bm["dim"] == 16
+    assert bm["stages"]["build_plan_sec"] > 0
+    assert bm["resident"] is True and bm["resident_bytes_est"] > 0
+    assert "knowhere:IVF_SQ8.build" in _desc(spark)
+
+    q_df = dense_df(spark, qs, QUERY_SCHEMA)
+    idx.search(q_df, k=5, strategy="driver").count()
+    sm = idx.last_metrics.snapshot()
+    assert sm["op"] == "IVF_SQ8.search" and sm["strategy"] == "driver"
+    assert sm["nq"] == 7 and sm["cells_probed"] == 7 * 3
+    assert 0 < sm["rows_scanned"] <= 600
+    assert sm["resident"] is True
+
+    idx.search(q_df, k=5, strategy="distributed").count()
+    sm = idx.last_metrics.snapshot()
+    assert sm["strategy"] == "distributed" and sm["rows_scanned"] > 0
+    idx.release()

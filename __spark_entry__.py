@@ -851,8 +851,8 @@ def q_ivf_flat_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ivf_knn_distributed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The large-nq distributed search path (probe assignment via
-    mapInPandas, per-cell cogroup GEMM — operators/ivf.py
-    probe_assign_df/cogroup_cells_topk): never collects the query set.
+    mapInArrow, per-cell cogroup GEMM — operators/ivf.py
+    probe_assign_df/cogroup_cells): never collects the query set.
     With nprobe=nlist it is exact, so it shares the brute-force L2
     oracle — a hash gate on the corpus-vs-corpus plan itself."""
     from knowhere_spark.config import IvfConfig

@@ -196,6 +196,39 @@ def local_topk(
     return qidx, nid, dd
 
 
+def top_cap_stable(key_m: np.ndarray, cap: int) -> np.ndarray:
+    """First ``cap`` columns of a stable per-row argsort — via
+    argpartition + a stable sort of only the selected subset, which is
+    O(n²) + O(n·cap·log cap) instead of O(n²·log n).  Exactness: the
+    subset equals the stable-argsort prefix unless ties straddle the
+    per-row boundary value; straddling rows (detected by counting
+    ``key <= boundary``) fall back to the full stable argsort, so the
+    result is bit-identical by construction (verified on 40 random and
+    heavy-exact-tie matrices).  Measured 19.6 → 15.1 ms at the
+    1042-row/cap-200 bench cell and 103 → 44 ms at 2000 rows — the win
+    grows with cell size, which is where skewed semantic cells hurt."""
+    n, m = key_m.shape
+    if cap >= m:
+        return np.argsort(key_m, axis=1, kind="stable")[:, :cap]
+    part = np.argpartition(key_m, cap - 1, axis=1)[:, :cap]
+    rows = np.arange(n)[:, None]
+    bnd = key_m[rows, part].max(axis=1)
+    cnt = (key_m <= bnd[:, None]).sum(axis=1)
+    out = np.empty((n, cap), dtype=np.int64)
+    ok = cnt == cap
+    if ok.any():
+        # position-sort first so the stable key-sort tie-breaks by
+        # original column position, exactly like the full argsort
+        psort = np.sort(part[ok], axis=1)
+        keys = key_m[np.flatnonzero(ok)[:, None], psort]
+        ordloc = np.argsort(keys, axis=1, kind="stable")
+        out[ok] = np.take_along_axis(psort, ordloc, axis=1)
+    bad = np.flatnonzero(~ok)
+    if len(bad):
+        out[bad] = np.argsort(key_m[bad], axis=1, kind="stable")[:, :cap]
+    return out
+
+
 def numpy_kmeans(
     X: np.ndarray,
     k: int,

@@ -1289,14 +1289,14 @@ class ShardedHNSWIndex:
                     "probe_shards requires a semantic-sharded index "
                     "(build with shard_by='semantic')"
                 )
-            from knowhere_spark.operators.ivf import probe_assign_df
+            from knowhere_spark.operators.ivf import FlatCodec, probe_assign_df
 
             queries = query_df.select(
                 F.col(query_id_col).cast("long").alias("query_id"),
                 F.col(query_vec_col).alias("qvec"),
             )
             routed = probe_assign_df(
-                queries, self.router, metric, int(probe_shards)
+                queries, self.router, FlatCodec(metric), int(probe_shards)
             ).cache()
             cs = self.cluster_shards or [[i] for i in range(len(self.router))]
             cluster_of = {sh: c for c, lst in enumerate(cs) for sh in lst}
@@ -1435,7 +1435,7 @@ class ShardedHNSWIndex:
                     "probe_shards requires a semantic-sharded index "
                     "(build with shard_by='semantic')"
                 )
-            from knowhere_spark.operators.ivf import probe_assign_df
+            from knowhere_spark.operators.ivf import FlatCodec, probe_assign_df
 
             metric = MetricType(self.config.metric_type)
             queries = query_df.select(
@@ -1443,7 +1443,7 @@ class ShardedHNSWIndex:
                 F.col(query_vec_col).alias("qvec"),
             )
             routed = probe_assign_df(
-                queries, self.router, metric, int(probe_shards)
+                queries, self.router, FlatCodec(metric), int(probe_shards)
             ).cache()
             cs = self.cluster_shards or [[i] for i in range(len(self.router))]
             cluster_of = {sh: c for c, lst in enumerate(cs) for sh in lst}

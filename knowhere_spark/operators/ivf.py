@@ -24,39 +24,49 @@ Spark-first design (SURVEY.md §2.3):
   — the scan-what-you-probe behavior that makes IVF the DiskANN analog
   at 100 TB (index ≫ RAM, SURVEY.md §2.3).  Loaded indexes stay on that
   pruned parquet path and are never made resident.
-- **Search** (``driver``) = pick top-``nprobe`` cells per query (a
-  driver-side numpy computation over the tiny centroid matrix), prune
-  the cell table to the probed cells with a literal IN-list, and score
-  them in one ``mapInArrow`` GEMM kernel that reads the query matrix and
-  the ``(nlist, nq)`` probe-membership matrix from a broadcast variable
-  (no join of the base side), then partial-then-final top-k.
-  ``distributed`` cogroups a cell-clustered view with the probe table
-  (:func:`clustered_search_view`).
+- **Search** is written once, in :class:`IVFBaseIndex`, for every IVF
+  family (IVF_FLAT here; IVF_SQ8/SCANN, IVF_PQ and BIN_IVF_FLAT in their
+  modules) — the reference's single ``IndexNode`` search: coarse
+  quantizer → probe ``nprobe`` cells → score with the family's codec.  A
+  family supplies only its codec (:class:`FlatCodec` and subclasses: how
+  a batch of cell rows scores against a query matrix) and its encode
+  kernel.  ``driver`` picks the top-``nprobe`` cells per query on the
+  driver over the tiny centroid matrix, prunes the cell table to the
+  probed cells with a literal IN-list, and scores them in one
+  ``mapInArrow`` kernel that reads the query matrix and the ``(nlist,
+  nq)`` probe-membership matrix from a broadcast (no join of the base
+  side; :func:`scan_probed_cells`).  ``distributed`` assigns probes in a
+  ``mapInArrow`` kernel and cogroups a cell-clustered view with the probe
+  table (:func:`cogroup_cells`).  Both kernels take a per-batch
+  selection: a partial top-k (search) or a half-open range mask
+  (range_search).
 - **ensure_topk_full** (ivf.cc:753-762): queries that got fewer than k
-  results re-probe all cells (driver loop, one extra job).
+  results re-probe all cells.
 
 COSINE follows the reference's normalize-at-train contract
 (ivf.cc:462-470): vectors are stored normalized and the search metric
 becomes IP on normalized queries.  Centroids are kmeans means of the
 normalized vectors (not themselves unit-norm), which is why probe
 ranking uses the L2 assignment geometry, never raw IP against the
-centroids (see probe_pairs).
+centroids (see :class:`FlatCodec`).
 """
 
 from __future__ import annotations
 
+import copy
 import time
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knowhere_spark.config import IndexType, IvfConfig, MetricType
-from knowhere_spark.functions.arrowio import list_matrix
+from knowhere_spark.functions.arrowio import list_matrix, scalar_column
 from knowhere_spark.functions.distance import (
-    distance_expr,
     normalize_expr,
     pairwise_distances,
+    top_cap_stable,
 )
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 from knowhere_spark.sources.index_store import IndexStore
@@ -112,8 +122,24 @@ def persist_gated(frame: DataFrame, est_bytes: int | None) -> tuple[DataFrame, b
     return frame.persist(StorageLevel.MEMORY_AND_DISK), True
 
 
+def vector_rows(
+    df: DataFrame, id_col: str, vec_col: str, scalar_cols, metric
+) -> DataFrame:
+    """``(id, vec[, scalars])`` as the IVF family stores them: long ids and,
+    for COSINE, normalized vectors (the normalize-at-train contract,
+    ivf.cc:462-470)."""
+    rows = df.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"),
+        *scalar_cols,
+    )
+    if MetricType(metric) == MetricType.COSINE:
+        rows = rows.select("id", normalize_expr(F.col("vec")).alias("vec"), *scalar_cols)
+    return rows
+
+
 class ResidentCells:
-    """Lifecycle of an IVF-family index's resident cell table.
+    """Lifecycle of an IVF-family index's resident cell table and of the
+    caches its searches make.
 
     ``build()`` marks the whole table resident (estimate: its row count ×
     the row width); ``add()`` keeps the parent's resident segments and
@@ -122,13 +148,18 @@ class ResidentCells:
     ``add()`` shares its parent's segments, so ``release()`` on either
     drops them for both; the other keeps answering from lineage.  Nested
     builds (SQ/PQ/SCANN train through IVF_FLAT) make only the outer
-    family's encoded table resident."""
+    family's encoded table resident.  The frames a search caches (the
+    distributed probe table, the counted ``ensure_topk_full`` result)
+    belong to the index until its next search, ``add()`` or
+    ``release()``."""
 
     #: ``(frame, estimated bytes)`` per persisted segment this index reads
     _segments: tuple[tuple[DataFrame, int], ...] = ()
     #: every row of the table reads from a resident segment
     resident: bool = False
     _clustered_assign: DataFrame | None = None
+    #: frames the latest search cached
+    _search_frames: tuple[DataFrame, ...] = ()
 
     @property
     def resident_bytes_est(self) -> int:
@@ -143,34 +174,467 @@ class ResidentCells:
 
     def _append_resident(self, parent: "ResidentCells", batch: DataFrame) -> DataFrame:
         """Adopt ``parent``'s segments plus ``batch`` (persisted under the
-        gate); ``parent``'s superseded clustered view is unpersisted."""
+        gate); ``parent``'s superseded clustered view and search caches
+        are unpersisted."""
         est = estimated_bytes(batch)
         batch, ok = persist_gated(batch, est)
         self._segments = parent._segments + (((batch, est),) if ok else ())
         self.resident = parent.resident and ok
         parent._drop_clustered_view()
+        parent._drop_search_frames()
         return batch
+
+    def _cache_for_search(self, frame: DataFrame) -> DataFrame:
+        frame = frame.cache()
+        self._search_frames += (frame,)
+        return frame
 
     def resident_metrics(self) -> dict:
         return {"resident": self.resident,
                 "resident_bytes_est": self.resident_bytes_est}
 
     def release(self) -> None:
-        """Unpersist the resident segments and the clustered search view;
-        the index stays usable and recomputes from lineage."""
+        """Unpersist the resident segments, the clustered search view and
+        the latest search's caches; the index stays usable and recomputes
+        from lineage."""
         for frame, _ in self._segments:
             frame.unpersist()
         self._segments = ()
         self.resident = False
         self._drop_clustered_view()
+        self._drop_search_frames()
 
     def _drop_clustered_view(self) -> None:
         if self._clustered_assign is not None:
             self._clustered_assign.unpersist()
             self._clustered_assign = None
 
+    def _drop_search_frames(self) -> None:
+        for frame in self._search_frames:
+            frame.unpersist()
+        self._search_frames = ()
 
-class IVFFlatIndex(ResidentCells):
+
+class FlatCodec:
+    """IVF_FLAT's codec, and the base of the other families' codecs: how a
+    batch of cell rows (an Arrow table) scores against a query matrix.
+    Picklable — the scan kernels carry it to the executors.
+
+    Raw float vectors score by GEMM.  COSINE rows and queries are stored
+    normalized (ivf.cc:462-470), so the score is IP.  Probe ranking uses
+    **L2 — the assignment geometry** — for every float metric: cells are
+    L2-Voronoi regions (:func:`_assign_cells`), so nearest-by-L2 IS the
+    cell ordering consistent with where vectors live.  Ranking by raw IP
+    against the unnormalized kmeans centroids would disagree with
+    assignment (a query equal to a stored vector could miss its own
+    cell).  faiss probes with the quantizer's own metric for the same
+    reason; scoring inside cells uses the true metric."""
+
+    #: the cell-table column :meth:`score` reads
+    col = "vec"
+
+    def __init__(self, metric: MetricType | str):
+        metric = MetricType(metric)
+        self.normalize = metric == MetricType.COSINE
+        self.metric = MetricType.IP if self.normalize else metric
+        self.largest = self.metric.is_similarity
+
+    def read_queries(self, tbl: pa.Table, col: str) -> np.ndarray:
+        return list_matrix(tbl, col)
+
+    def prepare(self, Q: np.ndarray) -> np.ndarray:
+        """Queries as the index scores them: unit rows for COSINE."""
+        if not self.normalize:
+            return Q
+        qn = np.linalg.norm(Q, axis=1, keepdims=True)
+        qn[qn == 0] = 1.0
+        return Q / qn
+
+    def probe(self, C: np.ndarray, Q: np.ndarray) -> np.ndarray:
+        """``(nlist, nq)`` coarse-quantizer distances that rank the probes."""
+        return pairwise_distances(C, Q, MetricType.L2)
+
+    def rows(self, tbl: pa.Table) -> np.ndarray:
+        """``(n, dim)`` float64 GEMM operand of a batch of cell rows."""
+        return list_matrix(tbl, "vec")
+
+    def score(self, tbl: pa.Table, Q: np.ndarray) -> np.ndarray:
+        """``(n, nq)`` distances of a batch of cell rows to the queries."""
+        return pairwise_distances(self.rows(tbl), Q, self.metric)
+
+
+class IVFBaseIndex(ResidentCells):
+    """The IVF family's one search core (ivf.cc:715-800): strategy choice,
+    query projection and normalization, probe ranking, the driver scan and
+    the distributed cogroup, ``ensure_topk_full`` and the ``OpMetrics``
+    span.  A family supplies ``_codec()`` (scoring) and ``_encode()`` (its
+    Add kernel) and holds ``centroids``, ``assignments`` (the cell table),
+    ``config`` and ``index_type``."""
+
+    #: auto-strategy cutover: beyond this many queries the driver no longer
+    #: collects the query set; probe assignment and scoring both distribute
+    _DRIVER_NQ_MAX = 10_000
+    #: rows per cell — computed once (see _get_cell_counts)
+    _cell_counts: dict[int, int] | None = None
+    #: IVF_FLAT and BIN_IVF_FLAT store raw vectors; SQ and PQ only when
+    #: built ``with_raw_data`` (flat.cc:257-285 HasRawData rules)
+    with_raw_data: bool = True
+
+    def _codec(self) -> FlatCodec:
+        raise NotImplementedError
+
+    def _encode(self, rows: DataFrame, scalars: tuple[str, ...]) -> DataFrame:
+        """``(id, vec[, scalars])`` rows → cell-table rows, encoded with the
+        frozen train state (shared by ``add()``)."""
+        raise NotImplementedError
+
+    # -- introspection verbs (index_node.h:411-434) -------------------------
+    def count(self) -> int:
+        return self.assignments.count()
+
+    def dim(self) -> int:
+        return int(self.centroids.shape[1])
+
+    def type(self) -> str:
+        return self.index_type.value
+
+    def has_raw_data(self) -> bool:
+        return self.with_raw_data
+
+    def get_index_meta(self, **kw):
+        """Parity with the reference: GetIndexMeta is implemented for
+        IVF_FLAT only (ivf.cc:291-293 IVFBaseTag -> not_implemented)."""
+        raise NotImplementedError("GetIndexMeta not implemented")
+
+    def raw_vectors(self) -> DataFrame:
+        if not self.with_raw_data:
+            raise ValueError("index built without raw data (with_raw_data=False)")
+        return self.assignments.select("id", "vec")
+
+    # -- GetVectorByIds (index_node.h:340-350) --------------------------------
+    def get_vector_by_ids(self, ids_df: DataFrame, *, id_col: str = "id") -> DataFrame:
+        """Broadcast semi-join against the cell table's raw vectors — legal
+        only when the index keeps them (HasRawData rules)."""
+        if not self.with_raw_data:
+            raise ValueError(
+                f"{self.type()} built without with_raw_data keeps no raw "
+                "vectors; GetVectorByIds is unsupported"
+            )
+        ids = ids_df.select(F.col(id_col).cast("long").alias("id"))
+        return self.assignments.select("id", "vec").join(F.broadcast(ids), "id")
+
+    def _scalar_payload(self) -> list[str]:
+        return [
+            c for c in self.assignments.columns
+            if c not in ("id", "cell_id", "codes", "vec")
+        ]
+
+    def _partition_by(self, scalar_partition_cols: list[str] | None) -> list[str]:
+        """``save()``'s partition columns: the hot scalar fields (must be
+        among the index's ``scalar_cols``) coarsest-first, then
+        ``cell_id`` — probe-time pruning on cell_id composes with
+        scalar-predicate pruning."""
+        scalars = list(scalar_partition_cols or [])
+        payload = self._scalar_payload()
+        bad = [c for c in scalars if c not in payload]
+        if bad:
+            # 'cell_id' would partitionBy twice, 'id' would write one
+            # directory per row, 'vec' fails on the array type — only the
+            # scalar payload columns are legal partition levels
+            raise ValueError(
+                f"scalar_partition_cols must be among the index's scalar_cols"
+                f" {payload}: {bad}"
+            )
+        return [*scalars, "cell_id"]
+
+    def _build_metrics(self, t0: float, n: int, dim: int, train_backend: str) -> None:
+        """Build span close (index.cc:131-148): config attrs + the eager
+        portion's wall (train + encode plan; the cell table stays lazy)."""
+        from knowhere_spark.tracing import OpMetrics, op_description
+
+        nlist = self.config.nlist
+        m = OpMetrics(
+            op=f"{self.index_type.value}.build", n=n, dim=dim, nlist=nlist,
+            train_backend=train_backend,
+            stages={"build_plan_sec": round(time.monotonic() - t0, 6)},
+            **self.resident_metrics(),
+        )
+        m["description"] = op_description(
+            self.assignments.sparkSession.sparkContext, m["op"], n=n, nlist=nlist
+        )
+        self.last_metrics = m
+
+    # -- Add (append new rows to a trained index) ----------------------------
+    def add(self, new_df: DataFrame, *, id_col: str = "id", vec_col: str = "vec"):
+        """Append rows with frozen train state — the existing centroids
+        assign the cell, the family's trained codec encodes the row
+        (``IndexNode::Add``, index_node.h:120-121; the *_CC growing-segment
+        behavior, ivf.cc:513-534).  Scalar payload columns the index
+        carries must arrive with every batch — a NULL-padded union would
+        silently break the partition-pruned filtered search on the saved
+        layout.  Only the new batch is made resident."""
+        scalars = tuple(self._scalar_payload())
+        missing = [c for c in scalars if c not in new_df.columns]
+        if missing:
+            raise ValueError(f"Add batch is missing the index's scalar_cols: {missing}")
+        rows = vector_rows(new_df, id_col, vec_col, scalars, self.config.metric_type)
+        # the child shares the train state; per-index state falls back to
+        # the class defaults (no metrics, stats, views or search caches)
+        child = copy.copy(self)
+        for attr in ("last_metrics", "_cell_counts", "_clustered_assign", "_search_frames"):
+            child.__dict__.pop(attr, None)
+        batch = child._append_resident(self, self._encode(rows, scalars))
+        child.assignments = self.assignments.unionByName(batch)
+        return child
+
+    # -- Search ---------------------------------------------------------------
+    def search(
+        self,
+        query_df: DataFrame,
+        k: int | None = None,
+        nprobe: int | None = None,
+        *,
+        filter_expr: Column | str | None = None,
+        query_id_col: str = "query_id",
+        query_vec_col: str = "vec",
+        strategy: str = "auto",
+    ) -> DataFrame:
+        """Top-k over the probed cells (ivf.cc:715-800).
+
+        Returns ``(query_id, neighbor_id, distance, rank)``.  Distances for
+        COSINE are true cosine similarities (computed on the normalized
+        stored vectors).
+
+        ``strategy``: ``driver`` collects the query set once and broadcasts
+        it (the reference's nq<=10k serving regime); ``distributed`` never
+        collects — probe assignment runs as ``mapInArrow`` against
+        broadcast centroids and scoring cogroups base cells with their
+        probing queries (the corpus-vs-corpus regime, e.g. semantic dedup
+        of 100 TB against itself).  ``auto`` picks by query count."""
+        k = k if k is not None else self.config.k
+        p = self._probe(
+            "search", query_df, query_id_col, query_vec_col, strategy,
+            nprobe if nprobe is not None else self.config.nprobe, k=k,
+        )
+        select = topk_selection(k, p.codec.largest)
+        out = _topk(p.scan(select, filter_expr), k, p.codec.largest)
+        if self.config.ensure_topk_full:
+            out = self._fill_topk(p, out, select, k, filter_expr)
+        return out
+
+    # -- RangeSearch (index_node.h:169-326; ivf.cc range path) ----------------
+    def range_search(
+        self,
+        query_df: DataFrame,
+        config=None,
+        *,
+        nprobe: int | None = None,
+        filter_expr: Column | str | None = None,
+        query_id_col: str = "query_id",
+        query_vec_col: str = "vec",
+        strategy: str = "auto",
+    ) -> DataFrame:
+        """Distance-in-range neighbors within the probed cells — the same
+        half-open semantics as BruteForce.range_search (range_util.h:22-25),
+        bounds from ``config`` (default: the index's); probe-limited like
+        the reference's IVF range path, so ``nprobe=nlist`` makes it exact.
+        ``range_search_k`` truncates per query (config.h:665-669).
+        ``strategy`` mirrors :meth:`search`."""
+        cfg = config or self.config
+        p = self._probe(
+            "range_search", query_df, query_id_col, query_vec_col, strategy,
+            nprobe if nprobe is not None else cfg.nprobe,
+        )
+        scored = p.scan(range_selection(*cfg.range_bounds()), filter_expr)
+        return apply_range_bounds(scored, cfg, already_bounded=True)
+
+    def _probe(self, verb, query_df, id_col, vec_col, strategy, nprobe, **attrs):
+        """Open one search: project the queries, choose the strategy, open
+        the metrics span (index.cc:149-162 Search span: labels the
+        consuming jobs; counters resolve via ``last_metrics.snapshot()``)
+        and rank the probes — on the driver, or as a cached distributed
+        probe table."""
+        from knowhere_spark.tracing import OpMetrics, op_description
+
+        self._drop_search_frames()
+        nprobe = min(nprobe, self.config.nlist)
+        queries = query_df.select(
+            F.col(id_col).cast("long").alias("query_id"),
+            F.col(vec_col).alias("qvec"),
+        )
+        if strategy == "auto":
+            # peek one row past the cutover: if the query set is small we
+            # already hold the rows and reuse them for the driver path
+            qrows = queries.limit(self._DRIVER_NQ_MAX + 1).collect()
+            strategy = "distributed" if len(qrows) > self._DRIVER_NQ_MAX else "driver"
+        elif strategy == "driver":
+            qrows = queries.collect()
+        if strategy not in ("driver", "distributed"):
+            raise ValueError(f"unknown strategy {strategy!r}")
+        sc = queries.sparkSession.sparkContext
+        m = OpMetrics(
+            op=f"{self.index_type.value}.{verb}", nprobe=nprobe,
+            nlist=self.config.nlist, strategy=strategy,
+            rows_scanned=sc.accumulator(0), **attrs, **self.resident_metrics(),
+        )
+        m["description"] = op_description(
+            sc, m["op"], nprobe=nprobe, strategy=strategy, **attrs
+        )
+        self.last_metrics = m
+        p = _Probe(self, queries, strategy, m)
+        codec = p.codec
+        if strategy == "distributed":
+            # the probe table feeds two plan branches (cell prune +
+            # cogroup): cached so the probe assignment runs once
+            p.probes = self._cache_for_search(
+                probe_assign_df(queries, self.centroids, codec, nprobe)
+            )
+            return p
+        # the collected rows go through the same Arrow reader as the kernels
+        qvec = pa.table({"qvec": pa.array([r["qvec"] for r in qrows])})
+        p.qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
+        p.Q = codec.prepare(codec.read_queries(qvec, "qvec"))
+        with p.timer.stage("probe_sec"):
+            order = rank_probes(codec.probe(self.centroids, p.Q), nprobe)
+            p.pairs = [
+                (int(q), int(c)) for qi, q in enumerate(p.qids) for c in order[:, qi]
+            ]
+        m["nq"] = len(p.qids)
+        m["cells_probed"] = len(p.pairs)
+        return p
+
+    def _search_cells(self, codec: FlatCodec) -> DataFrame:
+        """The distributed scan's cell table: the clustered view, without
+        the raw vectors a quantized codec does not score (refine re-joins
+        them)."""
+        frame = None
+        if codec.col != "vec" and "vec" in self.assignments.columns:
+            frame = self.assignments.drop("vec")
+        return clustered_search_view(self, frame)
+
+    def _fill_topk(self, p: "_Probe", out, select, k, filter_expr):
+        """``ensure_topk_full`` (ivf.cc:753-762): queries left with fewer
+        than k results re-probe every cell.  Unfiltered, the per-cell row
+        counts decide which queries are short (candidates >= k guarantee k
+        results) — no extra Spark job on the driver path."""
+        nlist = self.config.nlist
+        spark = self.assignments.sparkSession
+        if p.strategy == "driver":
+            if filter_expr is None:
+                cc = self._get_cell_counts()
+                cand: dict[int, int] = {}
+                for qid, cell in p.pairs:
+                    cand[qid] = cand.get(qid, 0) + cc.get(cell, 0)
+            else:
+                out = self._cache_for_search(out)   # counted, then returned
+                cand = {
+                    r["query_id"]: r["cnt"]
+                    for r in out.groupBy("query_id").agg(F.count("*").alias("cnt")).collect()
+                }
+            refill = [int(q) for q in p.qids if cand.get(int(q), 0) < k]
+            if not refill:
+                return out
+            pairs = [(q, c) for q in refill for c in range(nlist)]
+            p.m["cells_probed"] += len(pairs)
+            refilled = _topk(p.scan(select, filter_expr, pairs), k, p.codec.largest)
+            return out.filter(~F.col("query_id").isin(refill)).unionByName(refilled)
+
+        # distributed: the short queries are decided without a driver qid list
+        if filter_expr is None:
+            cc = self._get_cell_counts()
+            cc_df = spark.createDataFrame(
+                [(int(c), int(n)) for c, n in cc.items()], "cell_id int, cnt long"
+            )
+            under = (
+                p.probes.join(F.broadcast(cc_df), "cell_id", "left")
+                .groupBy("query_id")
+                .agg(F.sum(F.coalesce(F.col("cnt"), F.lit(0))).alias("cand"))
+                .filter(F.col("cand") < k)
+                .select("query_id")
+            )
+        else:
+            out = self._cache_for_search(out)
+            under = (
+                out.groupBy("query_id")
+                .agg(F.count("*").alias("cnt"))
+                .filter(F.col("cnt") < k)
+                .select("query_id")
+            )
+            # queries with zero results never appear in `out` at all
+            under = p.queries.select("query_id").exceptAll(
+                out.select("query_id").distinct()
+            ).unionByName(under)
+        # short-circuit: the common case has NO underfilled query, and
+        # composing the refill anyway costs a second full cogroup subplan +
+        # an anti-join at action time (~0.9 s measured on the 100k
+        # selfsearch); the emptiness probe reads the cached probe table (or
+        # the cached `out` the refill needs anyway)
+        if under.isEmpty():
+            return out
+        all_cells = spark.createDataFrame(
+            [(int(c),) for c in range(nlist)], "cell_id int"
+        )
+        refill_probes = self._cache_for_search(
+            p.probes.join(F.broadcast(under), "query_id", "left_semi")
+            .select("query_id", "qvec")
+            .dropDuplicates(["query_id"])
+            .crossJoin(F.broadcast(all_cells))
+            .select("query_id", "qvec", "cell_id")
+        )
+        refilled = _topk(p.scan(select, filter_expr, refill_probes), k, p.codec.largest)
+        kept = out.join(F.broadcast(under), "query_id", "left_anti")
+        return kept.unionByName(refilled)
+
+    def _get_cell_counts(self) -> dict[int, int]:
+        """Rows per cell — computed once, the index's only statistic
+        (the reference tracks live counts per segment similarly)."""
+        if self._cell_counts is None:
+            self._cell_counts = {
+                int(r["cell_id"]): int(r["cnt"])
+                for r in self.assignments.groupBy("cell_id")
+                .agg(F.count("*").alias("cnt"))
+                .collect()
+            }
+        return self._cell_counts
+
+
+class _Probe:
+    """One open search: its strategy, projected queries, codec, metrics
+    span and probes — ``pairs`` with ``qids``/``Q`` on the driver, or the
+    cached ``probes`` table when distributed."""
+
+    def __init__(self, index: IVFBaseIndex, queries: DataFrame, strategy: str, m):
+        from knowhere_spark.tracing import StageTimer
+
+        self.index = index
+        self.codec = index._codec()
+        self.queries = queries
+        self.strategy = strategy
+        self.m = m
+        self.timer = StageTimer(m)
+        self.probes = self.pairs = self.qids = self.Q = None
+
+    def scan(self, select, filter_expr, probed=None) -> DataFrame:
+        """``(query_id, neighbor_id, distance)`` rows ``select`` keeps from
+        the probed cells — or from ``probed`` (driver pairs, or a probe
+        table) instead of the search's own probes."""
+        idx = self.index
+        acc = self.m["rows_scanned"]
+        if self.strategy == "distributed":
+            return cogroup_cells(
+                idx._search_cells(self.codec),
+                self.probes if probed is None else probed,
+                self.codec, select, filter_expr, rows_acc=acc,
+            )
+        with self.timer.stage("scan_plan_sec"):
+            return scan_probed_cells(
+                idx.assignments, idx.config.nlist,
+                self.pairs if probed is None else probed,
+                self.qids, self.Q, self.codec, select, filter_expr, rows_acc=acc,
+            )
+
+
+class IVFFlatIndex(IVFBaseIndex):
     """Built IVF_FLAT index: centroid matrix + resident cell table."""
 
     #: train-sample collect threshold: rows*dim <= 2^25 (~268 MB fp64).
@@ -190,21 +654,12 @@ class IVFFlatIndex(ResidentCells):
         self.assignments = assignments
         self.config = config
         self.index_type = index_type
-        self._cell_counts: dict[int, int] | None = None   # lazy stats
 
-    # -- introspection verbs (index_node.h:411-434) -------------------------
-    def count(self) -> int:
-        return self.assignments.count()
+    def _codec(self) -> FlatCodec:
+        return FlatCodec(self.config.metric_type)
 
-    def dim(self) -> int:
-        return int(self.centroids.shape[1])
-
-    def type(self) -> str:
-        return self.index_type.value
-
-    def has_raw_data(self) -> bool:
-        # IVF_FLAT keeps raw codes (flat.cc:257-285 HasRawData rules)
-        return True
+    def _encode(self, rows: DataFrame, scalars: tuple[str, ...]) -> DataFrame:
+        return _assign_cells(rows, self.centroids, scalars)
 
     # -- Build ---------------------------------------------------------------
     @classmethod
@@ -256,24 +711,13 @@ class IVFFlatIndex(ResidentCells):
         lazy plan.  The quantized families train through this and make
         only their own encoded table resident."""
         from knowhere_spark.functions.distance import numpy_kmeans
-        from knowhere_spark.tracing import OpMetrics, op_description
 
         t_build0 = time.monotonic()
         scalar_cols = tuple(scalar_cols)
         clash = {"id", "vec", "cell_id"} & set(scalar_cols)
         if clash:
             raise ValueError(f"scalar_cols collide with index columns: {sorted(clash)}")
-        metric = MetricType(config.metric_type)
-        base = base_df.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).alias("vec"),
-            *scalar_cols,
-        )
-        if metric == MetricType.COSINE:
-            # normalize-at-train contract (ivf.cc:462-470)
-            base = base.select(
-                "id", normalize_expr(F.col("vec")).alias("vec"), *scalar_cols
-            )
+        base = vector_rows(base_df, id_col, vec_col, scalar_cols, config.metric_type)
 
         n = base.count()
         nlist = config.match_nlist(n)
@@ -296,7 +740,8 @@ class IVFFlatIndex(ResidentCells):
         )
         head = base.select("vec").head()
         dim = len(head["vec"]) if head else 0
-        if min(n, train_cap) * max(dim, 1) <= cls._DRIVER_TRAIN_MAX_ELEMS:
+        on_driver = min(n, train_cap) * max(dim, 1) <= cls._DRIVER_TRAIN_MAX_ELEMS
+        if on_driver:
             # the capped sample fits the driver comfortably — train exactly
             # where the reference does (single-node over the subsample),
             # skipping ~20 distributed-job round-trips of an MLlib fit
@@ -351,338 +796,8 @@ class IVFFlatIndex(ResidentCells):
 
         cfg = dataclasses.replace(config, nlist=nlist)
         idx = cls(centroids, assignments, cfg, index_type=index_type)
-        # span close (index.cc:131-148 Build span): config attrs + the
-        # eager portion's wall (train + assign plan; assignments stay lazy)
-        m = OpMetrics(
-            op=f"{index_type.value}.build", n=n, dim=dim, nlist=nlist,
-            train_backend="driver"
-            if min(n, train_cap) * max(dim, 1) <= cls._DRIVER_TRAIN_MAX_ELEMS
-            else "mllib",
-            stages={"build_plan_sec": round(time.monotonic() - t_build0, 6)},
-        )
-        m["description"] = op_description(
-            base.sparkSession.sparkContext, m["op"], n=n, nlist=nlist
-        )
-        idx.last_metrics = m
+        idx._build_metrics(t_build0, n, dim, "driver" if on_driver else "mllib")
         return idx
-
-    # -- Add (append new rows to a trained index) ----------------------------
-    def add(self, new_df: DataFrame, *, id_col: str = "id", vec_col: str = "vec") -> "IVFFlatIndex":
-        """Assign new rows to existing centroids and append
-        (``IndexNode::Add``, index_node.h:120-121; the *_CC growing-segment
-        behavior, ivf.cc:513-534)."""
-        metric = MetricType(self.config.metric_type)
-        # scalar payload columns the index carries must arrive with every
-        # Add batch — a NULL-padded union would silently break the
-        # partition-pruned filtered search on the saved layout
-        extra = tuple(
-            c for c in self.assignments.columns if c not in ("id", "cell_id", "vec")
-        )
-        missing = [c for c in extra if c not in new_df.columns]
-        if missing:
-            raise ValueError(f"Add batch is missing the index's scalar_cols: {missing}")
-        new = new_df.select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"), *extra
-        )
-        if metric == MetricType.COSINE:
-            new = new.select("id", normalize_expr(F.col("vec")).alias("vec"), *extra)
-        child = IVFFlatIndex(
-            self.centroids, self.assignments, self.config,
-            index_type=self.index_type,
-        )
-        batch = child._append_resident(self, _assign_cells(new, self.centroids, extra))
-        child.assignments = self.assignments.unionByName(batch)
-        return child
-
-    #: auto-strategy cutover: beyond this many queries the driver no longer
-    #: collects the query set; probe assignment and scoring both distribute
-    _DRIVER_NQ_MAX = 10_000
-
-    # -- Search ---------------------------------------------------------------
-    def search(
-        self,
-        query_df: DataFrame,
-        k: int | None = None,
-        nprobe: int | None = None,
-        *,
-        filter_expr: Column | str | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "vec",
-        strategy: str = "auto",
-    ) -> DataFrame:
-        """Top-k over the probed cells (ivf.cc:715-800).
-
-        Returns ``(query_id, neighbor_id, distance, rank)``.  Distances for
-        COSINE are true cosine similarities (computed on the normalized
-        stored vectors).
-
-        ``strategy``: ``driver`` collects the query set once and broadcasts
-        it (the reference's nq<=10k serving regime); ``distributed`` never
-        collects — probe assignment runs as ``mapInPandas`` against
-        broadcast centroids and scoring cogroups base cells with their
-        probing queries (the corpus-vs-corpus regime, e.g. semantic dedup
-        of 100 TB against itself).  ``auto`` picks by query count.
-        """
-        k = k if k is not None else self.config.k
-        nprobe = min(nprobe if nprobe is not None else self.config.nprobe, self.config.nlist)
-        metric = MetricType(self.config.metric_type)
-        spark = self.assignments.sparkSession
-
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        if strategy == "auto":
-            # peek one row past the cutover: if the query set is small we
-            # already hold the rows and reuse them for the driver path
-            qrows = queries.limit(self._DRIVER_NQ_MAX + 1).collect()
-            if len(qrows) > self._DRIVER_NQ_MAX:
-                strategy = "distributed"
-            else:
-                strategy = "driver"
-        elif strategy == "driver":
-            qrows = queries.collect()
-        if strategy not in ("driver", "distributed"):
-            raise ValueError(f"unknown strategy {strategy!r}")
-        # span open (index.cc:149-162 Search span): label the consuming
-        # jobs + live counters resolved via last_metrics.snapshot()
-        from knowhere_spark.tracing import OpMetrics, StageTimer, op_description
-
-        m = OpMetrics(
-            op=f"{self.index_type.value}.search", k=k, nprobe=nprobe,
-            nlist=self.config.nlist, strategy=strategy,
-            rows_scanned=spark.sparkContext.accumulator(0),
-            **self.resident_metrics(),
-        )
-        m["description"] = op_description(
-            spark.sparkContext, m["op"], k=k, nprobe=nprobe, strategy=strategy
-        )
-        timer = StageTimer(m)
-        self.last_metrics = m
-        if strategy == "distributed":
-            return self._search_distributed(
-                queries, k, nprobe, filter_expr, rows_acc=m["rows_scanned"]
-            )
-
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-        if metric == MetricType.COSINE:
-            qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qnorm[qnorm == 0] = 1.0
-            qmat = qmat / qnorm
-
-        with timer.stage("probe_sec"):
-            pairs = probe_pairs(self.centroids, qids, qmat, nprobe)
-        m["nq"] = len(qids)
-        m["cells_probed"] = len(pairs)
-        with timer.stage("scan_plan_sec"):
-            out = scan_probed_topk(
-                self.assignments, self.config.nlist, pairs, qids, qmat, k,
-                metric, filter_expr, rows_acc=m["rows_scanned"],
-            )
-
-        if self.config.ensure_topk_full:
-            # probe-all fallback for underfilled queries (ivf.cc:753-762)
-            if filter_expr is None:
-                # cheap path: per-query candidate counts from cell stats —
-                # no filter means candidates >= k guarantees k results,
-                # so no extra Spark job at all in the common case
-                cc = self._get_cell_counts()
-                by_q: dict[int, int] = {}
-                for qid, cell in pairs:
-                    by_q[qid] = by_q.get(qid, 0) + cc.get(cell, 0)
-                refill = [i for i, qid in enumerate(qids) if by_q.get(int(qid), 0) < k]
-            else:
-                out = out.cache()   # the count below must not recompute twice
-                counts = {r["query_id"]: r["cnt"] for r in out.groupBy("query_id").agg(F.count("*").alias("cnt")).collect()}
-                refill = [i for i, qid in enumerate(qids) if counts.get(int(qid), 0) < k]
-            if refill:
-                all_pairs = [
-                    (int(qids[i]), int(c))
-                    for i in refill
-                    for c in range(self.config.nlist)
-                ]
-                m["cells_probed"] = m.get("cells_probed", 0) + len(all_pairs)
-                refill_out = scan_probed_topk(
-                    self.assignments, self.config.nlist, all_pairs, qids,
-                    qmat, k, metric, filter_expr, rows_acc=m["rows_scanned"],
-                )
-                kept = out.filter(~F.col("query_id").isin([int(qids[i]) for i in refill]))
-                out = kept.unionByName(refill_out)
-        return out
-
-    def _get_cell_counts(self) -> dict[int, int]:
-        """Rows per cell — computed once, the index's only statistic
-        (the reference tracks live counts per segment similarly)."""
-        if self._cell_counts is None:
-            self._cell_counts = {
-                int(r["cell_id"]): int(r["cnt"])
-                for r in self.assignments.groupBy("cell_id")
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            }
-        return self._cell_counts
-
-    def probe_assign(self, queries: DataFrame, nprobe: int) -> DataFrame:
-        """Distributed probe assignment — see :func:`probe_assign_df`."""
-        return probe_assign_df(
-            queries, self.centroids, MetricType(self.config.metric_type), nprobe
-        )
-
-    def _search_distributed(self, queries, k, nprobe, filter_expr, rows_acc=None):
-        """Corpus-vs-corpus scoring: cogroup base cells with their probing
-        queries on ``cell_id`` and GEMM within each cell — one shuffle of
-        each side keyed by cell, no driver collect, no broadcast of the
-        query set.  ``ensure_topk_full`` refills underfilled queries with
-        an all-cells probe, decided distributedly."""
-        probes = self.probe_assign(queries, nprobe)
-        out = self._cogroup_topk(probes, k, filter_expr, rows_acc=rows_acc)
-        if not self.config.ensure_topk_full:
-            return out
-        spark = self.assignments.sparkSession
-        if filter_expr is None:
-            # candidate counts >= k guarantee k results when unfiltered
-            cc = self._get_cell_counts()
-            cc_df = spark.createDataFrame(
-                [(int(c), int(n)) for c, n in cc.items()], "cell_id int, cnt long"
-            )
-            under = (
-                probes.join(F.broadcast(cc_df), "cell_id", "left")
-                .groupBy("query_id")
-                .agg(F.sum(F.coalesce(F.col("cnt"), F.lit(0))).alias("cand"))
-                .filter(F.col("cand") < k)
-                .select("query_id")
-            )
-        else:
-            out = out.cache()
-            under = (
-                out.groupBy("query_id")
-                .agg(F.count("*").alias("cnt"))
-                .filter(F.col("cnt") < k)
-                .select("query_id")
-            )
-            # queries with zero results never appear in `out` at all
-            under = queries.select("query_id").exceptAll(
-                out.select("query_id").distinct()
-            ).unionByName(under)
-        # short-circuit: the common case has NO underfilled query (every
-        # probe set covers >= k candidates), and composing the refill
-        # anyway costs a second full cogroup subplan + a 1M-row anti-join
-        # at action time (~0.9 s measured on the 100k selfsearch).  The
-        # emptiness probe itself is cheap: the unfiltered branch reads the
-        # cached probe table against a broadcast of per-cell counts; the
-        # filtered branch reads the `out` cache the refill path needs
-        # materialized anyway.  Results are identical — an empty `under`
-        # makes refill_out empty and kept == out by construction.
-        if under.isEmpty():
-            return out
-        all_cells = spark.createDataFrame(
-            [(int(c),) for c in range(self.config.nlist)], "cell_id int"
-        )
-        refill_probes = (
-            probes.join(F.broadcast(under), "query_id", "left_semi")
-            .select("query_id", "qvec")
-            .dropDuplicates(["query_id"])
-            .crossJoin(F.broadcast(all_cells))
-            .select("query_id", "qvec", "cell_id")
-        )
-        refill_out = self._cogroup_topk(refill_probes, k, filter_expr, rows_acc=rows_acc)
-        kept = out.join(F.broadcast(under), "query_id", "left_anti")
-        return kept.unionByName(refill_out)
-
-    def _cogroup_topk(self, probes: DataFrame, k, filter_expr, rows_acc=None):
-        metric = MetricType(self.config.metric_type)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        return cogroup_cells_topk(
-            clustered_search_view(self), probes, k, dist_metric,
-            filter_expr=filter_expr,
-            rows_acc=rows_acc,
-        )
-
-    def _range_search_distributed(self, queries, nprobe, filter_expr):
-        """Distributed range search: probes assign via ``mapInPandas``,
-        in-range pairs stream out of per-cell cogroups; ``range_search_k``
-        truncates per query at the end (config.h:665-669)."""
-        metric = MetricType(self.config.metric_type)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        probes = self.probe_assign(queries, nprobe)
-        lo, hi, sim = self.config.range_bounds()
-        out = cogroup_cells_range(
-            clustered_search_view(self), probes, lo, hi, sim, dist_metric,
-            filter_expr=filter_expr,
-        )
-        return apply_range_bounds(out, self.config, already_bounded=True)
-
-    # -- RangeSearch (index_node.h:169-326; ivf.cc range path) ----------------
-    def range_search(
-        self,
-        query_df: DataFrame,
-        *,
-        nprobe: int | None = None,
-        filter_expr: Column | str | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "vec",
-        strategy: str = "auto",
-    ) -> DataFrame:
-        """Distance-in-range neighbors within probed cells — the same
-        half-open semantics as BruteForce.range_search (range_util.h:22-25);
-        probe-limited like the reference's IVF range path.  ``nprobe=nlist``
-        makes it exact.  ``strategy`` mirrors :meth:`search`:
-        ``distributed`` assigns probes via ``mapInPandas`` and scores in
-        per-cell cogroups, never collecting the query set."""
-        nprobe = min(
-            nprobe if nprobe is not None else self.config.nprobe, self.config.nlist
-        )
-        metric = MetricType(self.config.metric_type)
-        spark = self.assignments.sparkSession
-
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        if strategy == "auto":
-            qrows = queries.limit(self._DRIVER_NQ_MAX + 1).collect()
-            strategy = (
-                "distributed" if len(qrows) > self._DRIVER_NQ_MAX else "driver"
-            )
-        elif strategy == "driver":
-            qrows = queries.collect()
-        if strategy == "distributed":
-            return self._range_search_distributed(queries, nprobe, filter_expr)
-        if strategy != "driver":
-            raise ValueError(f"unknown strategy {strategy!r}")
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-        if metric == MetricType.COSINE:
-            qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            qmat = qmat / qn
-        qvec_df = spark.createDataFrame(
-            [(int(q), [float(x) for x in qmat[i]]) for i, q in enumerate(qids)],
-            "query_id long, qvec array<double>",
-        )
-        pairs = probe_pairs(self.centroids, qids, qmat, nprobe)
-        probe_df = spark.createDataFrame(pairs, "query_id long, cell_id int")
-        cand = self.assignments
-        if filter_expr is not None:
-            cand = cand.filter(filter_expr)
-        cand = cand.filter(F.col("cell_id").isin(sorted({c for _, c in pairs})))
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        scored = (
-            cand.join(F.broadcast(probe_df), "cell_id")
-            .join(F.broadcast(qvec_df), "query_id")
-            .select(
-                "query_id",
-                F.col("id").alias("neighbor_id"),
-                distance_expr(dist_metric, F.col("vec"), F.col("qvec")).alias("distance"),
-            )
-        )
-        return apply_range_bounds(scored, self.config)
-
-    # -- GetVectorByIds (index_node.h:340-350; HasRawData true for IVF_FLAT) --
-    def get_vector_by_ids(self, ids_df: DataFrame, *, id_col: str = "id") -> DataFrame:
-        ids = ids_df.select(F.col(id_col).cast("long").alias("id"))
-        return self.assignments.select("id", "vec").join(F.broadcast(ids), "id")
 
     # -- GetIndexMeta (index_node.h:363; feder/IVFFlat.h:25-87) ---------------
     def get_index_meta(self, *, with_node_ids: bool = True) -> DataFrame:
@@ -731,19 +846,7 @@ class IVFFlatIndex(ResidentCells):
         reference's scalar-filter-aware search
         (materialized_view.h:23-36): equality/IN predicates on the hot
         field never read a byte of the other partitions."""
-        scalars = list(scalar_partition_cols or [])
-        payload = [
-            c for c in self.assignments.columns if c not in ("id", "cell_id", "vec")
-        ]
-        bad = [c for c in scalars if c not in payload]
-        if bad:
-            # 'cell_id' would partitionBy twice, 'id' would write one
-            # directory per row, 'vec' fails on the array type — only the
-            # scalar payload columns are legal partition levels
-            raise ValueError(
-                f"scalar_partition_cols must be among the index's scalar_cols"
-                f" {payload}: {bad}"
-            )
+        partition_by = self._partition_by(scalar_partition_cols)
         store = IndexStore(path)
         store.write_manifest(
             {
@@ -761,173 +864,184 @@ class IVFFlatIndex(ResidentCells):
                 "assignments_schema": self.assignments.schema.json(),
             }
         )
-        # scalar fields coarsest-first, then cell: probe-time pruning on
-        # cell_id composes with scalar-predicate pruning
-        store.write_table(
-            "assignments", self.assignments, partition_by=[*scalars, "cell_id"]
-        )
+        store.write_table("assignments", self.assignments, partition_by=partition_by)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFFlatIndex":
         store = IndexStore(path)
         m = store.read_manifest()
         centroids = np.array(m["centroids"], dtype=np.float64)
-        schema = None
-        if m.get("assignments_schema"):
-            import json
-
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(m["assignments_schema"]))
-        assignments = store.read_table(spark, "assignments", schema=schema)
         cfg = IvfConfig(
             metric_type=MetricType(m["metric_type"]),
             nlist=int(m["nlist"]),
             nprobe=int(m["nprobe"]),
         )
-        return cls(centroids, assignments, cfg, index_type=IndexType(m["index_type"]))
+        return cls(
+            centroids, read_cell_table(spark, store, m), cfg,
+            index_type=IndexType(m["index_type"]),
+        )
 
 
-def probe_pairs(centroids: np.ndarray, qids: np.ndarray, qmat: np.ndarray, nprobe: int):
-    """Driver-side top-nprobe cells per query over the tiny centroid
-    matrix → bare (query_id, cell_id) pairs.
+def read_cell_table(spark: SparkSession, store: IndexStore, manifest: dict) -> DataFrame:
+    """A saved index's ``assignments`` table, read with the declared schema
+    when the manifest has one (it pins partition-column types)."""
+    schema = None
+    if manifest.get("assignments_schema"):
+        import json
 
-    Probe ranking uses **L2 — the assignment geometry** — for every
-    float metric: cells are L2-Voronoi regions (_assign_cells), and
-    COSINE data/queries are already normalized, so nearest-by-L2 IS
-    the cell ordering consistent with where vectors live.  Ranking by
-    raw IP against unnormalized centroids would disagree with
-    assignment (a query equal to a stored vector could miss its own
-    cell).  faiss probes with the quantizer's own metric for the same
-    reason; scoring inside cells still uses the true metric."""
-    d = pairwise_distances(centroids, qmat, MetricType.L2)   # (nlist, nq)
-    order = np.argsort(d, axis=0, kind="stable")[:nprobe, :]  # (nprobe, nq)
-    return [
-        (int(qids[qi]), int(c)) for qi in range(len(qids)) for c in order[:, qi]
-    ]
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(manifest["assignments_schema"]))
+    return store.read_table(spark, "assignments", schema=schema)
 
 
-def scan_probed_topk(
+def rank_probes(D: np.ndarray, nprobe: int) -> np.ndarray:
+    """Top-``nprobe`` cells per query from ``(nlist, nq)`` coarse-quantizer
+    distances → ``(nprobe, nq)`` cell ids, nearest first; the prefix of a
+    stable argsort (via a partial selection), so ties go to the lower cell
+    id on every path."""
+    return top_cap_stable(D.T, nprobe).T
+
+
+def topk_selection(k: int, largest: bool):
+    """Per-batch partial top-k for the scan kernels: ``select(dist,
+    member)`` → ``(rows, queries)`` index arrays of the kept pairs, over the
+    probed pairs ``member`` (a driver-scan batch against the whole query
+    matrix) or over every pair (a cogrouped cell against its probing
+    queries).  The final window tie-breaks ``(distance, id)``, so a batch
+    must not drop a candidate that window could keep."""
+
+    def select(dist, member=None):
+        n, nq = dist.shape
+        key = -dist if largest else dist
+        if member is not None:
+            key = np.where(member, key, np.inf)
+        kk = min(k, n)
+        sel = np.zeros((n, nq), dtype=bool)
+        if kk < n:
+            part = np.argpartition(key, kk - 1, axis=0)[:kk]  # (kk, nq)
+            col = np.arange(nq)
+            sel[part, col[None, :]] = True
+            # widen to rows tied at a FINITE per-query boundary so a
+            # smallest-id duplicate can't be dropped at the partial cut
+            bnd = key[part, col[None, :]].max(axis=0)         # (nq,)
+            finite_b = np.isfinite(bnd)
+            if finite_b.any():
+                sel |= (key == bnd[None, :]) & finite_b[None, :]
+        else:
+            sel[:] = True
+        if member is not None:
+            sel &= member
+        return np.nonzero(sel)
+
+    return select
+
+
+def range_selection(lo: float, hi: float, sim: bool):
+    """Per-batch half-open range mask for the scan kernels (range_util.h:
+    22-25: ``lo < d <= hi`` for similarities, ``lo <= d < hi`` for
+    distances) — same ``select`` contract as :func:`topk_selection`."""
+
+    def select(dist, member=None):
+        if sim:
+            mask = (dist > lo) & (dist <= hi)
+        else:
+            mask = (dist >= lo) & (dist < hi)
+        if member is not None:
+            mask &= member
+        return np.nonzero(mask)
+
+    return select
+
+
+def _topk(scored: DataFrame, k: int, largest: bool) -> DataFrame:
+    return topk_per_key(
+        scored, "query_id", "distance", k,
+        ascending=not largest, tie_breaker="neighbor_id",
+    )
+
+
+_RESULT_ARROW_SCHEMA = pa.schema(
+    [("query_id", pa.int64()), ("neighbor_id", pa.int64()), ("distance", pa.float64())]
+)
+
+
+def _result_batch(qids, ids, dist) -> pa.RecordBatch:
+    return pa.record_batch(
+        [
+            pa.array(qids, type=pa.int64()),
+            pa.array(ids, type=pa.int64()),
+            pa.array(dist, type=pa.float64()),
+        ],
+        names=["query_id", "neighbor_id", "distance"],
+    )
+
+
+def scan_probed_cells(
     table: DataFrame,
     nlist: int,
     pairs,
-    qids,
-    qmat,
-    k: int,
-    metric: MetricType,
+    qids: np.ndarray,
+    Q: np.ndarray,
+    codec: FlatCodec,
+    select,
     filter_expr: Column | str | None = None,
     *,
     rows_acc=None,
-    row_matrix=None,
 ) -> DataFrame:
-    """Driver-strategy partial-then-final top-k over the probed cells of
-    a cell table — shared by IVF_FLAT and the quantized families.
+    """Driver-strategy scan of the probed cells of a cell table:
+    ``(query_id, neighbor_id, distance)`` rows that ``select`` keeps.
 
-    The scan is a GEMM kernel per partition emitting at most
-    ``partitions·nq·k`` rows into the final window — the same
-    parallelism inversion as BruteForce's gemm path (SURVEY.md §3.2);
-    a naive SQL-distance + global window would shuffle every scored
-    candidate instead.  ``row_matrix(tbl) -> (n, dim) float64`` turns a
-    batch into the GEMM operand: raw vectors by default, decoded codes
-    for the quantized families."""
+    One ``mapInArrow`` kernel per partition scores each batch with
+    ``codec`` against the broadcast query matrix; a top-k selection emits
+    at most ``partitions·nq·k`` rows into the final window — the same
+    parallelism inversion as BruteForce's gemm path (SURVEY.md §3.2); a
+    naive SQL-distance + global window would shuffle every scored
+    candidate instead."""
     from knowhere_spark.operators.brute_force import RESULT_SCHEMA
 
-    if row_matrix is None:
-        row_matrix = lambda tbl: list_matrix(tbl, "vec")
-    spark = table.sparkSession
     cells = sorted({c for _, c in pairs})
-    cand = table
-    if filter_expr is not None:
-        cand = cand.filter(filter_expr)
-    # literal IN-list → partition pruning when assignments are read from
-    # a cell-partitioned parquet index (see save/load)
-    cand = cand.filter(F.col("cell_id").isin(cells))
-
-    dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-    qids_arr = np.asarray(qids, dtype=np.int64)
-    qmat = np.asarray(qmat, dtype=np.float64)
+    cand = table if filter_expr is None else table.filter(filter_expr)
+    # literal IN-list → partition pruning when the table is read from a
+    # cell-partitioned parquet index (see save/load); only the scored
+    # columns cross into Python
+    cand = cand.filter(F.col("cell_id").isin(cells)).select("id", "cell_id", codec.col)
     # (nlist, nq) boolean probe-membership matrix: one fancy-index per
-    # partition batch replaces the former per-query np.isin over the
-    # cell column (O(nq·n) Python-side mask work per batch)
-    qcol = {int(q): i for i, q in enumerate(qids_arr)}
-    probe_matrix = np.zeros((nlist, len(qids_arr)), dtype=bool)
+    # batch gives the (n, nq) mask of probed pairs
+    qcol = {int(q): i for i, q in enumerate(qids)}
+    member = np.zeros((nlist, len(qids)), dtype=bool)
     for qid, cell in pairs:
-        probe_matrix[int(cell), qcol[int(qid)]] = True
-    bc = spark.sparkContext.broadcast(
-        (qids_arr, qmat, probe_matrix, dist_metric.value)
-    )
-    largest = dist_metric.is_similarity
+        member[int(cell), qcol[int(qid)]] = True
+    bc = table.sparkSession.sparkContext.broadcast((qids, Q, member, codec))
 
     def kernel(batches):
-        import pyarrow as pa
-
-        from knowhere_spark.functions.arrowio import scalar_column
-
-        b_qids, b_qmat, b_member, dm = bc.value
-        dm = MetricType(dm)
-        nq = len(b_qids)
+        b_qids, b_Q, b_member, cd = bc.value
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
-            X = row_matrix(tbl)
             ids = scalar_column(tbl, "id", np.int64)
             cell = scalar_column(tbl, "cell_id", np.int64)
-            n = len(ids)
             if rows_acc is not None:
-                rows_acc.add(n)
-            dist = pairwise_distances(X, b_qmat, dm)      # (n, nq)
-            member = b_member[cell]                       # (n, nq)
-            key = -dist if largest else dist
-            key = np.where(member, key, np.inf)           # mask non-probed
-            kk = min(k, n)
-            sel = np.zeros((n, nq), dtype=bool)
-            if kk < n:
-                part = np.argpartition(key, kk - 1, axis=0)[:kk]  # (kk, nq)
-                col = np.arange(nq)
-                sel[part, col[None, :]] = True
-                # widen to rows tied at a FINITE per-query boundary so a
-                # smallest-id duplicate can't be dropped at the partial
-                # cut (the final window tie-breaks (distance, id))
-                bnd = key[part, col[None, :]].max(axis=0)         # (nq,)
-                finite_b = np.isfinite(bnd)
-                if finite_b.any():
-                    sel |= (key == bnd[None, :]) & finite_b[None, :]
-            else:
-                sel[:] = True
-            sel &= member
-            rows_f, q_f = np.nonzero(sel)
-            if len(rows_f) == 0:
-                continue
-            yield pa.record_batch(
-                [
-                    pa.array(b_qids[q_f], type=pa.int64()),
-                    pa.array(ids[rows_f], type=pa.int64()),
-                    pa.array(dist[rows_f, q_f], type=pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "distance"],
-            )
+                rows_acc.add(len(ids))
+            dist = cd.score(tbl, b_Q)                     # (n, nq)
+            ri, qi = select(dist, b_member[cell])
+            if len(ri):
+                yield _result_batch(b_qids[qi], ids[ri], dist[ri, qi])
 
-    scored = cand.mapInArrow(kernel, RESULT_SCHEMA)
-    return topk_per_key(
-        scored,
-        "query_id",
-        "distance",
-        k,
-        ascending=not metric.is_similarity,
-        tie_breaker="neighbor_id",
-    )
+    return cand.mapInArrow(kernel, RESULT_SCHEMA)
 
 
 def probe_assign_df(
-    queries: DataFrame, centroids: np.ndarray, metric: MetricType, nprobe: int
+    queries: DataFrame, centroids: np.ndarray, codec: FlatCodec, nprobe: int
 ) -> DataFrame:
     """Distributed probe assignment: ``mapInArrow`` over the query set
-    against the broadcast ``nlist × dim`` centroid matrix, emitting one
-    ``(query_id, qvec, cell_id)`` row per probed cell.  The query set never
-    touches the driver — the large-nq half of the reference's search
-    fan-out (ivf.cc:715-800) with Spark's data parallelism on the query
-    axis.  COSINE queries come out normalized (ivf.cc:462-470 contract)."""
+    against the broadcast centroid matrix, emitting one ``(query_id, qvec,
+    cell_id)`` row per probed cell (ranked by :func:`rank_probes` over
+    ``codec.probe``).  The query set never touches the driver — the
+    large-nq half of the reference's search fan-out (ivf.cc:715-800) with
+    Spark's data parallelism on the query axis.  COSINE queries come out
+    normalized (ivf.cc:462-470 contract)."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -937,20 +1051,16 @@ def probe_assign_df(
         StructType,
     )
 
-    # probe ranking = assignment geometry (L2 — see probe_pairs); only
-    # query normalization depends on the true metric
     spark = queries.sparkSession
-    normalize = metric == MetricType.COSINE
-    bc = spark.sparkContext.broadcast((centroids, MetricType.L2.value, normalize))
+    bc = spark.sparkContext.broadcast((centroids, codec))
     # qvec payload type: COSINE must ship the float64-normalized vectors
-    # (ivf.cc:462-470 contract — scorers IP them against normalized rows);
-    # every other metric passes the INPUT values through untouched, so the
-    # probe table keeps the caller's (usually float32) element type — the
-    # scorers' float64 upcast is exact, and the per-probe duplicated qvec
-    # payload shuffles at half the bytes (guide §2.3: narrower types,
-    # §4.2: no needless float64 list materialization in the kernel)
+    # (scorers IP them against normalized rows); every other metric passes
+    # the INPUT values through untouched, so the probe table keeps the
+    # caller's (usually float32) element type — the scorers' float64
+    # upcast is exact, and the per-probe duplicated qvec payload shuffles
+    # at half the bytes (guide §2.3: narrower types)
     qvec_type = (
-        ArrayType(DoubleType()) if normalize else queries.schema["qvec"].dataType
+        ArrayType(DoubleType()) if codec.normalize else queries.schema["qvec"].dataType
     )
     schema = StructType(
         [
@@ -961,43 +1071,27 @@ def probe_assign_df(
     )
 
     def kernel(batches):
-        import pyarrow as pa
-
         from knowhere_spark.functions.arrowio import (
-            list_matrix,
             matrix_to_list_array,
             repeat_list_column,
-            scalar_column,
         )
 
-        C, pm, normalize = bc.value
-        pm = MetricType(pm)
+        C, cd = bc.value
+        npb = min(nprobe, len(C))
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
-            Q = list_matrix(tbl, "qvec")
-            if normalize:
-                qn = np.linalg.norm(Q, axis=1, keepdims=True)
-                qn[qn == 0] = 1.0
-                Q = Q / qn
-            d = pairwise_distances(C, Q, pm)                  # (nlist, nq)
-            key = -d if pm.is_similarity else d
-            npb = min(nprobe, len(C))
-            order = (
-                np.argpartition(key, npb - 1, axis=0)[:npb, :]
-                if npb < len(C)
-                else np.argsort(key, axis=0)
-            )                                                  # (npb, nq)
+            Q = cd.prepare(cd.read_queries(tbl, "qvec"))
+            order = rank_probes(cd.probe(C, Q), npb)        # (npb, nq)
             qids = scalar_column(tbl, "query_id", np.int64)
             # Arrow-native emission (guide §4.2): COSINE builds ONE values
             # buffer + arithmetic offsets for the normalized float64
-            # vectors; every other metric re-emits the INPUT list rows via
-            # one vectorized take — the element type (usually float32)
-            # passes through untouched, so probe payload bytes stay halved
+            # vectors; every other metric re-emits the INPUT rows via one
+            # vectorized take — the element type passes through untouched
             out_q = (
                 matrix_to_list_array(np.repeat(Q, npb, axis=0), pa.float64())
-                if normalize
+                if cd.normalize
                 else repeat_list_column(tbl, "qvec", npb)
             )
             yield pa.record_batch(
@@ -1043,139 +1137,45 @@ def clustered_search_view(index: ResidentCells, frame: DataFrame | None = None) 
     return index._clustered_assign
 
 
-def cogroup_cells_topk(
-    assignments: DataFrame,
+def cogroup_cells(
+    cells: DataFrame,
     probes: DataFrame,
-    k: int,
-    dist_metric: MetricType,
-    *,
+    codec: FlatCodec,
+    select,
     filter_expr: Column | str | None = None,
-    row_matrix=None,
+    *,
     rows_acc=None,
 ) -> DataFrame:
-    """Per-cell GEMM top-k via cogrouped ``applyInArrow``: base cells meet
-    their probing queries after one shuffle of each side keyed by
-    ``cell_id``; a final window reduces <= cells_probed·k candidates per
-    query.  ``row_matrix(tbl: pa.Table) -> (n, dim) float64`` turns a
-    cell's rows into the GEMM operand — raw vectors for IVF_FLAT, decoded
-    codes for the quantized families (decode-then-GEMM is arithmetically
-    identical to the reference's ADC/affine scan: the LUT entry IS the
-    sub-distance to the decoded centroid).  Shared by every IVF-family
-    distributed search.
+    """Distributed scan: ``(query_id, neighbor_id, distance)`` rows that
+    ``select`` keeps, per cell, via cogrouped ``applyInArrow`` — base cells
+    meet their probing queries after one shuffle of each side keyed by
+    ``cell_id`` (none on the base side when ``cells`` is the clustered
+    view).  ``probes`` feeds two plan branches (cell prune + cogroup), so
+    the caller passes it cached.
 
-    Arrow-native kernel (guide §4.2): the ``(n, dim)`` operands come from
-    one flatten+reshape+astype over each list column's contiguous values
-    buffer.  The former pandas kernel boxed every vector row into a
-    Python object and re-stacked with ``np.array(list(...))`` — measured
-    1.5-2x the whole cogroup stage at the 100k-selfsearch shape.  Float
-    bytes and selection arithmetic are unchanged → results bit-identical."""
-    import pyarrow as pa
-
-    from knowhere_spark.functions.arrowio import list_matrix, scalar_column
-    from knowhere_spark.functions.distance import local_topk
+    The codec scores a cell's rows against its probing queries — raw
+    vectors for IVF_FLAT, decoded codes for the quantized families
+    (decode-then-GEMM is arithmetically identical to the reference's
+    ADC/affine scan: the LUT entry IS the sub-distance to the decoded
+    centroid).  Arrow-native kernel (guide §4.2): the operands come from
+    one flatten+reshape+astype over each list column's values buffer."""
     from knowhere_spark.operators.brute_force import RESULT_SCHEMA
 
-    if row_matrix is None:
-        row_matrix = lambda tbl: list_matrix(tbl, "vec")
-    largest = dist_metric.is_similarity
-    cand = assignments
-    if filter_expr is not None:
-        cand = cand.filter(filter_expr)
-    # the probe table feeds two plan branches (cell prune + cogroup) —
-    # cache it so the mapInPandas probe assignment runs once
-    probes = probes.cache()
+    cand = cells if filter_expr is None else cells.filter(filter_expr)
     # prune unprobed cells before the shuffle (cheap when nq·nprobe covers
     # most cells, decisive when it doesn't)
     cand = cand.join(probes.select("cell_id").distinct(), "cell_id", "left_semi")
-    _empty = pa.schema(
-        [("query_id", pa.int64()), ("neighbor_id", pa.int64()),
-         ("distance", pa.float64())]
-    )
 
     def cell_kernel(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
-            return _empty.empty_table()
-        X = row_matrix(left)
+            return _RESULT_ARROW_SCHEMA.empty_table()
         ids = scalar_column(left, "id", np.int64)
-        Q = list_matrix(right, "qvec")
         qids = scalar_column(right, "query_id", np.int64)
         if rows_acc is not None:
-            rows_acc.add(len(ids))    # rows GEMMed in this probed cell
-        dist = pairwise_distances(X, Q, dist_metric)          # (n, nq)
-        qidx, nid, dd = local_topk(dist, ids, k, largest)
-        return pa.table(
-            {
-                "query_id": pa.array(qids[qidx], type=pa.int64()),
-                "neighbor_id": pa.array(nid.astype(np.int64, copy=False),
-                                        type=pa.int64()),
-                "distance": pa.array(dd.astype(np.float64, copy=False),
-                                     type=pa.float64()),
-            }
-        )
-
-    scored = (
-        cand.groupby("cell_id")
-        .cogroup(probes.groupby("cell_id"))
-        .applyInArrow(cell_kernel, RESULT_SCHEMA)
-    )
-    return topk_per_key(
-        scored, "query_id", "distance", k,
-        ascending=not largest, tie_breaker="neighbor_id",
-    )
-
-
-def cogroup_cells_range(
-    assignments: DataFrame,
-    probes: DataFrame,
-    lo: float,
-    hi: float,
-    sim: bool,
-    dist_metric: MetricType,
-    *,
-    filter_expr: Column | str | None = None,
-    row_matrix=None,
-) -> DataFrame:
-    """Distributed range scoring: per-cell cogroup emits every in-range
-    ``(query_id, neighbor_id, distance)`` pair — half-open semantics per
-    metric direction (range_util.h:22-25).  Same shuffle shape as
-    :func:`cogroup_cells_topk` (and the same Arrow-native kernel layout)."""
-    import pyarrow as pa
-
-    from knowhere_spark.functions.arrowio import list_matrix, scalar_column
-    from knowhere_spark.operators.brute_force import RESULT_SCHEMA
-
-    if row_matrix is None:
-        row_matrix = lambda tbl: list_matrix(tbl, "vec")
-    cand = assignments
-    if filter_expr is not None:
-        cand = cand.filter(filter_expr)
-    probes = probes.cache()
-    cand = cand.join(probes.select("cell_id").distinct(), "cell_id", "left_semi")
-    _empty = pa.schema(
-        [("query_id", pa.int64()), ("neighbor_id", pa.int64()),
-         ("distance", pa.float64())]
-    )
-
-    def cell_kernel(left: pa.Table, right: pa.Table) -> pa.Table:
-        if left.num_rows == 0 or right.num_rows == 0:
-            return _empty.empty_table()
-        X = row_matrix(left)
-        ids = scalar_column(left, "id", np.int64)
-        Q = list_matrix(right, "qvec")
-        qids = scalar_column(right, "query_id", np.int64)
-        dist = pairwise_distances(X, Q, dist_metric)          # (n, nq)
-        if sim:
-            mask = (dist > lo) & (dist <= hi)
-        else:
-            mask = (dist >= lo) & (dist < hi)
-        ri, qi = np.nonzero(mask)
-        return pa.table(
-            {
-                "query_id": pa.array(qids[qi], type=pa.int64()),
-                "neighbor_id": pa.array(ids[ri], type=pa.int64()),
-                "distance": pa.array(dist[ri, qi], type=pa.float64()),
-            }
-        )
+            rows_acc.add(len(ids))    # rows scored in this probed cell
+        dist = codec.score(left, codec.read_queries(right, "qvec"))   # (n, nq)
+        ri, qi = select(dist)
+        return pa.Table.from_batches([_result_batch(qids[qi], ids[ri], dist[ri, qi])])
 
     return (
         cand.groupby("cell_id")
@@ -1184,11 +1184,20 @@ def cogroup_cells_range(
     )
 
 
+
+def _nearest_l2(tbl: pa.Table, C: np.ndarray) -> np.ndarray:
+    return pairwise_distances(list_matrix(tbl, "vec"), C, MetricType.L2).argmin(axis=1)
+
+
 def _assign_cells(
-    df: DataFrame, centroids: np.ndarray, extra_cols: tuple[str, ...] = ()
+    df: DataFrame,
+    centroids: np.ndarray,
+    extra_cols: tuple[str, ...] = (),
+    nearest=_nearest_l2,
 ) -> DataFrame:
-    """Nearest-centroid assignment via a broadcast numpy GEMM kernel —
-    ``ClusterNode::Assign`` analog (cluster_node.h:26-50).  ``extra_cols``
+    """Nearest-centroid assignment via a broadcast numpy kernel —
+    ``ClusterNode::Assign`` analog (cluster_node.h:26-50).  ``nearest(tbl,
+    C)`` gives each row's cell (L2 argmin by default).  ``extra_cols``
     (scalar payload columns already present on ``df``) pass through
     untouched — the hot-scalar-field index layout (SURVEY §4's
     materialized-view analog, include/knowhere/comp/materialized_view.h)."""
@@ -1200,18 +1209,12 @@ def _assign_cells(
         # Arrow-native (guide §4.2): id/vec/extra columns pass through the
         # output batch untouched (no pandas materialization); only cell_id
         # is computed
-        import pyarrow as pa
-
-        from knowhere_spark.functions.arrowio import list_matrix
-
         C = bc.value
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
-            X = list_matrix(tbl, "vec")
-            d = pairwise_distances(X, C, MetricType.L2)
-            cell = pa.array(d.argmin(axis=1).astype(np.int32), type=pa.int32())
+            cell = pa.array(nearest(tbl, C).astype(np.int32), type=pa.int32())
             cols = [
                 cell if c == "cell_id"
                 else tbl.column(c).combine_chunks()
@@ -1220,20 +1223,13 @@ def _assign_cells(
             cols[0] = cols[0].cast(pa.int64())   # id long per the schema
             yield pa.record_batch(cols, names=keep)
 
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    vec_type = df.schema["vec"].dataType
     schema = StructType(
         [
             StructField("id", LongType()),
             StructField("cell_id", IntegerType()),
-            StructField("vec", vec_type),
+            StructField("vec", df.schema["vec"].dataType),
         ]
         + [df.schema[c] for c in extra_cols]
     )

@@ -4,43 +4,37 @@
 
 Spark-first split:
 
-- **Train**: IVF coarse centroids via MLlib KMeans (shared with IVF_FLAT),
-  then ``m`` per-subspace codebooks of ``2^nbits`` centroids fit with a
-  small numpy Lloyd on a bounded driver-side sample — the codebook tensor
-  is tiny (``m × 2^nbits × dim/m`` floats) and broadcasts everywhere.
-- **Add**: encode every row to ``m`` uint8 codes (nearest codebook entry
-  per subspace) in a ``mapInPandas`` pass; the index table stores ONLY
-  ``(id, cell_id, codes ARRAY<SMALLINT>)`` — a ~dim/ m·4-fold byte
+- **Train**: IVF coarse centroids shared with IVF_FLAT, then ``m``
+  per-subspace codebooks of ``2^nbits`` centroids fit with a small numpy
+  Lloyd on a bounded driver-side sample — the codebook tensor is tiny
+  (``m × 2^nbits × dim/m`` floats) and rides every scan kernel.
+- **Add**: encode every row to ``m`` codes (nearest codebook entry per
+  subspace) in a ``mapInArrow`` pass; the cell table stores ONLY
+  ``(id, cell_id, codes ARRAY<SMALLINT>)`` — a ~dim/m·4-fold byte
   reduction, which is the whole point at 100 TB: the probe scan reads
   codes, never raw vectors.
-- **Search (ADC)**: per query build the ``(m, 2^nbits)`` lookup table of
-  sub-distances once on the driver, broadcast all LUTs, probe ``nprobe``
-  cells, and run one ``mapInPandas`` kernel that loops over CELLS —
-  scoring each cell's rows against all its probing queries in a single
-  vectorized LUT gather (the classic asymmetric-distance scan) and
-  reducing to the partition's exact per-query top-k before the final
-  shuffle.  Optional ``refine_k`` re-ranks survivors by exact distance
+- **Search** is the IVF family's shared core (operators/ivf.IVFBaseIndex);
+  this module supplies only the codec, :class:`PQCodec` — codes decoded
+  to their codewords, then GEMM, which is arithmetically the ADC lookup
+  table sum (each LUT entry IS the sub-distance to the decoded
+  codeword).  Optional ``refine_k`` re-ranks survivors by exact distance
   against stored raw vectors (``with_raw_data``) — the reference's ADC
   error correction (SCANN ``reorder_k``, ivf_config.h:101-115).
 
 Vectors are encoded directly (no residual subtraction) — the
-``by_residual=false`` faiss variant — so one LUT per query serves every
-probed cell and the plan stays a single broadcast join.  COSINE follows
-the normalize-at-train contract (ivf.cc:462-470): encode normalized
-vectors and score IP.
+``by_residual=false`` faiss variant — so one decode serves every probed
+cell.  COSINE follows the normalize-at-train contract (ivf.cc:462-470):
+encode normalized vectors and score IP.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     ShortType,
@@ -49,9 +43,14 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import IndexType, IvfPqConfig, MetricType
-from knowhere_spark.functions.distance import normalize_expr
-from knowhere_spark.operators.ivf import IVFFlatIndex, ResidentCells, table_bytes
-from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
+from knowhere_spark.functions.arrowio import list_matrix
+from knowhere_spark.operators.ivf import (
+    FlatCodec,
+    IVFBaseIndex,
+    IVFFlatIndex,
+    _assign_cells,
+    table_bytes,
+)
 
 _TRAIN_SAMPLE_MAX = 100_000
 
@@ -70,25 +69,38 @@ def _encode_df(
 ) -> DataFrame:
     """(id, cell_id, vec) → (id, cell_id, codes[, vec]): nearest-codeword
     per subspace against FIXED codebooks — shared by build and Add so
-    appended rows encode exactly like the original corpus.  Raw vectors
-    ride along only when refine needs them (``with_raw_data``)."""
+    appended rows encode exactly like the original corpus.  One Arrow
+    kernel; ``id``, ``cell_id`` and the raw vectors (only when refine needs
+    them, ``with_raw_data``) pass through as Arrow buffers."""
     spark = assigned.sparkSession
     bc = spark.sparkContext.broadcast(codebooks)
 
     # codeword ids reach ksub-1 = 2^nbits - 1; nbits=16 (allowed by
     # IvfPqConfig) overflows SMALLINT/int16 — switch to INT exactly like
     # the SQ code_size axis does
-    ksub_max = codebooks.shape[1] - 1
-    code_type = ShortType() if ksub_max <= 32767 else IntegerType()
-    np_code = np.int16 if ksub_max <= 32767 else np.int32
+    small = codebooks.shape[1] - 1 <= 32767
+    np_code = np.int16 if small else np.int32
+    fields = [
+        StructField("id", LongType()),
+        StructField("cell_id", IntegerType()),
+        StructField("codes", ArrayType(ShortType() if small else IntegerType())),
+    ]
+    if with_raw_data:
+        fields.append(assigned.schema["vec"])
+    names = [f.name for f in fields]
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(batches):
+        import pyarrow as pa
+
+        from knowhere_spark.functions.arrowio import matrix_to_list_array
+
         CB = bc.value
         mm, _, sd = CB.shape
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = np.array(list(pdf["vec"].to_numpy()), dtype=np.float64)
+            tbl = pa.Table.from_batches([rb])
+            X = list_matrix(tbl, "vec")
             codes = np.empty((len(X), mm), dtype=np_code)
             for j in range(mm):
                 sub = X[:, j * sd : (j + 1) * sd]
@@ -98,26 +110,34 @@ def _encode_df(
                     + (CB[j] * CB[j]).sum(axis=1)[None, :]
                 )
                 codes[:, j] = d.argmin(axis=1)
-            out = {
-                "id": pdf["id"].to_numpy(),
-                "cell_id": pdf["cell_id"].to_numpy(),
-                "codes": list(codes),
-            }
+            cols = [
+                tbl.column("id").combine_chunks().cast(pa.int64()),
+                tbl.column("cell_id").combine_chunks().cast(pa.int32()),
+                matrix_to_list_array(codes, pa.int16() if small else pa.int32()),
+            ]
             if with_raw_data:
-                out["vec"] = pdf["vec"]
-            yield pd.DataFrame(out)
+                cols.append(tbl.column("vec").combine_chunks())
+            yield pa.record_batch(cols, names=names)
 
-    fields = [
-        StructField("id", LongType()),
-        StructField("cell_id", IntegerType()),
-        StructField("codes", ArrayType(code_type)),
-    ]
-    if with_raw_data:
-        fields.append(assigned.schema["vec"])
-    return assigned.mapInPandas(encode, StructType(fields))
+    return assigned.mapInArrow(encode, StructType(fields))
 
 
-class IVFPqIndex(ResidentCells):
+class PQCodec(FlatCodec):
+    """IVF_PQ's codec: codes decoded to their codewords, then GEMM."""
+
+    col = "codes"
+
+    def __init__(self, metric, codebooks: np.ndarray):
+        super().__init__(metric)
+        self.codebooks = codebooks   # (m, ksub, subdim)
+
+    def rows(self, tbl):
+        codes = list_matrix(tbl, "codes", np.int64)   # (n, m)
+        CB = self.codebooks
+        return np.concatenate([CB[j][codes[:, j]] for j in range(CB.shape[0])], axis=1)
+
+
+class IVFPqIndex(IVFBaseIndex):
     """Built IVF_PQ: coarse centroids + per-subspace codebooks + codes table."""
 
     def __init__(
@@ -128,41 +148,26 @@ class IVFPqIndex(ResidentCells):
         config: IvfPqConfig,
         *,
         with_raw_data: bool = False,
-        n_rows: int | None = None,
     ):
         self.centroids = centroids
         self.codebooks = codebooks
-        self.codes = codes
+        self.assignments = codes
         self.config = config
         self.with_raw_data = with_raw_data
-        #: known row count (from build/load) — sizes the driver-path scan
-        #: partitioning without an extra count action; None = unknown
-        self.n_rows = n_rows
         self.index_type = IndexType.IVF_PQ
 
-    def count(self) -> int:
-        return self.codes.count()
+    @property
+    def codes(self) -> DataFrame:
+        """The cell table: ``(id, cell_id, codes[, vec])``."""
+        return self.assignments
 
-    def dim(self) -> int:
-        return int(self.codebooks.shape[0] * self.codebooks.shape[2])
+    def _codec(self) -> PQCodec:
+        return PQCodec(self.config.metric_type, self.codebooks)
 
-    def type(self) -> str:
-        return self.index_type.value
-
-    def has_raw_data(self) -> bool:
-        # PQ drops raw data (flat.cc:257-285 HasRawData rules) unless the
-        # refine path keeps it (the SCANN with_raw_data contract)
-        return self.with_raw_data
-
-    def get_index_meta(self, **kw):
-        """Parity with the reference: GetIndexMeta is implemented for
-        IVF_FLAT only (ivf.cc:291-293 IVFBaseTag -> not_implemented)."""
-        raise NotImplementedError("GetIndexMeta not implemented")
-
-    def raw_vectors(self) -> DataFrame:
-        if not self.with_raw_data:
-            raise ValueError("index built without raw data (with_raw_data=False)")
-        return self.codes.select("id", "vec")
+    def _encode(self, rows: DataFrame, scalars: tuple[str, ...]) -> DataFrame:
+        return _encode_df(
+            _assign_cells(rows, self.centroids), self.codebooks, self.with_raw_data
+        )
 
     @classmethod
     def build(
@@ -175,15 +180,15 @@ class IVFPqIndex(ResidentCells):
         codebooks: np.ndarray | None = None,
     ) -> "IVFPqIndex":
         """``codebooks``: pass a pinned ``(m, ksub, dim/m)`` tensor to skip
-        the Lloyd fit — makes the whole build/encode/ADC pipeline
+        the Lloyd fit — makes the whole build/encode/scan pipeline
         deterministic end-to-end (tests / oracle gates), the same pinning
         contract as ``semdedup(centroids=...)``."""
-        metric = MetricType(config.metric_type)
-        base = base_df.select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-        )
+        t_build0 = time.monotonic()
         # coarse quantizer shared with IVF_FLAT (normalizes for COSINE)
-        flat = IVFFlatIndex._train_assign(base, config, index_type=IndexType.IVF_PQ)
+        flat = IVFFlatIndex._train_assign(
+            base_df, config, id_col=id_col, vec_col=vec_col,
+            index_type=IndexType.IVF_PQ,
+        )
         dim = flat.dim()
         config.validate_dim(dim)
         m, ksub = config.m, 1 << config.nbits
@@ -223,44 +228,13 @@ class IVFPqIndex(ResidentCells):
         cfg = dataclasses.replace(config, nlist=flat.config.nlist)
         idx = cls(
             flat.centroids, codebooks, codes_df, cfg,
-            with_raw_data=config.with_raw_data, n_rows=int(n),
+            with_raw_data=config.with_raw_data,
         )
-        idx.codes = idx._make_resident(
+        idx.assignments = idx._make_resident(
             codes_df, table_bytes(codes_df.schema, n, {"codes": m, "vec": dim})
         )
+        idx._build_metrics(t_build0, n, dim, flat.last_metrics["train_backend"])
         return idx
-
-    def add(
-        self, new_df: DataFrame, *, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFPqIndex":
-        """Append rows with frozen train state — existing coarse centroids
-        assign the cell, existing codebooks encode the codes
-        (``IndexNode::Add``, index_node.h:120-121)."""
-        from knowhere_spark.operators.ivf import _assign_cells
-
-        metric = MetricType(self.config.metric_type)
-        new = new_df.select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-        )
-        if metric == MetricType.COSINE:
-            new = new.select("id", normalize_expr(F.col("vec")).alias("vec"))
-        assigned = _assign_cells(new, self.centroids)
-        encoded = _encode_df(assigned, self.codebooks, self.with_raw_data)
-        child = IVFPqIndex(
-            self.centroids,
-            self.codebooks,
-            self.codes,
-            self.config,
-            with_raw_data=self.with_raw_data,
-            # the appended count is unknown without an action; the stale
-            # total stays a LOWER bound, which only under-sizes the
-            # driver-path partition heuristic slightly (None would
-            # disable it entirely)
-            n_rows=self.n_rows,
-        )
-        batch = child._append_resident(self, encoded)
-        child.codes = self.codes.unionByName(batch)
-        return child
 
     def search(
         self,
@@ -274,311 +248,38 @@ class IVFPqIndex(ResidentCells):
         strategy: str = "auto",
         refine_k: int | None = None,
     ) -> DataFrame:
-        """ADC top-k over probed cells (the LUT-scan of ivf.cc's PQ path).
-
-        ``strategy='distributed'`` never collects the query set: probes
-        assign via ``mapInPandas`` and scoring cogroups cells with their
-        probing queries, reconstructing vectors from codes inside the GEMM
-        kernel — decode-then-GEMM is arithmetically identical to the ADC
-        LUT sum (each LUT entry IS the sub-distance to the decoded
-        codeword).
-
-        ``refine_k`` (or ``config.refine_k``) re-ranks the ADC
+        """The shared IVF search (:meth:`IVFBaseIndex.search`), plus
+        ``refine_k`` (default ``config.refine_k``): re-rank the ADC
         top-``refine_k`` by exact distance against the stored raw vectors —
         the reference's ADC-error correction (SCANN ``reorder_k``,
         ivf_config.h:101-115; iterator ``refine_ratio``,
         index_node.h:527-570).  Requires ``with_raw_data``."""
         k = k if k is not None else self.config.k
         refine_k = refine_k if refine_k is not None else self.config.refine_k
-        if refine_k:
-            if not self.with_raw_data:
-                raise ValueError("refine_k requires with_raw_data=True at build")
-            refine_k = max(refine_k, k)
-        stage_k = refine_k or k
-        nprobe = min(
-            nprobe if nprobe is not None else self.config.nprobe, self.config.nlist
+        if refine_k and not self.with_raw_data:
+            raise ValueError("refine_k requires with_raw_data=True at build")
+        approx = super().search(
+            query_df, max(refine_k, k) if refine_k else k, nprobe,
+            filter_expr=filter_expr, query_id_col=query_id_col,
+            query_vec_col=query_vec_col, strategy=strategy,
         )
-        metric = MetricType(self.config.metric_type)
-        spark = self.codes.sparkSession
-
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        if strategy == "auto":
-            qrows = queries.limit(IVFFlatIndex._DRIVER_NQ_MAX + 1).collect()
-            strategy = (
-                "distributed" if len(qrows) > IVFFlatIndex._DRIVER_NQ_MAX else "driver"
-            )
-        elif strategy == "driver":
-            qrows = queries.collect()
-        if strategy == "distributed":
-            approx = self._search_distributed(
-                queries, stage_k, nprobe, metric, filter_expr
-            )
-            return self._maybe_refine(approx, queries, k, refine_k, metric)
-        if strategy != "driver":
-            raise ValueError(f"unknown strategy {strategy!r}")
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-        if metric == MetricType.COSINE:
-            qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            qmat = qmat / qn
-
-        m, ksub, subdim = self.codebooks.shape
-        sim = metric.is_similarity
-        # probe cells on the (tiny) coarse centroid matrix — same rule as
-        # IVF: L2 = the assignment geometry (see ivf.probe_pairs)
-        from knowhere_spark.functions.distance import pairwise_distances
-
-        d = pairwise_distances(self.centroids, qmat, MetricType.L2)  # (nlist, nq)
-        order = np.argsort(d, axis=0, kind="stable")[:nprobe, :]
-        cells = sorted({int(c) for c in order.ravel()})
-        # per-cell probing-query index lists: the kernel loops over CELLS
-        # (<= nlist per partition), never over queries
-        nlist = self.centroids.shape[0]
-        P = np.zeros((nlist, len(qids)), dtype=bool)
-        for qi in range(len(qids)):
-            P[order[:, qi], qi] = True
-        probe_q_by_cell = {int(c): np.where(P[c])[0] for c in cells}
-
-        cand = self.codes
-        if filter_expr is not None:
-            cand = cand.filter(filter_expr)
-        # prune to probed cells and the code columns BEFORE the kernel (the
-        # optional raw-vec column stays out of the Arrow transfer)
-        cand = cand.select("id", "cell_id", "codes").filter(
-            F.col("cell_id").isin(cells)
-        )
-        # size partitions so the per-partition per-query candidate pool is
-        # a few multiples of stage_k — otherwise the kernel's partial
-        # top-k cannot reduce anything (tiny partitions emitted ~every
-        # scored row into the final shuffle, the r3 bottleneck).
-        # repartition, NOT coalesce: coalesce(n) narrows the WHOLE lineage
-        # (the uncached encode pass would run in n tasks — measured 6x
-        # slower at n=1); the repartition shuffle only moves the pruned
-        # candidate set, which is small exactly when fewer partitions are
-        # wanted — at corpus scale `want` exceeds the parallelism and the
-        # natural (large) partitioning stands untouched
-        if self.n_rows:
-            want = max(
-                1, (self.n_rows * nprobe) // (self.config.nlist * stage_k * 4)
-            )
-            if want < spark.sparkContext.defaultParallelism:
-                cand = cand.repartition(want)
-
-        # ADC + per-partition exact top-stage_k INSIDE one mapInPandas
-        # kernel: the r3 path shuffled EVERY scored (query, candidate) row
-        # into topk_per_key — ~nq·nprobe·cellsize rows — where only
-        # nq·stage_k per partition can survive.  The kernel loops over
-        # CELLS (<= nlist), scoring each cell's rows against all its
-        # probing queries in one vectorized LUT gather (the
-        # asymmetric-distance scan), then a single lexsort-based grouped
-        # top-k keeps the partition's exact top-stage_k per query with the
-        # (distance, id) tie-break — partial-then-final equals the global
-        # top-k bit-for-bit.
-        # The broadcast carries the query MATRIX + codebooks (≈ nq·dim + m·
-        # ksub·subdim floats), NOT the (nq, m, ksub) LUT tensor: at nq=1000
-        # the tensor is 32 MB and its first touch across every Python
-        # worker cost ~5 s per search; each task instead rebuilds the LUTs
-        # from the same float64 inputs with the same expressions —
-        # bit-identical tables for ~10 ms of GEMM.
-        bc = spark.sparkContext.broadcast(
-            (qids, qmat, self.codebooks, probe_q_by_cell)
-        )
-        out_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("neighbor_id", LongType()),
-                StructField("distance", DoubleType()),
-            ]
-        )
-        kk, lg = stage_k, sim
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
-            )
-
-            b_qids, b_qmat, CB3, by_cell = bc.value
-            mm, b_ksub, sd = CB3.shape
-            L = np.empty((len(b_qids), mm, b_ksub))
-            for j in range(mm):
-                qsub = b_qmat[:, j * sd : (j + 1) * sd]
-                CBj = CB3[j]
-                if lg:
-                    L[:, j, :] = qsub @ CBj.T
-                else:
-                    L[:, j, :] = (
-                        (qsub * qsub).sum(axis=1)[:, None]
-                        - 2.0 * qsub @ CBj.T
-                        + (CBj * CBj).sum(axis=1)[None, :]
-                    )
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                codes = list_matrix(tbl, "codes", np.int64)
-                ids = scalar_column(tbl, "id", np.int64)
-                cell = scalar_column(tbl, "cell_id", np.int64)
-                rorder = np.argsort(cell, kind="stable")
-                csort = cell[rorder]
-                uniq, starts = np.unique(csort, return_index=True)
-                ends = np.append(starts[1:], len(csort))
-                q_parts, i_parts, d_parts = [], [], []
-                for c, s, e in zip(uniq, starts, ends):
-                    pq_idx = by_cell.get(int(c))
-                    if pq_idx is None or len(pq_idx) == 0:
-                        continue
-                    rows = rorder[s:e]
-                    cc = codes[rows]                       # (nc, m)
-                    # gather straight from L — `L[pq_idx]` would COPY the
-                    # probing queries' full (nqc, m, ksub) LUT block per
-                    # cell (32 MB x n_cells of memcpy at nq=1000), where
-                    # the sum only needs (nqc, nc) elements per subspace
-                    qcol = pq_idx[:, None]
-                    D = L[qcol, 0, cc[None, :, 0]]         # (nqc, nc)
-                    for j in range(1, mm):
-                        D += L[qcol, j, cc[None, :, j]]
-                    q_parts.append(np.repeat(pq_idx, len(rows)))
-                    i_parts.append(np.tile(ids[rows], len(pq_idx)))
-                    d_parts.append(D.ravel())
-                if not q_parts:
-                    continue
-                q_all = np.concatenate(q_parts)
-                i_all = np.concatenate(i_parts)
-                d_all = np.concatenate(d_parts)
-                key = -d_all if lg else d_all
-                sel = np.lexsort((i_all, key, q_all))      # (q, key, id)
-                q_s = q_all[sel]
-                new_grp = np.r_[True, q_s[1:] != q_s[:-1]]
-                grp_start = np.maximum.accumulate(
-                    np.where(new_grp, np.arange(len(q_s)), 0)
-                )
-                keep = (np.arange(len(q_s)) - grp_start) < kk
-                take = sel[keep]
-                yield pa.record_batch(
-                    [
-                        pa.array(b_qids[q_all[take]], type=pa.int64()),
-                        pa.array(i_all[take], type=pa.int64()),
-                        pa.array(d_all[take], type=pa.float64()),
-                    ],
-                    names=["query_id", "neighbor_id", "distance"],
-                )
-
-        scored = cand.mapInArrow(kernel, out_schema)
-        approx = topk_per_key(
-            scored, "query_id", "distance", stage_k,
-            ascending=not sim, tie_breaker="neighbor_id",
-        )
-        return self._maybe_refine(approx, queries, k, refine_k, metric)
-
-    def _maybe_refine(self, approx, queries, k, refine_k, metric):
-        """Exact re-rank of the ADC survivors (stage 2 of quantize-then-
-        refine, shared with SCANN via operators/refine.refine)."""
         if not refine_k:
             return approx
         from knowhere_spark.operators.refine import refine
 
         # materialize the (nq x refine_k)-bounded survivor set before the
         # refine joins: composed lazily, the optimizer's join planning
-        # re-executed the whole ADC stage (measured ~2.7x on the composed
+        # re-executed the whole scan stage (measured ~2.7x on the composed
         # query); eager localCheckpoint (not cache — callers may chain)
         # pins it at its natural size
         approx = approx.localCheckpoint(eager=True)
-
         # COSINE stores normalized vectors (normalize-at-train contract);
         # the cosine expression is scale-invariant so re-scoring them
         # against the raw query vectors is exact
         return refine(
-            approx, self.raw_vectors(), queries, k, metric,
-            query_vec_col="qvec",
+            approx, self.raw_vectors(), query_df, k, self.config.metric_type,
+            query_id_col=query_id_col, query_vec_col=query_vec_col,
         )
-
-    def _search_distributed(self, queries, k, nprobe, metric, filter_expr):
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_topk,
-            probe_assign_df,
-        )
-
-        probes = probe_assign_df(queries, self.centroids, metric, nprobe)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        CB = self.codebooks   # (m, ksub, subdim) — small, task-pickled
-
-        def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
-            codes = list_matrix(tbl, "codes", np.int64)   # (n, m)
-            mm = CB.shape[0]
-            return np.concatenate(
-                [CB[j][codes[:, j]] for j in range(mm)], axis=1
-            )
-
-        # project away the optional raw-vec column BEFORE the cell shuffle —
-        # the ADC kernel reads codes only; refine re-joins raw vectors later
-        return cogroup_cells_topk(
-            clustered_search_view(
-                self, self.codes.select("id", "cell_id", "codes")
-            ),
-            probes, k, dist_metric,
-            filter_expr=filter_expr, row_matrix=decode,
-        )
-
-    def range_search(
-        self,
-        query_df: DataFrame,
-        config: IvfPqConfig | None = None,
-        *,
-        nprobe: int | None = None,
-        filter_expr: Column | str | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "vec",
-    ) -> DataFrame:
-        """ADC distance-in-range within probed cells (half-open bounds per
-        range_util.h:22-25) — codeword reconstruction inside the cogroup
-        kernel, identical arithmetic to the LUT sum."""
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_range,
-            probe_assign_df,
-        )
-        from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
-
-        cfg = config or self.config
-        nprobe = min(
-            nprobe if nprobe is not None else cfg.nprobe, self.config.nlist
-        )
-        metric = MetricType(cfg.metric_type)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        probes = probe_assign_df(queries, self.centroids, metric, nprobe)
-        lo, hi, sim = cfg.range_bounds()
-        CB = self.codebooks
-
-        def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
-            codes = list_matrix(tbl, "codes", np.int64)
-            return np.concatenate(
-                [CB[j][codes[:, j]] for j in range(CB.shape[0])], axis=1
-            )
-
-        out = cogroup_cells_range(
-            clustered_search_view(
-                self, self.codes.select("id", "cell_id", "codes")
-            ),
-            probes, lo, hi, sim,
-            dist_metric, filter_expr=filter_expr, row_matrix=decode,
-        )
-        return apply_range_bounds(out, cfg, already_bounded=True)
 
     # -- Serialize / Deserialize (index_node.h:371-401) -----------------------
     def save(self, path: str) -> None:
@@ -602,7 +303,7 @@ class IVFPqIndex(ResidentCells):
                 "codebooks": self.codebooks.tolist(),
             }
         )
-        store.write_table("codes", self.codes, partition_by=["cell_id"])
+        store.write_table("codes", self.assignments, partition_by=["cell_id"])
 
     @classmethod
     def load(cls, spark, path: str) -> "IVFPqIndex":
@@ -632,5 +333,4 @@ class IVFPqIndex(ResidentCells):
             store.read_table(spark, "codes"),
             cfg,
             with_raw_data=bool(m.get("with_raw_data", False)),
-            n_rows=int(m["count"]) if m.get("count") is not None else None,
         )

@@ -95,6 +95,7 @@ class ScannIndex:
             nlist=config.nlist,
             nprobe=config.nprobe,
             seed=config.seed,
+            ensure_topk_full=config.ensure_topk_full,
         )
         sq = IVFSq8Index.build(
             base_df, sq_cfg, id_col=id_col, vec_col=vec_col,

@@ -8,9 +8,9 @@ instead of raw floats — 4× smaller scans at probe time; the per-dim
 statistics (run by ``build()``) and the encode pass are ``mapInArrow``
 kernels; the encoded table is the index's resident cell table
 (operators/ivf.ResidentCells), so the encode runs once, on the first
-search that fills the cache.  Decode+distance runs inside
-the shared IVF scan kernels (``scan_probed_topk`` / the cogroup), with
-the decode as their ``row_matrix`` (the quantized-scan analog of the
+search that fills the cache.  Search is the IVF family's shared core
+(operators/ivf.IVFBaseIndex); this module supplies only the codec,
+:class:`SQCodec` — decode, then GEMM (the quantized-scan analog of the
 reference's SQ distance computers).
 """
 
@@ -19,8 +19,7 @@ from __future__ import annotations
 import time
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -32,11 +31,15 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import IndexType, IvfSq8Config, MetricType
-from knowhere_spark.functions.distance import normalize_expr, pairwise_distances
+from knowhere_spark.functions.arrowio import list_matrix
+from knowhere_spark.functions.distance import pairwise_distances
 from knowhere_spark.operators.ivf import (
+    FlatCodec,
+    IVFBaseIndex,
     IVFFlatIndex,
-    ResidentCells,
+    read_cell_table,
     table_bytes,
+    vector_rows,
 )
 from knowhere_spark.sources.index_store import IndexStore
 
@@ -88,18 +91,20 @@ def _levels(code_size: int) -> int:
     return (1 << code_size) - 1
 
 
-def _decoder(vmin: np.ndarray, vdiff: np.ndarray, code_size: int):
-    """``row_matrix`` for the shared scan kernels: codes → decoded float64
-    rows (the per-dim arrays are tiny and ride the task closure)."""
-    lv = float(_levels(code_size))
+class SQCodec(FlatCodec):
+    """IVF_SQ's codec: codes decoded per dim (``vmin + code/levels·vdiff``),
+    then GEMM."""
 
-    def decode(tbl):
-        from knowhere_spark.functions.arrowio import list_matrix
+    col = "codes"
 
-        codes = list_matrix(tbl, "codes", np.float64)
-        return vmin + codes / lv * vdiff
+    def __init__(self, metric, vmin: np.ndarray, vdiff: np.ndarray, code_size: int):
+        super().__init__(metric)
+        self.vmin = vmin
+        self.vdiff = vdiff
+        self.levels = float(_levels(code_size))
 
-    return decode
+    def rows(self, tbl):
+        return self.vmin + list_matrix(tbl, "codes", np.float64) / self.levels * self.vdiff
 
 
 def _quantize_df(
@@ -173,21 +178,7 @@ def _quantize_df(
     return ensure_parallelism(rows).mapInArrow(quantize, schema)
 
 
-def _vector_rows(
-    df: DataFrame, id_col: str, vec_col: str, scalars, metric: MetricType
-) -> DataFrame:
-    """``(id, vec[, scalars])`` as the index stores them: long ids and,
-    for COSINE, normalized vectors (the normalize-at-train contract,
-    ivf.cc:462-470) — the same projection IVF_FLAT assigns."""
-    rows = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"), *scalars
-    )
-    if metric == MetricType.COSINE:
-        rows = rows.select("id", normalize_expr(F.col("vec")).alias("vec"), *scalars)
-    return rows
-
-
-class IVFSq8Index(ResidentCells):
+class IVFSq8Index(IVFBaseIndex):
     """IVF probe plan over quantized codes; optionally keeps raw vectors
     (``with_raw_data``) to serve SCANN-style refine (ivf_config.h:101-162)."""
 
@@ -210,34 +201,16 @@ class IVFSq8Index(ResidentCells):
         self.with_raw_data = with_raw_data
         self.index_type = index_type
 
-    def count(self) -> int:
-        return self.assignments.count()
+    def _codec(self) -> SQCodec:
+        return SQCodec(
+            self.config.metric_type, self.vmin, self.vdiff, self.config.code_size
+        )
 
-    def dim(self) -> int:
-        return int(self.centroids.shape[1])
-
-    def type(self) -> str:
-        return self.index_type.value
-
-    def has_raw_data(self) -> bool:
-        # SQ8 drops raw data unless refine keeps it (flat.cc:257-285 rules)
-        return self.with_raw_data
-
-    def get_index_meta(self, **kw):
-        """Parity with the reference: GetIndexMeta is implemented for
-        IVF_FLAT only (ivf.cc:291-293 IVFBaseTag -> not_implemented)."""
-        raise NotImplementedError("GetIndexMeta not implemented")
-
-    def get_vector_by_ids(self, ids_df: DataFrame, *, id_col: str = "id") -> DataFrame:
-        """``GetVectorByIds`` (index_node.h:340-350) — legal only with
-        ``with_raw_data`` (HasRawData rules)."""
-        if not self.with_raw_data:
-            raise ValueError(
-                f"{self.type()} built without with_raw_data keeps no raw "
-                "vectors; GetVectorByIds is unsupported"
-            )
-        ids = ids_df.select(F.col(id_col).cast("long").alias("id"))
-        return self.assignments.select("id", "vec").join(F.broadcast(ids), "id")
+    def _encode(self, rows: DataFrame, scalars: tuple[str, ...]) -> DataFrame:
+        return _quantize_df(
+            rows, self.centroids, self.vmin, self.vdiff, self.with_raw_data,
+            self.config.code_size, scalars,
+        )
 
     @classmethod
     def build(
@@ -259,8 +232,6 @@ class IVFSq8Index(ResidentCells):
 
         Only the codes table is made resident (lazily, no extra job); the
         raw-vector assignment table it encodes stays a plan."""
-        from knowhere_spark.tracing import OpMetrics, op_description
-
         t_build0 = time.monotonic()
         scalar_cols = tuple(scalar_cols)
         clash = {"codes", "qvec"} & set(scalar_cols)
@@ -274,9 +245,7 @@ class IVFSq8Index(ResidentCells):
         # the trained centroids are all SQ takes from the IVF_FLAT build:
         # the per-dim statistics do not depend on the cell, and the encode
         # kernel assigns cells itself
-        rows = _vector_rows(
-            base_df, id_col, vec_col, scalar_cols, MetricType(config.metric_type)
-        )
+        rows = vector_rows(base_df, id_col, vec_col, scalar_cols, config.metric_type)
         lo, hi = array_minmax(rows, "vec", dim)
         vdiff = hi - lo
         vdiff[vdiff == 0] = 1.0
@@ -297,200 +266,14 @@ class IVFSq8Index(ResidentCells):
             assignments,
             table_bytes(assignments.schema, fm["n"], {"codes": dim, "vec": dim}),
         )
-        m = OpMetrics(
-            op=f"{index_type.value}.build", n=fm["n"], dim=dim,
-            nlist=cfg.nlist, train_backend=fm["train_backend"],
-            stages={"build_plan_sec": round(time.monotonic() - t_build0, 6)},
-            **idx.resident_metrics(),
-        )
-        m["description"] = op_description(
-            base_df.sparkSession.sparkContext, m["op"], n=fm["n"], nlist=cfg.nlist
-        )
-        idx.last_metrics = m
+        idx._build_metrics(t_build0, fm["n"], dim, fm["train_backend"])
         return idx
-
-    def add(
-        self, new_df: DataFrame, *, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFSq8Index":
-        """Append rows with frozen train state — existing centroids assign
-        the cell, the trained ``vmin/vdiff`` scale encodes the codes
-        (``IndexNode::Add``, index_node.h:120-121; out-of-range values
-        clip exactly as faiss SQ8 does)."""
-        scalars = self._scalar_payload()
-        missing = [c for c in scalars if c not in new_df.columns]
-        if missing:
-            raise ValueError(f"Add batch is missing the index's scalar_cols: {missing}")
-        new = _vector_rows(
-            new_df, id_col, vec_col, scalars, MetricType(self.config.metric_type)
-        )
-        quantized = _quantize_df(
-            new, self.centroids, self.vmin, self.vdiff, self.with_raw_data,
-            self.config.code_size, tuple(scalars),
-        )
-        child = IVFSq8Index(
-            self.centroids, self.assignments, self.vmin, self.vdiff,
-            self.config, with_raw_data=self.with_raw_data,
-            index_type=self.index_type,
-        )
-        batch = child._append_resident(self, quantized)
-        child.assignments = self.assignments.unionByName(batch)
-        return child
-
-    def search(
-        self,
-        query_df: DataFrame,
-        k: int | None = None,
-        nprobe: int | None = None,
-        *,
-        filter_expr: Column | str | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "vec",
-        strategy: str = "auto",
-    ) -> DataFrame:
-        """Probe + decode-and-score over quantized codes (ivf.cc:587-606).
-
-        ``strategy`` mirrors :meth:`IVFFlatIndex.search`: ``distributed``
-        never collects the query set — probe assignment distributes and
-        scoring cogroups cells with their probing queries, decoding codes
-        inside the GEMM kernel.  ``last_metrics`` carries the IVF_FLAT
-        search schema."""
-        from knowhere_spark.tracing import OpMetrics, StageTimer, op_description
-
-        k = k if k is not None else self.config.k
-        nprobe = min(nprobe if nprobe is not None else self.config.nprobe, self.config.nlist)
-        metric = MetricType(self.config.metric_type)
-        spark = self.assignments.sparkSession
-
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        if strategy == "auto":
-            qrows = queries.limit(IVFFlatIndex._DRIVER_NQ_MAX + 1).collect()
-            strategy = (
-                "distributed" if len(qrows) > IVFFlatIndex._DRIVER_NQ_MAX else "driver"
-            )
-        elif strategy == "driver":
-            qrows = queries.collect()
-        if strategy not in ("driver", "distributed"):
-            raise ValueError(f"unknown strategy {strategy!r}")
-        m = OpMetrics(
-            op=f"{self.index_type.value}.search", k=k, nprobe=nprobe,
-            nlist=self.config.nlist, strategy=strategy,
-            rows_scanned=spark.sparkContext.accumulator(0),
-            **self.resident_metrics(),
-        )
-        m["description"] = op_description(
-            spark.sparkContext, m["op"], k=k, nprobe=nprobe, strategy=strategy
-        )
-        timer = StageTimer(m)
-        self.last_metrics = m
-        if strategy == "distributed":
-            return self._search_distributed(
-                queries, k, nprobe, metric, filter_expr, rows_acc=m["rows_scanned"]
-            )
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-        if metric == MetricType.COSINE:
-            qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            qmat = qmat / qn
-
-        from knowhere_spark.operators.ivf import probe_pairs, scan_probed_topk
-
-        # probe ranking = assignment geometry (L2, see probe_pairs);
-        # scoring inside the probed cells uses the true metric
-        with timer.stage("probe_sec"):
-            pairs = probe_pairs(self.centroids, qids, qmat, nprobe)
-        m["nq"] = len(qids)
-        m["cells_probed"] = len(pairs)
-        with timer.stage("scan_plan_sec"):
-            return scan_probed_topk(
-                self.assignments, self.config.nlist, pairs, qids, qmat, k,
-                metric, filter_expr, rows_acc=m["rows_scanned"],
-                row_matrix=_decoder(self.vmin, self.vdiff, self.config.code_size),
-            )
-
-    def _search_distributed(self, queries, k, nprobe, metric, filter_expr,
-                            rows_acc=None):
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_topk,
-            probe_assign_df,
-        )
-
-        probes = probe_assign_df(queries, self.centroids, metric, nprobe)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        return cogroup_cells_topk(
-            clustered_search_view(self), probes, k, dist_metric,
-            filter_expr=filter_expr, rows_acc=rows_acc,
-            row_matrix=_decoder(self.vmin, self.vdiff, self.config.code_size),
-        )
-
-    def range_search(
-        self,
-        query_df: DataFrame,
-        config: IvfSq8Config | None = None,
-        *,
-        nprobe: int | None = None,
-        filter_expr: Column | str | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "vec",
-    ) -> DataFrame:
-        """Distance-in-range over decoded codes within probed cells —
-        the IVF range path on quantized storage (half-open bounds per
-        range_util.h:22-25).  Served through the cogroup machinery, which
-        is correct at any nq."""
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_range,
-            probe_assign_df,
-        )
-        from knowhere_spark.operators.topk import apply_range_bounds
-
-        cfg = config or self.config
-        nprobe = min(
-            nprobe if nprobe is not None else cfg.nprobe, self.config.nlist
-        )
-        metric = MetricType(cfg.metric_type)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        probes = probe_assign_df(queries, self.centroids, metric, nprobe)
-        lo, hi, sim = cfg.range_bounds()
-        out = cogroup_cells_range(
-            clustered_search_view(self), probes, lo, hi, sim, dist_metric,
-            filter_expr=filter_expr,
-            row_matrix=_decoder(self.vmin, self.vdiff, self.config.code_size),
-        )
-        return apply_range_bounds(out, cfg, already_bounded=True)
-
-    def raw_vectors(self) -> DataFrame:
-        if not self.with_raw_data:
-            raise ValueError("index built without raw data (with_raw_data=False)")
-        return self.assignments.select("id", "vec")
-
-    def _scalar_payload(self) -> list[str]:
-        return [
-            c
-            for c in self.assignments.columns
-            if c not in ("id", "cell_id", "codes", "vec")
-        ]
 
     def save(self, path: str, *, scalar_partition_cols: list[str] | None = None) -> None:
         """Persist the codes table cell-partitioned; ``scalar_partition_cols``
         (must be among the index's ``scalar_cols``) layer hot scalar fields
         ABOVE ``cell_id`` — same pruning contract as ``IVFFlatIndex.save``."""
-        scalars = list(scalar_partition_cols or [])
-        payload = self._scalar_payload()
-        bad = [c for c in scalars if c not in payload]
-        if bad:
-            raise ValueError(
-                f"scalar_partition_cols must be among the index's scalar_cols"
-                f" {payload}: {bad}"
-            )
+        partition_by = self._partition_by(scalar_partition_cols)
         store = IndexStore(path)
         store.write_manifest(
             {
@@ -509,9 +292,7 @@ class IVFSq8Index(ResidentCells):
                 "assignments_schema": self.assignments.schema.json(),
             }
         )
-        store.write_table(
-            "assignments", self.assignments, partition_by=[*scalars, "cell_id"]
-        )
+        store.write_table("assignments", self.assignments, partition_by=partition_by)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFSq8Index":
@@ -523,14 +304,9 @@ class IVFSq8Index(ResidentCells):
             nprobe=int(m["nprobe"]),
             code_size=int(m.get("code_size", 8)),
         )
-        schema = None
-        if m.get("assignments_schema"):
-            import json
-
-            schema = StructType.fromJson(json.loads(m["assignments_schema"]))
         return cls(
             np.array(m["centroids"], dtype=np.float64),
-            store.read_table(spark, "assignments", schema=schema),
+            read_cell_table(spark, store, m),
             np.array(m["vmin"], dtype=np.float64),
             np.array(m["vdiff"], dtype=np.float64),
             cfg,

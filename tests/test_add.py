@@ -196,39 +196,86 @@ def test_sparse_add_matches_full_build(spark):
     assert a == b
 
 
-@pytest.mark.parametrize("family", ["IVF_FLAT", "IVF_SQ8"])
-def test_resident_lifecycle_release_frees_every_cache(spark, tmp_path, family):
-    """build → search → add → search → release leaves no persisted RDD:
-    the build's resident table, the appended batch's segment and the
-    parent's superseded views all have an owner that frees them."""
+def _lifecycle_index(spark, tmp_path, family):
+    """``(built index, added frame, query)`` for the lifecycle test: base and
+    added rows are read back from parquet, so Spark has a size estimate
+    for them and the added batch is made resident too."""
+    from knowhere_spark.operators.bin_ivf import BinaryIVFIndex
     from knowhere_spark.operators.ivf import IVFFlatIndex
+    from knowhere_spark.operators.pq import IVFPqIndex
     from knowhere_spark.operators.sq import IVFSq8Index
 
-    spark.catalog.clearCache()
-    sc = spark.sparkContext
-    base_df, added_df, query = _base_and_added(spark)
-    # parquet inputs: Spark has a size estimate for them, so the added
-    # batch is made resident too
+    from conftest import binary_df, gen_binary
+
+    if family == "BIN_IVF_FLAT":
+        base_df = binary_df(spark, gen_binary(NB, 128, seed=33))
+        added_df = spark.createDataFrame(
+            [(NB + i, b"\xff" * 16) for i in range(40)], "id long, vec binary"
+        )
+        query = spark.createDataFrame([(0, b"\xff" * 16)], "query_id long, vec binary")
+    else:
+        base_df, added_df, query = _base_and_added(spark)
     base_df.write.parquet(str(tmp_path / "base"))
     added_df.write.parquet(str(tmp_path / "added"))
     base_df = spark.read.parquet(str(tmp_path / "base"))
     added_df = spark.read.parquet(str(tmp_path / "added"))
-    if family == "IVF_FLAT":
-        idx = IVFFlatIndex.build(base_df, IvfConfig(metric_type="L2", nlist=8))
-    else:
-        idx = IVFSq8Index.build(base_df, IvfSq8Config(metric_type="L2", nlist=8))
+    build = {
+        "IVF_FLAT": lambda: IVFFlatIndex.build(base_df, IvfConfig(metric_type="L2", nlist=8)),
+        "IVF_SQ8": lambda: IVFSq8Index.build(base_df, IvfSq8Config(metric_type="L2", nlist=8)),
+        "IVF_PQ": lambda: IVFPqIndex.build(
+            base_df, IvfPqConfig(metric_type="L2", nlist=8, m=4, nbits=6)
+        ),
+        "BIN_IVF_FLAT": lambda: BinaryIVFIndex.build(
+            base_df, IvfConfig(metric_type="HAMMING", nlist=8)
+        ),
+    }
+    return build[family](), added_df, query
+
+
+def _lifecycle_cases():
+    families = ["IVF_FLAT", "IVF_SQ8", "IVF_PQ", "BIN_IVF_FLAT"]
+    return [pytest.param(f, "auto", id=f) for f in families] + [
+        pytest.param(f, "distributed", id=f"{f}-distributed") for f in families
+    ]
+
+
+@pytest.mark.parametrize("family,strategy", _lifecycle_cases())
+def test_resident_lifecycle_release_frees_every_cache(spark, tmp_path, family, strategy):
+    """build → search → add → search → release leaves no persisted RDD:
+    the build's resident table, the appended batch's segment, the
+    parent's superseded views and every search's caches (the distributed
+    probe table, the counted filtered ``ensure_topk_full`` result) all
+    have an owner that frees them."""
+    import dataclasses
+
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    idx, added_df, query = _lifecycle_index(spark, tmp_path, family)
     assert idx.resident
-    idx.search(query, k=K, nprobe=8).collect()
+    # a filtered ensure_topk_full search caches the result it counts
+    idx.config = dataclasses.replace(idx.config, ensure_topk_full=True)
+    idx.search(
+        query, k=K, nprobe=8, strategy=strategy, filter_expr=F.col("id") >= 0
+    ).collect()
     assert not sc._jsc.getPersistentRDDs().isEmpty()
     idx2 = idx.add(added_df)
     assert idx2.resident and idx2.resident_bytes_est > idx.resident_bytes_est
-    _assert_added_found(idx2, query, nprobe=8)
+
+    def assert_added_found():
+        out = idx2.search(query, k=K, nprobe=8, strategy=strategy).collect()
+        assert len(out) == K
+        # PQ reconstructs the added rows from base-trained codebooks, so one
+        # base row may rank among them (see test_ivf_pq_add)
+        found = sum(r["neighbor_id"] >= NB for r in out)
+        assert found >= (K - 1 if family == "IVF_PQ" else K), [r["neighbor_id"] for r in out]
+
+    assert_added_found()
     assert idx2.count() == NB + 40
     idx2.release()
     assert not idx2.resident and idx2.resident_bytes_est == 0
     assert sc._jsc.getPersistentRDDs().isEmpty()
     # released indexes still answer, from lineage
-    _assert_added_found(idx2, query, nprobe=8)
+    assert_added_found()
 
 
 def test_sparse_add_keeps_explicit_partitions(spark):

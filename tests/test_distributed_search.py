@@ -225,3 +225,46 @@ def test_scann_distributed_matches_driver(spark, monkeypatch):
         dist_df = idx.search(q_df, k=10, strategy="distributed")
     driver_df = idx.search(q_df, k=10, strategy="driver")
     assert _rows(dist_df) == _rows(driver_df)
+
+
+@pytest.mark.parametrize("family", ["IVF_SQ8", "SCANN", "IVF_PQ", "BIN_IVF_FLAT"])
+def test_ensure_topk_full_every_family(spark, family):
+    """``ensure_topk_full`` (ivf.cc:753-762) holds for every IVF family on
+    both strategies: at nprobe=1 with k above any cell's population each
+    query still gets k results, equal to an all-cells search."""
+    from knowhere_spark.config import IvfPqConfig, IvfSq8Config, ScannConfig
+    from knowhere_spark.operators.bin_ivf import BinaryIVFIndex
+    from knowhere_spark.operators.pq import IVFPqIndex
+    from knowhere_spark.operators.refine import ScannIndex
+    from knowhere_spark.operators.sq import IVFSq8Index
+
+    from tests.conftest import BIN_QUERY_SCHEMA, binary_df, gen_binary
+
+    common = dict(nlist=25, nprobe=1, ensure_topk_full=True)
+    if family == "BIN_IVF_FLAT":
+        idx = BinaryIVFIndex.build(
+            binary_df(spark, gen_binary(500, 64, seed=45)),
+            IvfConfig(metric_type="HAMMING", **common),
+        )
+        q_df = binary_df(spark, gen_binary(40, 64, seed=46), BIN_QUERY_SCHEMA)
+    else:
+        base_df = dense_df(spark, gen_dense(500, 8, seed=45))
+        if family == "IVF_SQ8":
+            idx = IVFSq8Index.build(base_df, IvfSq8Config(metric_type="L2", **common))
+        elif family == "SCANN":
+            idx = ScannIndex.build(base_df, ScannConfig(metric_type="L2", **common))
+        else:
+            idx = IVFPqIndex.build(
+                base_df, IvfPqConfig(metric_type="L2", m=4, nbits=4, **common)
+            )
+        q_df = dense_df(spark, gen_dense(40, 8, seed=46), QUERY_SCHEMA)
+    cells = idx.sq if family == "SCANN" else idx
+    k = max(cells._get_cell_counts().values()) + 1   # > any cell's population
+    exact = _rows(idx.search(q_df, k=k, nprobe=25, strategy="driver"))
+    for strategy in ("driver", "distributed"):
+        out = idx.search(q_df, k=k, nprobe=1, strategy=strategy)
+        counts = {r["query_id"]: r["cnt"] for r in
+                  out.groupBy("query_id").agg(F.count("*").alias("cnt")).collect()}
+        assert len(counts) == 40 and all(c == k for c in counts.values()), strategy
+        assert _rows(out) == exact, strategy
+    idx.release()

@@ -1,4 +1,4 @@
-"""Property tests pinning hnsw.diverse_neighbors and _top_cap_stable.
+"""Property tests pinning hnsw.diverse_neighbors and top_cap_stable.
 
 The r12 optimization round rewrote both (vectorized scan, future-only
 dmin updates, argpartition-based stable top-cap): these tests compare
@@ -12,7 +12,8 @@ at the oracle.
 import numpy as np
 import pytest
 
-from knowhere_spark.operators.hnsw import _top_cap_stable, diverse_neighbors
+from knowhere_spark.functions.distance import top_cap_stable
+from knowhere_spark.operators.hnsw import diverse_neighbors
 
 
 def _reference_diverse(key_m, kk, cand_cap):
@@ -86,5 +87,5 @@ def test_top_cap_stable_equals_stable_argsort_prefix(seed):
         np.fill_diagonal(km, np.inf)
         cap = int(rng.integers(1, n + 2))
         want = np.argsort(km, axis=1, kind="stable")[:, :cap]
-        got = _top_cap_stable(km, cap)
+        got = top_cap_stable(km, cap)
         assert np.array_equal(got, want)

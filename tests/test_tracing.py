@@ -7,6 +7,7 @@ accumulators, resolved by `.snapshot()` after the result is consumed)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from knowhere_spark.config import HnswConfig, IvfConfig
@@ -122,32 +123,54 @@ def test_sharded_hnsw_search_span(spark):
     assert "knowhere:SHARDED_HNSW.search" in sm["description"]
 
 
-def test_sq8_build_and_search_metrics(spark):
-    """IVF_SQ8 fills the IVF_FLAT metrics schema, plus what it caches."""
-    from knowhere_spark.config import IvfSq8Config
+def _quantized_index(spark, family):
+    """``(index, query frame, dim)`` for one IVF family over 600 rows."""
+    from knowhere_spark.config import IvfPqConfig, IvfSq8Config
+    from knowhere_spark.operators.bin_ivf import BinaryIVFIndex
+    from knowhere_spark.operators.pq import IVFPqIndex
     from knowhere_spark.operators.sq import IVFSq8Index
 
-    base = gen_dense(600, 16, seed=26)
-    qs = gen_dense(7, 16, seed=27)
-    idx = IVFSq8Index.build(
-        dense_df(spark, base), IvfSq8Config(metric_type="L2", nlist=8, nprobe=3)
-    )
+    from conftest import BIN_QUERY_SCHEMA, binary_df, gen_binary
+
+    if family == "BIN_IVF_FLAT":
+        base = binary_df(spark, gen_binary(600, 128, seed=26))
+        qs = binary_df(spark, gen_binary(7, 128, seed=27), BIN_QUERY_SCHEMA)
+        cfg = IvfConfig(metric_type="HAMMING", nlist=8, nprobe=3)
+        return BinaryIVFIndex.build(base, cfg), qs, 128
+    base = dense_df(spark, gen_dense(600, 16, seed=26))
+    qs = dense_df(spark, gen_dense(7, 16, seed=27), QUERY_SCHEMA)
+    if family == "IVF_SQ8":
+        idx = IVFSq8Index.build(base, IvfSq8Config(metric_type="L2", nlist=8, nprobe=3))
+    else:
+        idx = IVFPqIndex.build(
+            base, IvfPqConfig(metric_type="L2", nlist=8, nprobe=3, m=4, nbits=4)
+        )
+    return idx, qs, 16
+
+
+@pytest.mark.parametrize("family", ["IVF_SQ8", "IVF_PQ", "BIN_IVF_FLAT"])
+def test_ivf_family_build_and_search_metrics(spark, family):
+    """Every IVF family fills the IVF_FLAT metrics schema, plus what it
+    caches — build, driver search and distributed search."""
+    idx, q_df, dim = _quantized_index(spark, family)
     bm = idx.last_metrics.snapshot()
-    assert bm["op"] == "IVF_SQ8.build" and bm["n"] == 600 and bm["nlist"] == 8
-    assert bm["train_backend"] == "driver" and bm["dim"] == 16
+    assert bm["op"] == f"{family}.build" and bm["n"] == 600 and bm["nlist"] == 8
+    assert bm["train_backend"] == "driver" and bm["dim"] == dim
     assert bm["stages"]["build_plan_sec"] > 0
     assert bm["resident"] is True and bm["resident_bytes_est"] > 0
-    assert "knowhere:IVF_SQ8.build" in _desc(spark)
+    assert f"knowhere:{family}.build" in _desc(spark)
 
-    q_df = dense_df(spark, qs, QUERY_SCHEMA)
     idx.search(q_df, k=5, strategy="driver").count()
     sm = idx.last_metrics.snapshot()
-    assert sm["op"] == "IVF_SQ8.search" and sm["strategy"] == "driver"
+    assert sm["op"] == f"{family}.search" and sm["strategy"] == "driver"
+    assert sm["k"] == 5 and sm["nprobe"] == 3
     assert sm["nq"] == 7 and sm["cells_probed"] == 7 * 3
     assert 0 < sm["rows_scanned"] <= 600
+    assert sm["stages"]["probe_sec"] >= 0
     assert sm["resident"] is True
 
     idx.search(q_df, k=5, strategy="distributed").count()
     sm = idx.last_metrics.snapshot()
     assert sm["strategy"] == "distributed" and sm["rows_scanned"] > 0
+    assert f"knowhere:{family}.search" in sm["description"]
     idx.release()

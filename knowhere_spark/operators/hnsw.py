@@ -11,26 +11,32 @@ serving is not Spark-shaped, so
 - **Build** produces the graph artifact — a proximity graph with <= M
   out-edges per node — via *blocked* construction: rows are assigned to
   their top-2 nearest coarse cells (so boundary neighbors share a block),
-  each cell computes its local exact KNN with ``applyInPandas`` (bounded
+  each cell computes its local exact KNN with ``applyInArrow`` (bounded
   cell population => bounded memory), and edges are symmetrized then
   re-pruned to M per node.  Every step is a DataFrame op; cells are the
   parallelism axis, so construction scales with executors.
-- **Search** is an honest BFS-beam: per hop, frontier ⋈ edges expands
-  candidates, exact distances re-rank, the per-query top-``ef`` become
-  the next frontier (``ef >= k`` enforced like base_hnsw_config.h:55-79),
-  bounded hop count.  Each hop is one shuffle join — batch-friendly, and
-  the documented contract is recall-vs-hops, not graph-serving latency.
-  For serving-style ANN use the IVF family; this operator exists for
-  graph-artifact parity (and the edges table is itself a useful
-  similarity-graph output for dedup/clustering pipelines).
+- **Search** (``strategy="broadcast"``, auto-picked while the artifact
+  fits :data:`_BROADCAST_MAX_BYTES`) ships the vectors + CSR adjacency to
+  executors once and runs hnswlib's best-first ef-search per query in
+  one ``mapInArrow`` kernel.  The ``"bfs"`` fallback is bounded iterative
+  frontier expansion over the edges *table*: per hop, frontier ⋈ edges
+  expands candidates, exact distances re-rank, the per-query top-``ef``
+  become the next frontier (``ef >= k`` enforced like
+  base_hnsw_config.h:55-79) — one shuffle join per hop, no memory bound
+  on the graph.
+
+This module is the HNSW family's one core: the build kernels
+(:func:`assign_cells`, :func:`local_knn_edges`, :func:`prune_edges`), the
+broadcast payload (:func:`graph_payload`) and the beam kernel
+(:func:`beam_search`, traced twin :func:`beam_trace`) all run over
+``__shard``-tagged rows, so :class:`HNSWIndex` is the one-shard case of
+``SHARDED_HNSW`` (operators/hnsw_sharded.py) and HNSW_SQ/PQ/PRQ
+(operators/hnsw_quant.py) swap only the beam's scorer and storage.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -52,8 +58,9 @@ _TRAIN_SAMPLE_MAX = 50_000
 #: fall back to the BFS table path.
 _BROADCAST_MAX_BYTES = 1 << 30
 
-_EDGE_SCHEMA = StructType(
+_SHARD_EDGE_SCHEMA = StructType(
     [
+        StructField("__shard", IntegerType()),
         StructField("src", LongType()),
         StructField("dst", LongType()),
         StructField("dist", DoubleType()),
@@ -218,8 +225,194 @@ def diverse_neighbors(
 
 
 # ---------------------------------------------------------------------------
-# broadcast best-first beam search (shared by HNSWIndex and the quantized
-# variants in operators/hnsw_quant.py)
+# graph construction kernels (shared by HNSWIndex.build, the one-shard
+# case, and ShardedHNSWIndex.build)
+# ---------------------------------------------------------------------------
+
+def assign_cells(sharded: DataFrame, centroids: dict[int, np.ndarray]) -> DataFrame:
+    """Top-2 cell assignment within each row's shard: ``(id, vec,
+    __shard)`` → ``(id, __shard, cell_id, vec)``, every row once per cell
+    (so boundary neighbors share a block).  ``centroids`` maps a shard to
+    its ``(nlist, dim)`` coarse cells; L2 geometry, stable ties.
+    Arrow-native (guide §4.2): vec rows pass through via one vectorized
+    take per batch — never boxed into per-row Python objects."""
+    from knowhere_spark.session import ensure_parallelism
+
+    bc = sharded.sparkSession.sparkContext.broadcast(centroids)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        from knowhere_spark.functions.arrowio import list_matrix, scalar_column
+
+        C_by_shard = bc.value
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            X_all = list_matrix(tbl, "vec")
+            ids_all = scalar_column(tbl, "id", np.int64)
+            s_all = scalar_column(tbl, "__shard", np.int64)
+            id_parts, s_parts, c_parts, take_parts = [], [], [], []
+            for s in np.unique(s_all):
+                rows = np.flatnonzero(s_all == s)
+                d = pairwise_distances(X_all[rows], C_by_shard[int(s)], MetricType.L2)
+                top2 = np.argsort(d, axis=1, kind="stable")[:, :2]
+                ncopy = min(2, top2.shape[1])
+                take_parts.append(np.tile(rows, ncopy))
+                id_parts.append(np.tile(ids_all[rows], ncopy))
+                s_parts.append(np.full(len(rows) * ncopy, s, dtype=np.int32))
+                c_parts.append(top2[:, :ncopy].T.ravel().astype(np.int32))
+            yield pa.record_batch(
+                [
+                    pa.array(np.concatenate(id_parts), type=pa.int64()),
+                    pa.array(np.concatenate(s_parts), type=pa.int32()),
+                    pa.array(np.concatenate(c_parts), type=pa.int32()),
+                    tbl.column("vec").combine_chunks().take(
+                        pa.array(np.concatenate(take_parts))
+                    ),
+                ],
+                names=["id", "__shard", "cell_id", "vec"],
+            )
+
+    return ensure_parallelism(sharded).mapInArrow(
+        kernel,
+        StructType(
+            [
+                StructField("id", LongType()),
+                StructField("__shard", IntegerType()),
+                StructField("cell_id", IntegerType()),
+                StructField("vec", sharded.schema["vec"].dataType),
+            ]
+        ),
+    )
+
+
+def local_knn_edges(
+    blocks: DataFrame, metric: MetricType, M: int, efC: int
+) -> DataFrame:
+    """Per-(shard, cell) exact local KNN with the diversity heuristic
+    (:func:`diverse_neighbors`), symmetrized in-kernel: ``(id, __shard,
+    cell_id, vec)`` blocks → raw ``(__shard, src, dst, dist, sel_rank)``
+    edges, for :func:`prune_edges`."""
+    import pyarrow as pa
+
+    edge_pa = pa.schema(
+        [("__shard", pa.int32()), ("src", pa.int64()), ("dst", pa.int64()),
+         ("dist", pa.float64()), ("sel_rank", pa.int32())]
+    )
+
+    def local_knn(key, tbl):
+        from knowhere_spark.functions.arrowio import list_matrix, scalar_column
+
+        if tbl.num_rows < 2:
+            return edge_pa.empty_table()
+        # sort by id FIRST: the heuristic's stable argsort breaks
+        # distance TIES by row position, and a grouped batch's row
+        # order is shuffle-arrival order (nondeterministic across
+        # runs).  On tie-heavy corpora (duplicate cliques) that made
+        # the pruned edge set — and beam recall — wiggle run-to-run
+        # (r10: ±0.05 measured on the 50×-replica bench corpus); id
+        # order pins it.  O(b log b) next to the O(b²) GEMM.
+        ids = scalar_column(tbl, "id", np.int64)
+        X = list_matrix(tbl, "vec")
+        order = np.argsort(ids)   # ids unique within a cell
+        ids, X = ids[order], X[order]
+        d = pairwise_distances(X, X, metric)
+        key_m = -d if metric.is_similarity else d
+        np.fill_diagonal(key_m, np.inf)      # no self-edges
+        kk = min(M, len(ids) - 1)
+        src_pos, dst_pos, sel_rank = diverse_neighbors(
+            key_m, kk, cand_cap=max(2 * M, efC)
+        )
+        # symmetrize IN-KERNEL: emit each selected edge forward AND
+        # reversed (reverse at _REV_RANK — incoming-link backfill
+        # precedence).  The former plan symmetrized with
+        # raw_edges.unionByName(raw_edges.select(swap)): Spark does
+        # not deduplicate the common subtree across union branches
+        # (no ReusedExchange covers a Python node), so the WHOLE
+        # assign+local_knn chain — the build's dominant kernel —
+        # executed twice (plans/r12/hnsw_build_edges_batch2_before.txt).
+        # Emitting both directions here yields the identical row
+        # multiset with one kernel pass (guide §1.2).  Reverse copies
+        # of MUTUAL pairs are dominated by the opposite forward edge in
+        # the downstream min-agg and drop before the shuffle
+        # (_undominated_reverse_mask; guide §2.3).
+        dd = d[src_pos, dst_pos]
+        keep_rev = _undominated_reverse_mask(src_pos, dst_pos, dd)
+        n_rev = int(keep_rev.sum())
+        return pa.table(
+            {
+                "__shard": pa.array(
+                    np.full(len(src_pos) + n_rev, int(key[0].as_py()), dtype=np.int32),
+                    type=pa.int32(),
+                ),
+                "src": pa.array(
+                    np.concatenate([ids[src_pos], ids[dst_pos[keep_rev]]]),
+                    type=pa.int64(),
+                ),
+                "dst": pa.array(
+                    np.concatenate([ids[dst_pos], ids[src_pos[keep_rev]]]),
+                    type=pa.int64(),
+                ),
+                "dist": pa.array(np.concatenate([dd, dd[keep_rev]]), type=pa.float64()),
+                "sel_rank": pa.array(
+                    np.concatenate(
+                        [
+                            sel_rank.astype(np.int32, copy=False),
+                            np.full(n_rev, _REV_RANK, dtype=np.int32),
+                        ]
+                    ),
+                    type=pa.int32(),
+                ),
+            }
+        )
+
+    return blocks.groupBy("__shard", "cell_id").applyInArrow(
+        local_knn, _SHARD_EDGE_SCHEMA
+    )
+
+
+def prune_edges(raw_edges: DataFrame, metric: MetricType, M: int) -> DataFrame:
+    """Dedup + prune the raw edge union to ``(__shard, src, dst, dist)``
+    with <= M out-edges per node.
+
+    Dedup: a pair can appear in 2 shared blocks, and reverse edges
+    duplicate forward ones.  The prune orders by HEURISTIC SELECTION
+    RANK, not distance: a distance-ordered prune would re-evict the
+    diversity links in favor of clique-mates (from the node's second cell
+    or arriving as reverse edges) — the same precedence hnswlib gives a
+    node's own heuristic selection over incoming-link backfill.  ``src``
+    determines its shard, so the per-src prune is exactly the per-shard
+    single-graph prune.
+
+    ONE exchange for dedup-agg AND prune-window (guide §2.4):
+    HashPartitioning(src) satisfies both the groupBy(__shard, src, dst)
+    clustering and the window's partitionBy(src).  An r13 per-shard
+    Arrow prune kernel gave byte-identical output but its timing was a
+    wash, and applyInArrow materializes a WHOLE shard's raw edges per
+    task where this window spills gracefully — the kernel lives on in
+    tests/test_hnsw_sharded.py (test_edge_prune_kernel_equals_sql)."""
+    sym = (
+        raw_edges.repartition("src")
+        .groupBy("__shard", "src", "dst")
+        .agg(F.min("dist").alias("dist"), F.min("sel_rank").alias("sel_rank"))
+    )
+    dist_order = F.col("dist").desc() if metric.is_similarity else F.col("dist").asc()
+    w_prune = Window.partitionBy("src").orderBy(
+        F.col("sel_rank").asc(), dist_order, F.col("dst").asc()
+    )
+    return (
+        sym.withColumn("__r", F.row_number().over(w_prune))
+        .filter(F.col("__r") <= F.lit(M))
+        .select("__shard", "src", "dst", "dist")
+    )
+
+
+# ---------------------------------------------------------------------------
+# broadcast graph payload + best-first beam kernel (shared by HNSWIndex,
+# the one-shard case, the quantized variants in operators/hnsw_quant.py
+# and the batched search of operators/hnsw_sharded.py)
 # ---------------------------------------------------------------------------
 
 def _collect_column_numpy(df: DataFrame, col: str, dtype) -> np.ndarray:
@@ -234,45 +427,40 @@ def _collect_column_numpy(df: DataFrame, col: str, dtype) -> np.ndarray:
 
 
 def _collect_id_matrix(df: DataFrame, id_col: str, vec_col: str, dtype):
-    """Collect ``(id, array<…>)`` rows into sorted-(ids, matrix) numpy
-    pairs via Arrow, keeping the transient driver footprint close to the
-    final array size (no boxed Python floats)."""
+    """Collect ``(id, array<…>)`` rows into (ids, matrix) numpy pairs via
+    Arrow, keeping the transient driver footprint close to the final
+    array size (no boxed Python floats)."""
     try:
         tbl = df.select(id_col, vec_col).toArrow()
         ids = tbl.column(0).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
         lst = tbl.column(1).combine_chunks()
         flat = lst.flatten().to_numpy(zero_copy_only=False).astype(dtype)
         n = len(ids)
-        X = flat.reshape(n, -1) if n else flat.reshape(0, 0)
+        return ids, flat.reshape(n, -1) if n else flat.reshape(0, 0)
     except Exception:
         rows = df.select(id_col, vec_col).collect()
-        ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-        X = np.array([r[vec_col] for r in rows], dtype=dtype)
-        del rows
-    order = np.argsort(ids)
-    return ids[order], X[order]
+        return (
+            np.array([r[id_col] for r in rows], dtype=np.int64),
+            np.array([r[vec_col] for r in rows], dtype=dtype),
+        )
 
 
-def _collect_csr(edges_df: DataFrame, ids_sorted: np.ndarray):
-    """Collect the edges table into CSR adjacency over positions in
-    ``ids_sorted`` (ascending node ids).  Arrow-batched — edge Rows are
-    never materialized."""
+def _collect_edge_ids(edges_df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Collect the edges table's ``(src, dst)`` node ids via Arrow — edge
+    Rows are never materialized."""
     pairs = edges_df.select("src", "dst")
     try:
         tbl = pairs.toArrow()
-        src_ids = tbl.column(0).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        dst_ids = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+        return tuple(
+            tbl.column(i).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+            for i in (0, 1)
+        )
     except Exception:
         e = pairs.collect()
-        src_ids = np.array([r["src"] for r in e], dtype=np.int64)
-        dst_ids = np.array([r["dst"] for r in e], dtype=np.int64)
-        del e
-    src = np.searchsorted(ids_sorted, src_ids)
-    dst = np.searchsorted(ids_sorted, dst_ids)
-    eo = np.argsort(src, kind="stable")
-    src, dst = src[eo], dst[eo]
-    indptr = np.searchsorted(src, np.arange(len(ids_sorted) + 1))
-    return indptr, dst.astype(np.int32)
+        return (
+            np.array([r["src"] for r in e], dtype=np.int64),
+            np.array([r["dst"] for r in e], dtype=np.int64),
+        )
 
 
 def _entry_positions(ids_sorted: np.ndarray, entry_ids) -> np.ndarray:
@@ -286,6 +474,25 @@ def _entry_positions(ids_sorted: np.ndarray, entry_ids) -> np.ndarray:
     if len(entry_pos) == 0:
         entry_pos = np.array([0], dtype=np.int64)
     return entry_pos
+
+
+def graph_payload(ids, X, src, dst, entry_ids, storage) -> tuple:
+    """The broadcast graph artifact of one graph (one shard):
+    ``(ids_sorted, indptr, indices, entry_pos, storage(X_sorted))`` —
+    ascending node ids, int32 CSR adjacency over positions in them, the
+    entry points' positions, and the scorer's state built from the
+    id-sorted per-node matrix (raw vectors or codes; see
+    :func:`_dense_extra`).  ``src``/``dst`` are edge node ids."""
+    order = np.argsort(ids)
+    ids, X = ids[order], X[order]
+    s = np.searchsorted(ids, src)
+    d = np.searchsorted(ids, dst)
+    eo = np.argsort(s, kind="stable")
+    s, d = s[eo], d[eo]
+    indptr = np.searchsorted(s, np.arange(len(ids) + 1))
+    return (
+        ids, indptr, d.astype(np.int32), _entry_positions(ids, entry_ids), storage(X)
+    )
 
 
 def _keys_vs_query(
@@ -305,6 +512,13 @@ def _keys_vs_query(
     denom = nx * float(np.linalg.norm(q))
     denom[denom == 0] = 1.0
     return -(dot / denom)
+
+
+def _dense_extra(X: np.ndarray, metric: MetricType) -> tuple:
+    """:func:`_dense_scorer` state: (fp32 matrix, metric value, COSINE
+    row norms)."""
+    xnorm = np.linalg.norm(X, axis=1) if metric == MetricType.COSINE else None
+    return (X, metric.value, xnorm)
 
 
 def _dense_scorer(extra, qvec):
@@ -331,8 +545,8 @@ def _beam_traverse(
     adjacency list.  Returns the bounded result max-heap of
     ``(-key, pos)``.
 
-    The traversal lives HERE and only here: the plain search kernel and
-    the feder ``trace_visit`` kernel both call it, so the animation can
+    The traversal lives HERE and only here: the search kernel and the
+    feder ``trace_visit`` kernel both call it, so the animation can
     never desynchronize from the answer.  When ``visits`` is a list,
     every scored adjacency batch is appended as ``(parent_pos,
     neighbor_positions, keys)`` — batch-level capture, so the hot inner
@@ -377,150 +591,167 @@ def _beam_traverse(
     return res
 
 
-def broadcast_beam_search(
-    query_df: DataFrame,
+def _beam_runs(batches, payloads, scorer_factory, k, ef, masks, scored, trace):
+    """The beam kernels' one query reader: per non-empty Arrow batch of
+    ``(query_id, vec, __shard)`` rows, the list of ``(query_id, ids,
+    top, visits)`` — one :func:`_beam_traverse` per row against its
+    shard's payload broadcast, ``top`` its best ``k`` ``(key, pos)``
+    pairs ascending (== the ``(distance, neighbor_id)`` tie-break of
+    ``topk_per_key``).  Query vectors are read as float64, lossless for
+    float32 and float64 columns; each scorer casts to its own precision.
+    ``scored`` (a one-element list) counts scored candidates."""
+    import pyarrow as pa
+
+    from knowhere_spark.functions.arrowio import list_matrix, scalar_column
+
+    stamps: dict[int, np.ndarray] = {}
+    qno = 0   # per-task counter: stamps are per-shard, so reuse is safe
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        tbl = pa.Table.from_batches([rb])
+        qids = scalar_column(tbl, "query_id", np.int64)
+        shards = scalar_column(tbl, "__shard", np.int64)
+        Q = list_matrix(tbl, "vec", np.float64)
+        runs = []
+        for sh in np.unique(shards):
+            ids_, indptr_, indices_, entries, extra = payloads[int(sh)].value
+            allowed = masks[int(sh)].value if masks is not None else None
+            stamp = stamps.setdefault(int(sh), np.zeros(len(ids_), dtype=np.int64))
+            for r in np.flatnonzero(shards == sh):
+                score = scorer_factory(extra, Q[r])
+                if scored is not None:
+                    def score(pos, _s=score):
+                        scored[0] += len(pos)
+                        return _s(pos)
+                qno += 1
+                visits = [] if trace else None
+                res = _beam_traverse(
+                    score, entries, ef, indptr_, indices_, stamp, qno, allowed, visits
+                )
+                top = sorted((-nk, p) for nk, p in res)[:k]
+                runs.append((int(qids[r]), ids_, top, visits))
+        yield runs
+
+
+def beam_search(
+    tagged: DataFrame,
+    payloads: dict,
+    scorer_factory,
     *,
     k: int,
     ef: int,
-    payload_bc,
-    scorer_factory,
     is_sim: bool,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "vec",
-    mask_bc=None,
+    masks: dict | None = None,
     score_acc=None,
 ) -> DataFrame:
-    """Best-first ef-search with the graph artifact broadcast to executors.
+    """Best-first ef-search with the graph artifacts broadcast to
+    executors — the HNSW family's one search kernel.
 
-    ``payload_bc`` is a Spark broadcast of ``(ids_sorted, indptr, indices,
-    entry_pos, extra)``; ``scorer_factory(extra, qvec) -> score(pos_array)``
-    produces per-query smaller-is-better keys (see :func:`_keys_vs_query`).
-    Traversal is :func:`_beam_traverse`; runs as one ``mapInPandas`` over
-    query partitions — zero joins/shuffles."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_, indptr_, indices_, entries, extra = payload_bc.value
-        stamp = np.zeros(len(ids_), dtype=np.int64)
-        allowed = mask_bc.value if mask_bc is not None else None
-        qno = 0
-        scored_n = [0]   # per-task scored-candidate counter (span metric)
-        for pdf in batches:
-            out_q, out_n, out_d, out_r = [], [], [], []
-            for qid, qvec in zip(pdf[query_id_col], pdf[query_vec_col]):
-                score = scorer_factory(extra, qvec)
-                if score_acc is not None:
-                    def score(pos, _s=score):
-                        scored_n[0] += len(pos)
-                        return _s(pos)
-                qno += 1
-                res = _beam_traverse(
-                    score, entries, ef, indptr_, indices_, stamp, qno, allowed
-                )
-                # (key, pos) sort == (distance, neighbor_id) tie-break,
-                # matching topk_per_key's ordering on the BFS path
-                top = sorted(((-nk, p) for nk, p in res))[:k]
-                for rank, (s, p) in enumerate(top, start=1):
-                    out_q.append(qid)
-                    out_n.append(ids_[p])
-                    out_d.append(-s if is_sim else s)
-                    out_r.append(rank)
-            if score_acc is not None and scored_n[0]:
-                score_acc.add(scored_n[0])
-                scored_n[0] = 0
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "distance": out_d,
-                    "rank": out_r,
-                }
-            )
-
+    ``tagged`` holds ``(query_id long, vec array, __shard int)`` rows;
+    ``payloads`` maps each shard to the Spark broadcast of its
+    :func:`graph_payload`; ``scorer_factory(extra, qvec) -> score(pos)``
+    gives per-query smaller-is-better keys (:func:`_dense_scorer`, or
+    ``_quant_scorer`` over codes).  ``masks`` optionally maps a shard to
+    a broadcast bitset over its positions gating RESULTS (filtered-HNSW
+    semantics); ``score_acc`` counts scored candidates.  One
+    ``mapInArrow`` over query partitions — zero joins/shuffles — emitting
+    ``(query_id, neighbor_id, distance, rank)``, the top ``k`` per
+    (query, shard)."""
     from knowhere_spark.session import ensure_parallelism
 
-    queries = ensure_parallelism(
-        query_df.select(
-            F.col(query_id_col).cast("long").alias(query_id_col),
-            F.col(query_vec_col).alias(query_vec_col),
-        )
-    )
-    return queries.mapInPandas(
+    def kernel(batches):
+        import pyarrow as pa
+
+        scored = [0] if score_acc is not None else None
+        for runs in _beam_runs(
+            batches, payloads, scorer_factory, k, ef, masks, scored, False
+        ):
+            q, n, d, r = [], [], [], []
+            for qid, ids_, top, _ in runs:
+                for rank, (s, p) in enumerate(top, start=1):
+                    q.append(qid)
+                    n.append(ids_[p])
+                    d.append(-s if is_sim else s)
+                    r.append(rank)
+            if scored is not None and scored[0]:
+                score_acc.add(scored[0])
+                scored[0] = 0
+            yield pa.record_batch(
+                [
+                    pa.array(np.asarray(q, dtype=np.int64)),
+                    pa.array(np.asarray(n, dtype=np.int64)),
+                    pa.array(np.asarray(d, dtype=np.float64)),
+                    pa.array(np.asarray(r, dtype=np.int32)),
+                ],
+                names=["query_id", "neighbor_id", "distance", "rank"],
+            )
+
+    return ensure_parallelism(tagged).mapInArrow(
         kernel, "query_id long, neighbor_id long, distance double, rank int"
     )
 
 
-def broadcast_beam_trace(
-    query_df: DataFrame,
-    *,
-    k: int,
-    ef: int,
-    payload_bc,
-    scorer_factory,
-    is_sim: bool,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "vec",
+def beam_trace(
+    tagged: DataFrame, payloads: dict, scorer_factory, *, k: int, ef: int, is_sim: bool
 ) -> DataFrame:
-    """``trace_visit`` run of the beam: ONE :func:`_beam_traverse` pass
-    per query emitting BOTH the per-edge visit record feder renders
-    (feder/HNSW.h:165-198 ``AddVisitRecord(level, id_from, id_to, dist)``,
-    ``kind='visit'``) and the top-k answer it produced (``kind='result'``,
-    carried in ``id_to``/``rank``) — results and animation come from the
-    same traversal by construction, and the trace costs one job, not
-    two."""
+    """``trace_visit`` run of :func:`beam_search`: ONE traversal per
+    query emitting BOTH the per-edge visit record feder renders
+    (feder/HNSW.h:165-198 ``AddVisitRecord(level, id_from, id_to,
+    dist)``, ``kind='visit'``) and the top-k answer it produced
+    (``kind='result'``, carried in ``id_to``/``rank``) — results and
+    animation come from the same traversal by construction, and the
+    trace costs one job, not two."""
+    from knowhere_spark.session import ensure_parallelism
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_, indptr_, indices_, entries, extra = payload_bc.value
-        stamp = np.zeros(len(ids_), dtype=np.int64)
-        qno = 0
-        for pdf in batches:
+    def kernel(batches):
+        import pyarrow as pa
+
+        for runs in _beam_runs(
+            batches, payloads, scorer_factory, k, ef, None, None, True
+        ):
             o_q, o_kind, o_from, o_to, o_d, o_r = [], [], [], [], [], []
-            for qid, qvec in zip(pdf[query_id_col], pdf[query_vec_col]):
-                score = scorer_factory(extra, qvec)
-                qno += 1
-                visits: list = []
-                res = _beam_traverse(
-                    score, entries, ef, indptr_, indices_, stamp, qno,
-                    visits=visits,
-                )
+            for qid, ids_, top, visits in runs:
                 for p, nb, nkeys in visits:
                     for s, np_ in zip(nkeys, nb):
                         o_q.append(qid)
                         o_kind.append("visit")
-                        o_from.append(ids_[p])
-                        o_to.append(ids_[np_])
+                        o_from.append(int(ids_[p]))
+                        o_to.append(int(ids_[np_]))
                         o_d.append(-float(s) if is_sim else float(s))
                         o_r.append(None)
-                top = sorted(((-nk, p) for nk, p in res))[:k]
                 for rank, (s, p) in enumerate(top, start=1):
                     o_q.append(qid)
                     o_kind.append("result")
                     o_from.append(None)
-                    o_to.append(ids_[p])
+                    o_to.append(int(ids_[p]))
                     o_d.append(-s if is_sim else s)
                     o_r.append(rank)
-            yield pd.DataFrame(
-                {
-                    "query_id": o_q,
-                    "kind": o_kind,
-                    "id_from": pd.array(o_from, dtype="Int64"),
-                    "id_to": o_to,
-                    "distance": o_d,
-                    "rank": pd.array(o_r, dtype="Int32"),
-                }
+            yield pa.record_batch(
+                [
+                    pa.array(o_q, type=pa.int64()),
+                    pa.array(o_kind, type=pa.string()),
+                    pa.array(o_from, type=pa.int64()),
+                    pa.array(o_to, type=pa.int64()),
+                    pa.array(o_d, type=pa.float64()),
+                    pa.array(o_r, type=pa.int32()),
+                ],
+                names=["query_id", "kind", "id_from", "id_to", "distance", "rank"],
             )
 
-    from knowhere_spark.session import ensure_parallelism
-
-    queries = ensure_parallelism(
-        query_df.select(
-            F.col(query_id_col).cast("long").alias(query_id_col),
-            F.col(query_vec_col).alias(query_vec_col),
-        )
-    )
-    return queries.mapInPandas(
+    return ensure_parallelism(tagged).mapInArrow(
         kernel,
         "query_id long, kind string, id_from long, id_to long, "
         "distance double, rank int",
+    )
+
+
+def _one_shard(query_df: DataFrame, query_id_col: str, query_vec_col: str) -> DataFrame:
+    """Queries as beam-kernel rows of the one-shard case (``__shard`` 0)."""
+    return query_df.select(
+        F.col(query_id_col).cast("long").alias("query_id"),
+        F.col(query_vec_col).alias("vec"),
+        F.lit(0).alias("__shard"),
     )
 
 
@@ -539,6 +770,8 @@ class HNSWIndex:
         self.config = config
         self.entry_ids = entry_ids
         self.index_type = IndexType.HNSW
+        self._size: tuple[int, int, int] | None = None   # see _graph_size
+        self._bc_graph = None                             # see _graph_bc
 
     def count(self) -> int:
         return self.vectors.count()
@@ -592,171 +825,13 @@ class HNSWIndex:
         rng = np.random.default_rng(42)
         centroids = S[rng.choice(len(S), size=min(nlist, len(S)), replace=False)]
 
-        # top-2 cell assignment => boundary rows co-occur in both blocks
-        bc = spark.sparkContext.broadcast(centroids)
-
-        def assign2(batches):
-            # Arrow-native (guide §4.2): vec rows pass through via one
-            # vectorized take — never boxed into per-row Python objects
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
-            )
-
-            C = bc.value
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                X = list_matrix(tbl, "vec")
-                d = pairwise_distances(X, C, MetricType.L2)
-                top2 = np.argsort(d, axis=1, kind="stable")[:, :2]
-                ids = scalar_column(tbl, "id", np.int64)
-                n = len(ids)
-                ncopy = min(2, top2.shape[1])
-                idx = pa.array(
-                    np.tile(np.arange(n, dtype=np.int64), ncopy)
-                )
-                vec_col = tbl.column("vec").combine_chunks()
-                yield pa.record_batch(
-                    [
-                        pa.array(np.tile(ids, ncopy), type=pa.int64()),
-                        pa.array(
-                            top2[:, :ncopy].T.ravel().astype(np.int32),
-                            type=pa.int32(),
-                        ),
-                        vec_col.take(idx),
-                    ],
-                    names=["id", "cell_id", "vec"],
-                )
-
-        vec_type = base.schema["vec"].dataType
-        from knowhere_spark.session import ensure_parallelism
-
-        blocks = ensure_parallelism(base).mapInArrow(
-            assign2,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("cell_id", IntegerType()),
-                    StructField("vec", vec_type),
-                ]
-            ),
+        # the single graph is the one-shard case of the shared build
+        # kernels (the sharded build runs the same three)
+        raw_edges = local_knn_edges(
+            assign_cells(base.withColumn("__shard", F.lit(0)), {0: centroids}),
+            metric, config.M, int(config.efConstruction),
         )
-
-        M = config.M
-        efC = int(config.efConstruction)
-
-        import pyarrow as pa
-
-        from knowhere_spark.functions.arrowio import list_matrix, scalar_column
-
-        _edge_pa = pa.schema(
-            [("src", pa.int64()), ("dst", pa.int64()),
-             ("dist", pa.float64()), ("sel_rank", pa.int32())]
-        )
-
-        def local_knn(key, tbl):
-            if tbl.num_rows < 2:
-                return _edge_pa.empty_table()
-            # sort by id FIRST: the heuristic's stable argsort breaks
-            # distance TIES by row position, and a grouped batch's row
-            # order is shuffle-arrival order (nondeterministic across
-            # runs).  On tie-heavy corpora (duplicate cliques) that made
-            # the pruned edge set — and beam recall — wiggle run-to-run
-            # (r10: ±0.05 measured on the 50×-replica bench corpus); id
-            # order pins it.  O(b log b) next to the O(b²) GEMM.
-            ids = scalar_column(tbl, "id", np.int64)
-            X = list_matrix(tbl, "vec")
-            order = np.argsort(ids)   # ids unique within a cell
-            ids, X = ids[order], X[order]
-            d = pairwise_distances(X, X, metric)
-            sim = metric.is_similarity
-            key_m = -d if sim else d
-            np.fill_diagonal(key_m, np.inf)      # no self-edges
-            kk = min(M, len(ids) - 1)
-            src_pos, dst_pos, sel_rank = diverse_neighbors(
-                key_m, kk, cand_cap=max(2 * M, efC)
-            )
-            # symmetrize IN-KERNEL: emit each selected edge forward AND
-            # reversed (reverse at _REV_RANK — incoming-link backfill
-            # precedence).  The former plan symmetrized with
-            # raw_edges.unionByName(raw_edges.select(swap)): Spark does
-            # not deduplicate the common subtree across union branches
-            # (no ReusedExchange covers a Python node), so the WHOLE
-            # assign2+local_knn chain — the build's dominant kernel —
-            # executed twice (two MapInPandas + two FlatMapGroupsInPandas
-            # in plans/r12/hnsw_build_edges_batch2_before.txt).  Emitting
-            # both directions here yields the identical row multiset with
-            # one kernel pass (guide §1.2: fix the distributed algorithm
-            # before the per-task work).  Reverse copies of MUTUAL pairs
-            # are dominated by the opposite forward edge in the
-            # downstream min-agg and drop before the shuffle
-            # (_undominated_reverse_mask; guide §2.3).
-            dd = d[src_pos, dst_pos]
-            keep_rev = _undominated_reverse_mask(src_pos, dst_pos, dd)
-            return pa.table(
-                {
-                    "src": pa.array(
-                        np.concatenate([ids[src_pos], ids[dst_pos[keep_rev]]]),
-                        type=pa.int64(),
-                    ),
-                    "dst": pa.array(
-                        np.concatenate([ids[dst_pos], ids[src_pos[keep_rev]]]),
-                        type=pa.int64(),
-                    ),
-                    "dist": pa.array(
-                        np.concatenate([dd, dd[keep_rev]]), type=pa.float64()
-                    ),
-                    "sel_rank": pa.array(
-                        np.concatenate(
-                            [
-                                sel_rank.astype(np.int32, copy=False),
-                                np.full(
-                                    int(keep_rev.sum()), _REV_RANK,
-                                    dtype=np.int32,
-                                ),
-                            ]
-                        ),
-                        type=pa.int32(),
-                    ),
-                }
-            )
-
-        raw_edges = blocks.groupBy("cell_id").applyInArrow(local_knn, _EDGE_SCHEMA)
-        # dedup (a pair can appear in 2 shared blocks, and reverse edges
-        # duplicate forward ones) + prune to M per node ordered by
-        # HEURISTIC SELECTION RANK, not distance: a distance-ordered prune
-        # would re-evict the diversity links in favor of clique-mates
-        # (from the node's second cell or arriving as reverse edges) — the
-        # same precedence hnswlib gives a node's own heuristic selection
-        # over incoming-link backfill
-        # ONE exchange for dedup-agg AND prune-window: hash-repartition the
-        # edges by src first — HashPartitioning(src) satisfies both the
-        # groupBy(src, dst) clustering (src ⊆ {src, dst}) and the window's
-        # partitionBy(src), so neither inserts its own exchange (guide §2.4:
-        # two operations keyed the same way share one exchange; was 2
-        # exchanges of the ~4·n·M-row union).  Map-side partial agg loses
-        # nothing: a pair's duplicates arrive from different cells/kernel
-        # emissions, so same-partition duplicates were rare anyway.
-        sym = (
-            raw_edges.repartition("src")
-            .groupBy("src", "dst")
-            .agg(F.min("dist").alias("dist"), F.min("sel_rank").alias("sel_rank"))
-        )
-        dist_order = (
-            F.col("dist").desc() if metric.is_similarity else F.col("dist").asc()
-        )
-        w_prune = Window.partitionBy("src").orderBy(
-            F.col("sel_rank").asc(), dist_order, F.col("dst").asc()
-        )
-        edges = (
-            sym.withColumn("__r", F.row_number().over(w_prune))
-            .filter(F.col("__r") <= F.lit(M))
-            .select("src", "dst", "dist")
-        )
+        edges = prune_edges(raw_edges, metric, config.M).drop("__shard")
 
         # entry points: a small deterministic sample (multi-entry beam
         # replaces the hierarchy's zoom-out layers).  orderBy+limit(8)
@@ -767,6 +842,9 @@ class HNSWIndex:
             for r in base.orderBy(F.pmod(F.col("id"), F.lit(997)), "id").limit(8).collect()
         ]
         idx = cls(base, edges, config, entry_ids)
+        # the prune caps out-degree at M, so n·M bounds the edge count:
+        # the auto-strategy estimate costs no run of the lazy edge chain
+        idx._size = (n, S.shape[1] if n else 0, n * config.M)
         # span close (index.cc:131-148 Build span analog)
         from knowhere_spark.tracing import OpMetrics, op_description
 
@@ -1049,22 +1127,25 @@ class HNSWIndex:
             [int(e) for e in m["entry_ids"]],
         )
 
-    def _artifact_bytes(self) -> int:
-        """Estimated broadcast footprint: n*dim float32 vectors, the
-        *actual* edge count as int32 CSR (``add()`` keeps cross-batch
-        edges beyond the M prune, so a per-node M bound would
-        undercount), int64 ids + indptr.  Memoized — the auto-strategy
-        check must not cost Spark jobs on every search."""
-        if getattr(self, "_abytes", None) is None:
+    def _graph_size(self) -> tuple[int, int, int]:
+        """``(n, dim, n_edges)`` of the graph artifact.  ``build()``
+        records it from values it already has, the edge count bounded by
+        ``n·M``; other instances count once and memoize (``add()`` keeps
+        cross-batch edges beyond the M prune, so only a count bounds
+        those) — the auto-strategy check must not cost Spark jobs on
+        every search."""
+        if self._size is None:
             n = self.vectors.count()
-            if n == 0:
-                self._abytes = 0
-            else:
-                head = self.vectors.select("vec").head()
-                dim = len(head["vec"]) if head else 0
-                n_edges = self.edges.count()
-                self._abytes = n * dim * 4 + n_edges * 4 + n * 16
-        return self._abytes
+            head = self.vectors.select("vec").head() if n else None
+            dim = len(head["vec"]) if head else 0
+            self._size = (n, dim, self.edges.count() if n else 0)
+        return self._size
+
+    def _artifact_bytes(self) -> int:
+        """Estimated broadcast footprint: n*dim float32 vectors, the edges
+        as int32 CSR, int64 ids + indptr."""
+        n, dim, n_edges = self._graph_size()
+        return n * dim * 4 + n_edges * 4 + n * 16
 
     def _filter_mask_bc(self, filter_expr, ids_sorted: np.ndarray):
         """Bitset over graph positions for a DataFrame filter: evaluate
@@ -1084,26 +1165,27 @@ class HNSWIndex:
         return self.vectors.sparkSession.sparkContext.broadcast(mask)
 
     def _graph_bc(self):
-        """Collect + broadcast the graph artifact (ids, CSR adjacency,
-        entry positions, fp32 matrix, norms), memoized: the artifact is
-        immutable per index instance (add/refine return new instances),
-        so it ships once and every search call reuses it — the serving
-        amortization the reference gets from keeping the graph resident
-        in RAM."""
-        bc = getattr(self, "_bc_graph", None)
-        if bc is None:
-            metric = MetricType(self.config.metric_type)
-            ids, X = _collect_id_matrix(self.vectors, "id", "vec", np.float32)
-            indptr, indices = _collect_csr(self.edges, ids)
-            entry_pos = _entry_positions(ids, self.entry_ids)
-            xnorm = (
-                np.linalg.norm(X, axis=1) if metric == MetricType.COSINE else None
+        """Collect + broadcast the graph artifact (:func:`graph_payload`
+        over the fp32 vectors), memoized: the artifact is immutable per
+        index instance (add/refine return new instances), so it ships
+        once and every search call reuses it — the serving amortization
+        the reference gets from keeping the graph resident in RAM."""
+        if self._bc_graph is None:
+            self._broadcast_graph(
+                *_collect_id_matrix(self.vectors, "id", "vec", np.float32),
+                *_collect_edge_ids(self.edges),
             )
-            bc = self.vectors.sparkSession.sparkContext.broadcast(
-                (ids, indptr, indices, entry_pos, (X, metric.value, xnorm))
+        return self._bc_graph
+
+    def _broadcast_graph(self, ids, X, src, dst) -> None:
+        """Install the memoized graph broadcast from collected arrays
+        (also the sharded search's batched wave prefetch)."""
+        metric = MetricType(self.config.metric_type)
+        self._bc_graph = self.vectors.sparkSession.sparkContext.broadcast(
+            graph_payload(
+                ids, X, src, dst, self.entry_ids, lambda Xs: _dense_extra(Xs, metric)
             )
-            self._bc_graph = bc
-        return bc
+        )
 
     def release(self) -> None:
         """Drop the memoized graph broadcast (executor-resident copies
@@ -1111,9 +1193,8 @@ class HNSWIndex:
         memoization in :meth:`_graph_bc` is the serving amortization —
         long-lived sessions holding many indexes call this to bound total
         resident broadcast bytes."""
-        bc = getattr(self, "_bc_graph", None)
-        if bc is not None:
-            bc.unpersist()
+        if self._bc_graph is not None:
+            self._bc_graph.unpersist()
             self._bc_graph = None
 
     def search_with_trace(
@@ -1145,12 +1226,12 @@ class HNSWIndex:
         )
         if queries.limit(2).count() != 1:
             raise ValueError("trace_visit requires nq == 1 (hnsw.h:213-216)")
-        combined = broadcast_beam_trace(
-            queries,
+        combined = beam_trace(
+            _one_shard(queries, "query_id", "vec"),
+            {0: self._graph_bc()},
+            _dense_scorer,
             k=k,
             ef=ef,
-            payload_bc=self._graph_bc(),
-            scorer_factory=_dense_scorer,
             is_sim=MetricType(self.config.metric_type).is_similarity,
         ).localCheckpoint(eager=True)   # nq == 1 → ef-bounded rows
         results = combined.filter(F.col("kind") == "result").select(
@@ -1167,39 +1248,6 @@ class HNSWIndex:
             "distance",
         )
         return results, visits
-
-    def _search_broadcast(
-        self,
-        query_df: DataFrame,
-        k: int,
-        ef: int,
-        *,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "vec",
-        filter_expr=None,
-        score_acc=None,
-    ) -> DataFrame:
-        """Best-first ef-search with raw fp32 vectors broadcast to
-        executors (see :func:`broadcast_beam_search`)."""
-        metric = MetricType(self.config.metric_type)
-        bc = self._graph_bc()
-        mask_bc = (
-            self._filter_mask_bc(filter_expr, bc.value[0])
-            if filter_expr is not None
-            else None
-        )
-        return broadcast_beam_search(
-            query_df,
-            k=k,
-            ef=ef,
-            payload_bc=bc,
-            scorer_factory=_dense_scorer,
-            is_sim=metric.is_similarity,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            mask_bc=mask_bc,
-            score_acc=score_acc,
-        )
 
     def search(
         self,
@@ -1224,8 +1272,8 @@ class HNSWIndex:
           (and Milvus segments) actually run HNSW: the whole graph artifact
           (vectors + CSR adjacency) ships to every executor once, and each
           query partition runs the classic best-first ef-search
-          (hnswlib ``searchBaseLayerST``, src/index/hnsw/hnsw.h) in a
-          numpy kernel inside ``mapInPandas``.  Zero shuffles after the
+          (hnswlib ``searchBaseLayerST``, src/index/hnsw/hnsw.h) in
+          :func:`beam_search`, one ``mapInArrow``.  Zero shuffles after the
           query repartition; parallelism = query partitions.  Requires the
           artifact to fit executor memory (the same contract the in-RAM
           reference has); at 100 TB corpus scale you shard the corpus and
@@ -1235,8 +1283,8 @@ class HNSWIndex:
           distance → per-query top-ef frontier; results are the best k
           over everything visited.  No memory bound on the graph; one
           shuffle join per hop.  The fallback when the artifact is too
-          large to broadcast, and the path quantized variants use via
-          ``score_fn``.
+          large to broadcast, and the quantized variants' bfs path (via
+          ``score_fn``).
         - ``"auto"`` — broadcast when the exact-vector scorer is in play
           and the artifact's estimated footprint fits
           ``_BROADCAST_MAX_BYTES``, else bfs.
@@ -1244,7 +1292,8 @@ class HNSWIndex:
         ``ef >= k`` enforced as in base_hnsw_config.h:55-79.
         ``score_fn(cand_df, queries_df) -> (query_id, node_id, distance)``
         replaces the exact-vector scorer — the hook the quantized variants
-        use to run the beam over SQ/PQ codes (operators/hnsw_quant.py).
+        use to run the bfs beam over a SQ/PQ codes table
+        (operators/hnsw_quant.py).
         """
         k = k if k is not None else self.config.k
         ef = max(ef if ef is not None else self.config.ef, k)
@@ -1276,10 +1325,21 @@ class HNSWIndex:
                 m["description"] = op_description(
                     spark.sparkContext, m["op"], k=k, ef=ef, strategy="broadcast"
                 )
-                return self._search_broadcast(
-                    query_df, k, ef,
-                    query_id_col=query_id_col, query_vec_col=query_vec_col,
-                    filter_expr=filter_expr, score_acc=m["nodes_scored"],
+                bc = self._graph_bc()
+                masks = (
+                    {0: self._filter_mask_bc(filter_expr, bc.value[0])}
+                    if filter_expr is not None
+                    else None
+                )
+                return beam_search(
+                    _one_shard(query_df, query_id_col, query_vec_col),
+                    {0: bc},
+                    _dense_scorer,
+                    k=k,
+                    ef=ef,
+                    is_sim=metric.is_similarity,
+                    masks=masks,
+                    score_acc=m["nodes_scored"],
                 )
 
         m["strategy"] = "bfs"

@@ -12,10 +12,13 @@ Spark shape: the proximity graph is the fp32 artifact from
 exact distances is strictly better than on codes, and the build is a batch
 job where raw vectors are available anyway).  What quantization changes at
 scale is the *beam scoring* I/O: every hop scores ``|frontier| × M``
-candidates, so scoring against a codes table (dim bytes for SQ8,
-``m`` bytes for PQ vs ``4·dim``) cuts the shuffled/scanned bytes 4-16x.
-The beam plugs into ``HNSWIndex.search(score_fn=...)``; refine is the
-generic exact re-rank operator (operators/refine.py), the same SCANN uses.
+candidates, so scoring against codes (dim bytes for SQ8, ``m`` bytes for
+PQ vs ``4·dim``) cuts the broadcast / shuffled bytes 4-16x.  Only the
+storage and the scorer are this module's: the broadcast search is the
+shared beam kernel (``hnsw.beam_search``) over a codes payload scored by
+:func:`_quant_scorer`, and the bfs path is ``HNSWIndex.search(score_fn=
+...)`` scoring a codes table per hop.  Refine is the generic exact
+re-rank operator (operators/refine.py), the same SCANN uses.
 
 Quantizers:
 
@@ -32,15 +35,13 @@ Quantizers:
 from __future__ import annotations
 
 import math
-from typing import Iterator
+import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     FloatType,
     IntegerType,
     LongType,
@@ -60,14 +61,16 @@ from knowhere_spark.config import (
 from knowhere_spark.operators.hnsw import (
     _BROADCAST_MAX_BYTES,
     HNSWIndex,
-    _collect_csr,
+    _collect_edge_ids,
     _collect_id_matrix,
-    _entry_positions,
     _keys_vs_query,
-    broadcast_beam_search,
+    _one_shard,
+    beam_search,
+    graph_payload,
 )
 from knowhere_spark.operators.refine import refine as exact_refine
 from knowhere_spark.sources.index_store import IndexStore
+from knowhere_spark.tracing import OpMetrics, op_description
 
 _TRAIN_SAMPLE_MAX = 100_000
 
@@ -162,69 +165,53 @@ def _make_quant(base: DataFrame, config: HnswConfig, index_type: IndexType) -> d
     raise ValueError(f"not a quantized HNSW type: {index_type}")
 
 
+def _code_dtype(quant: dict):
+    """Storage dtype of one code: fp32 for half-precision rounding, int16
+    for SQ and PQ — int32 once a PQ codebook passes 32767 entries (nbits
+    can reach 24, the reference range; an int16 code would wrap)."""
+    if quant["mode"] == "half":
+        return np.float32
+    if quant["mode"] == "pq" and any(
+        len(cb[j]) > 32767 for cb in quant["stages"] for j in range(quant["m"])
+    ):
+        return np.int32
+    return np.int16
+
+
 def _encode_with_quant(df: DataFrame, quant: dict) -> DataFrame:
     """(id, vec) → (id, codes) with FIXED quantizer state — the Add half
     of Build, shared with :meth:`QuantizedHNSWIndex.add` so appended rows
-    encode exactly like the original corpus."""
-    spark = df.sparkSession
-    mode = quant["mode"]
-    if mode == "half":
-        bc = spark.sparkContext.broadcast(quant["kind"])
+    encode exactly like the original corpus.  One Arrow kernel; ``id``
+    passes through as an Arrow buffer."""
+    from knowhere_spark.session import ensure_parallelism
 
-        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            kind = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(list(pdf["vec"].to_numpy()), dtype=np.float64)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"].to_numpy(),
-                        "codes": list(_half_round(X, kind).astype(np.float32)),
-                    }
-                )
+    bc = df.sparkSession.sparkContext.broadcast(quant)
+    code_np = _code_dtype(quant)
+    code_sql = {np.float32: FloatType(), np.int16: ShortType(), np.int32: IntegerType()}
 
-        schema = StructType(
-            [StructField("id", LongType()), StructField("codes", ArrayType(FloatType()))]
-        )
-    elif mode == "sq":
-        bc = spark.sparkContext.broadcast(
-            (quant["lo"], quant["diff"], quant["levels"])
-        )
+    def encode(batches):
+        import pyarrow as pa
 
-        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            lo_, diff_, lv = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(list(pdf["vec"].to_numpy()), dtype=np.float64)
-                c = np.clip(np.round((X - lo_) / diff_ * lv), 0, lv).astype(np.int16)
-                yield pd.DataFrame({"id": pdf["id"].to_numpy(), "codes": list(c)})
+        from knowhere_spark.functions.arrowio import list_matrix, matrix_to_list_array
 
-        schema = StructType(
-            [StructField("id", LongType()), StructField("codes", ArrayType(ShortType()))]
-        )
-    else:  # pq / prq
-        bc = spark.sparkContext.broadcast(
-            (quant["stages"], quant["m"], quant["subdim"])
-        )
-
-        # nbits can reach 24 (reference range): codebooks past 32767
-        # entries would silently wrap an int16 code, so widen the dtype
-        wide = any(
-            len(cb[j]) > 32767 for cb in quant["stages"] for j in range(quant["m"])
-        )
-        code_np = np.int32 if wide else np.int16
-
-        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            stages_, mm, sd = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(list(pdf["vec"].to_numpy()), dtype=np.float64)
+        q = bc.value
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            X = list_matrix(tbl, "vec", np.float64)
+            if q["mode"] == "half":
+                codes = _half_round(X, q["kind"]).astype(np.float32)
+            elif q["mode"] == "sq":
+                lv = q["levels"]
+                codes = np.clip(
+                    np.round((X - q["lo"]) / q["diff"] * lv), 0, lv
+                ).astype(np.int16)
+            else:  # pq / prq: nrq residual stages
+                mm, sd = q["m"], q["subdim"]
                 R = X.copy()
-                codes = np.empty((len(X), len(stages_) * mm), dtype=code_np)
-                for r, cb in enumerate(stages_):
+                codes = np.empty((len(X), len(q["stages"]) * mm), dtype=code_np)
+                for r, cb in enumerate(q["stages"]):
                     for j in range(mm):
                         sub = R[:, j * sd : (j + 1) * sd]
                         d = (
@@ -235,20 +222,21 @@ def _encode_with_quant(df: DataFrame, quant: dict) -> DataFrame:
                         idx = d.argmin(axis=1)
                         codes[:, r * mm + j] = idx
                         R[:, j * sd : (j + 1) * sd] = sub - cb[j][idx]
-                yield pd.DataFrame({"id": pdf["id"].to_numpy(), "codes": list(codes)})
+            yield pa.record_batch(
+                [
+                    tbl.column("id").combine_chunks().cast(pa.int64()),
+                    matrix_to_list_array(codes, pa.from_numpy_dtype(code_np)),
+                ],
+                names=["id", "codes"],
+            )
 
-        schema = StructType(
-            [
-                StructField("id", LongType()),
-                StructField(
-                    "codes", ArrayType(IntegerType() if wide else ShortType())
-                ),
-            ]
-        )
-
-    from knowhere_spark.session import ensure_parallelism
-
-    return ensure_parallelism(df).mapInPandas(encode, schema)
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("codes", ArrayType(code_sql[code_np])),
+        ]
+    )
+    return ensure_parallelism(df).mapInArrow(encode, schema)
 
 
 def _quant_scorer(extra, qvec):
@@ -284,6 +272,7 @@ class QuantizedHNSWIndex:
         self.quant = quant
         self.config = config
         self.index_type = index_type
+        self._bc_codes = None   # see _codes_bc
 
     # -- introspection (index_node.h:411-434) ---------------------------------
     def count(self) -> int:
@@ -311,8 +300,20 @@ class QuantizedHNSWIndex:
         vec_col: str = "vec",
         index_type: IndexType = IndexType.HNSW_SQ,
     ) -> "QuantizedHNSWIndex":
+        t0 = time.monotonic()
         graph = HNSWIndex.build(base_df, config, id_col=id_col, vec_col=vec_col)
-        return cls.from_graph(graph, config, index_type=index_type)
+        idx = cls.from_graph(graph, config, index_type=index_type)
+        # the graph's build span, re-labelled for this index type
+        m = OpMetrics(
+            graph.last_metrics,
+            op=f"{index_type.value}.build",
+            stages={"build_plan_sec": round(time.monotonic() - t0, 6)},
+        )
+        m["description"] = op_description(
+            graph.vectors.sparkSession.sparkContext, m["op"], n=m["n"], M=config.M
+        )
+        idx.last_metrics = m
+        return idx
 
     @classmethod
     def from_graph(
@@ -383,79 +384,56 @@ class QuantizedHNSWIndex:
 
     def _artifact_bytes(self) -> int:
         """Broadcast footprint of the *codes* artifact — the quantization
-        win at serving time: n×width int16/fp16 codes instead of n×dim
-        fp32 raw vectors (4-16× smaller), plus int32 CSR adjacency.
-        Memoized — the auto-strategy check must not cost Spark jobs on
-        every search."""
-        if getattr(self, "_abytes", None) is None:
-            n = self.codes.count()
-            if n == 0:
-                self._abytes = 0
-            else:
-                head = self.codes.select("codes").head()
-                w = len(head["codes"]) if head else 0
-                per = 4 if self.quant["mode"] == "half" else 2
-                n_edges = self.graph.edges.count()
-                self._abytes = n * w * per + n_edges * 4 + n * 16
-        return self._abytes
+        win at serving time: n×width codes instead of n×dim fp32 raw
+        vectors (4-16× smaller), plus int32 CSR adjacency.  Sized from the
+        graph's (n, dim, n_edges) (see ``HNSWIndex._graph_size``) — the
+        codes table shares the graph's id set, so no Spark job runs on a
+        freshly built index."""
+        n, dim, n_edges = self.graph._graph_size()
+        q = self.quant
+        width = len(q["stages"]) * q["m"] if q["mode"] == "pq" else dim
+        per = np.dtype(_code_dtype(q)).itemsize
+        return n * width * per + n_edges * 4 + n * 16
 
-    def _search_broadcast(
-        self, queries: DataFrame, kk: int, ef: int, metric: MetricType,
-        filter_expr=None,
-    ) -> DataFrame:
-        """Best-first beam over broadcast codes: the scorer decodes each
-        adjacency list with the frozen quantizer and scores against the
-        raw query (asymmetric distance, the ADC contract of
-        faiss_hnsw_config.h:95-205)."""
-        spark = self.codes.sparkSession
-        # memoized like HNSWIndex._search_broadcast: codes + CSR ship once
-        bc = getattr(self, "_bc_codes", None)
-        if bc is None:
-            if self.quant["mode"] == "half":
-                dtype = np.float32
-            elif self.quant["mode"] == "pq" and any(
-                len(cb[j]) > 32767
-                for cb in self.quant["stages"] for j in range(self.quant["m"])
-            ):
-                dtype = np.int32
-            else:
-                dtype = np.int16
-            ids, C = _collect_id_matrix(self.codes, "id", "codes", dtype)
-            indptr, indices = _collect_csr(self.graph.edges, ids)
-            entry_pos = _entry_positions(ids, self.graph.entry_ids)
-            xnorm = None
-            if metric == MetricType.COSINE and len(ids):
-                # decoded row norms, computed once in 64k-row chunks so the
-                # hot scorer never re-norms an adjacency list and the
-                # transient decode never exceeds one chunk
-                xnorm = np.empty(len(ids), dtype=np.float64)
-                for lo in range(0, len(ids), 65536):
-                    hi = min(lo + 65536, len(ids))
-                    xnorm[lo:hi] = np.linalg.norm(
-                        self._decode(C[lo:hi], self.quant), axis=1
-                    )
-            bc = spark.sparkContext.broadcast(
-                (ids, indptr, indices, entry_pos, (C, self.quant, metric.value, xnorm))
+    def _codes_bc(self):
+        """Collect + broadcast the codes payload (:func:`graph_payload`
+        over the codes, scored by :func:`_quant_scorer`), memoized like
+        ``HNSWIndex._graph_bc``: codes + CSR ship once."""
+        if self._bc_codes is None:
+            quant = self.quant
+            metric = MetricType(self.config.metric_type)
+
+            def storage(C):
+                xnorm = None
+                if metric == MetricType.COSINE:
+                    # decoded row norms, computed once in 64k-row chunks so
+                    # the hot scorer never re-norms an adjacency list and
+                    # the transient decode never exceeds one chunk
+                    xnorm = np.empty(len(C), dtype=np.float64)
+                    for lo in range(0, len(C), 65536):
+                        hi = min(lo + 65536, len(C))
+                        xnorm[lo:hi] = np.linalg.norm(
+                            self._decode(C[lo:hi], quant), axis=1
+                        )
+                return (C, quant, metric.value, xnorm)
+
+            self._bc_codes = self.codes.sparkSession.sparkContext.broadcast(
+                graph_payload(
+                    *_collect_id_matrix(self.codes, "id", "codes", _code_dtype(quant)),
+                    *_collect_edge_ids(self.graph.edges),
+                    self.graph.entry_ids,
+                    storage,
+                )
             )
-            self._bc_codes = bc
-        # the codes table shares the graph's id set, so positions in the
-        # codes-sorted payload match the raw table's mask positions
-        mask_bc = (
-            self.graph._filter_mask_bc(filter_expr, bc.value[0])
-            if filter_expr is not None
-            else None
-        )
-        return broadcast_beam_search(
-            queries,
-            k=kk,
-            ef=ef,
-            payload_bc=bc,
-            scorer_factory=_quant_scorer,
-            is_sim=metric.is_similarity,
-            query_id_col="query_id",
-            query_vec_col="qvec",
-            mask_bc=mask_bc,
-        )
+        return self._bc_codes
+
+    def release(self) -> None:
+        """Drop the memoized codes broadcast and the graph's own (see
+        ``HNSWIndex.release``); the next search re-collects."""
+        if self._bc_codes is not None:
+            self._bc_codes.unpersist()
+            self._bc_codes = None
+        self.graph.release()
 
     # -- Search: quantized beam + exact refine --------------------------------
     def search(
@@ -472,16 +450,19 @@ class QuantizedHNSWIndex:
         filter_expr=None,
     ) -> DataFrame:
         """Strategies mirror :meth:`HNSWIndex.search`: ``broadcast`` ships
-        the codes + CSR adjacency to executors and beams in one
-        mapInPandas (auto-picked when the codes artifact fits
+        the codes + CSR adjacency to executors and runs the shared beam
+        kernel (``hnsw.beam_search``) with :func:`_quant_scorer`
+        (auto-picked when the codes artifact fits
         ``_BROADCAST_MAX_BYTES``); ``bfs`` is the frontier-join table path
-        scoring a codes *table* per hop."""
+        scoring a codes *table* per hop.  ``last_metrics`` carries the
+        ``HNSWIndex.search`` schema."""
         k = k if k is not None else self.config.k
         refine_k = refine_k if refine_k is not None else self.config.refine_k
         do_refine = self.config.refine or refine_k > 1.0
         kk = int(math.ceil(k * refine_k)) if do_refine else k
+        ef = max(ef if ef is not None else self.config.ef, kk)
         metric = MetricType(self.config.metric_type)
-        spark = self.codes.sparkSession
+        sc = self.codes.sparkSession.sparkContext
 
         queries = query_df.select(
             F.col(query_id_col).cast("long").alias("query_id"),
@@ -493,73 +474,48 @@ class QuantizedHNSWIndex:
         use_broadcast = strategy == "broadcast" or (
             strategy == "auto" and 0 < self._artifact_bytes() <= _BROADCAST_MAX_BYTES
         )
+        m = OpMetrics(
+            op=f"{self.index_type.value}.search", k=k, ef=ef,
+            strategy="broadcast" if use_broadcast else "bfs",
+            nodes_scored=sc.accumulator(0),
+        )
+        self.last_metrics = m
         if use_broadcast:
-            approx = self._search_broadcast(
-                queries, kk, max(ef if ef is not None else self.config.ef, kk), metric,
+            m["description"] = op_description(
+                sc, m["op"], k=k, ef=ef, strategy="broadcast"
+            )
+            bc = self._codes_bc()
+            # the codes table shares the graph's id set, so positions in
+            # the codes-sorted payload match the raw table's mask positions
+            masks = (
+                {0: self.graph._filter_mask_bc(filter_expr, bc.value[0])}
+                if filter_expr is not None
+                else None
+            )
+            approx = beam_search(
+                _one_shard(queries, "query_id", "qvec"),
+                {0: bc},
+                _quant_scorer,
+                k=kk,
+                ef=ef,
+                is_sim=metric.is_similarity,
+                masks=masks,
+                score_acc=m["nodes_scored"],
+            )
+        else:
+            approx = self.graph.search(
+                queries,
+                kk,
+                ef=ef,
+                max_hops=max_hops,
+                query_id_col="query_id",
+                query_vec_col="qvec",
+                score_fn=self._bfs_scorer(metric),
                 filter_expr=filter_expr,
             )
-            if not do_refine:
-                return approx
-            return exact_refine(
-                approx.select("query_id", "neighbor_id"),
-                self.graph.vectors,
-                queries,
-                k,
-                metric,
-                query_vec_col="qvec",
-            )
-        bq = spark.sparkContext.broadcast((self.quant, metric.value))
-        codes = self.codes
-
-        out_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("node_id", LongType()),
-                StructField("distance", DoubleType()),
-            ]
-        )
-
-        def quant_score(cand: DataFrame, queries_df: DataFrame) -> DataFrame:
-            # query vectors arrive via an in-plan join (Catalyst picks
-            # broadcast vs shuffle by size) — the query set is never
-            # collected to the driver, so the BFS path survives large nq
-            withcodes = (
-                cand.join(codes, cand["node_id"] == codes["id"])
-                .join(queries_df, "query_id")
-                .select("query_id", "node_id", "codes", "qvec")
-            )
-
-            def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                quant_, mv = bq.value
-                mt = MetricType(mv)
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    X = QuantizedHNSWIndex._decode(
-                        np.array(list(pdf["codes"].to_numpy())), quant_
-                    )
-                    Q = np.array(list(pdf["qvec"].to_numpy()), dtype=np.float64)
-                    d = _row_distances(X, Q, mt)
-                    yield pd.DataFrame(
-                        {
-                            "query_id": pdf["query_id"].to_numpy(),
-                            "node_id": pdf["node_id"].to_numpy(),
-                            "distance": d,
-                        }
-                    )
-
-            return withcodes.mapInPandas(kernel, out_schema)
-
-        approx = self.graph.search(
-            queries,
-            kk,
-            ef=max(ef if ef is not None else self.config.ef, kk),
-            max_hops=max_hops,
-            query_id_col="query_id",
-            query_vec_col="qvec",
-            score_fn=quant_score,
-            filter_expr=filter_expr,
-        )
+            m["max_hops"] = max_hops
+            m["bfs_frames"] = self.graph.last_metrics["bfs_frames"]
+            m["description"] = op_description(sc, m["op"], k=k, ef=ef, strategy="bfs")
         if not do_refine:
             return approx
         # exact re-rank of the widened candidate set (refine contract,
@@ -572,6 +528,51 @@ class QuantizedHNSWIndex:
             metric,
             query_vec_col="qvec",
         )
+
+    def _bfs_scorer(self, metric: MetricType):
+        """``score_fn`` of the bfs path: one Arrow kernel decodes each
+        candidate's codes and scores it against its query."""
+        bq = self.codes.sparkSession.sparkContext.broadcast((self.quant, metric.value))
+        codes = self.codes
+
+        def kernel(batches):
+            import pyarrow as pa
+
+            from knowhere_spark.functions.arrowio import list_matrix
+
+            quant_, mv = bq.value
+            mt = MetricType(mv)
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                tbl = pa.Table.from_batches([rb])
+                X = QuantizedHNSWIndex._decode(
+                    list_matrix(tbl, "codes", _code_dtype(quant_)), quant_
+                )
+                Q = list_matrix(tbl, "qvec", np.float64)
+                yield pa.record_batch(
+                    [
+                        tbl.column("query_id").combine_chunks(),
+                        tbl.column("node_id").combine_chunks(),
+                        pa.array(_row_distances(X, Q, mt), type=pa.float64()),
+                    ],
+                    names=["query_id", "node_id", "distance"],
+                )
+
+        def quant_score(cand: DataFrame, queries_df: DataFrame) -> DataFrame:
+            # query vectors arrive via an in-plan join (Catalyst picks
+            # broadcast vs shuffle by size) — the query set is never
+            # collected to the driver, so the BFS path survives large nq
+            withcodes = (
+                cand.join(codes, cand["node_id"] == codes["id"])
+                .join(queries_df, "query_id")
+                .select("query_id", "node_id", "codes", "qvec")
+            )
+            return withcodes.mapInArrow(
+                kernel, "query_id long, node_id long, distance double"
+            )
+
+        return quant_score
 
     def range_search(
         self,

@@ -8,12 +8,14 @@ architecture on Spark primitives:
 
 - **Build** is ONE distributed pipeline over every shard at once: rows
   hash-shard by id, per-shard coarse centroids come from one stratified
-  sample, one ``mapInPandas`` assigns each row to its top-2 nearest
+  sample, one ``mapInArrow`` assigns each row to its top-2 nearest
   cells *within its shard*, one ``groupBy(shard, cell)`` local-KNN
   computes every shard's candidate edges, and one symmetrize + per-node
-  M-prune produces the all-shards edge table.  Both the sharded corpus
-  and the edge table are materialized as parquet physically partitioned
-  by ``__shard`` (one write job each), so every later per-shard access —
+  M-prune produces the all-shards edge table (the build kernels of
+  operators/hnsw.py, whose single graph is the one-shard case).  Both the
+  sharded corpus and the edge table are materialized as parquet
+  physically partitioned by ``__shard`` (one write job each), so every
+  later per-shard access —
   a graph broadcast collect, ``get_vector_by_ids``, ``save`` — is a
   partition-PRUNED read of that shard's directory, never a scan of the
   whole corpus.  Job count is CONSTANT in the shard count
@@ -23,8 +25,9 @@ architecture on Spark primitives:
   with ~1 GiB shards).
 - **Search** runs shards in memory-budgeted *waves*.  When everything
   fits ONE wave (the common serving case) the whole search is a single
-  batched ``mapInPandas`` beam over ``(query, shard)`` rows resolving
-  each shard's memoized graph broadcast inside the kernel — one Spark
+  run of the shared ``mapInArrow`` beam kernel (``hnsw.beam_search``)
+  over ``(query, shard)`` rows resolving each shard's memoized graph
+  broadcast inside the kernel — one Spark
   job regardless of shard count, with the wave's graph collects batched
   into one isin-pruned job per table first (r8; the 1M probe measured
   the old per-shard plans/jobs at ~0.6 s/shard fixed cost — 6.8-17×
@@ -58,11 +61,18 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import HnswConfig, IndexType, MetricType
-from knowhere_spark.functions.distance import pairwise_distances
-from knowhere_spark.operators.hnsw import (
+# _SHARD_EDGE_SCHEMA is re-exported: the edge-prune reference test builds
+# its raw-edge input with it
+from knowhere_spark.operators.hnsw import (  # noqa: F401
     _BROADCAST_MAX_BYTES,
     _CELL_TARGET_ROWS,
+    _SHARD_EDGE_SCHEMA,
     HNSWIndex,
+    _dense_scorer,
+    assign_cells,
+    beam_search,
+    local_knn_edges,
+    prune_edges,
 )
 from knowhere_spark.operators.topk import topk_per_key
 
@@ -74,17 +84,6 @@ _WAVE_BUDGET_BYTES = 4 * _BROADCAST_MAX_BYTES
 #: measured low-recall regime on dup-heavy corpora (SCALE.md r8 1M probe:
 #: 61×ef → recall 0.5542, 15×ef → 0.9448 at identical ef=128)
 _SHARD_COVERAGE_FACTOR = 32
-
-_SHARD_EDGE_SCHEMA = StructType(
-    [
-        StructField("__shard", IntegerType()),
-        StructField("src", LongType()),
-        StructField("dst", LongType()),
-        StructField("dist", DoubleType()),
-        StructField("sel_rank", IntegerType()),
-    ]
-)
-
 
 def _route_to_shards(
     df: DataFrame, router: np.ndarray, metric: MetricType
@@ -573,197 +572,21 @@ class ShardedHNSWIndex:
             else:
                 pick = rng.choice(len(Ss), size=min(nlist[s], len(Ss)), replace=False)
                 cents[s] = Ss[pick]
-        bc = spark.sparkContext.broadcast(cents)
         _mark("cell_sample_sec")
 
-        # -- ONE assignment pass: top-2 cells within each row's shard -----
-        def assign2(batches):
-            # Arrow-native (guide §4.2): vec rows pass through via one
-            # vectorized take per (shard, copy) block — never boxed into
-            # per-row Python objects
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
-            )
-
-            C_by_shard = bc.value
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                X_all = list_matrix(tbl, "vec")
-                ids_all = scalar_column(tbl, "id", np.int64)
-                s_all = scalar_column(tbl, "__shard", np.int64)
-                vec_col = tbl.column("vec").combine_chunks()
-                id_parts, s_parts, c_parts, take_parts = [], [], [], []
-                for s in np.unique(s_all):    # ascending, like pd.groupby
-                    rows = np.flatnonzero(s_all == s)
-                    C = C_by_shard[int(s)]
-                    d = pairwise_distances(X_all[rows], C, MetricType.L2)
-                    top2 = np.argsort(d, axis=1, kind="stable")[:, :2]
-                    ncopy = min(2, top2.shape[1])
-                    take_parts.append(np.tile(rows, ncopy))
-                    id_parts.append(np.tile(ids_all[rows], ncopy))
-                    s_parts.append(
-                        np.full(len(rows) * ncopy, s, dtype=np.int32)
-                    )
-                    c_parts.append(
-                        top2[:, :ncopy].T.ravel().astype(np.int32)
-                    )
-                idx = pa.array(np.concatenate(take_parts))
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(id_parts), type=pa.int64()),
-                        pa.array(np.concatenate(s_parts), type=pa.int32()),
-                        pa.array(np.concatenate(c_parts), type=pa.int32()),
-                        vec_col.take(idx),
-                    ],
-                    names=["id", "__shard", "cell_id", "vec"],
-                )
-
-        from knowhere_spark.session import ensure_parallelism
-
-        blocks = ensure_parallelism(sharded).mapInArrow(
-            assign2,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("__shard", IntegerType()),
-                    StructField("cell_id", IntegerType()),
-                    StructField("vec", vec_type),
-                ]
-            ),
+        # -- the shared build kernels over every shard at once: top-2
+        # cells within each row's shard, per-(shard, cell) local KNN, one
+        # dedup + M-prune.  ONE write job builds every shard's edges,
+        # physically partitioned by __shard — each shard's CSR collect
+        # reads only its directory (repartition first: one file per
+        # shard, see the vectors write); that exchange is load-bearing at
+        # 10^5 shards.
+        raw_edges = local_knn_edges(
+            assign_cells(sharded, cents), metric, config.M, int(config.efConstruction)
         )
-
-        M = config.M
-        efC = int(config.efConstruction)
-
-        import pyarrow as pa
-
-        from knowhere_spark.functions.arrowio import list_matrix, scalar_column
-
-        _edge_pa = pa.schema(
-            [("__shard", pa.int32()), ("src", pa.int64()), ("dst", pa.int64()),
-             ("dist", pa.float64()), ("sel_rank", pa.int32())]
-        )
-
-        def local_knn(key, tbl):
-            if tbl.num_rows < 2:
-                return _edge_pa.empty_table()
-            # id-sort first: tie-breaking in the heuristic's stable
-            # argsort must not depend on shuffle arrival order (see
-            # hnsw.py local_knn — same ±0.05 recall wiggle fix, r10)
-            ids = scalar_column(tbl, "id", np.int64)
-            X = list_matrix(tbl, "vec")
-            order = np.argsort(ids)   # ids unique within a block
-            ids, X = ids[order], X[order]
-            d = pairwise_distances(X, X, metric)
-            sim = metric.is_similarity
-            key_m = -d if sim else d
-            np.fill_diagonal(key_m, np.inf)      # no self-edges
-            kk = min(M, len(ids) - 1)
-            from knowhere_spark.operators.hnsw import diverse_neighbors
-
-            src_pos, dst_pos, sel_rank = diverse_neighbors(
-                key_m, kk, cand_cap=max(2 * M, efC)
-            )
-            # symmetrize IN-KERNEL (swap stays within-shard): the former
-            # unionByName(swap) plan evaluated the whole assign2+local_knn
-            # chain TWICE — Spark does not dedup the common subtree across
-            # union branches when a Python node sits above the exchange
-            # (see hnsw.py local_knn; same fix, guide §1.2).  Reverse
-            # copies of MUTUAL pairs are dominated in the downstream
-            # min-agg and drop before the shuffle (see hnsw.py
-            # _undominated_reverse_mask; guide §2.3).
-            from knowhere_spark.operators.hnsw import (
-                _REV_RANK,
-                _undominated_reverse_mask,
-            )
-
-            dd = d[src_pos, dst_pos]
-            keep_rev = _undominated_reverse_mask(src_pos, dst_pos, dd)
-            m_edges = len(src_pos)
-            n_rev = int(keep_rev.sum())
-            return pa.table(
-                {
-                    "__shard": pa.array(
-                        np.full(
-                            m_edges + n_rev, int(key[0].as_py()),
-                            dtype=np.int32,
-                        ),
-                        type=pa.int32(),
-                    ),
-                    "src": pa.array(
-                        np.concatenate([ids[src_pos], ids[dst_pos[keep_rev]]]),
-                        type=pa.int64(),
-                    ),
-                    "dst": pa.array(
-                        np.concatenate([ids[dst_pos], ids[src_pos[keep_rev]]]),
-                        type=pa.int64(),
-                    ),
-                    "dist": pa.array(
-                        np.concatenate([dd, dd[keep_rev]]), type=pa.float64()
-                    ),
-                    "sel_rank": pa.array(
-                        np.concatenate(
-                            [
-                                sel_rank.astype(np.int32, copy=False),
-                                np.full(n_rev, _REV_RANK, dtype=np.int32),
-                            ]
-                        ),
-                        type=pa.int32(),
-                    ),
-                }
-            )
-
-        raw_edges = blocks.groupBy("__shard", "cell_id").applyInArrow(
-            local_knn, _SHARD_EDGE_SCHEMA
-        )
-        # dedup (a pair can appear in 2 shared blocks, and reverse edges
-        # duplicate forward ones), prune to M per node by heuristic
-        # SELECTION RANK (see hnsw.py build: a distance-only prune would
-        # re-evict the diversity links) — src determines its shard, so the
-        # per-src prune is exactly the per-shard single-graph prune
-        from pyspark.sql import Window
-
-        # ONE exchange for dedup-agg AND prune-window (guide §2.4, same as
-        # the single-graph build): HashPartitioning(src) satisfies both the
-        # groupBy(__shard, src, dst) clustering (src ⊆ keys; src determines
-        # __shard) and the window's partitionBy(src).  The write below still
-        # re-partitions by __shard — that exchange is load-bearing (one
-        # file per shard → pruned per-shard collects at 10^5 shards).
-        # An r13 prototype replaced this whole chain with a per-shard
-        # Arrow kernel (one exchange, no window): output PROVEN
-        # byte-identical at bench scale, but timing was a wash (the saved
-        # pruned-rows exchange ≈ the added Python boundary traffic of the
-        # raw union) and applyInArrow materializes a WHOLE shard's raw
-        # edges per task — a multi-GB Arrow group at the 1 GiB shard
-        # contract where this window spills gracefully.  Measured
-        # rejection; the kernel lives on in tests/test_hnsw_sharded.py
-        # (test_edge_prune_kernel_equals_sql) as the documented reference.
-        sym = (
-            raw_edges.repartition("src")
-            .groupBy("__shard", "src", "dst")
-            .agg(F.min("dist").alias("dist"), F.min("sel_rank").alias("sel_rank"))
-        )
-        dist_order = (
-            F.col("dist").desc() if metric.is_similarity else F.col("dist").asc()
-        )
-        w_prune = Window.partitionBy("src").orderBy(
-            F.col("sel_rank").asc(), dist_order, F.col("dst").asc()
-        )
-        # ONE write job builds every shard's edges, physically partitioned
-        # by __shard — each shard's CSR collect reads only its directory
-        # (repartition first: one file per shard, see the vectors write)
-        sym.withColumn("__r", F.row_number().over(w_prune)).filter(
-            F.col("__r") <= F.lit(M)
-        ).select(
-            "__shard", "src", "dst", "dist"
-        ).repartition(n_write_parts, "__shard").write.mode(
-            "overwrite"
-        ).partitionBy("__shard").parquet(f"{spill}/edges")
+        prune_edges(raw_edges, metric, config.M).repartition(
+            n_write_parts, "__shard"
+        ).write.mode("overwrite").partitionBy("__shard").parquet(f"{spill}/edges")
         edge_schema = StructType(
             [
                 StructField("src", LongType()),
@@ -912,14 +735,9 @@ class ShardedHNSWIndex:
         edge_tbl = getattr(self, "_edge_tbl", None)
         if vec_tbl is None or edge_tbl is None:
             return
-        need = [
-            (i, s) for i, s in wave if getattr(s, "_bc_graph", None) is None
-        ]
+        need = [(i, s) for i, s in wave if s._bc_graph is None]
         if len(need) < 2:
             return
-        from knowhere_spark.operators.hnsw import _entry_positions
-
-        metric = MetricType(self.config.metric_type)
         ids_in = [int(i) for i, _ in need]
         try:
             # overlap the two collect jobs (guide §2.6): the edge scan
@@ -960,28 +778,9 @@ class ShardedHNSWIndex:
         e_dst = et.column(2).combine_chunks().to_numpy(
             zero_copy_only=False
         ).astype(np.int64)
-        sc = vec_tbl.sparkSession.sparkContext
         for i, shard in need:
-            vm = v_sh == i
-            ids = v_id[vm]
-            X = X_all[vm]
-            order = np.argsort(ids)
-            ids, X = ids[order], X[order]
-            em = e_sh == i
-            src = np.searchsorted(ids, e_src[em])
-            dst = np.searchsorted(ids, e_dst[em])
-            eo = np.argsort(src, kind="stable")
-            src, dst = src[eo], dst[eo]
-            indptr = np.searchsorted(src, np.arange(len(ids) + 1))
-            entry_pos = _entry_positions(ids, shard.entry_ids)
-            xnorm = (
-                np.linalg.norm(X, axis=1)
-                if metric == MetricType.COSINE else None
-            )
-            shard._bc_graph = sc.broadcast(
-                (ids, indptr, dst.astype(np.int32), entry_pos,
-                 (X, metric.value, xnorm))
-            )
+            vm, em = v_sh == i, e_sh == i
+            shard._broadcast_graph(v_id[vm], X_all[vm], e_src[em], e_dst[em])
 
     def _tagged_queries(
         self, wave, routed, query_df, query_id_col, query_vec_col
@@ -1016,93 +815,6 @@ class ShardedHNSWIndex:
             F.col(query_id_col).cast("long").alias("query_id"),
             F.col(query_vec_col).alias("vec"),
         ).crossJoin(F.broadcast(shards_df))
-
-    def _batched_beam_search(
-        self, tagged: DataFrame, k: int, ef: int, bc_map: dict, score_acc=None
-    ) -> DataFrame:
-        """ONE ``mapInArrow`` beam over ``(query_id, vec, __shard)``
-        rows — the many-small-shards serving shape.  Each group resolves
-        its shard's memoized graph broadcast (the per-shard handles ride
-        the closure, so warm-search memoization is unchanged) and runs
-        the SAME ``_beam_traverse`` the per-shard path uses.  Replaces
-        one plan + one job + one accumulator per probed shard with a
-        single job whose tasks interleave all (query, shard) work — the
-        1M probe measured the per-shard driver overhead at ~0.5 s/shard,
-        which at 170 probed shards was 10× the actual beam work.
-
-        Arrow-native (guide §4.2, r13): the former ``mapInPandas`` made
-        the COLD routed search the session's first pandas-path job once
-        the r12 build went Arrow — every task slot paid the pandas import
-        simultaneously, a cost that scales with the core count (the
-        32-core-only cold regression the r12 verdict flagged).
-
-        Returns per-(query, shard) top-k partials
-        ``(query_id, neighbor_id, distance)``; the caller merges."""
-        from knowhere_spark.operators.hnsw import _beam_traverse, _dense_scorer
-        from knowhere_spark.session import ensure_parallelism
-
-        metric = MetricType(self.config.metric_type)
-        is_sim = metric.is_similarity
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
-            )
-
-            stamps: dict[int, np.ndarray] = {}
-            qno = 0
-            scored_n = [0]
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                qids_all = scalar_column(tbl, "query_id", np.int64)
-                s_all = scalar_column(tbl, "__shard", np.int64)
-                # float32 passthrough: the stored vecs are float32 and
-                # _dense_scorer casts to float32 anyway — same bits as
-                # the former pandas cell path
-                X = list_matrix(tbl, "vec", np.float32)
-                out_q, out_n, out_d = [], [], []
-                for sh in np.unique(s_all):   # ascending, like pd.groupby
-                    rows = np.flatnonzero(s_all == sh)
-                    ids_, indptr_, indices_, entries, extra = bc_map[int(sh)].value
-                    stamp = stamps.setdefault(
-                        int(sh), np.zeros(len(ids_), dtype=np.int64)
-                    )
-                    for r in rows:
-                        score = _dense_scorer(extra, X[r])
-                        if score_acc is not None:
-                            def score(pos, _s=score):
-                                scored_n[0] += len(pos)
-                                return _s(pos)
-                        qno += 1   # global per-task counter: stamps are
-                        #            per-shard, so cross-shard reuse is safe
-                        res = _beam_traverse(
-                            score, entries, ef, indptr_, indices_, stamp, qno
-                        )
-                        top = sorted(((-nk, p) for nk, p in res))[:k]
-                        for s, p in top:
-                            out_q.append(int(qids_all[r]))
-                            out_n.append(int(ids_[p]))
-                            out_d.append(-s if is_sim else s)
-                if score_acc is not None and scored_n[0]:
-                    score_acc.add(scored_n[0])
-                    scored_n[0] = 0
-                yield pa.record_batch(
-                    [
-                        pa.array(np.asarray(out_q, dtype=np.int64)),
-                        pa.array(np.asarray(out_n, dtype=np.int64)),
-                        pa.array(np.asarray(out_d, dtype=np.float64)),
-                    ],
-                    names=["query_id", "neighbor_id", "distance"],
-                )
-
-        return ensure_parallelism(tagged).mapInArrow(
-            kernel, "query_id long, neighbor_id long, distance double"
-        )
 
     def _run_waves(
         self, waves, run_one, prefetch: bool = False
@@ -1219,6 +931,51 @@ class ShardedHNSWIndex:
 
             shutil.rmtree(spill, ignore_errors=True)
 
+    def _route(self, query_df, probe_shards, query_id_col, query_vec_col):
+        """Shard routing of :meth:`search` and :meth:`range_search`:
+        ``(routed, only, shard_queries)``.  With ``probe_shards``
+        (semantic indexes only) ``routed`` caches each query's
+        ``probe_shards`` nearest router clusters as ``(query_id, qvec,
+        cell_id)`` rows, ``only`` is the set of live shards any query
+        routes to (a routed cluster means ALL its hash-split sub-shards),
+        and ``shard_queries(i)`` is shard ``i``'s ``(frame, id column, vec
+        column)``.  Without it every live shard takes every query."""
+        if probe_shards is None:
+            return None, None, lambda i: (query_df, query_id_col, query_vec_col)
+        if self.router is None:
+            raise ValueError(
+                "probe_shards requires a semantic-sharded index "
+                "(build with shard_by='semantic')"
+            )
+        from knowhere_spark.operators.ivf import FlatCodec, probe_assign_df
+
+        queries = query_df.select(
+            F.col(query_id_col).cast("long").alias("query_id"),
+            F.col(query_vec_col).alias("qvec"),
+        )
+        routed = probe_assign_df(
+            queries, self.router, FlatCodec(MetricType(self.config.metric_type)),
+            int(probe_shards),
+        ).cache()
+        cs = self.cluster_shards or [[i] for i in range(len(self.router))]
+        cluster_of = {sh: c for c, lst in enumerate(cs) for sh in lst}
+        hit_clusters = {
+            int(r["cell_id"])
+            for r in routed.select("cell_id").distinct().collect()
+        }
+        only = {
+            sh
+            for c in hit_clusters
+            for sh in cs[c]
+            if sh < len(self.shards) and self.shards[sh] is not None
+        }
+
+        def shard_queries(i: int):
+            rows = routed.filter(F.col("cell_id") == cluster_of[i])
+            return rows.select("query_id", F.col("qvec").alias("vec")), "query_id", "vec"
+
+        return routed, only, shard_queries
+
     def search(
         self,
         query_df: DataFrame,
@@ -1281,45 +1038,14 @@ class ShardedHNSWIndex:
         )
         self.last_metrics = m
 
-        routed = None
-        only = None
-        if probe_shards is not None:
-            if self.router is None:
-                raise ValueError(
-                    "probe_shards requires a semantic-sharded index "
-                    "(build with shard_by='semantic')"
-                )
-            from knowhere_spark.operators.ivf import FlatCodec, probe_assign_df
-
-            queries = query_df.select(
-                F.col(query_id_col).cast("long").alias("query_id"),
-                F.col(query_vec_col).alias("qvec"),
-            )
-            routed = probe_assign_df(
-                queries, self.router, FlatCodec(metric), int(probe_shards)
-            ).cache()
-            cs = self.cluster_shards or [[i] for i in range(len(self.router))]
-            cluster_of = {sh: c for c, lst in enumerate(cs) for sh in lst}
-            hit_clusters = {
-                int(r["cell_id"])
-                for r in routed.select("cell_id").distinct().collect()
-            }
+        routed, only, shard_queries = self._route(
+            query_df, probe_shards, query_id_col, query_vec_col
+        )
+        if routed is not None:
             _mark("routing_sec")
-            # a routed cluster means ALL its (hash-split) sub-shards
-            only = {
-                sh
-                for c in hit_clusters
-                for sh in cs[c]
-                if sh < len(self.shards) and self.shards[sh] is not None
-            }
 
         def run_one(i: int, shard: HNSWIndex) -> DataFrame:
-            qdf, qid, qvec = query_df, query_id_col, query_vec_col
-            if routed is not None:
-                qdf = routed.filter(
-                    F.col("cell_id") == cluster_of[i]
-                ).select("query_id", F.col("qvec").alias("vec"))
-                qid, qvec = "query_id", "vec"
+            qdf, qid, qvec = shard_queries(i)
             return shard.search(
                 qdf, k, ef=ef, strategy=strategy,
                 query_id_col=qid, query_vec_col=qvec,
@@ -1355,9 +1081,13 @@ class ShardedHNSWIndex:
                 wave, routed, query_df, query_id_col, query_vec_col
             )
             m["nodes_scored"] = spark.sparkContext.accumulator(0)
-            partials_df = self._batched_beam_search(
-                tagged, k, eff_ef, bc_map, score_acc=m["nodes_scored"]
-            )
+            # one job whose tasks interleave all (query, shard) work — the
+            # 1M probe measured per-shard plans/jobs at ~0.5 s/shard, 10×
+            # the beam work at 170 probed shards
+            partials_df = beam_search(
+                tagged, bc_map, _dense_scorer, k=k, ef=eff_ef,
+                is_sim=metric.is_similarity, score_acc=m["nodes_scored"],
+            ).drop("rank")
             out = topk_per_key(
                 partials_df, "query_id", "distance", k,
                 ascending=not metric.is_similarity,
@@ -1426,45 +1156,12 @@ class ShardedHNSWIndex:
             dataclasses.replace(cfg, range_search_k=0) if cap > 0 else cfg
         )
 
-        routed = None
-        only = None
-        cluster_of: dict[int, int] = {}
-        if probe_shards is not None:
-            if self.router is None:
-                raise ValueError(
-                    "probe_shards requires a semantic-sharded index "
-                    "(build with shard_by='semantic')"
-                )
-            from knowhere_spark.operators.ivf import FlatCodec, probe_assign_df
-
-            metric = MetricType(self.config.metric_type)
-            queries = query_df.select(
-                F.col(query_id_col).cast("long").alias("query_id"),
-                F.col(query_vec_col).alias("qvec"),
-            )
-            routed = probe_assign_df(
-                queries, self.router, FlatCodec(metric), int(probe_shards)
-            ).cache()
-            cs = self.cluster_shards or [[i] for i in range(len(self.router))]
-            cluster_of = {sh: c for c, lst in enumerate(cs) for sh in lst}
-            hit_clusters = {
-                int(r["cell_id"])
-                for r in routed.select("cell_id").distinct().collect()
-            }
-            only = {
-                sh
-                for c in hit_clusters
-                for sh in cs[c]
-                if sh < len(self.shards) and self.shards[sh] is not None
-            }
+        routed, only, shard_queries = self._route(
+            query_df, probe_shards, query_id_col, query_vec_col
+        )
 
         def run_one(i: int, shard: HNSWIndex) -> DataFrame:
-            qdf, qid, qvec = query_df, query_id_col, query_vec_col
-            if routed is not None:
-                qdf = routed.filter(
-                    F.col("cell_id") == cluster_of[i]
-                ).select("query_id", F.col("qvec").alias("vec"))
-                qid, qvec = "query_id", "vec"
+            qdf, qid, qvec = shard_queries(i)
             return shard.range_search(
                 qdf, shard_cfg, ef=ef, strategy="broadcast",
                 filter_expr=filter_expr,
@@ -1489,9 +1186,10 @@ class ShardedHNSWIndex:
             tagged = self._tagged_queries(
                 wave, routed, query_df, query_id_col, query_vec_col
             )
-            beam = self._batched_beam_search(
-                tagged, bounds_ef, bounds_ef, bc_map
-            )
+            beam = beam_search(
+                tagged, bc_map, _dense_scorer, k=bounds_ef, ef=bounds_ef,
+                is_sim=MetricType(self.config.metric_type).is_similarity,
+            ).drop("rank")
             parts = [apply_range_bounds(beam, shard_cfg)]
             materialized = False
         else:

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from knowhere_spark.config import HnswConfig
@@ -76,9 +77,10 @@ def test_hnsw_broadcast_search(spark):
     qdf = dense_df(spark, qs, QUERY_SCHEMA)
 
     res = idx.search(qdf, k=k, ef=64, strategy="broadcast")
-    # one mapInPandas, zero joins — the serving plan
+    # one mapInArrow, zero joins — the serving plan
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
+    assert "MapInPandas" not in plan and "MapInArrow" in plan
 
     got = {}
     for r in res.collect():
@@ -382,3 +384,96 @@ def test_reverse_drop_preserves_aggregated_edges():
             ]
         )
         assert agg(full) == agg(dropped), trial
+
+
+def _jobs_for(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_first_auto_search_builds_graph_once(spark):
+    """build() records the artifact estimate (edge count bounded by n·M),
+    so the first ``auto`` search of a fresh build runs the lazy edge
+    chain once — the same jobs as the first ``broadcast`` search — and
+    picks broadcast."""
+    base = gen_dense(600, 16, seed=41)
+    qs = dense_df(spark, gen_dense(5, 16, seed=42), QUERY_SCHEMA)
+    cfg = HnswConfig(metric_type="L2", M=8, ef=16)
+    jobs = {}
+    rows = {}
+    for strategy in ("broadcast", "auto"):
+        idx = HNSWIndex.build(dense_df(spark, base), cfg)
+        out, jobs[strategy] = _jobs_for(
+            spark, f"first_{strategy}",
+            lambda: idx.search(qs, k=5, strategy=strategy).collect(),
+        )
+        rows[strategy] = sorted(tuple(r) for r in out)
+        assert idx.last_metrics["strategy"] == "broadcast"
+        idx.release()
+    assert jobs["auto"] == jobs["broadcast"], jobs
+    assert rows["auto"] == rows["broadcast"]
+
+
+def _driver_beam(payload, scorer_factory, qs, k, ef, is_sim, allowed=None):
+    """Driver-side loop over ``_beam_traverse`` on a collected payload —
+    the reference the Spark beam kernel must reproduce row for row."""
+    from knowhere_spark.operators.hnsw import _beam_traverse
+
+    ids, indptr, indices, entries, extra = payload
+    stamp = np.zeros(len(ids), dtype=np.int64)
+    out = []
+    for qno, q in enumerate(qs, start=1):
+        res = _beam_traverse(
+            scorer_factory(extra, q), entries, ef, indptr, indices, stamp, qno,
+            allowed,
+        )
+        top = sorted((-nk, p) for nk, p in res)[:k]
+        for rank, (s, p) in enumerate(top, start=1):
+            out.append((qno - 1, int(ids[p]), -s if is_sim else s, rank))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("case", ["L2", "COSINE", "L2-filter", "HNSW_SQ"])
+def test_broadcast_kernel_matches_driver_beam(spark, case):
+    """The Spark beam kernel returns exactly the rows of a driver-side
+    ``_beam_traverse`` loop over the same broadcast payload — dense
+    (both metric directions, with a result filter) and SQ8 codes."""
+    from knowhere_spark.config import HnswSqConfig
+    from knowhere_spark.operators.hnsw import _dense_scorer
+    from knowhere_spark.operators.hnsw_quant import (
+        QuantizedHNSWIndex,
+        _quant_scorer,
+    )
+
+    base = gen_dense(500, 16, seed=43)
+    qs = gen_dense(12, 16, seed=44)
+    qdf = dense_df(spark, qs, QUERY_SCHEMA)
+    k, ef = 7, 24
+    metric = "COSINE" if case == "COSINE" else "L2"
+    flt = F.col("id") % 4 != 1 if case == "L2-filter" else None
+    if case == "HNSW_SQ":
+        idx = QuantizedHNSWIndex.build(
+            dense_df(spark, base),
+            HnswSqConfig(metric_type="L2", M=8, ef=16, sq_type="SQ8"),
+        )
+        got = idx.search(qdf, k=k, ef=ef, strategy="broadcast")
+        payload, scorer = idx._codes_bc().value, _quant_scorer
+    else:
+        idx = HNSWIndex.build(
+            dense_df(spark, base), HnswConfig(metric_type=metric, M=8, ef=16)
+        )
+        got = idx.search(qdf, k=k, ef=ef, strategy="broadcast", filter_expr=flt)
+        payload, scorer = idx._graph_bc().value, _dense_scorer
+    allowed = None
+    if flt is not None:
+        allowed = idx._filter_mask_bc(flt, payload[0]).value
+        assert not allowed.all()
+    want = _driver_beam(payload, scorer, qs, k, ef, metric == "COSINE", allowed)
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert len(want) == len(qs) * k
+    idx.release()

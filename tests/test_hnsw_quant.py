@@ -153,7 +153,7 @@ def test_hnsw_pq_save_load_roundtrip(spark, tmp_path):
 def test_hnsw_quant_broadcast_vs_bfs(spark):
     """Broadcast codes-beam and BFS table path both clear the recall
     floor; the broadcast plan (no refine) is join-free — codes + CSR ship
-    once, beam runs in one mapInPandas."""
+    once, beam runs in one mapInArrow."""
     nb, dim, nq, k = 800, 32, 8, 10
     base = gen_dense(nb, dim, seed=61)
     qs = gen_dense(nq, dim, seed=62)
@@ -164,7 +164,9 @@ def test_hnsw_quant_broadcast_vs_bfs(spark):
     qdf = dense_df(spark, qs, QUERY_SCHEMA)
 
     res_b = idx.search(qdf, k=k, ef=48, strategy="broadcast")
-    assert "Join" not in res_b._jdf.queryExecution().executedPlan().toString()
+    plan = res_b._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert "MapInPandas" not in plan and "MapInArrow" in plan
     got_b = {}
     for r in res_b.collect():
         got_b.setdefault(r["query_id"], []).append((r["neighbor_id"], r["distance"]))
@@ -224,3 +226,22 @@ def test_from_graph_shares_graph_and_matches_build(spark):
     for r in prq.search(qdf, k=k, ef=48, strategy="bfs").collect():
         got.setdefault(r["query_id"], []).append((r["neighbor_id"], r["distance"]))
     assert recall_at_k(got, np_knn(base, qs, k, "L2"), k) >= 0.6
+
+
+def test_hnsw_quant_release_drops_both_broadcasts(spark):
+    """release() drops the memoized codes broadcast AND the graph's own;
+    the next search re-collects and answers the same."""
+    base = gen_dense(400, 16, seed=63)
+    qdf = dense_df(spark, gen_dense(4, 16, seed=64), QUERY_SCHEMA)
+    idx = build_index(
+        dense_df(spark, base), "HNSW_SQ",
+        {"metric_type": "L2", "M": 8, "ef": 16, "sq_type": "SQ8"},
+    )
+    first = sorted(tuple(r) for r in idx.search(qdf, k=5, strategy="broadcast").collect())
+    idx.graph.search(qdf, k=5, strategy="broadcast").collect()
+    assert idx._bc_codes is not None and idx.graph._bc_graph is not None
+    idx.release()
+    assert idx._bc_codes is None and idx.graph._bc_graph is None
+    again = sorted(tuple(r) for r in idx.search(qdf, k=5, strategy="broadcast").collect())
+    assert again == first
+    idx.release()

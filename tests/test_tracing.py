@@ -56,17 +56,26 @@ def test_ivf_distributed_search_metrics(spark):
     assert "knowhere:IVF_FLAT.search" in sm["description"]
 
 
-def test_hnsw_search_metrics_both_strategies(spark):
-    base = gen_dense(400, 16, seed=24)
+@pytest.mark.parametrize("family", ["HNSW", "HNSW_SQ"])
+def test_hnsw_search_metrics_both_strategies(spark, family):
+    from knowhere_spark.config import HnswSqConfig
+    from knowhere_spark.operators.hnsw_quant import QuantizedHNSWIndex
+
+    base = dense_df(spark, gen_dense(400, 16, seed=24))
     qs = gen_dense(5, 16, seed=25)
-    idx = HNSWIndex.build(dense_df(spark, base), HnswConfig(metric_type="L2", M=8, ef=16))
+    if family == "HNSW":
+        idx = HNSWIndex.build(base, HnswConfig(metric_type="L2", M=8, ef=16))
+    else:
+        idx = QuantizedHNSWIndex.build(
+            base, HnswSqConfig(metric_type="L2", M=8, ef=16, sq_type="SQ8")
+        )
     bm = idx.last_metrics.snapshot()
-    assert bm["op"] == "HNSW.build" and bm["n"] == 400 and bm["M"] == 8
+    assert bm["op"] == f"{family}.build" and bm["n"] == 400 and bm["M"] == 8
     q_df = dense_df(spark, qs, QUERY_SCHEMA)
 
     idx.search(q_df, k=4, ef=16, strategy="broadcast").count()
     sm = idx.last_metrics.snapshot()
-    assert sm["strategy"] == "broadcast"
+    assert sm["op"] == f"{family}.search" and sm["strategy"] == "broadcast"
     assert sm["nodes_scored"] > 0          # beam counter fired at consume
     assert "strategy=broadcast" in _desc(spark)
 
@@ -75,6 +84,7 @@ def test_hnsw_search_metrics_both_strategies(spark):
     assert sm2["strategy"] == "bfs" and sm2["max_hops"] == 2
     assert sm2["bfs_frames"] >= 1
     assert "strategy=bfs" in _desc(spark)
+    idx.release()
 
 
 def test_description_overwritten_by_next_op(spark):

@@ -772,6 +772,7 @@ class HNSWIndex:
         self.index_type = IndexType.HNSW
         self._size: tuple[int, int, int] | None = None   # see _graph_size
         self._bc_graph = None                             # see _graph_bc
+        self._edges_resident = False                      # see _bfs_edges
 
     def count(self) -> int:
         return self.vectors.count()
@@ -1187,15 +1188,42 @@ class HNSWIndex:
             )
         )
 
+    def _bfs_edges(self) -> DataFrame:
+        """The edge table the bfs hops join, persisted (lazily,
+        ``MEMORY_AND_DISK``, under the broadcast size gate) on the first
+        bfs search: every hop joins it, and an unpersisted table re-runs
+        its whole chain (the build kernels, or ``add()``'s searches) per
+        hop.  Sized from :meth:`_graph_size` when ``build()`` recorded it,
+        else from the optimizer's estimate (unknown → stays lazy).  Freed
+        by :meth:`release`."""
+        if not self._edges_resident:
+            from knowhere_spark.operators.ivf import (
+                estimated_bytes,
+                persist_gated,
+                table_bytes,
+            )
+
+            est = (
+                table_bytes(self.edges.schema, self._size[2], {})
+                if self._size is not None
+                else estimated_bytes(self.edges)
+            )
+            self.edges, self._edges_resident = persist_gated(self.edges, est)
+        return self.edges
+
     def release(self) -> None:
         """Drop the memoized graph broadcast (executor-resident copies
-        freed; the next search re-collects and re-broadcasts).  The
-        memoization in :meth:`_graph_bc` is the serving amortization —
-        long-lived sessions holding many indexes call this to bound total
-        resident broadcast bytes."""
+        freed; the next search re-collects and re-broadcasts) and the
+        resident bfs edge table (:meth:`_bfs_edges`).  The memoization in
+        :meth:`_graph_bc` is the serving amortization — long-lived
+        sessions holding many indexes call this to bound total resident
+        broadcast bytes."""
         if self._bc_graph is not None:
             self._bc_graph.unpersist()
             self._bc_graph = None
+        if self._edges_resident:
+            self.edges.unpersist()
+            self._edges_resident = False
 
     def search_with_trace(
         self,
@@ -1393,9 +1421,10 @@ class HNSWIndex:
                 out = out.unionByName(p.select("query_id", "node_id"))
             return out
 
+        edges = self._bfs_edges()
         for hop in range(1, max_hops + 1):
             expanded = (
-                frontier.join(self.edges, frontier["node_id"] == self.edges["src"])
+                frontier.join(edges, frontier["node_id"] == edges["src"])
                 .select("query_id", F.col("dst").alias("node_id"))
                 .distinct()
                 .join(visited_ids(), ["query_id", "node_id"], "left_anti")

@@ -273,6 +273,7 @@ class QuantizedHNSWIndex:
         self.config = config
         self.index_type = index_type
         self._bc_codes = None   # see _codes_bc
+        self._codes_resident = False   # see _bfs_scorer
 
     # -- introspection (index_node.h:411-434) ---------------------------------
     def count(self) -> int:
@@ -390,10 +391,13 @@ class QuantizedHNSWIndex:
         codes table shares the graph's id set, so no Spark job runs on a
         freshly built index."""
         n, dim, n_edges = self.graph._graph_size()
+        return n * self._code_bytes(dim) + n_edges * 4 + n * 16
+
+    def _code_bytes(self, dim: int) -> int:
+        """Bytes of one row's codes for ``dim``-dimensional vectors."""
         q = self.quant
         width = len(q["stages"]) * q["m"] if q["mode"] == "pq" else dim
-        per = np.dtype(_code_dtype(q)).itemsize
-        return n * width * per + n_edges * 4 + n * 16
+        return width * np.dtype(_code_dtype(q)).itemsize
 
     def _codes_bc(self):
         """Collect + broadcast the codes payload (:func:`graph_payload`
@@ -428,11 +432,15 @@ class QuantizedHNSWIndex:
         return self._bc_codes
 
     def release(self) -> None:
-        """Drop the memoized codes broadcast and the graph's own (see
+        """Drop the memoized codes broadcast, the resident bfs codes table
+        (see :meth:`_bfs_scorer`) and the graph's own caches (see
         ``HNSWIndex.release``); the next search re-collects."""
         if self._bc_codes is not None:
             self._bc_codes.unpersist()
             self._bc_codes = None
+        if self._codes_resident:
+            self.codes.unpersist()
+            self._codes_resident = False
         self.graph.release()
 
     # -- Search: quantized beam + exact refine --------------------------------
@@ -531,7 +539,20 @@ class QuantizedHNSWIndex:
 
     def _bfs_scorer(self, metric: MetricType):
         """``score_fn`` of the bfs path: one Arrow kernel decodes each
-        candidate's codes and scores it against its query."""
+        candidate's codes and scores it against its query.  The codes
+        table is persisted (lazily, under the broadcast size gate) on the
+        first bfs search — every hop joins it, and an unpersisted one
+        re-encodes the corpus per hop; :meth:`release` frees it."""
+        from knowhere_spark.operators.ivf import estimated_bytes, persist_gated
+
+        if not self._codes_resident:
+            size = self.graph._size
+            est = (
+                size[0] * (8 + self._code_bytes(size[1]))
+                if size is not None
+                else estimated_bytes(self.codes)
+            )
+            self.codes, self._codes_resident = persist_gated(self.codes, est)
         bq = self.codes.sparkSession.sparkContext.broadcast((self.quant, metric.value))
         codes = self.codes
 

@@ -108,24 +108,41 @@ def distance_expr(metric: MetricType, a: Column, b: Column) -> Column:
 # numpy GEMM kernels (mapInPandas fast path)
 # ---------------------------------------------------------------------------
 
-def pairwise_distances(base: np.ndarray, queries: np.ndarray, metric: MetricType) -> np.ndarray:
+def stable_dot(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """``X @ Q.T`` in which every entry depends on its own row and query
+    alone.  BLAS GEMM rounds an entry differently depending on the
+    matrix shapes around it (the microkernel and edge path it lands in,
+    last-bit differences); ``einsum`` over C-contiguous operands reduces
+    each pair over the dimension in one fixed order, at GEMM-like speed
+    for the IVF scan shapes.  Kernels that group the same (row, query)
+    pairs differently — a cell-table batch against every query, or a
+    cell against a query batch — then return bit-identical distances."""
+    return np.einsum("ik,jk->ij", np.ascontiguousarray(X), np.ascontiguousarray(Q))
+
+
+def pairwise_distances(
+    base: np.ndarray, queries: np.ndarray, metric: MetricType, *, stable: bool = False
+) -> np.ndarray:
     """Return ``(n_base, n_queries)`` float64 distance/score matrix.
 
     L2 uses the expansion ``|x|^2 + |q|^2 - 2 x·q`` (one GEMM); COSINE
     normalizes both sides first — same normalize-then-IP contract as the
-    reference (ivf.cc:462-470).
+    reference (ivf.cc:462-470).  ``stable=True`` takes the inner
+    products from :func:`stable_dot` instead of GEMM, so an entry does
+    not depend on which other rows and queries share the call.
     """
     metric = MetricType(metric)
     X = np.asarray(base, dtype=np.float64)
     Q = np.asarray(queries, dtype=np.float64)
+    dot = stable_dot if stable else (lambda a, b: a @ b.T)
     if metric == MetricType.IP:
-        return X @ Q.T
+        return dot(X, Q)
     if metric == MetricType.COSINE:
         xn = np.linalg.norm(X, axis=1, keepdims=True)
         qn = np.linalg.norm(Q, axis=1, keepdims=True)
         xn[xn == 0] = 1.0
         qn[qn == 0] = 1.0
-        return (X / xn) @ (Q / qn).T
+        return dot(X / xn, Q / qn)
     if metric == MetricType.L2:
         # same elementwise expression as the textbook form
         # (|x|²+|q|²) - 2·(x·q), evaluated with in-place ops so only two
@@ -136,7 +153,7 @@ def pairwise_distances(base: np.ndarray, queries: np.ndarray, metric: MetricType
         xsq = np.sum(X * X, axis=1)
         qsq = xsq if Q is X else np.sum(Q * Q, axis=1)
         d = np.add(xsq[:, None], qsq[None, :])
-        G = X @ Q.T
+        G = dot(X, Q)
         G *= 2.0
         d -= G
         np.maximum(d, 0.0, out=d)

@@ -72,15 +72,16 @@ def _nearest_hamming(tbl, C: np.ndarray) -> np.ndarray:
 
 class BinaryCodec(FlatCodec):
     """BIN_IVF_FLAT's codec: packed bits scored by popcount, probes ranked
-    by hamming to the binary centroids."""
+    by hamming to the binary centroids.  Popcount distances are exact, so
+    ``stable`` changes nothing."""
 
     def read_queries(self, tbl, col: str) -> np.ndarray:
         return binary_matrix(tbl, col)
 
-    def probe(self, C: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    def probe(self, C: np.ndarray, Q: np.ndarray, *, stable: bool = False) -> np.ndarray:
         return binary_pairwise(C, Q, MetricType.HAMMING)
 
-    def score(self, tbl, Q: np.ndarray) -> np.ndarray:
+    def score(self, tbl, Q: np.ndarray, *, stable: bool = False) -> np.ndarray:
         return binary_pairwise(binary_matrix(tbl, "vec"), Q, self.metric)
 
 

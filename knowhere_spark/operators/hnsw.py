@@ -771,6 +771,7 @@ class HNSWIndex:
         self.entry_ids = entry_ids
         self.index_type = IndexType.HNSW
         self._size: tuple[int, int, int] | None = None   # see _graph_size
+        self._grown_from = None                           # see _graph_size
         self._bc_graph = None                             # see _graph_bc
         self._edges_resident = False                      # see _bfs_edges
 
@@ -950,9 +951,12 @@ class HNSWIndex:
             )
             .select("src", "dst", F.col("distance").alias("dist"))
         )
-        return HNSWIndex(
+        child = HNSWIndex(
             grown, pruned_same.unionByName(cross), self.config, self.entry_ids
         )
+        if self._size is not None and self._size[1]:
+            child._grown_from = (self._size, new)
+        return child
 
     # -- graph refinement (NN-Descent step) -----------------------------------
     def refine(self, iterations: int = 1) -> "HNSWIndex":
@@ -1131,10 +1135,20 @@ class HNSWIndex:
     def _graph_size(self) -> tuple[int, int, int]:
         """``(n, dim, n_edges)`` of the graph artifact.  ``build()``
         records it from values it already has, the edge count bounded by
-        ``n·M``; other instances count once and memoize (``add()`` keeps
-        cross-batch edges beyond the M prune, so only a count bounds
-        those) — the auto-strategy check must not cost Spark jobs on
-        every search."""
+        ``n·M``.  An ``add()`` child of a parent with a recorded size
+        counts only the added batch: each new node brings at most ``M+1``
+        out-edges (``M-1`` nearest plus 2 bridges) and as many reverse
+        edges, so ``parent_edges + 2·n_new·(M+1)`` bounds its edges — an
+        upper bound is all the size gates need, and it costs no run of
+        the grown edge chain.  Other instances count once and memoize —
+        the auto-strategy check must not cost Spark jobs on every
+        search."""
+        if self._size is None and self._grown_from is not None:
+            (n0, dim, e0), batch = self._grown_from
+            # counted through the JVM RDD: one job, where count()'s
+            # aggregate exchange runs a second under adaptive execution
+            n_new = int(batch._jdf.rdd().count())
+            self._size = (n0 + n_new, dim, e0 + 2 * n_new * (self.config.M + 1))
         if self._size is None:
             n = self.vectors.count()
             head = self.vectors.select("vec").head() if n else None

@@ -755,10 +755,14 @@ class ShardedHNSWIndex:
 
             t = InheritableThread(target=_collect_edges)
             t.start()
-            vt = vec_tbl.filter(F.col("__shard").isin(ids_in)).select(
-                "__shard", "id", "vec"
-            ).toArrow()
-            t.join()
+            try:
+                vt = vec_tbl.filter(F.col("__shard").isin(ids_in)).select(
+                    "__shard", "id", "vec"
+                ).toArrow()
+            finally:
+                # a failed vector collect must not orphan the edge job:
+                # the per-shard fallback would run it a second time
+                t.join()
             et = et_box[0]
             if et is None:
                 raise RuntimeError("edge collect failed")

@@ -30,14 +30,19 @@ Spark-first design (SURVEY.md §2.3):
   quantizer → probe ``nprobe`` cells → score with the family's codec.  A
   family supplies only its codec (:class:`FlatCodec` and subclasses: how
   a batch of cell rows scores against a query matrix) and its encode
-  kernel.  ``driver`` picks the top-``nprobe`` cells per query on the
+  kernel.  ``driver`` serves a resident index (unfiltered) from a
+  broadcast cell payload — the cell table collected once — in one
+  ``mapInArrow`` over the query rows that ranks probes, scores the probed
+  cells and keeps each query's top-k in the kernel, the reference's
+  in-memory serving shape (:func:`search_cell_payload`); a filtered or
+  non-resident search picks the top-``nprobe`` cells per query on the
   driver over the tiny centroid matrix, prunes the cell table to the
   probed cells with a literal IN-list, and scores them in one
   ``mapInArrow`` kernel that reads the query matrix and the ``(nlist,
   nq)`` probe-membership matrix from a broadcast (no join of the base
   side; :func:`scan_probed_cells`).  ``distributed`` assigns probes in a
   ``mapInArrow`` kernel and cogroups a cell-clustered view with the probe
-  table (:func:`cogroup_cells`).  Both kernels take a per-batch
+  table (:func:`cogroup_cells`).  Every kernel takes a per-batch
   selection: a partial top-k (search) or a half-open range mask
   (range_search).
 - **ensure_topk_full** (ivf.cc:753-762): queries that got fewer than k
@@ -58,6 +63,7 @@ import time
 
 import numpy as np
 import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,7 +74,11 @@ from knowhere_spark.functions.distance import (
     pairwise_distances,
     top_cap_stable,
 )
-from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
+from knowhere_spark.operators.topk import (
+    apply_range_bounds,
+    range_search_k,
+    topk_per_key,
+)
 from knowhere_spark.sources.index_store import IndexStore
 
 #: Spark's "no estimate" size (``defaultSizeInBytes`` = Long.MaxValue):
@@ -151,7 +161,10 @@ class ResidentCells:
     family's encoded table resident.  The frames a search caches (the
     distributed probe table, the counted ``ensure_topk_full`` result)
     belong to the index until its next search, ``add()`` or
-    ``release()``."""
+    ``release()``.  The broadcast cell payload
+    (:meth:`IVFBaseIndex._cells_payload`) is the index's own, like
+    HNSW's graph broadcast: an ``add()`` child builds its own, and
+    ``release()`` drops it."""
 
     #: ``(frame, estimated bytes)`` per persisted segment this index reads
     _segments: tuple[tuple[DataFrame, int], ...] = ()
@@ -160,6 +173,8 @@ class ResidentCells:
     _clustered_assign: DataFrame | None = None
     #: frames the latest search cached
     _search_frames: tuple[DataFrame, ...] = ()
+    #: broadcast cell payload, built by the first broadcast-plan search
+    _cells_bc = None
 
     @property
     def resident_bytes_est(self) -> int:
@@ -194,15 +209,19 @@ class ResidentCells:
                 "resident_bytes_est": self.resident_bytes_est}
 
     def release(self) -> None:
-        """Unpersist the resident segments, the clustered search view and
-        the latest search's caches; the index stays usable and recomputes
-        from lineage."""
+        """Unpersist the resident segments, the clustered search view, the
+        latest search's caches and the broadcast cell payload; the index
+        stays usable and recomputes from lineage (on the scan plan, as it
+        is no longer resident)."""
         for frame, _ in self._segments:
             frame.unpersist()
         self._segments = ()
         self.resident = False
         self._drop_clustered_view()
         self._drop_search_frames()
+        if self._cells_bc is not None:
+            self._cells_bc.unpersist()
+            self._cells_bc = None
 
     def _drop_clustered_view(self) -> None:
         if self._clustered_assign is not None:
@@ -228,7 +247,14 @@ class FlatCodec:
     against the unnormalized kmeans centroids would disagree with
     assignment (a query equal to a stored vector could miss its own
     cell).  faiss probes with the quantizer's own metric for the same
-    reason; scoring inside cells uses the true metric."""
+    reason; scoring inside cells uses the true metric.
+
+    The driver plans rank probes and score with ``stable=True``
+    (:func:`~knowhere_spark.functions.distance.stable_dot`): the
+    broadcast and scan plans batch rows and queries differently and still
+    rank the same probes and return the same distances to the last bit.
+    The distributed plan keeps BLAS GEMM (the default), its arithmetic
+    unchanged."""
 
     #: the cell-table column :meth:`score` reads
     col = "vec"
@@ -250,17 +276,17 @@ class FlatCodec:
         qn[qn == 0] = 1.0
         return Q / qn
 
-    def probe(self, C: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    def probe(self, C: np.ndarray, Q: np.ndarray, *, stable: bool = False) -> np.ndarray:
         """``(nlist, nq)`` coarse-quantizer distances that rank the probes."""
-        return pairwise_distances(C, Q, MetricType.L2)
+        return pairwise_distances(C, Q, MetricType.L2, stable=stable)
 
     def rows(self, tbl: pa.Table) -> np.ndarray:
         """``(n, dim)`` float64 GEMM operand of a batch of cell rows."""
         return list_matrix(tbl, "vec")
 
-    def score(self, tbl: pa.Table, Q: np.ndarray) -> np.ndarray:
+    def score(self, tbl: pa.Table, Q: np.ndarray, *, stable: bool = False) -> np.ndarray:
         """``(n, nq)`` distances of a batch of cell rows to the queries."""
-        return pairwise_distances(self.rows(tbl), Q, self.metric)
+        return pairwise_distances(self.rows(tbl), Q, self.metric, stable=stable)
 
 
 class IVFBaseIndex(ResidentCells):
@@ -381,7 +407,8 @@ class IVFBaseIndex(ResidentCells):
         # the child shares the train state; per-index state falls back to
         # the class defaults (no metrics, stats, views or search caches)
         child = copy.copy(self)
-        for attr in ("last_metrics", "_cell_counts", "_clustered_assign", "_search_frames"):
+        for attr in ("last_metrics", "_cell_counts", "_clustered_assign",
+                     "_search_frames", "_cells_bc"):
             child.__dict__.pop(attr, None)
         batch = child._append_resident(self, self._encode(rows, scalars))
         child.assignments = self.assignments.unionByName(batch)
@@ -405,18 +432,41 @@ class IVFBaseIndex(ResidentCells):
         COSINE are true cosine similarities (computed on the normalized
         stored vectors).
 
-        ``strategy``: ``driver`` collects the query set once and broadcasts
-        it (the reference's nq<=10k serving regime); ``distributed`` never
-        collects — probe assignment runs as ``mapInArrow`` against
-        broadcast centroids and scoring cogroups base cells with their
-        probing queries (the corpus-vs-corpus regime, e.g. semantic dedup
-        of 100 TB against itself).  ``auto`` picks by query count."""
+        ``strategy``:
+
+        - ``driver`` — the reference's nq<=10k serving regime, in one of
+          two plans (:meth:`_driver_plan`).  An unfiltered search of a
+          resident index whose cell table fits the broadcast bound runs
+          the **broadcast plan**: the cell table is collected once into a
+          broadcast payload (:meth:`_cells_payload`), and each search is
+          one ``mapInArrow`` over the query rows that ranks the probes,
+          scores them and keeps each query's top-k in the kernel
+          (:func:`search_cell_payload`) — one Spark job, no shuffle, no
+          query collect.  Otherwise (a filter, whose predicate reads
+          scalar columns the payload does not carry; or an index loaded
+          from disk or above the bound) the **scan plan** collects the
+          queries, ranks the probes on the driver and scans the pruned
+          cell table (:func:`scan_probed_cells`).
+        - ``distributed`` never collects — probe assignment runs as
+          ``mapInArrow`` against broadcast centroids and scoring cogroups
+          base cells with their probing queries (the corpus-vs-corpus
+          regime, e.g. semantic dedup of 100 TB against itself).
+        - ``auto`` takes the broadcast plan whenever ``driver`` would —
+          HNSW's rule for its graph, whatever the query count — and
+          otherwise picks by query count.
+
+        The broadcast and scan plans return the same rows, distances to
+        the last bit.  ``last_metrics`` names the driver plan that ran
+        (``plan``) and why (``plan_reason``)."""
         k = k if k is not None else self.config.k
         p = self._probe(
             "search", query_df, query_id_col, query_vec_col, strategy,
-            nprobe if nprobe is not None else self.config.nprobe, k=k,
+            nprobe if nprobe is not None else self.config.nprobe, filter_expr, k=k,
         )
         select = topk_selection(k, p.codec.largest)
+        if p.payload is not None:
+            fill_k = k if self.config.ensure_topk_full else None
+            return p.broadcast(select, k, ranked=True, fill_k=fill_k)
         out = _topk(p.scan(select, filter_expr), k, p.codec.largest)
         if self.config.ensure_topk_full:
             out = self._fill_topk(p, out, select, k, filter_expr)
@@ -439,21 +489,39 @@ class IVFBaseIndex(ResidentCells):
         bounds from ``config`` (default: the index's); probe-limited like
         the reference's IVF range path, so ``nprobe=nlist`` makes it exact.
         ``range_search_k`` truncates per query (config.h:665-669).
-        ``strategy`` mirrors :meth:`search`."""
+        ``strategy`` and the plans mirror :meth:`search`."""
         cfg = config or self.config
         p = self._probe(
             "range_search", query_df, query_id_col, query_vec_col, strategy,
-            nprobe if nprobe is not None else cfg.nprobe,
+            nprobe if nprobe is not None else cfg.nprobe, filter_expr,
         )
-        scored = p.scan(range_selection(*cfg.range_bounds()), filter_expr)
+        select = range_selection(*cfg.range_bounds())
+        if p.payload is not None:
+            return p.broadcast(select, range_search_k(cfg) or None, ranked=False)
+        scored = p.scan(select, filter_expr)
         return apply_range_bounds(scored, cfg, already_bounded=True)
 
-    def _probe(self, verb, query_df, id_col, vec_col, strategy, nprobe, **attrs):
-        """Open one search: project the queries, choose the strategy, open
-        the metrics span (index.cc:149-162 Search span: labels the
-        consuming jobs; counters resolve via ``last_metrics.snapshot()``)
-        and rank the probes — on the driver, or as a cached distributed
-        probe table."""
+    def _driver_plan(self, filter_expr) -> tuple[str, str]:
+        """The driver strategy's plan and why: ``broadcast`` for an
+        unfiltered search of a resident index whose resident bytes fit
+        HNSW's ``_BROADCAST_MAX_BYTES``, else ``scan`` — decided from
+        what the index holds, never from the query set."""
+        from knowhere_spark.operators import hnsw
+
+        if filter_expr is not None:
+            return "scan", "filtered: the predicate reads scalar columns the payload lacks"
+        if not self.resident:
+            return "scan", "cell table not resident (loaded, or above the size bound)"
+        if self.resident_bytes_est > hnsw._BROADCAST_MAX_BYTES:
+            return "scan", "resident cell table above the broadcast bound"
+        return "broadcast", "resident cell table within the broadcast bound"
+
+    def _probe(self, verb, query_df, id_col, vec_col, strategy, nprobe, filter_expr, **attrs):
+        """Open one search: project the queries, choose the strategy and
+        plan, open the metrics span (index.cc:149-162 Search span: labels
+        the consuming jobs; counters resolve via ``last_metrics.snapshot()``)
+        and prepare the probes — the broadcast payload, probes ranked on
+        the driver, or a cached distributed probe table."""
         from knowhere_spark.tracing import OpMetrics, op_description
 
         self._drop_search_frames()
@@ -462,24 +530,29 @@ class IVFBaseIndex(ResidentCells):
             F.col(id_col).cast("long").alias("query_id"),
             F.col(vec_col).alias("qvec"),
         )
-        if strategy == "auto":
+        if strategy not in ("auto", "driver", "distributed"):
+            raise ValueError(f"unknown strategy {strategy!r}")
+        plan, reason = self._driver_plan(filter_expr)
+        if strategy != "distributed" and plan == "broadcast":
+            strategy = "driver"
+        elif strategy == "auto":
             # peek one row past the cutover: if the query set is small we
             # already hold the rows and reuse them for the driver path
             qrows = queries.limit(self._DRIVER_NQ_MAX + 1).collect()
             strategy = "distributed" if len(qrows) > self._DRIVER_NQ_MAX else "driver"
         elif strategy == "driver":
             qrows = queries.collect()
-        if strategy not in ("driver", "distributed"):
-            raise ValueError(f"unknown strategy {strategy!r}")
         sc = queries.sparkSession.sparkContext
         m = OpMetrics(
             op=f"{self.index_type.value}.{verb}", nprobe=nprobe,
             nlist=self.config.nlist, strategy=strategy,
             rows_scanned=sc.accumulator(0), **attrs, **self.resident_metrics(),
         )
-        m["description"] = op_description(
-            sc, m["op"], nprobe=nprobe, strategy=strategy, **attrs
-        )
+        labels = dict(nprobe=nprobe, strategy=strategy, **attrs)
+        if strategy == "driver":
+            m["plan"] = labels["plan"] = plan
+            m["plan_reason"] = reason
+        m["description"] = op_description(sc, m["op"], **labels)
         self.last_metrics = m
         p = _Probe(self, queries, strategy, m)
         codec = p.codec
@@ -490,18 +563,52 @@ class IVFBaseIndex(ResidentCells):
                 probe_assign_df(queries, self.centroids, codec, nprobe)
             )
             return p
+        if plan == "broadcast":
+            p.payload, p.nprobe = self._cells_payload(), nprobe
+            # the kernels count what the driver no longer sees
+            m["nq"] = sc.accumulator(0)
+            m["cells_probed"] = sc.accumulator(0)
+            m["rows_scanned"] = CellRowsRead(sc, self._get_cell_counts(), self.config.nlist)
+            m["stages"]["probe_sec"] = sc.accumulator(0.0)
+            return p
         # the collected rows go through the same Arrow reader as the kernels
         qvec = pa.table({"qvec": pa.array([r["qvec"] for r in qrows])})
         p.qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
         p.Q = codec.prepare(codec.read_queries(qvec, "qvec"))
         with p.timer.stage("probe_sec"):
-            order = rank_probes(codec.probe(self.centroids, p.Q), nprobe)
+            order = rank_probes(codec.probe(self.centroids, p.Q, stable=True), nprobe)
             p.pairs = [
                 (int(q), int(c)) for qi, q in enumerate(p.qids) for c in order[:, qi]
             ]
         m["nq"] = len(p.qids)
         m["cells_probed"] = len(p.pairs)
         return p
+
+    def _cells_payload(self):
+        """The broadcast cell payload, built on first use and memoized:
+        the resident cell table collected once (the collect also fills the
+        resident cache), sorted by ``(cell_id, id)``, broadcast as
+        ``(offsets, cells, centroids, codec)`` — CSR cell offsets
+        (``nlist + 1``), an Arrow table of ``id`` and the codec's column
+        only, and what the kernel needs to rank and score probes.  The
+        cell counts (:meth:`_get_cell_counts`) come with it, so the driver
+        never reads the payload back.  Owned like HNSW's graph broadcast:
+        :meth:`release` drops it and an ``add()`` child builds its own."""
+        if self._cells_bc is None:
+            codec = self._codec()
+            tbl = self.assignments.select("id", "cell_id", codec.col).toArrow()
+            tbl = tbl.sort_by([("cell_id", "ascending"), ("id", "ascending")])
+            cell = scalar_column(tbl, "cell_id", np.int64)
+            offsets = np.searchsorted(cell, np.arange(self.config.nlist + 1))
+            if self._cell_counts is None:
+                self._cell_counts = {
+                    c: int(n) for c, n in enumerate(np.diff(offsets)) if n
+                }
+            self._cells_bc = self.assignments.sparkSession.sparkContext.broadcast(
+                (offsets, tbl.select(["id", codec.col]).combine_chunks(),
+                 self.centroids, codec)
+            )
+        return self._cells_bc
 
     def _search_cells(self, codec: FlatCodec) -> DataFrame:
         """The distributed scan's cell table: the clustered view, without
@@ -600,8 +707,9 @@ class IVFBaseIndex(ResidentCells):
 
 class _Probe:
     """One open search: its strategy, projected queries, codec, metrics
-    span and probes — ``pairs`` with ``qids``/``Q`` on the driver, or the
-    cached ``probes`` table when distributed."""
+    span and probes — the cell ``payload`` broadcast on the broadcast
+    plan, ``pairs`` with ``qids``/``Q`` on the scan plan, or the cached
+    ``probes`` table when distributed."""
 
     def __init__(self, index: IVFBaseIndex, queries: DataFrame, strategy: str, m):
         from knowhere_spark.tracing import StageTimer
@@ -612,7 +720,18 @@ class _Probe:
         self.strategy = strategy
         self.m = m
         self.timer = StageTimer(m)
-        self.probes = self.pairs = self.qids = self.Q = None
+        self.probes = self.pairs = self.qids = self.Q = self.payload = None
+        self.nprobe = 0
+
+    def broadcast(self, select, k, *, ranked, fill_k=None) -> DataFrame:
+        """The broadcast plan's result (:func:`search_cell_payload`) over
+        this search's queries, counting into its metrics."""
+        m = self.m
+        return search_cell_payload(
+            self.queries, self.payload, self.nprobe, select, k=k, ranked=ranked,
+            fill_k=fill_k, counters=(m["nq"], m["cells_probed"],
+                                     m["rows_scanned"], m["stages"]["probe_sec"]),
+        )
 
     def scan(self, select, filter_expr, probed=None) -> DataFrame:
         """``(query_id, neighbor_id, distance)`` rows ``select`` keeps from
@@ -961,9 +1080,32 @@ def _topk(scored: DataFrame, k: int, largest: bool) -> DataFrame:
     )
 
 
+def _rank_per_query(qids, ids, dist, k: int | None, largest: bool):
+    """In-kernel twin of :func:`_topk`'s window: the rows ordered by
+    ``(query_id, distance, neighbor_id)`` (distance descending when
+    ``largest``) with their 1-based rank within the query, keeping ranks
+    ``<= k`` (``None``: every row)."""
+    order = np.lexsort((ids, -dist if largest else dist, qids))
+    q = qids[order]
+    start = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = np.arange(len(q)) - np.repeat(start, np.diff(np.r_[start, len(q)])) + 1
+    keep = rank <= k if k is not None else np.ones(len(q), dtype=bool)
+    return q[keep], ids[order][keep], dist[order][keep], rank[keep]
+
+
 _RESULT_ARROW_SCHEMA = pa.schema(
     [("query_id", pa.int64()), ("neighbor_id", pa.int64()), ("distance", pa.float64())]
 )
+
+
+def _topk_schema():
+    """:func:`_topk`'s Spark schema: the scored columns plus the window's
+    non-null int ``rank``."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from knowhere_spark.operators.brute_force import RESULT_SCHEMA
+
+    return StructType(RESULT_SCHEMA.fields + [StructField("rank", IntegerType(), False)])
 
 
 def _result_batch(qids, ids, dist) -> pa.RecordBatch:
@@ -1024,12 +1166,133 @@ def scan_probed_cells(
             cell = scalar_column(tbl, "cell_id", np.int64)
             if rows_acc is not None:
                 rows_acc.add(len(ids))
-            dist = cd.score(tbl, b_Q)                     # (n, nq)
+            dist = cd.score(tbl, b_Q, stable=True)        # (n, nq)
             ri, qi = select(dist, b_member[cell])
             if len(ri):
                 yield _result_batch(b_qids[qi], ids[ri], dist[ri, qi])
 
     return cand.mapInArrow(kernel, RESULT_SCHEMA)
+
+
+def score_cell(cell: pa.Table, qids: np.ndarray, Q: np.ndarray, codec: FlatCodec,
+               select, rows_acc=None, *, stable: bool = False):
+    """One cell's rows against the queries that probe it: ``(query_ids,
+    neighbor_ids, distances)`` of the pairs ``select`` keeps — the body of
+    the cogroup kernel (:func:`cogroup_cells`) and of the broadcast kernel
+    (:func:`search_cell_payload`, ``stable=True``).  ``rows_acc`` counts
+    the cell's rows."""
+    ids = scalar_column(cell, "id", np.int64)
+    if rows_acc is not None:
+        rows_acc.add(len(ids))
+    dist = codec.score(cell, Q, stable=stable)        # (n, nq)
+    ri, qi = select(dist)
+    return qids[qi], ids[ri], dist[ri, qi]
+
+
+def search_cell_payload(
+    queries: DataFrame,
+    payload,
+    nprobe: int,
+    select,
+    *,
+    k: int | None,
+    ranked: bool,
+    fill_k: int | None = None,
+    counters,
+) -> DataFrame:
+    """The driver strategy's broadcast plan: one ``mapInArrow`` over
+    ``(query_id, qvec)`` rows against the broadcast cell payload
+    (:meth:`IVFBaseIndex._cells_payload`) — no join, no shuffle, no
+    collect.  Per query batch the kernel ranks the probes
+    (:func:`rank_probes` over ``codec.probe``), widens a query to every
+    cell when its probed cells hold fewer than ``fill_k`` rows
+    (``ensure_topk_full``, ivf.cc:753-762), scores each probed cell
+    against the queries probing it (:func:`score_cell`) and keeps each
+    query's best ``k`` by ``(distance, neighbor_id)`` (``None``: every
+    selected row).  Emits :func:`_topk`'s schema when ``ranked``, else
+    ``(query_id, neighbor_id, distance)``.  ``counters``: the ``nq``,
+    ``cells_probed``, cells-read (:class:`CellRowsRead`) and probe-seconds
+    accumulators."""
+    from knowhere_spark.operators.brute_force import RESULT_SCHEMA
+    from knowhere_spark.session import ensure_parallelism
+
+    nq_acc, cells_acc, read_acc, probe_acc = counters
+
+    def kernel(batches):
+        offsets, cells, C, codec = payload.value
+        counts = np.diff(offsets)
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            qids = scalar_column(tbl, "query_id", np.int64)
+            nq = len(qids)
+            t0 = time.perf_counter()
+            Q = codec.prepare(codec.read_queries(tbl, "qvec"))
+            order = rank_probes(codec.probe(C, Q, stable=True), nprobe)   # (nprobe, nq)
+            probe_acc.add(time.perf_counter() - t0)
+            member = np.zeros((len(counts), nq), dtype=bool)       # (nlist, nq)
+            member[order, np.arange(nq)[None, :]] = True
+            n_probed = order.size
+            if fill_k is not None:
+                short = counts[order].sum(axis=0) < fill_k
+                member[:, short] = True
+                n_probed += len(counts) * int(short.sum())
+            read = member.any(axis=1)
+            nq_acc.add(nq)
+            cells_acc.add(n_probed)
+            read_acc.add(read)
+            parts = []
+            for c in np.flatnonzero(read & (counts > 0)):
+                qi = np.flatnonzero(member[c])
+                parts.append(score_cell(
+                    cells.slice(offsets[c], counts[c]), qids[qi], Q[qi], codec, select,
+                    stable=True,
+                ))
+            if not parts:
+                continue
+            q, n, d = (np.concatenate(a) for a in zip(*parts))
+            if k is not None:
+                q, n, d, rank = _rank_per_query(q, n, d, k, codec.largest)
+            if len(q) == 0:
+                continue
+            out = _result_batch(q, n, d)
+            if ranked:
+                out = out.append_column("rank", pa.array(rank, type=pa.int32()))
+            yield out
+
+    schema = _topk_schema() if ranked else RESULT_SCHEMA
+    return ensure_parallelism(queries).mapInArrow(kernel, schema)
+
+
+class _AnyParam(AccumulatorParam):
+    """Accumulator parameter of boolean masks merged by OR: idempotent, so
+    a recomputed kernel does not count twice."""
+
+    def zero(self, value):
+        return np.zeros_like(value)
+
+    def addInPlace(self, a, b):
+        return a | b
+
+
+class CellRowsRead:
+    """``rows_scanned`` of the broadcast plan: the kernels ``add()`` the
+    mask of cells they read, OR-ed into one accumulator, and the value is
+    those cells' row count — each row counts once per search however the
+    queries are batched (the scan plan's meaning), and a recompute does
+    not double it."""
+
+    def __init__(self, sc, cell_counts: dict[int, int], nlist: int):
+        self.cell_counts = cell_counts
+        self.acc = sc.accumulator(np.zeros(nlist, dtype=bool), _AnyParam())
+
+    def add(self, read: np.ndarray) -> None:
+        self.acc.add(read)
+
+    @property
+    def value(self) -> int:
+        return sum(self.cell_counts.get(int(c), 0) for c in np.flatnonzero(self.acc.value))
 
 
 def probe_assign_df(
@@ -1169,13 +1432,11 @@ def cogroup_cells(
     def cell_kernel(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return _RESULT_ARROW_SCHEMA.empty_table()
-        ids = scalar_column(left, "id", np.int64)
         qids = scalar_column(right, "query_id", np.int64)
-        if rows_acc is not None:
-            rows_acc.add(len(ids))    # rows scored in this probed cell
-        dist = codec.score(left, codec.read_queries(right, "qvec"))   # (n, nq)
-        ri, qi = select(dist)
-        return pa.Table.from_batches([_result_batch(qids[qi], ids[ri], dist[ri, qi])])
+        Q = codec.read_queries(right, "qvec")
+        return pa.Table.from_batches(
+            [_result_batch(*score_cell(left, qids, Q, codec, select, rows_acc))]
+        )
 
     return (
         cand.groupby("cell_id")

@@ -45,6 +45,12 @@ def topk_per_key(
     )
 
 
+def range_search_k(config) -> int:
+    """The per-query ``range_search_k`` truncation of ``config``
+    (config.h:665-669); 0 when it keeps every in-range row."""
+    return max(int(getattr(config, "range_search_k", 0) or 0), 0)
+
+
 def apply_range_bounds(
     scored, config, *, already_bounded: bool = False,
     dist_col: str = "distance", id_col: str = "neighbor_id",
@@ -67,8 +73,8 @@ def apply_range_bounds(
         else:
             cond = (d >= F.lit(lo)) & (d < F.lit(hi))
         scored = scored.filter(cond)
-    rsk = int(getattr(config, "range_search_k", 0) or 0)
-    if rsk > 0:
+    rsk = range_search_k(config)
+    if rsk:
         scored = topk_per_key(
             scored, "query_id", dist_col, rsk,
             ascending=not sim, tie_breaker=id_col,

@@ -67,15 +67,17 @@ class OpMetrics(dict):
     accumulators resolved to their current values."""
 
     def snapshot(self) -> dict:
-        out = {}
-        for key, val in self.items():
-            if hasattr(val, "value") and hasattr(val, "add"):   # Accumulator
-                out[key] = val.value
-            elif isinstance(val, dict):
-                out[key] = dict(val)
-            else:
-                out[key] = val
-        return out
+        return _resolve(dict(self))
+
+
+def _resolve(val):
+    """``val`` with every accumulator (also inside nested dicts such as
+    ``stages``) replaced by its current value."""
+    if hasattr(val, "value") and hasattr(val, "add"):   # Accumulator
+        return val.value
+    if isinstance(val, dict):
+        return {key: _resolve(v) for key, v in val.items()}
+    return val
 
 
 class StageTimer:

@@ -419,6 +419,38 @@ def test_first_auto_search_builds_graph_once(spark):
     assert rows["auto"] == rows["broadcast"]
 
 
+def test_grown_index_first_auto_search_sizes_from_parent(spark):
+    """An ``add()``-grown index bounds its graph size from the parent's
+    recorded size plus a count of the added batch, so its first ``auto``
+    search runs at most one job more than a first ``broadcast`` search
+    (that count) instead of counting, then re-running, the grown edge
+    chain — and picks broadcast with the same rows."""
+    from conftest import DENSE_SCHEMA
+
+    base = gen_dense(2000, 16, seed=47)
+    extra = gen_dense(200, 16, seed=48)
+    extra_df = spark.createDataFrame(
+        [(2000 + i, [float(x) for x in row]) for i, row in enumerate(extra)],
+        DENSE_SCHEMA,
+    )
+    qs = dense_df(spark, gen_dense(5, 16, seed=49), QUERY_SCHEMA)
+    parent = HNSWIndex.build(dense_df(spark, base), HnswConfig(metric_type="L2", M=8, ef=16))
+    jobs, rows = {}, {}
+    for strategy in ("broadcast", "auto"):
+        idx = parent.add(extra_df)          # a fresh grown index each time
+        out, jobs[strategy] = _jobs_for(
+            spark, f"grown_{strategy}",
+            lambda: idx.search(qs, k=5, strategy=strategy).collect(),
+        )
+        rows[strategy] = sorted(tuple(r) for r in out)
+        assert idx.last_metrics["strategy"] == "broadcast"
+        n, _, n_edges = idx._graph_size()
+        assert n == 2200 and n_edges >= idx.edges.count()
+        idx.release()
+    assert jobs["auto"] <= jobs["broadcast"] + 1, jobs
+    assert rows["auto"] == rows["broadcast"]
+
+
 def _driver_beam(payload, scorer_factory, qs, k, ef, is_sim, allowed=None):
     """Driver-side loop over ``_beam_traverse`` on a collected payload —
     the reference the Spark beam kernel must reproduce row for row."""

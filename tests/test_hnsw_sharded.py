@@ -932,3 +932,48 @@ def test_edge_prune_kernel_equals_sql(spark):
             .collect()
         )
         assert [tuple(r) for r in kern] == [tuple(r) for r in ref], is_sim
+
+
+def test_prefetch_wave_joins_edge_thread_on_error(spark, monkeypatch):
+    """When the wave prefetch's vector collect raises, the edge-collect
+    thread has finished before the per-shard fallback takes over (no
+    orphaned Spark job), and the fallback answers like a clean search."""
+    import pyspark
+
+    base = gen_dense(600, 16, seed=111)
+    cfg = HnswConfig(metric_type="L2", M=8, ef=16)
+    q_df = dense_df(spark, gen_dense(4, 16, seed=112), QUERY_SCHEMA)
+    idx = ShardedHNSWIndex.build(dense_df(spark, base), cfg, n_shards=3)
+    want = sorted(tuple(r) for r in idx.search(q_df, k=5).collect())
+    idx.release()                        # the next search collects again
+    vec_tbl = idx._vec_tbl
+
+    class _FailingCollect:
+        def __getattr__(self, name):
+            return getattr(vec_tbl, name)
+
+        def filter(self, *a, **kw):
+            class _Sel:
+                def select(self, *a, **kw):
+                    class _Arrow:
+                        def toArrow(self):
+                            raise RuntimeError("vector collect failed")
+                    return _Arrow()
+            return _Sel()
+
+    threads = []
+
+    class _Recorded(pyspark.InheritableThread):
+        def start(self):
+            threads.append(self)
+            super().start()
+
+    monkeypatch.setattr(pyspark, "InheritableThread", _Recorded)
+    idx._vec_tbl = _FailingCollect()
+    wave = [(i, s) for i, s in enumerate(idx.shards) if s is not None]
+    idx._prefetch_wave(wave)
+    assert len(threads) == 1 and not threads[0].is_alive()
+    assert all(s._bc_graph is None for _, s in wave)   # nothing installed
+    got = sorted(tuple(r) for r in idx.search(q_df, k=5).collect())
+    assert got == want
+    idx.release()

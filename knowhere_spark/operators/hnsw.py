@@ -773,6 +773,7 @@ class HNSWIndex:
         self._size: tuple[int, int, int] | None = None   # see _graph_size
         self._grown_from = None                           # see _graph_size
         self._bc_graph = None                             # see _graph_bc
+        self._graph_ids = None                            # see _broadcast_graph
         self._edges_resident = False                      # see _bfs_edges
 
     def count(self) -> int:
@@ -1194,13 +1195,16 @@ class HNSWIndex:
 
     def _broadcast_graph(self, ids, X, src, dst) -> None:
         """Install the memoized graph broadcast from collected arrays
-        (also the sharded search's batched wave prefetch)."""
+        (also the sharded search's batched wave prefetch).  The payload's
+        sorted id array stays on the index: a filtered search maps ids to
+        graph positions with it, and reading ``bc.value`` on the driver
+        would unpickle a second copy of the whole payload."""
         metric = MetricType(self.config.metric_type)
-        self._bc_graph = self.vectors.sparkSession.sparkContext.broadcast(
-            graph_payload(
-                ids, X, src, dst, self.entry_ids, lambda Xs: _dense_extra(Xs, metric)
-            )
+        payload = graph_payload(
+            ids, X, src, dst, self.entry_ids, lambda Xs: _dense_extra(Xs, metric)
         )
+        self._graph_ids = payload[0]
+        self._bc_graph = self.vectors.sparkSession.sparkContext.broadcast(payload)
 
     def _bfs_edges(self) -> DataFrame:
         """The edge table the bfs hops join, persisted (lazily,
@@ -1235,6 +1239,7 @@ class HNSWIndex:
         if self._bc_graph is not None:
             self._bc_graph.unpersist()
             self._bc_graph = None
+            self._graph_ids = None
         if self._edges_resident:
             self.edges.unpersist()
             self._edges_resident = False
@@ -1369,7 +1374,7 @@ class HNSWIndex:
                 )
                 bc = self._graph_bc()
                 masks = (
-                    {0: self._filter_mask_bc(filter_expr, bc.value[0])}
+                    {0: self._filter_mask_bc(filter_expr, self._graph_ids)}
                     if filter_expr is not None
                     else None
                 )

@@ -273,6 +273,7 @@ class QuantizedHNSWIndex:
         self.config = config
         self.index_type = index_type
         self._bc_codes = None   # see _codes_bc
+        self._codes_ids = None   # see _codes_bc
         self._codes_resident = False   # see _bfs_scorer
 
     # -- introspection (index_node.h:411-434) ---------------------------------
@@ -402,7 +403,9 @@ class QuantizedHNSWIndex:
     def _codes_bc(self):
         """Collect + broadcast the codes payload (:func:`graph_payload`
         over the codes, scored by :func:`_quant_scorer`), memoized like
-        ``HNSWIndex._graph_bc``: codes + CSR ship once."""
+        ``HNSWIndex._graph_bc``: codes + CSR ship once.  The payload's
+        sorted id array stays on the index for filtered searches, as in
+        ``HNSWIndex._broadcast_graph``."""
         if self._bc_codes is None:
             quant = self.quant
             metric = MetricType(self.config.metric_type)
@@ -421,14 +424,14 @@ class QuantizedHNSWIndex:
                         )
                 return (C, quant, metric.value, xnorm)
 
-            self._bc_codes = self.codes.sparkSession.sparkContext.broadcast(
-                graph_payload(
-                    *_collect_id_matrix(self.codes, "id", "codes", _code_dtype(quant)),
-                    *_collect_edge_ids(self.graph.edges),
-                    self.graph.entry_ids,
-                    storage,
-                )
+            payload = graph_payload(
+                *_collect_id_matrix(self.codes, "id", "codes", _code_dtype(quant)),
+                *_collect_edge_ids(self.graph.edges),
+                self.graph.entry_ids,
+                storage,
             )
+            self._codes_ids = payload[0]
+            self._bc_codes = self.codes.sparkSession.sparkContext.broadcast(payload)
         return self._bc_codes
 
     def release(self) -> None:
@@ -438,6 +441,7 @@ class QuantizedHNSWIndex:
         if self._bc_codes is not None:
             self._bc_codes.unpersist()
             self._bc_codes = None
+            self._codes_ids = None
         if self._codes_resident:
             self.codes.unpersist()
             self._codes_resident = False
@@ -496,7 +500,7 @@ class QuantizedHNSWIndex:
             # the codes table shares the graph's id set, so positions in
             # the codes-sorted payload match the raw table's mask positions
             masks = (
-                {0: self.graph._filter_mask_bc(filter_expr, bc.value[0])}
+                {0: self.graph._filter_mask_bc(filter_expr, self._codes_ids)}
                 if filter_expr is not None
                 else None
             )

@@ -30,11 +30,13 @@ Spark-first design (SURVEY.md §2.3):
   quantizer → probe ``nprobe`` cells → score with the family's codec.  A
   family supplies only its codec (:class:`FlatCodec` and subclasses: how
   a batch of cell rows scores against a query matrix) and its encode
-  kernel.  ``driver`` serves a resident index (unfiltered) from a
-  broadcast cell payload — the cell table collected once — in one
-  ``mapInArrow`` over the query rows that ranks probes, scores the probed
-  cells and keeps each query's top-k in the kernel, the reference's
-  in-memory serving shape (:func:`search_cell_payload`); a filtered or
+  kernel.  ``driver`` serves a resident index (unfiltered) from a cell
+  payload — the cell table collected once and held by the driver — with
+  one kernel that ranks probes, scores the probed cells and keeps each
+  query's top-k, the reference's in-memory serving shape
+  (:func:`payload_batches`): in the driver process for a small top-k
+  batch, else in one ``mapInArrow`` over the query rows against the
+  payload's broadcast (:func:`search_cell_payload`); a filtered or
   non-resident search picks the top-``nprobe`` cells per query on the
   driver over the tiny centroid matrix, prunes the cell table to the
   probed cells with a literal IN-list, and scores them in one
@@ -161,10 +163,9 @@ class ResidentCells:
     family's encoded table resident.  The frames a search caches (the
     distributed probe table, the counted ``ensure_topk_full`` result)
     belong to the index until its next search, ``add()`` or
-    ``release()``.  The broadcast cell payload
-    (:meth:`IVFBaseIndex._cells_payload`) is the index's own, like
-    HNSW's graph broadcast: an ``add()`` child builds its own, and
-    ``release()`` drops it."""
+    ``release()``.  The cell payload (:meth:`IVFBaseIndex._cells_payload`)
+    and its broadcast are the index's own, like HNSW's graph broadcast:
+    an ``add()`` child builds its own, and ``release()`` drops both."""
 
     #: ``(frame, estimated bytes)`` per persisted segment this index reads
     _segments: tuple[tuple[DataFrame, int], ...] = ()
@@ -173,7 +174,9 @@ class ResidentCells:
     _clustered_assign: DataFrame | None = None
     #: frames the latest search cached
     _search_frames: tuple[DataFrame, ...] = ()
-    #: broadcast cell payload, built by the first broadcast-plan search
+    #: cell payload the driver holds, built by the first payload search
+    _cells = None
+    #: its broadcast, made when a ``mapInArrow`` plan first needs it
     _cells_bc = None
 
     @property
@@ -210,9 +213,10 @@ class ResidentCells:
 
     def release(self) -> None:
         """Unpersist the resident segments, the clustered search view, the
-        latest search's caches and the broadcast cell payload; the index
-        stays usable and recomputes from lineage (on the scan plan, as it
-        is no longer resident)."""
+        latest search's caches and the broadcast cell payload, and drop
+        the payload the driver holds; the index stays usable and
+        recomputes from lineage (on the scan plan, as it is no longer
+        resident)."""
         for frame, _ in self._segments:
             frame.unpersist()
         self._segments = ()
@@ -222,6 +226,7 @@ class ResidentCells:
         if self._cells_bc is not None:
             self._cells_bc.unpersist()
             self._cells_bc = None
+        self._cells = None
 
     def _drop_clustered_view(self) -> None:
         if self._clustered_assign is not None:
@@ -300,6 +305,11 @@ class IVFBaseIndex(ResidentCells):
     #: auto-strategy cutover: beyond this many queries the driver no longer
     #: collects the query set; probe assignment and scoring both distribute
     _DRIVER_NQ_MAX = 10_000
+    #: local-plan cap: a ``driver`` top-k search served from the cell
+    #: payload scores at most this many queries in the driver process;
+    #: a larger batch runs the payload kernel as a ``mapInArrow`` job
+    #: (the crossover of a measured nq sweep, ``plans/r18``)
+    _LOCAL_NQ_MAX = 2_000
     #: rows per cell — computed once (see _get_cell_counts)
     _cell_counts: dict[int, int] | None = None
     #: IVF_FLAT and BIN_IVF_FLAT store raw vectors; SQ and PQ only when
@@ -408,7 +418,7 @@ class IVFBaseIndex(ResidentCells):
         # the class defaults (no metrics, stats, views or search caches)
         child = copy.copy(self)
         for attr in ("last_metrics", "_cell_counts", "_clustered_assign",
-                     "_search_frames", "_cells_bc"):
+                     "_search_frames", "_cells", "_cells_bc"):
             child.__dict__.pop(attr, None)
         batch = child._append_resident(self, self._encode(rows, scalars))
         child.assignments = self.assignments.unionByName(batch)
@@ -435,29 +445,35 @@ class IVFBaseIndex(ResidentCells):
         ``strategy``:
 
         - ``driver`` — the reference's nq<=10k serving regime, in one of
-          two plans (:meth:`_driver_plan`).  An unfiltered search of a
-          resident index whose cell table fits the broadcast bound runs
-          the **broadcast plan**: the cell table is collected once into a
-          broadcast payload (:meth:`_cells_payload`), and each search is
-          one ``mapInArrow`` over the query rows that ranks the probes,
-          scores them and keeps each query's top-k in the kernel
-          (:func:`search_cell_payload`) — one Spark job, no shuffle, no
-          query collect.  Otherwise (a filter, whose predicate reads
-          scalar columns the payload does not carry; or an index loaded
-          from disk or above the bound) the **scan plan** collects the
-          queries, ranks the probes on the driver and scans the pruned
-          cell table (:func:`scan_probed_cells`).
+          three plans (:meth:`_driver_plan`).  An unfiltered search of a
+          resident index whose cell table fits the broadcast bound is
+          served from the cell payload (:meth:`_cells_payload`): the cell
+          table collected once, held by the driver.  Up to
+          ``_LOCAL_NQ_MAX`` queries take the **local plan**: the queries
+          are collected once as Arrow, the payload kernel
+          (:func:`payload_batches`) ranks the probes, scores them and
+          keeps each query's top-k in the driver process, and the result
+          is a local frame — no Python job.  A larger batch (seen by
+          collecting ``_LOCAL_NQ_MAX + 1`` rows) takes the **broadcast
+          plan**: the same kernel in one ``mapInArrow`` over the query
+          rows against the payload's broadcast
+          (:func:`search_cell_payload`).  Otherwise (a filter, whose
+          predicate reads scalar columns the payload does not carry; or
+          an index loaded from disk or above the bound) the **scan plan**
+          collects the queries as Arrow, ranks the probes on the driver
+          and scans the pruned cell table (:func:`scan_probed_cells`).
         - ``distributed`` never collects — probe assignment runs as
           ``mapInArrow`` against broadcast centroids and scoring cogroups
           base cells with their probing queries (the corpus-vs-corpus
           regime, e.g. semantic dedup of 100 TB against itself).
-        - ``auto`` takes the broadcast plan whenever ``driver`` would —
-          HNSW's rule for its graph, whatever the query count — and
-          otherwise picks by query count.
+        - ``auto`` takes the broadcast plan, with no query collect,
+          whenever ``driver`` would serve from the payload — HNSW's rule
+          for its graph, whatever the query count — and otherwise picks
+          by query count.
 
-        The broadcast and scan plans return the same rows, distances to
-        the last bit.  ``last_metrics`` names the driver plan that ran
-        (``plan``) and why (``plan_reason``)."""
+        The local, broadcast and scan plans return the same rows,
+        distances to the last bit.  ``last_metrics`` names the driver
+        plan that ran (``plan``) and why (``plan_reason``)."""
         k = k if k is not None else self.config.k
         p = self._probe(
             "search", query_df, query_id_col, query_vec_col, strategy,
@@ -466,7 +482,7 @@ class IVFBaseIndex(ResidentCells):
         select = topk_selection(k, p.codec.largest)
         if p.payload is not None:
             fill_k = k if self.config.ensure_topk_full else None
-            return p.broadcast(select, k, ranked=True, fill_k=fill_k)
+            return p.from_payload(select, k, ranked=True, fill_k=fill_k)
         out = _topk(p.scan(select, filter_expr), k, p.codec.largest)
         if self.config.ensure_topk_full:
             out = self._fill_topk(p, out, select, k, filter_expr)
@@ -489,7 +505,10 @@ class IVFBaseIndex(ResidentCells):
         bounds from ``config`` (default: the index's); probe-limited like
         the reference's IVF range path, so ``nprobe=nlist`` makes it exact.
         ``range_search_k`` truncates per query (config.h:665-669).
-        ``strategy`` and the plans mirror :meth:`search`."""
+        ``strategy`` and the plans mirror :meth:`search`, except that a
+        ``driver`` range search served from the payload always takes the
+        broadcast plan: its output has no per-query bound to keep it
+        small enough for the driver."""
         cfg = config or self.config
         p = self._probe(
             "range_search", query_df, query_id_col, query_vec_col, strategy,
@@ -497,15 +516,17 @@ class IVFBaseIndex(ResidentCells):
         )
         select = range_selection(*cfg.range_bounds())
         if p.payload is not None:
-            return p.broadcast(select, range_search_k(cfg) or None, ranked=False)
+            return p.from_payload(select, range_search_k(cfg) or None, ranked=False)
         scored = p.scan(select, filter_expr)
         return apply_range_bounds(scored, cfg, already_bounded=True)
 
     def _driver_plan(self, filter_expr) -> tuple[str, str]:
-        """The driver strategy's plan and why: ``broadcast`` for an
-        unfiltered search of a resident index whose resident bytes fit
-        HNSW's ``_BROADCAST_MAX_BYTES``, else ``scan`` — decided from
-        what the index holds, never from the query set."""
+        """The driver strategy's plan and why: ``broadcast`` (served from
+        the cell payload) for an unfiltered search of a resident index
+        whose resident bytes fit HNSW's ``_BROADCAST_MAX_BYTES``, else
+        ``scan`` — decided from what the index holds, never from the
+        query set.  :meth:`_probe` turns a small ``driver`` top-k search
+        of the payload into the ``local`` plan."""
         from knowhere_spark.operators import hnsw
 
         if filter_expr is not None:
@@ -520,8 +541,9 @@ class IVFBaseIndex(ResidentCells):
         """Open one search: project the queries, choose the strategy and
         plan, open the metrics span (index.cc:149-162 Search span: labels
         the consuming jobs; counters resolve via ``last_metrics.snapshot()``)
-        and prepare the probes — the broadcast payload, probes ranked on
-        the driver, or a cached distributed probe table."""
+        and prepare the probes — the cell payload (with the collected
+        queries on the local plan), probes ranked on the driver, or a
+        cached distributed probe table."""
         from knowhere_spark.tracing import OpMetrics, op_description
 
         self._drop_search_frames()
@@ -533,15 +555,25 @@ class IVFBaseIndex(ResidentCells):
         if strategy not in ("auto", "driver", "distributed"):
             raise ValueError(f"unknown strategy {strategy!r}")
         plan, reason = self._driver_plan(filter_expr)
+        qtbl = None          # the query rows, collected once as Arrow
         if strategy != "distributed" and plan == "broadcast":
+            if strategy == "driver" and verb == "search":
+                # peek one row past the cap: a small batch is scored here
+                qtbl = queries.limit(self._LOCAL_NQ_MAX + 1).toArrow()
+                if qtbl.num_rows <= self._LOCAL_NQ_MAX:
+                    plan = "local"
+                    reason += f"; at most {self._LOCAL_NQ_MAX} queries, scored in the driver"
+                else:
+                    qtbl = None
+                    reason += f"; more than {self._LOCAL_NQ_MAX} queries"
             strategy = "driver"
         elif strategy == "auto":
             # peek one row past the cutover: if the query set is small we
             # already hold the rows and reuse them for the driver path
-            qrows = queries.limit(self._DRIVER_NQ_MAX + 1).collect()
-            strategy = "distributed" if len(qrows) > self._DRIVER_NQ_MAX else "driver"
+            qtbl = queries.limit(self._DRIVER_NQ_MAX + 1).toArrow()
+            strategy = "distributed" if qtbl.num_rows > self._DRIVER_NQ_MAX else "driver"
         elif strategy == "driver":
-            qrows = queries.collect()
+            qtbl = queries.toArrow()
         sc = queries.sparkSession.sparkContext
         m = OpMetrics(
             op=f"{self.index_type.value}.{verb}", nprobe=nprobe,
@@ -563,6 +595,9 @@ class IVFBaseIndex(ResidentCells):
                 probe_assign_df(queries, self.centroids, codec, nprobe)
             )
             return p
+        if plan == "local":
+            p.payload, p.nprobe, p.qtbl = self._cells_payload(), nprobe, qtbl
+            return p
         if plan == "broadcast":
             p.payload, p.nprobe = self._cells_payload(), nprobe
             # the kernels count what the driver no longer sees
@@ -571,10 +606,8 @@ class IVFBaseIndex(ResidentCells):
             m["rows_scanned"] = CellRowsRead(sc, self._get_cell_counts(), self.config.nlist)
             m["stages"]["probe_sec"] = sc.accumulator(0.0)
             return p
-        # the collected rows go through the same Arrow reader as the kernels
-        qvec = pa.table({"qvec": pa.array([r["qvec"] for r in qrows])})
-        p.qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        p.Q = codec.prepare(codec.read_queries(qvec, "qvec"))
+        p.qids = scalar_column(qtbl, "query_id", np.int64)
+        p.Q = codec.prepare(codec.read_queries(qtbl, "qvec"))
         with p.timer.stage("probe_sec"):
             order = rank_probes(codec.probe(self.centroids, p.Q, stable=True), nprobe)
             p.pairs = [
@@ -584,17 +617,17 @@ class IVFBaseIndex(ResidentCells):
         m["cells_probed"] = len(p.pairs)
         return p
 
-    def _cells_payload(self):
-        """The broadcast cell payload, built on first use and memoized:
+    def _cells_payload(self) -> tuple:
+        """The cell payload, built on first use and held by the driver:
         the resident cell table collected once (the collect also fills the
-        resident cache), sorted by ``(cell_id, id)``, broadcast as
-        ``(offsets, cells, centroids, codec)`` — CSR cell offsets
-        (``nlist + 1``), an Arrow table of ``id`` and the codec's column
-        only, and what the kernel needs to rank and score probes.  The
-        cell counts (:meth:`_get_cell_counts`) come with it, so the driver
-        never reads the payload back.  Owned like HNSW's graph broadcast:
-        :meth:`release` drops it and an ``add()`` child builds its own."""
-        if self._cells_bc is None:
+        resident cache), sorted by ``(cell_id, id)``, as ``(offsets,
+        cells, centroids, codec)`` — CSR cell offsets (``nlist + 1``), an
+        Arrow table of ``id`` and the codec's column only, and what the
+        kernel needs to rank and score probes.  The cell counts
+        (:meth:`_get_cell_counts`) come with it.  Owned like HNSW's graph
+        broadcast: :meth:`release` drops it and an ``add()`` child builds
+        its own."""
+        if self._cells is None:
             codec = self._codec()
             tbl = self.assignments.select("id", "cell_id", codec.col).toArrow()
             tbl = tbl.sort_by([("cell_id", "ascending"), ("id", "ascending")])
@@ -604,9 +637,17 @@ class IVFBaseIndex(ResidentCells):
                 self._cell_counts = {
                     c: int(n) for c, n in enumerate(np.diff(offsets)) if n
                 }
+            self._cells = (offsets, tbl.select(["id", codec.col]).combine_chunks(),
+                           self.centroids, codec)
+        return self._cells
+
+    def _cells_broadcast(self):
+        """The cell payload's broadcast, made when a ``mapInArrow`` plan
+        first needs it and memoized.  The driver never reads its value
+        (that would unpickle a second copy of the payload)."""
+        if self._cells_bc is None:
             self._cells_bc = self.assignments.sparkSession.sparkContext.broadcast(
-                (offsets, tbl.select(["id", codec.col]).combine_chunks(),
-                 self.centroids, codec)
+                self._cells_payload()
             )
         return self._cells_bc
 
@@ -707,9 +748,10 @@ class IVFBaseIndex(ResidentCells):
 
 class _Probe:
     """One open search: its strategy, projected queries, codec, metrics
-    span and probes — the cell ``payload`` broadcast on the broadcast
-    plan, ``pairs`` with ``qids``/``Q`` on the scan plan, or the cached
-    ``probes`` table when distributed."""
+    span and probes — the cell ``payload`` on the broadcast plan (and
+    the collected query table ``qtbl`` on the local plan), ``pairs``
+    with ``qids``/``Q`` on the scan plan, or the cached ``probes`` table
+    when distributed."""
 
     def __init__(self, index: IVFBaseIndex, queries: DataFrame, strategy: str, m):
         from knowhere_spark.tracing import StageTimer
@@ -721,16 +763,37 @@ class _Probe:
         self.m = m
         self.timer = StageTimer(m)
         self.probes = self.pairs = self.qids = self.Q = self.payload = None
+        self.qtbl = None
         self.nprobe = 0
 
-    def broadcast(self, select, k, *, ranked, fill_k=None) -> DataFrame:
-        """The broadcast plan's result (:func:`search_cell_payload`) over
-        this search's queries, counting into its metrics."""
+    def from_payload(self, select, k, *, ranked, fill_k=None) -> DataFrame:
+        """This search's result served from the cell payload by
+        :func:`payload_batches`, counting into its metrics: run now in the
+        driver process over the collected queries (local plan), or
+        returned as one ``mapInArrow`` over the query rows against the
+        payload's broadcast (:func:`search_cell_payload`).  The local plan
+        serves top-k searches only (``ranked``)."""
         m = self.m
-        return search_cell_payload(
-            self.queries, self.payload, self.nprobe, select, k=k, ranked=ranked,
-            fill_k=fill_k, counters=(m["nq"], m["cells_probed"],
-                                     m["rows_scanned"], m["stages"]["probe_sec"]),
+        if self.qtbl is None:
+            return search_cell_payload(
+                self.queries, self.index._cells_broadcast(), self.nprobe, select,
+                k=k, ranked=ranked, fill_k=fill_k,
+                counters=(m["nq"], m["cells_probed"], m["rows_scanned"],
+                          m["stages"]["probe_sec"]),
+            )
+        counts = np.diff(self.payload[0])
+        counters = (_Tally(0), _Tally(0), _Tally(np.zeros(len(counts), dtype=bool)),
+                    _Tally(0.0))
+        batches = list(payload_batches(
+            self.qtbl.combine_chunks().to_batches(), self.payload, self.nprobe,
+            select, k=k, ranked=ranked, fill_k=fill_k, counters=counters,
+        ))
+        nq, cells, read, probe_sec = (c.value for c in counters)
+        m["nq"], m["cells_probed"] = int(nq), int(cells)
+        m["rows_scanned"] = int(counts[read].sum())
+        m["stages"]["probe_sec"] = probe_sec
+        return self.queries.sparkSession.createDataFrame(
+            pa.Table.from_batches(batches, schema=_TOPK_ARROW_SCHEMA), _topk_schema()
         )
 
     def scan(self, select, filter_expr, probed=None) -> DataFrame:
@@ -1096,6 +1159,7 @@ def _rank_per_query(qids, ids, dist, k: int | None, largest: bool):
 _RESULT_ARROW_SCHEMA = pa.schema(
     [("query_id", pa.int64()), ("neighbor_id", pa.int64()), ("distance", pa.float64())]
 )
+_TOPK_ARROW_SCHEMA = _RESULT_ARROW_SCHEMA.append(pa.field("rank", pa.int32()))
 
 
 def _topk_schema():
@@ -1189,9 +1253,78 @@ def score_cell(cell: pa.Table, qids: np.ndarray, Q: np.ndarray, codec: FlatCodec
     return qids[qi], ids[ri], dist[ri, qi]
 
 
+def payload_batches(
+    batches,
+    payload: tuple,
+    nprobe: int,
+    select,
+    *,
+    k: int | None,
+    ranked: bool,
+    fill_k: int | None = None,
+    counters,
+):
+    """The payload kernel: ``(query_id, qvec)`` record batches scored
+    against the cell payload (:meth:`IVFBaseIndex._cells_payload`), one
+    result batch per query batch.  Per batch it ranks the probes
+    (:func:`rank_probes` over ``codec.probe``), widens a query to every
+    cell when its probed cells hold fewer than ``fill_k`` rows
+    (``ensure_topk_full``, ivf.cc:753-762), scores each probed cell
+    against the queries probing it (:func:`score_cell`) and keeps each
+    query's best ``k`` by ``(distance, neighbor_id)`` (``None``: every
+    selected row).  Emits :func:`_topk`'s columns when ``ranked``, else
+    ``(query_id, neighbor_id, distance)``.  ``counters``: what counts
+    the ``nq``, ``cells_probed``, cells-read mask (:class:`CellRowsRead`)
+    and probe seconds — accumulators in a ``mapInArrow`` job
+    (:func:`search_cell_payload`), plain :class:`_Tally` values on the
+    local plan (:meth:`_Probe.from_payload`)."""
+    nq_acc, cells_acc, read_acc, probe_acc = counters
+    offsets, cells, C, codec = payload
+    counts = np.diff(offsets)
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        tbl = pa.Table.from_batches([rb])
+        qids = scalar_column(tbl, "query_id", np.int64)
+        nq = len(qids)
+        t0 = time.perf_counter()
+        Q = codec.prepare(codec.read_queries(tbl, "qvec"))
+        order = rank_probes(codec.probe(C, Q, stable=True), nprobe)   # (nprobe, nq)
+        probe_acc.add(time.perf_counter() - t0)
+        member = np.zeros((len(counts), nq), dtype=bool)       # (nlist, nq)
+        member[order, np.arange(nq)[None, :]] = True
+        n_probed = order.size
+        if fill_k is not None:
+            short = counts[order].sum(axis=0) < fill_k
+            member[:, short] = True
+            n_probed += len(counts) * int(short.sum())
+        read = member.any(axis=1)
+        nq_acc.add(nq)
+        cells_acc.add(n_probed)
+        read_acc.add(read)
+        parts = []
+        for c in np.flatnonzero(read & (counts > 0)):
+            qi = np.flatnonzero(member[c])
+            parts.append(score_cell(
+                cells.slice(offsets[c], counts[c]), qids[qi], Q[qi], codec, select,
+                stable=True,
+            ))
+        if not parts:
+            continue
+        q, n, d = (np.concatenate(a) for a in zip(*parts))
+        if k is not None:
+            q, n, d, rank = _rank_per_query(q, n, d, k, codec.largest)
+        if len(q) == 0:
+            continue
+        out = _result_batch(q, n, d)
+        if ranked:
+            out = out.append_column("rank", pa.array(rank, type=pa.int32()))
+        yield out
+
+
 def search_cell_payload(
     queries: DataFrame,
-    payload,
+    payload_bc,
     nprobe: int,
     select,
     *,
@@ -1200,69 +1333,34 @@ def search_cell_payload(
     fill_k: int | None = None,
     counters,
 ) -> DataFrame:
-    """The driver strategy's broadcast plan: one ``mapInArrow`` over
-    ``(query_id, qvec)`` rows against the broadcast cell payload
-    (:meth:`IVFBaseIndex._cells_payload`) — no join, no shuffle, no
-    collect.  Per query batch the kernel ranks the probes
-    (:func:`rank_probes` over ``codec.probe``), widens a query to every
-    cell when its probed cells hold fewer than ``fill_k`` rows
-    (``ensure_topk_full``, ivf.cc:753-762), scores each probed cell
-    against the queries probing it (:func:`score_cell`) and keeps each
-    query's best ``k`` by ``(distance, neighbor_id)`` (``None``: every
-    selected row).  Emits :func:`_topk`'s schema when ``ranked``, else
-    ``(query_id, neighbor_id, distance)``.  ``counters``: the ``nq``,
-    ``cells_probed``, cells-read (:class:`CellRowsRead`) and probe-seconds
-    accumulators."""
+    """The driver strategy's broadcast plan: :func:`payload_batches` as
+    one ``mapInArrow`` over ``(query_id, qvec)`` rows against the
+    broadcast cell payload — no join, no shuffle, no collect.
+    ``counters`` are accumulators."""
     from knowhere_spark.operators.brute_force import RESULT_SCHEMA
     from knowhere_spark.session import ensure_parallelism
 
-    nq_acc, cells_acc, read_acc, probe_acc = counters
-
     def kernel(batches):
-        offsets, cells, C, codec = payload.value
-        counts = np.diff(offsets)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qids = scalar_column(tbl, "query_id", np.int64)
-            nq = len(qids)
-            t0 = time.perf_counter()
-            Q = codec.prepare(codec.read_queries(tbl, "qvec"))
-            order = rank_probes(codec.probe(C, Q, stable=True), nprobe)   # (nprobe, nq)
-            probe_acc.add(time.perf_counter() - t0)
-            member = np.zeros((len(counts), nq), dtype=bool)       # (nlist, nq)
-            member[order, np.arange(nq)[None, :]] = True
-            n_probed = order.size
-            if fill_k is not None:
-                short = counts[order].sum(axis=0) < fill_k
-                member[:, short] = True
-                n_probed += len(counts) * int(short.sum())
-            read = member.any(axis=1)
-            nq_acc.add(nq)
-            cells_acc.add(n_probed)
-            read_acc.add(read)
-            parts = []
-            for c in np.flatnonzero(read & (counts > 0)):
-                qi = np.flatnonzero(member[c])
-                parts.append(score_cell(
-                    cells.slice(offsets[c], counts[c]), qids[qi], Q[qi], codec, select,
-                    stable=True,
-                ))
-            if not parts:
-                continue
-            q, n, d = (np.concatenate(a) for a in zip(*parts))
-            if k is not None:
-                q, n, d, rank = _rank_per_query(q, n, d, k, codec.largest)
-            if len(q) == 0:
-                continue
-            out = _result_batch(q, n, d)
-            if ranked:
-                out = out.append_column("rank", pa.array(rank, type=pa.int32()))
-            yield out
+        return payload_batches(
+            batches, payload_bc.value, nprobe, select, k=k, ranked=ranked,
+            fill_k=fill_k, counters=counters,
+        )
 
     schema = _topk_schema() if ranked else RESULT_SCHEMA
     return ensure_parallelism(queries).mapInArrow(kernel, schema)
+
+
+class _Tally:
+    """A counter with an accumulator's ``add`` over a plain value: the
+    local plan runs :func:`payload_batches` in the driver process and
+    reads each count once.  Numpy adds boolean masks as an OR, the
+    cells-read merge."""
+
+    def __init__(self, zero):
+        self.value = zero
+
+    def add(self, v) -> None:
+        self.value = self.value + v
 
 
 class _AnyParam(AccumulatorParam):

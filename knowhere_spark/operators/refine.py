@@ -192,11 +192,14 @@ class ScannIndex:
         filter_expr=None,
         query_id_col: str = "query_id",
         query_vec_col: str = "vec",
+        strategy: str = "auto",
     ) -> DataFrame:
         """``RangeSearch``: candidates come from the quantized scan's
         range pass (coverage bounded by the quantizer, as in the
         reference's fast-scan range path); with raw data the survivors
-        are re-scored exactly and the half-open bounds re-applied."""
+        are re-scored exactly and the half-open bounds re-applied.
+        ``strategy`` passes through to the inner SQ range search, as in
+        :meth:`search`."""
         from pyspark.sql import functions as F
 
         from knowhere_spark.functions.distance import distance_expr
@@ -206,6 +209,7 @@ class ScannIndex:
         approx = self.sq.range_search(
             query_df, cfg, nprobe=nprobe, filter_expr=filter_expr,
             query_id_col=query_id_col, query_vec_col=query_vec_col,
+            strategy=strategy,
         )
         if not self.sq.with_raw_data:
             return approx

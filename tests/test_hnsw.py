@@ -119,7 +119,9 @@ def test_hnsw_broadcast_cosine(spark):
 def test_hnsw_filtered_search(spark):
     """Bitset-filtered search (index_node.h search-with-bitset): blocked
     nodes never appear in results on either strategy, and recall vs the
-    FILTERED ground truth clears the ANN floor."""
+    FILTERED ground truth clears the ANN floor.  The broadcast strategy
+    maps the filter to graph positions without reading the graph
+    broadcast back on the driver (its value stays unpickled)."""
     nb, dim, nq, k = 1000, 32, 10, 10
     base = gen_dense(nb, dim, seed=91)
     qs = gen_dense(nq, dim, seed=92)
@@ -143,6 +145,8 @@ def test_hnsw_filtered_search(spark):
         for r in res.collect():
             assert r["neighbor_id"] % 3 != 0, f"{strategy} leaked a blocked node"
             got.setdefault(r["query_id"], []).append((r["neighbor_id"], r["distance"]))
+        if strategy == "broadcast":
+            assert not hasattr(idx._bc_graph, "_value")
         hits = sum(
             len(set(n for n, _ in pairs) & set(truth[qi]))
             for qi, pairs in got.items()
@@ -169,6 +173,9 @@ def test_hnsw_quant_filtered_search(spark):
     rows = res.collect()
     assert len(rows) > 0
     assert all(r["neighbor_id"] >= 100 for r in rows)
+    # the filter mask came from the ids kept on the index, not bc.value
+    assert idx.last_metrics["strategy"] == "broadcast"
+    assert not hasattr(idx._bc_codes, "_value")
 
 
 def test_hnsw_range_search(spark):

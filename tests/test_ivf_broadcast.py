@@ -1,8 +1,10 @@
-"""The IVF family's broadcast plan: a resident index serves every unfiltered
-driver search as one ``mapInArrow`` over the query rows against a broadcast
-cell payload.  It must answer exactly like the scan plan (ids, distances,
-ranks and schema) for every family and metric, and its payload must belong
-to the index that built it."""
+"""The IVF family's payload plans: a resident index serves every unfiltered
+driver search from a cell payload the driver holds — in the driver
+process for a small top-k batch (the local plan), else as one
+``mapInArrow`` over the query rows against the payload's broadcast (the
+broadcast plan).  Both must answer exactly like the scan plan (ids,
+distances, ranks and schema) for every family and metric, and the
+payload must belong to the index that built it."""
 
 from __future__ import annotations
 
@@ -13,7 +15,7 @@ import pytest
 
 from knowhere_spark.config import IvfConfig, IvfPqConfig, IvfSq8Config, ScannConfig
 from knowhere_spark.operators import hnsw
-from knowhere_spark.operators.ivf import IVFFlatIndex
+from knowhere_spark.operators.ivf import IVFBaseIndex, IVFFlatIndex
 
 from conftest import (
     BIN_QUERY_SCHEMA,
@@ -56,19 +58,25 @@ def _build(spark, family, metric):
     return idx, idx, q_df
 
 
-def _frames(idx, cells, q_df, k_fill, radius, plan):
-    """Every search shape as a lazy frame; each search ran ``plan``."""
+def _frames(idx, cells, q_df, k_fill, radius, resident):
+    """Every search shape as a frame, keyed by ``(plan, shape)``; each
+    search ran the plan in its key — the payload plans when
+    ``resident``, else the scan plan (one frame per shape)."""
     cfg = dataclasses.replace(idx.config, radius=radius)
     frames = {}
-    for name, run in (
-        ("search", lambda: idx.search(q_df, k=5, strategy="driver")),
-        ("fill", lambda: idx.search(q_df, k=k_fill, nprobe=1)),    # auto
-        ("range", lambda: idx.range_search(q_df, cfg)),
-        ("range_k", lambda: idx.range_search(
+    for name, plan, run in (
+        ("search", "local", lambda: idx.search(q_df, k=5, strategy="driver")),
+        ("search", "broadcast", lambda: idx.search(q_df, k=5)),     # auto
+        ("fill", "local", lambda: idx.search(q_df, k=k_fill, nprobe=1, strategy="driver")),
+        ("fill", "broadcast", lambda: idx.search(q_df, k=k_fill, nprobe=1)),
+        ("range", "broadcast", lambda: idx.range_search(q_df, cfg, strategy="driver")),
+        ("range_k", "broadcast", lambda: idx.range_search(
             q_df, dataclasses.replace(cfg, range_search_k=3))),
     ):
-        frames[(plan, name)] = run()
-        assert cells.last_metrics["plan"] == plan, (name, cells.last_metrics)
+        plan = plan if resident else "scan"
+        if (plan, name) not in frames:
+            frames[(plan, name)] = run()
+            assert cells.last_metrics["plan"] == plan, (name, cells.last_metrics)
     return frames
 
 
@@ -93,11 +101,14 @@ def _collect(frames):
 
 @pytest.mark.parametrize("family,metric", _CASES)
 def test_broadcast_plan_equals_scan_plan(spark, monkeypatch, family, metric):
-    """Same rows, distances to the last bit, ranks and schema from both
-    plans — top-k (driver, and auto with ``ensure_topk_full`` at k above
-    every probed cell), range search with and without
-    ``range_search_k``.  The scan plan is forced by shrinking the
-    broadcast bound, as in ``test_size_gate_leaves_oversized_table_lazy``."""
+    """Same rows, distances to the last bit, ranks and schema from the
+    local, broadcast and scan plans — top-k (driver and auto, and with
+    ``ensure_topk_full`` at k above every probed cell), range search with
+    and without ``range_search_k`` — and from a driver batch above the
+    local cap, which runs the broadcast plan (and, for SCANN, a
+    ``distributed`` range search).  The scan plan is forced by
+    shrinking the broadcast bound, as in
+    ``test_size_gate_leaves_oversized_table_lazy``."""
     idx, cells, q_df = _build(spark, family, metric)
     assert cells.resident
     top5 = [r["distance"] for r in idx.search(q_df, k=5).collect()]
@@ -105,15 +116,25 @@ def test_broadcast_plan_equals_scan_plan(spark, monkeypatch, family, metric):
     radius = float(np.median(top5))
     k_fill = max(cells._get_cell_counts().values()) + 1   # > any cell
 
-    frames = _frames(idx, cells, q_df, k_fill, radius, "broadcast")
+    frames = _frames(idx, cells, q_df, k_fill, radius, True)
+    monkeypatch.setattr(IVFBaseIndex, "_LOCAL_NQ_MAX", 4)     # below nq = 9
+    frames[("capped", "search")] = idx.search(q_df, k=5, strategy="driver")
+    assert cells.last_metrics["plan"] == "broadcast"
+    assert "more than 4 queries" in cells.last_metrics["plan_reason"]
+    if family == "SCANN":
+        # the strategy reaches the inner SQ range search
+        frames[("distributed", "range")] = idx.range_search(
+            q_df, dataclasses.replace(idx.config, radius=radius), strategy="distributed"
+        )
+        assert cells.last_metrics["strategy"] == "distributed"
     monkeypatch.setattr(hnsw, "_BROADCAST_MAX_BYTES", 1)
-    frames.update(_frames(idx, cells, q_df, k_fill, radius, "scan"))
+    frames.update(_frames(idx, cells, q_df, k_fill, radius, False))
     got = _collect(frames)
-    assert len(got[("broadcast", "fill")][1]) == 9 * k_fill   # every query filled
+    assert len(got[("local", "fill")][1]) == 9 * k_fill   # every query filled
     assert got[("broadcast", "range")][1] and got[("broadcast", "range_k")][1]
     assert len(got[("broadcast", "range_k")][1]) < len(got[("broadcast", "range")][1])
     for plan, name in frames:
-        assert got[("broadcast", name)] == got[("scan", name)], name
+        assert got[(plan, name)] == got[("scan", name)], (plan, name)
     idx.release()
 
 
@@ -127,9 +148,12 @@ def _parquet(spark, tmp_path, name, mat, first_id):
 
 
 def test_broadcast_payload_belongs_to_its_index(spark, tmp_path):
-    """An ``add()`` child builds its own payload — reading its parent's
-    would miss the added rows — the parent keeps answering from its own,
-    and ``release()`` drops each."""
+    """The driver holds one cell payload per index; its broadcast is made
+    only when a ``mapInArrow`` plan needs it, and the driver never reads
+    it back.  An ``add()`` child inherits neither — its parent's would
+    miss the added rows — the parent keeps answering from its own, and
+    ``release()`` drops both.  The local plan runs no Python job, and its
+    counters are plain ints equal to the broadcast plan's accumulators."""
     base = gen_dense(300, 8, seed=131)
     qs = gen_dense(6, 8, seed=132)
     q_df = dense_df(spark, qs, QUERY_SCHEMA)
@@ -137,15 +161,30 @@ def test_broadcast_payload_belongs_to_its_index(spark, tmp_path):
         _parquet(spark, tmp_path, "base", base, 0),
         IvfConfig(metric_type="L2", nlist=8, nprobe=2),
     )
-    before = sorted(tuple(r) for r in idx.search(q_df, k=3, strategy="driver").collect())
-    assert idx.last_metrics["plan"] == "broadcast" and idx._cells_bc is not None
+    local = idx.search(q_df, k=3, strategy="driver")
+    m = idx.last_metrics
+    assert m["plan"] == "local" and "scored in the driver" in m["plan_reason"]
+    assert idx._cells is not None and idx._cells_bc is None
+    plan = local._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "MapInArrow" not in plan
+    before = sorted(tuple(r) for r in local.collect())
+
+    assert sorted(tuple(r) for r in idx.search(q_df, k=3).collect()) == before  # auto
+    snap = idx.last_metrics.snapshot()
+    assert snap["plan"] == "broadcast"
+    for key in ("nq", "cells_probed", "rows_scanned"):
+        assert type(m[key]) is int and m[key] == snap[key], key
+    assert m["nq"] == 6 and m["cells_probed"] == 6 * 2
+    assert isinstance(m["stages"]["probe_sec"], float)
+    bc = idx._cells_bc
+    assert bc is not None and not hasattr(bc, "_value")   # never unpickled here
 
     # the queries themselves, added under new ids: each is its own nearest
     child = idx.add(_parquet(spark, tmp_path, "added", qs, 10_000))
-    assert child.resident and child._cells_bc is None
+    assert child.resident and child._cells is None and child._cells_bc is None
     top1 = child.search(q_df, k=1, strategy="driver").collect()
-    assert child.last_metrics["plan"] == "broadcast"
-    assert child._cells_bc is not None and child._cells_bc is not idx._cells_bc
+    assert child.last_metrics["plan"] == "local"
+    assert child._cells is not None and child._cells is not idx._cells
     assert sorted((r["query_id"], r["neighbor_id"]) for r in top1) == [
         (q, 10_000 + q) for q in range(6)
     ]
@@ -153,9 +192,10 @@ def test_broadcast_payload_belongs_to_its_index(spark, tmp_path):
     assert again == before
 
     child.release()
-    assert child._cells_bc is None and idx._cells_bc is not None
+    assert child._cells is None and child._cells_bc is None
+    assert idx._cells is not None and idx._cells_bc is bc
     idx.release()
-    assert idx._cells_bc is None
+    assert idx._cells is None and idx._cells_bc is None
 
 
 def test_stable_scores_do_not_depend_on_batch_shape():

@@ -102,13 +102,12 @@ def bpe_train(
         # content-keyed sample (r11, shared rule): membership keys off
         # ALL column values (doc id + text when present — text alone
         # would draw duplicate-heavy corpora all-or-nothing), so the
-        # trained merge list is invariant to input partition layout;
-        # no sort — the word count downstream is order-free
+        # trained merge list is invariant to input partition layout; the
+        # word count downstream is order-free
         from knowhere_spark.session import content_keyed_sample
 
         docs = content_keyed_sample(
-            docs, n, train_sample_docs, key_col=list(docs.columns),
-            seed=seed, sort=False,
+            docs, n, train_sample_docs, key_col=list(docs.columns), seed=seed
         )
     words = (
         docs.select(

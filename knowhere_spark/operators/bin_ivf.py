@@ -127,16 +127,11 @@ class BinaryIVFIndex(IVFBaseIndex):
         base = vector_rows(base_df, id_col, vec_col, scalar_cols, config.metric_type)
         n = base.count()
         nlist = config.match_nlist(n)
-        # content-keyed + id-sorted over-cap sample (r11, shared rule):
-        # membership and row order must not depend on partition layout —
-        # _binary_kmeans's seeded init is position-dependent
-        from knowhere_spark.session import content_keyed_sample
+        # _binary_kmeans's seeded init is position-dependent: the shared
+        # sample rule pins membership and row order to the data
+        from knowhere_spark.session import train_sample
 
-        sample = content_keyed_sample(base, n, _TRAIN_SAMPLE_MAX, seed=config.seed)
-        rows = sample.select("vec").collect()
-        X = np.frombuffer(b"".join(r["vec"] for r in rows), dtype=np.uint8).reshape(
-            len(rows), -1
-        )
+        X = train_sample(base, n, _TRAIN_SAMPLE_MAX, seed=config.seed)
         centroids = _binary_kmeans(X, nlist, config.seed)
         assignments = _assign_cells(base, centroids, scalar_cols, nearest=_nearest_hamming)
         import dataclasses

@@ -15,7 +15,7 @@ Two physical strategies for the same logical plan:
 - ``sql``: ``crossJoin(broadcast(queries))`` → native higher-order-fn
   distance → window top-k.  Whole-stage-codegen'd, fully deterministic
   float64 — used for oracle-checked queries and small nq·nb.
-- ``gemm``: ``mapInPandas`` over base partitions with a broadcast numpy
+- ``gemm``: ``mapInArrow`` over base partitions with a broadcast numpy
   query matrix; each partition emits its local top-k (partial reduce),
   then one final window over ``num_partitions · nq · k`` rows.  This is
   the 100TB-scale path: no nq×nb shuffle ever materializes, base scan
@@ -24,10 +24,7 @@ Two physical strategies for the same logical plan:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (

@@ -565,7 +565,7 @@ def embedding_neardup_ivf(
     """IVF-routed semantic near-dup — the 100 TB shape for
     corpus-vs-corpus dedup: build a COSINE IVF index over the table and
     search it against itself through the **distributed** path
-    (operators/ivf: mapInPandas probe assignment + per-cell cogroup GEMM,
+    (operators/ivf: mapInArrow probe assignment + per-cell cogroup GEMM,
     no driver collect of the query side), then keep cosine >= threshold
     pairs with ``id_a < id_b``.
 

@@ -811,20 +811,11 @@ class HNSWIndex:
         # a position-dependent rng.choice both made the sampled centroids
         # — hence block membership and pruned edges — depend on shuffle
         # arrival order (measured ±0.05 beam recall on tie-heavy data);
-        # an id-hash threshold and a sort pin them to the data alone
-        # (r11: shared helper — the id-sort here covers the SUB-cap path
-        # too, this builder's r10 contract).
-        from knowhere_spark.session import (
-            collect_vec_matrix_sorted,
-            content_keyed_sample,
-        )
+        # an id-hash threshold and an id sort pin them to the data alone,
+        # below the cap too.
+        from knowhere_spark.session import train_sample
 
-        sample = content_keyed_sample(
-            base, n, _TRAIN_SAMPLE_MAX, seed=42, sort=False
-        )
-        # id-sorted matrix via a driver-side argsort — bit-identical to
-        # collect(orderBy("id")) minus the total-sort exchange (guide §2.4)
-        S = collect_vec_matrix_sorted(sample, "id", "vec")
+        S = train_sample(base, n, _TRAIN_SAMPLE_MAX, seed=42, sort_subcap=True)
         rng = np.random.default_rng(42)
         centroids = S[rng.choice(len(S), size=min(nlist, len(S)), replace=False)]
 

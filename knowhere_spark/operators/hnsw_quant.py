@@ -119,7 +119,8 @@ def _make_quant(base: DataFrame, config: HnswConfig, index_type: IndexType) -> d
         return {"mode": "sq", "lo": lo, "diff": diff, "levels": levels}
     if index_type in (IndexType.HNSW_PQ, IndexType.HNSW_PRQ):
         assert isinstance(config, HnswPqConfig)
-        from knowhere_spark.operators.pq import _lloyd
+        from knowhere_spark.operators.pq import fit_codebooks
+        from knowhere_spark.session import train_sample
 
         dim = len(base.select("vec").first()["vec"])
         m = config.m
@@ -136,22 +137,13 @@ def _make_quant(base: DataFrame, config: HnswConfig, index_type: IndexType) -> d
 
         n = base.count()
         seed = getattr(config, "seed", 42)
-        # content-keyed + id-sorted over-cap sample (r11, shared rule):
-        # the codebook Lloyd init is position-dependent
-        from knowhere_spark.session import collect_vec_matrix, content_keyed_sample
-
-        sample = content_keyed_sample(base, n, _TRAIN_SAMPLE_MAX, seed=seed)
-
-        S = collect_vec_matrix(sample, "vec")
+        # the codebook Lloyd init is position-dependent: the shared sample
+        # rule pins membership and row order to the data
+        S = train_sample(base, n, _TRAIN_SAMPLE_MAX, seed=seed)
         stages = []
         R = S.copy()
         for r in range(nrq):
-            cb = np.stack(
-                [
-                    _lloyd(R[:, j * subdim : (j + 1) * subdim], ksub, seed + 97 * r + j)
-                    for j in range(m)
-                ]
-            )  # (m, ksub', subdim)
+            cb = fit_codebooks(R, m, subdim, ksub, seed + 97 * r)
             stages.append(cb)
             for j in range(m):
                 sub = R[:, j * subdim : (j + 1) * subdim]

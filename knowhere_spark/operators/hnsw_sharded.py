@@ -354,64 +354,25 @@ class ShardedHNSWIndex:
             raise ValueError(f"unknown shard_by {shard_by!r}")
         router = None
         if shard_by == "semantic" and n > 0:
-            # router training mirrors the IVF train regime exactly,
-            # INCLUDING its driver/distributed cutover (ivf.py:142-176):
-            # capped sample (<= 256 points/centroid) through driver Lloyd
-            # while rows*dim fits _DRIVER_TRAIN_MAX_ELEMS, MLlib KMeans
-            # beyond — at the 10^5-shard/100 TB regime the sample is
-            # ~2.5e7 rows and a driver fit is infeasible.  Routing space
-            # is L2 over (COSINE: normalized) vectors — assignment
-            # geometry.
+            # router training is the IVF train regime, cutover included
+            # (session.train_centroids): at the 10^5-shard/100 TB regime
+            # the sample is ~2.5e7 rows and a driver fit is infeasible.
+            # The sample is id-sorted even below the cap (r10): seeded
+            # k-means init must not depend on the input's partition
+            # layout.  Routing space is L2 over (COSINE: normalized)
+            # vectors — assignment geometry.
             from knowhere_spark.functions.distance import normalize_expr
-            from knowhere_spark.operators.ivf import IVFFlatIndex
+            from knowhere_spark.session import train_centroids
 
-            cap = min(n, 256 * n_shards)
             norm_base = base
             if metric == MetricType.COSINE:
                 norm_base = base.select(
                     "id", normalize_expr(F.col("vec")).alias("vec")
                 )
-            if cap * max(dim, 1) <= IVFFlatIndex._DRIVER_TRAIN_MAX_ELEMS:
-                from knowhere_spark.functions.distance import numpy_kmeans
-                from knowhere_spark.session import collect_vec_matrix
-
-                # content-keyed sample + id order (r10; r11 shared
-                # helper): partition-seeded .sample() and
-                # position-dependent seeded k-means init must not depend
-                # on the caller input's partition layout
-                from knowhere_spark.session import content_keyed_sample
-
-                samp0 = content_keyed_sample(
-                    norm_base, n, cap, seed=42, sort=False
-                )
-                # id-sorted matrix via a driver-side argsort — bit-identical
-                # to collect(orderBy("id")) minus the sample's total-sort
-                # exchange (guide §2.4)
-                from knowhere_spark.session import collect_vec_matrix_sorted
-
-                S0 = collect_vec_matrix_sorted(samp0, "id", "vec")
-                router = numpy_kmeans(S0, n_shards, iters=20, seed=42)
-            else:
-                from pyspark.ml.clustering import KMeans
-                from pyspark.ml.functions import array_to_vector
-
-                feats = norm_base.withColumn(
-                    "__features",
-                    array_to_vector(F.col("vec").cast("array<double>")),
-                )
-                # membership content-keyed (r11); the distributed
-                # kmeans|| init remains layout-sensitive by nature
-                from knowhere_spark.session import content_keyed_sample
-
-                feats = content_keyed_sample(feats, n, cap, seed=42, sort=False)
-                km = KMeans(
-                    k=n_shards, seed=42, maxIter=20,
-                    featuresCol="__features", predictionCol="__c",
-                )
-                router = np.array(
-                    [np.asarray(c) for c in km.fit(feats).clusterCenters()],
-                    dtype=np.float64,
-                )
+            router, _ = train_centroids(
+                norm_base, n, n_shards, 256 * n_shards, dim,
+                seed=42, iters=20, sort_subcap=True,
+            )
             n_shards = len(router)
             _mark("router_train_sec")
             # cache the routed rows: the Arrow route kernel otherwise runs

@@ -10,8 +10,10 @@ Spark-first design (SURVEY.md §2.3):
   and runs a vectorized numpy Lloyd on the driver — the same single-node
   training regime as faiss, without ~20 distributed-job round-trips; an
   MLlib KMeans fit takes over only when ``nlist`` is so large the sample
-  exceeds driver memory.  Either way the driver ends up holding only the
-  ``nlist × dim`` centroid matrix.
+  exceeds driver memory (``session.train_centroids`` holds the rule for
+  every centroid fit).  Either way the driver ends up holding only the
+  ``nlist × dim`` centroid matrix, and the cells come from the same
+  nearest-centroid kernel ``add()`` uses.
 - **Add** = assign every row to its nearest centroid.  The assignment
   table ``(id, cell_id, vec [, scalars])`` is the index's **resident
   cell table**: ``build()``/``add()`` mark it persisted lazily
@@ -819,9 +821,10 @@ class _Probe:
 class IVFFlatIndex(IVFBaseIndex):
     """Built IVF_FLAT index: centroid matrix + resident cell table."""
 
-    #: train-sample collect threshold: rows*dim <= 2^25 (~268 MB fp64).
-    #: At 256 points/centroid this covers nlist up to ~1024 at dim 128 —
-    #: beyond that the distributed MLlib fit takes over.
+    #: train-sample collect threshold of ``session.train_centroids``:
+    #: rows*dim <= 2^25 (~268 MB fp64).  At 256 points/centroid this
+    #: covers nlist up to ~1024 at dim 128 — beyond that the distributed
+    #: MLlib fit takes over.
     _DRIVER_TRAIN_MAX_ELEMS = 1 << 25
 
     def __init__(
@@ -892,7 +895,7 @@ class IVFFlatIndex(IVFBaseIndex):
         """:meth:`build` without residency: the assignment table stays a
         lazy plan.  The quantized families train through this and make
         only their own encoded table resident."""
-        from knowhere_spark.functions.distance import numpy_kmeans
+        from knowhere_spark.session import train_centroids
 
         t_build0 = time.monotonic()
         scalar_cols = tuple(scalar_cols)
@@ -902,83 +905,21 @@ class IVFFlatIndex(IVFBaseIndex):
         base = vector_rows(base_df, id_col, vec_col, scalar_cols, config.metric_type)
 
         n = base.count()
-        nlist = config.match_nlist(n)
-        # faiss trains on <= 256 points per centroid (its default
-        # max_points_per_centroid); the same subsampling bounds the training
-        # set regardless of table size
-        train_cap = 256 * nlist
-        # content-keyed sample + id-sorted collect (r11, closing the r10
-        # NOTE here): a partition-seeded .sample() draws a different train
-        # set when the same data arrives in a different partition layout,
-        # so the trained centroids — and downstream recall — depended on
-        # the caller input's shuffle history.  The shared helper keys
-        # membership on xxhash64(id) and sorts the over-cap sample, making
-        # Train(shuffled input) == Train(stable input); sub-cap trains are
-        # untouched (existing artifacts keep their exact centroids).
-        from knowhere_spark.session import content_keyed_sample
-
-        train_df = content_keyed_sample(
-            base, n, train_cap, seed=config.seed, sort=False
-        )
         head = base.select("vec").head()
         dim = len(head["vec"]) if head else 0
-        on_driver = min(n, train_cap) * max(dim, 1) <= cls._DRIVER_TRAIN_MAX_ELEMS
-        if on_driver:
-            # the capped sample fits the driver comfortably — train exactly
-            # where the reference does (single-node over the subsample),
-            # skipping ~20 distributed-job round-trips of an MLlib fit
-            from knowhere_spark.session import (
-                collect_vec_matrix,
-                collect_vec_matrix_sorted,
-            )
-
-            if n > train_cap:
-                # cap binds: the content-keyed contract id-sorts the
-                # sample; sort driver-side after the collect instead of
-                # paying a distributed total sort (bit-identical matrix,
-                # one less exchange — guide §2.4)
-                X = collect_vec_matrix_sorted(train_df, "id", "vec")
-            else:
-                # sub-cap trains keep their exact (arrival-order) train
-                # sets — existing artifacts unchanged
-                X = collect_vec_matrix(train_df, "vec")
-            centroids = numpy_kmeans(X, nlist, iters=20, seed=config.seed)
-            nlist = len(centroids)
-            assignments = _assign_cells(base, centroids, scalar_cols)
-        else:
-            # huge nlist (sample beyond driver memory): distributed fit
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-
-            feats = base.withColumn(
-                "__features", array_to_vector(F.col("vec").cast("array<double>"))
-            )
-            # membership is content-keyed here too; the distributed
-            # kmeans|| init remains layout-sensitive by nature (MLlib
-            # samples per partition internally), so only the driver path
-            # above carries the full shuffle-invariance guarantee
-            train_feats = content_keyed_sample(
-                feats, n, train_cap, seed=config.seed, sort=False
-            )
-            km = KMeans(
-                k=nlist,
-                seed=config.seed,
-                maxIter=20,
-                featuresCol="__features",
-                predictionCol="cell_id",
-            )
-            model = km.fit(train_feats)
-            centroids = np.array(
-                [np.asarray(c) for c in model.clusterCenters()], dtype=np.float64
-            )
-            assignments = model.transform(feats).select(
-                "id", F.col("cell_id").cast("int"), "vec", *scalar_cols
-            )
+        k = config.match_nlist(n)
+        # faiss trains on <= 256 points per centroid (its default
+        # max_points_per_centroid)
+        centroids, backend = train_centroids(
+            base, n, k, 256 * k, dim, seed=config.seed, iters=20
+        )
+        nlist = len(centroids)
+        assignments = _assign_cells(base, centroids, scalar_cols)
         import dataclasses
 
         cfg = dataclasses.replace(config, nlist=nlist)
         idx = cls(centroids, assignments, cfg, index_type=index_type)
-        idx._build_metrics(t_build0, n, dim, "driver" if on_driver else "mllib")
+        idx._build_metrics(t_build0, n, dim, backend)
         return idx
 
     # -- GetIndexMeta (index_node.h:363; feder/IVFFlat.h:25-87) ---------------

@@ -55,13 +55,21 @@ from knowhere_spark.operators.ivf import (
 _TRAIN_SAMPLE_MAX = 100_000
 
 
-def _lloyd(X: np.ndarray, k: int, seed: int, n_iter: int = 15) -> np.ndarray:
-    """One subspace codebook ((n, subdim) → (k, subdim)) — the shared
-    vectorized Lloyd (functions/distance.numpy_kmeans: GEMM assignment +
-    sort/reduceat update; no per-centroid Python loop)."""
+def fit_codebooks(
+    X: np.ndarray, m: int, subdim: int, ksub: int, seed: int
+) -> np.ndarray:
+    """``(m, ksub', subdim)`` codebooks: one Lloyd fit per subspace of the
+    ``(n, m·subdim)`` training matrix, subspace ``j`` seeded ``seed + j``
+    (``ksub' < ksub`` on samples smaller than ``ksub``)."""
     from knowhere_spark.functions.distance import numpy_kmeans
 
-    return numpy_kmeans(X, k, iters=n_iter, seed=seed)
+    return np.stack(
+        [
+            numpy_kmeans(X[:, j * subdim : (j + 1) * subdim], ksub, iters=15,
+                         seed=seed + j)
+            for j in range(m)
+        ]
+    )
 
 
 def _encode_df(
@@ -203,25 +211,12 @@ class IVFPqIndex(IVFBaseIndex):
                     f" (m={m}, *, subdim={subdim})"
                 )
         else:
-            # content-keyed + id-sorted over-cap sample (r11, shared
-            # rule): _lloyd's seeded init is position-dependent, so both
-            # membership and row order key off the data, never the layout
-            from knowhere_spark.session import (
-                collect_vec_matrix,
-                content_keyed_sample,
-            )
+            # the seeded Lloyd init is position-dependent: the shared
+            # sample rule pins membership and row order to the data
+            from knowhere_spark.session import train_sample
 
-            sample = content_keyed_sample(
-                flat.assignments, n, _TRAIN_SAMPLE_MAX, seed=config.seed
-            )
-
-            S = collect_vec_matrix(sample, "vec")
-            codebooks = np.stack(
-                [
-                    _lloyd(S[:, j * subdim : (j + 1) * subdim], ksub, config.seed + j)
-                    for j in range(m)
-                ]
-            )  # (m, ksub', subdim) — ksub' may be < ksub on tiny samples
+            S = train_sample(flat.assignments, n, _TRAIN_SAMPLE_MAX, seed=config.seed)
+            codebooks = fit_codebooks(S, m, subdim, ksub, config.seed)
         codes_df = _encode_df(flat.assignments, codebooks, config.with_raw_data)
         import dataclasses
 

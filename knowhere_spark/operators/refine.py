@@ -22,11 +22,10 @@ from knowhere_spark.functions.distance import distance_expr
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 
 
-def refine(
+def rescore(
     candidates: DataFrame,
     raw_df: DataFrame,
     query_df: DataFrame,
-    k: int,
     metric: MetricType | str,
     *,
     id_col: str = "id",
@@ -34,12 +33,10 @@ def refine(
     query_id_col: str = "query_id",
     query_vec_col: str = "vec",
 ) -> DataFrame:
-    """Exact re-rank of ``candidates (query_id, neighbor_id)`` down to top-k.
-
-    ``raw_df`` must hold the raw vectors (``HasRawData`` precondition,
-    flat.cc:257-285).
-    """
-    metric = MetricType(metric)
+    """Exact ``(query_id, neighbor_id, distance)`` of ``candidates
+    (query_id, neighbor_id)``: the candidate pairs joined to the raw
+    vectors and the (broadcast) queries.  ``raw_df`` must hold the raw
+    vectors (``HasRawData`` precondition, flat.cc:257-285)."""
     raw = raw_df.select(
         F.col(id_col).cast("long").alias("neighbor_id"), F.col(vec_col).alias("vec")
     )
@@ -47,19 +44,34 @@ def refine(
         F.col(query_id_col).cast("long").alias("query_id"),
         F.col(query_vec_col).alias("qvec"),
     )
-    cand = candidates.select("query_id", "neighbor_id")
-    exact = (
-        cand.join(raw, "neighbor_id")
+    return (
+        candidates.select("query_id", "neighbor_id")
+        .join(raw, "neighbor_id")
         .join(F.broadcast(queries), "query_id")
         .select(
             "query_id",
             "neighbor_id",
-            distance_expr(metric, F.col("vec"), F.col("qvec")).alias("distance"),
+            distance_expr(MetricType(metric), F.col("vec"), F.col("qvec")).alias(
+                "distance"
+            ),
         )
     )
+
+
+def refine(
+    candidates: DataFrame,
+    raw_df: DataFrame,
+    query_df: DataFrame,
+    k: int,
+    metric: MetricType | str,
+    **cols: str,
+) -> DataFrame:
+    """Exact re-rank of ``candidates (query_id, neighbor_id)`` down to
+    top-k; ``cols`` name the input columns as in :func:`rescore`."""
     return topk_per_key(
-        exact, "query_id", "distance", k,
-        ascending=not metric.is_similarity, tie_breaker="neighbor_id",
+        rescore(candidates, raw_df, query_df, metric, **cols),
+        "query_id", "distance", k,
+        ascending=not MetricType(metric).is_similarity, tie_breaker="neighbor_id",
     )
 
 
@@ -200,11 +212,6 @@ class ScannIndex:
         are re-scored exactly and the half-open bounds re-applied.
         ``strategy`` passes through to the inner SQ range search, as in
         :meth:`search`."""
-        from pyspark.sql import functions as F
-
-        from knowhere_spark.functions.distance import distance_expr
-        from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
-
         cfg = config or self.config
         approx = self.sq.range_search(
             query_df, cfg, nprobe=nprobe, filter_expr=filter_expr,
@@ -213,22 +220,9 @@ class ScannIndex:
         )
         if not self.sq.with_raw_data:
             return approx
-        raw = self.sq.raw_vectors()
-        q = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        exact = (
-            approx.select("query_id", "neighbor_id")
-            .join(raw, F.col("neighbor_id") == raw["id"])
-            .join(q, "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                distance_expr(cfg.metric_type, F.col("vec"), F.col("qvec")).alias(
-                    "distance"
-                ),
-            )
+        exact = rescore(
+            approx, self.sq.raw_vectors(), query_df, cfg.metric_type,
+            query_id_col=query_id_col, query_vec_col=query_vec_col,
         )
         return apply_range_bounds(exact, cfg)
 

@@ -14,7 +14,7 @@ Spark shape (the 100 TB story):
   faiss's 256-points-per-centroid cap), never a full-corpus fit;
 - ONE groupBy(cluster) shuffle; no all-pairs join anywhere;
 - per-cluster pairwise work runs as a blocked numpy GEMM inside
-  ``applyInPandas`` — peak task memory is O(block_rows x cluster_size)
+  ``applyInArrow`` — peak task memory is O(block_rows x cluster_size)
   floats, never cluster_size**2;
 - total pairwise FLOPs are O(n**2 / k): size ``num_clusters`` so the
   mean cluster is a few thousand rows (the paper uses k ~ 0.1% of n),
@@ -42,8 +42,7 @@ CORPUS FILTER over the same embedding space.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -138,6 +137,7 @@ def _autosplit_overcap(
     (id-hash buckets inherit the parent centroid, so ``centroid_cos`` —
     and the sweep order — stay well-defined)."""
     from knowhere_spark.functions.distance import numpy_kmeans
+    from knowhere_spark.session import collect_vec_matrix, train_sample
 
     spark = assigned.sparkSession
     target = max(1, cap // 2)
@@ -159,17 +159,12 @@ def _autosplit_overcap(
         k_sub = min(max(2, -(-n // target)), 4096)
         rows_df = assigned.filter(F.col("cluster_id") == cid).select("id", "vec")
         samp_n = min(n, 64 * k_sub)
-        # content-keyed + id-sorted over-cap sample (r11, shared rule)
-        from knowhere_spark.session import content_keyed_sample
-
-        samp = content_keyed_sample(rows_df, n, samp_n, seed=seed)
-        rows_v = samp.select("vec").collect()
-        if not rows_v:
+        X = train_sample(rows_df, n, samp_n, seed=seed)
+        if not len(X):
             # Bernoulli-style hash sampling can (rarely) return nothing;
             # the split must not divide by an empty matrix — take a
             # bounded head
-            rows_v = rows_df.limit(samp_n).select("vec").collect()
-        X = np.array([row["vec"] for row in rows_v], dtype=np.float64)
+            X = collect_vec_matrix(rows_df.limit(samp_n))
         X = np.nan_to_num(X, nan=0.0, posinf=0.0, neginf=0.0)
         sub = numpy_kmeans(X, min(k_sub, len(X)), iters=8, seed=seed)
         plans[cid] = (next_id, sub)
@@ -180,30 +175,33 @@ def _autosplit_overcap(
     schema = assigned.schema
 
     def reassign(batches):
-        import pandas as pd
+        import pyarrow as pa
+
+        from knowhere_spark.functions.arrowio import list_matrix
 
         p = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            cids = pdf["cluster_id"].to_numpy().copy()
+            cids = rb.column("cluster_id").to_numpy().copy()
+            V = None
             for cid, (base, sub) in p.items():
                 mask = cids == cid
                 if not mask.any():
                     continue
-                V = np.nan_to_num(
-                    np.stack(pdf.loc[mask, "vec"].to_numpy()).astype(np.float64),
-                    nan=0.0, posinf=0.0, neginf=0.0,
-                )
-                d = ((V[:, None, :] - sub[None, :, :]) ** 2).sum(axis=2)
+                if V is None:
+                    V = list_matrix(rb, "vec")
+                Vm = np.nan_to_num(V[mask], nan=0.0, posinf=0.0, neginf=0.0)
+                d = ((Vm[:, None, :] - sub[None, :, :]) ** 2).sum(axis=2)
                 cids[mask] = base + d.argmin(axis=1)
-            out = pdf.copy()
-            out["cluster_id"] = cids.astype(np.int32)
-            yield out
+            yield rb.set_column(
+                rb.schema.get_field_index("cluster_id"), "cluster_id",
+                pa.array(cids.astype(np.int32), type=pa.int32()),
+            )
 
     # materialize the reassignment before the still-over probe — the
     # probe AND the caller's sweep both consume it
-    assigned = assigned.mapInPandas(reassign, schema).localCheckpoint(eager=True)
+    assigned = assigned.mapInArrow(reassign, schema).localCheckpoint(eager=True)
 
     # level-3 guard: ids that are STILL over cap get the id-hash split
     still = (
@@ -257,9 +255,8 @@ def semdedup(
     compute in double: float64 sum error ~1e-15 makes 4-decimal rounding
     and the (centroid_cos, id) sweep order bit-stable across engines.
     """
-    from knowhere_spark.functions.distance import numpy_kmeans
     from knowhere_spark.operators.ivf import _assign_cells
-    from knowhere_spark.session import collect_vec_matrix
+    from knowhere_spark.session import train_centroids
 
     base = _normalized_base(df, id_col, vec_col)
     known_n: int | None = None
@@ -275,49 +272,13 @@ def semdedup(
         # dedup bucketing only needs ROUGH Voronoi cells, not search-grade
         # centroids: 64 samples/centroid and 8 Lloyd iters bucket dups
         # together just as well at a fraction of the train cost (256/20
-        # spent 72s ON THE DRIVER at k=976 — a third of the 1M wall-clock)
-        train_cap = max(8192, 64 * k)
-        # content-keyed + id-sorted over-cap sample (r11, shared rule):
-        # train membership and collect order key off ids, not layout
-        from knowhere_spark.session import content_keyed_sample
-
-        train_df = content_keyed_sample(base, n, train_cap, seed=seed, sort=False)
-        from knowhere_spark.operators.ivf import IVFFlatIndex
-
+        # spent 72s ON THE DRIVER at k=976 — a third of the 1M wall-clock):
+        # the sample cap is max(8192, 64·k)
         head = base.select("vec").head()
         dim = len(head["vec"]) if head else 0
-        # same driver-memory ceiling as the IVF trainer — one constant to
-        # tune if the driver budget ever changes
-        if min(n, train_cap) * max(dim, 1) <= IVFFlatIndex._DRIVER_TRAIN_MAX_ELEMS:
-            if n > train_cap:
-                # binding cap: id-sorted matrix via driver-side argsort —
-                # bit-identical to collect(orderBy("id")) minus the
-                # total-sort exchange (guide §2.4)
-                from knowhere_spark.session import collect_vec_matrix_sorted
-
-                X = collect_vec_matrix_sorted(train_df, "id", "vec")
-            else:
-                X = collect_vec_matrix(train_df, "vec")
-            centroids = numpy_kmeans(X, k, iters=8, seed=seed)
-        else:
-            # sample beyond driver comfort (huge k): distributed fit, the
-            # same cutover as IVFFlatIndex.build — the MLlib sample keeps
-            # the distributed id-sort (kmeans|| is layout-sensitive, so
-            # the input ordering is part of its pinned behavior)
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-
-            if n > train_cap:
-                train_df = train_df.orderBy("id")
-            feats = train_df.withColumn(
-                "__features", array_to_vector(F.col("vec").cast("array<double>"))
-            )
-            km = KMeans(k=k, seed=seed, maxIter=8, featuresCol="__features",
-                        predictionCol="__c")
-            model = km.fit(feats)
-            centroids = np.array(
-                [np.asarray(c) for c in model.clusterCenters()], dtype=np.float64
-            )
+        centroids, _ = train_centroids(
+            base, n, k, max(8192, 64 * k), dim, seed=seed, iters=8
+        )
     cents = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
 
     assigned = _assign_cells(base, cents).select(

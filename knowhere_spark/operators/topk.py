@@ -5,7 +5,7 @@ parallelism).
 Scale contract: a naive ``Window.partitionBy(query_id)`` over the full
 ``nq × nb`` distance set shuffles everything.  The scalable pattern is
 partial-then-final: reduce each base partition to ``nq × k`` rows first
-(the GEMM path in brute_force.py does this inside ``mapInPandas``), then
+(the GEMM path in brute_force.py does this inside ``mapInArrow``), then
 apply the final window over the ``num_partitions × nq × k`` remainder —
 that final set is tiny at any scale (e.g. 1000 partitions × 100 queries
 × 100 k = 10M short rows, one narrow shuffle).

@@ -33,63 +33,45 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     return df.repartition(target)
 
 
-def collect_vec_matrix(df: DataFrame, col: str = "vec", dtype=None):
+def _vec_matrix(tbl, col: str):
+    """The ``col`` column of an Arrow table as one matrix: a fixed-length
+    array column as ``(n, dim)`` float64, a fixed-width ``binary`` column
+    as ``(n, nbytes)`` uint8 (the packed-bit layout)."""
+    import pyarrow as pa
+
+    from knowhere_spark.functions.arrowio import binary_matrix, list_matrix
+
+    if pa.types.is_binary(tbl.schema.field(col).type):
+        return binary_matrix(tbl, col)
+    return list_matrix(tbl, col)
+
+
+def collect_vec_matrix(df: DataFrame, col: str = "vec"):
     """Collect a fixed-length array column into one ``(n, dim)`` numpy
-    matrix via Arrow.
+    matrix via Arrow, in arrival order (a binary column: see
+    :func:`_vec_matrix`).
 
     Row-based ``collect()`` boxes every float as a Python object (~10×
     the memory of the final matrix) — at the 50-100k-row train-sample
-    sizes the index builders use, that transient blow-up matters.  Falls
-    back to the Row path when the plan can't be served by Arrow."""
-    import numpy as np
-
-    dtype = dtype or np.float64
-    try:
-        tbl = df.select(col).toArrow()
-        lst = tbl.column(0).combine_chunks()
-        flat = lst.flatten().to_numpy(zero_copy_only=False).astype(dtype)
-        n = len(lst)
-        return flat.reshape(n, -1) if n else flat.reshape(0, 0)
-    except Exception:
-        return np.array(
-            [r[col] for r in df.select(col).collect()], dtype=dtype
-        )
+    sizes the index builders use, that transient blow-up matters."""
+    return _vec_matrix(df.select(col).toArrow(), col)
 
 
-def collect_vec_matrix_sorted(
-    df: DataFrame, key: str = "id", col: str = "vec", dtype=None
-):
+def collect_vec_matrix_sorted(df: DataFrame, key: str = "id", col: str = "vec"):
     """Collect ``(key, vec)`` and return the ``(n, dim)`` matrix sorted by
     ``key`` — the driver-side equivalent of ``df.orderBy(key)`` followed
-    by :func:`collect_vec_matrix`.
-
-    Trainers that must see id-ordered samples (content_keyed_sample's
-    ``sort=True`` contract) previously paid a distributed total sort — a
-    full shuffle of the sample — just to pin row order for the driver
-    collect.  Sorting the collected arrays on the driver is a plain
-    ``np.argsort`` over the (unique) keys and yields the bit-identical
-    matrix with one less exchange (guide §2.4: remove shuffles whose only
-    purpose is output determinism).  Falls back to the Row path when the
-    plan can't be served by Arrow."""
+    by :func:`collect_vec_matrix`: a plain ``np.argsort`` over the
+    (unique) keys yields the bit-identical matrix without the total
+    sort's exchange (guide §2.4: remove shuffles whose only purpose is
+    output determinism)."""
     import numpy as np
 
-    dtype = dtype or np.float64
-    try:
-        tbl = df.select(key, col).toArrow()
-        keys = tbl.column(0).combine_chunks().to_numpy(zero_copy_only=False)
-        lst = tbl.column(1).combine_chunks()
-        flat = lst.flatten().to_numpy(zero_copy_only=False).astype(dtype)
-        n = len(lst)
-        M = flat.reshape(n, -1) if n else flat.reshape(0, 0)
-    except Exception:
-        rows = df.select(key, col).collect()
-        keys = np.array([r[key] for r in rows])
-        M = np.array([r[col] for r in rows], dtype=dtype)
-        if len(M) == 0:
-            M = M.reshape(0, 0)
-    if len(keys):
-        M = M[np.argsort(keys, kind="stable")]
-    return M
+    from knowhere_spark.functions.arrowio import scalar_column
+
+    tbl = df.select(key, col).toArrow()
+    M = _vec_matrix(tbl, col)
+    keys = scalar_column(tbl, key, np.int64)
+    return M[np.argsort(keys, kind="stable")] if len(keys) else M
 
 
 def content_keyed_sample(
@@ -99,7 +81,6 @@ def content_keyed_sample(
     *,
     key_col: str | list[str] = "id",
     seed: int = 42,
-    sort: bool = True,
 ) -> DataFrame:
     """Bounded train-time sample whose membership depends only on the KEY
     VALUES: keep rows with ``xxhash64(key, seed) mod 2^20 < cap/n · 2^20``.
@@ -112,22 +93,11 @@ def content_keyed_sample(
     Spark's ``.sample()`` seeds per PARTITION, so the same data arriving
     in a different partition layout (a shuffled, checkpointed, or
     repartitioned input) draws a DIFFERENT sample — r10 root-caused a
-    ±0.05 recall wobble in the sharded-HNSW build to exactly that.  Every
-    trainer's subsample goes through this helper so the content-keyed
-    rule is enforced in one place instead of a per-site comment
-    (VERDICT r10 #7; first applied at hnsw.py's cell sampler and
-    hnsw_sharded.py's router trainer in r10).
+    ±0.05 recall wobble in the sharded-HNSW build to exactly that.
 
     When the cap does not bind (``n_rows <= cap`` or ``cap is None``) the
-    input is returned untouched — sub-cap trains keep their exact train
-    sets and row order, so existing artifacts are unchanged.  When it
-    does bind, the sampled rows are additionally ``orderBy(key_col)``-ed
-    (``sort=True``): position-seeded trainers (numpy k-means / Lloyd
-    init) must not see shuffle-arrival row order either, or membership
-    invariance alone wouldn't pin the artifact.  Pass ``sort=False``
-    when the consumer is order-free (a groupBy count) or does its own
-    sort — a distributed MLlib fit, whose kmeans|| init is inherently
-    layout-sensitive, also skips the pointless total sort.
+    input is returned untouched.  Row order is the consumer's concern:
+    the vector trainers read the sample through :func:`train_sample`.
 
     Expected sample size ≈ ``cap`` (Bernoulli over the hash, matching
     ``.sample()``'s variance profile); trainers only need the bound,
@@ -146,11 +116,80 @@ def content_keyed_sample(
     # floor-to-zero threshold would keep NOTHING and crash the trainer
     # downstream — a tiny over-cap sample is the correct degradation
     threshold = max(1, math.ceil(cap / n_rows * _SC))
-    out = df.filter(
+    return df.filter(
         F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.lit(seed)), F.lit(_SC))
         < F.lit(threshold)
     )
-    return out.orderBy(*keys) if sort else out
+
+
+def train_sample(
+    df: DataFrame,
+    n: int,
+    cap: int | None,
+    *,
+    seed: int,
+    sort_subcap: bool = False,
+):
+    """The training sample of ``df``'s ``vec`` column (``n`` rows, keyed
+    on ``id``) as one matrix — the rule every centroid and codebook fit shares.
+
+    At most ``cap`` rows, drawn by :func:`content_keyed_sample`.  When the
+    cap binds, the rows are sorted by id (driver-side argsort), so a
+    position-seeded trainer (k-means init) sees the same matrix whatever
+    the input's partition layout.  When it does not bind, the rows keep
+    their arrival order — existing sub-cap artifacts stay byte-stable —
+    unless ``sort_subcap`` asks for the id order there too (the HNSW cell
+    sampler and the semantic router, whose contract always was).  A
+    ``binary`` column comes back as a uint8 matrix."""
+    sample = content_keyed_sample(df, n, cap, seed=seed)
+    if sort_subcap or sample is not df:
+        return collect_vec_matrix_sorted(sample)
+    return collect_vec_matrix(df)
+
+
+def train_centroids(
+    df: DataFrame,
+    n: int,
+    k: int,
+    cap: int,
+    dim: int,
+    *,
+    seed: int,
+    iters: int,
+    sort_subcap: bool = False,
+):
+    """``k`` centroids fitted on the capped sample of ``df``'s ``vec``
+    column: ``(centroids (k', dim) float64, backend)``.
+
+    The reference trains its quantizer on one node over a sample capped
+    at 256 points per centroid (faiss ``max_points_per_centroid``,
+    ivf.cc:492-512).  While the sample fits the driver —
+    ``min(n, cap) · dim <= IVFFlatIndex._DRIVER_TRAIN_MAX_ELEMS`` — the
+    fit is :func:`numpy_kmeans` over :func:`train_sample` (backend
+    ``"driver"``).  Beyond that, MLlib KMeans fits the unsorted
+    content-keyed sample (``"mllib"``); its kmeans|| init samples per
+    partition, so only the driver fit is layout-invariant."""
+    import numpy as np
+
+    from knowhere_spark.operators.ivf import IVFFlatIndex
+
+    if min(n, cap) * max(dim, 1) <= IVFFlatIndex._DRIVER_TRAIN_MAX_ELEMS:
+        from knowhere_spark.functions.distance import numpy_kmeans
+
+        X = train_sample(df, n, cap, seed=seed, sort_subcap=sort_subcap)
+        return numpy_kmeans(X, k, iters=iters, seed=seed), "driver"
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+    from pyspark.sql import functions as F
+
+    feats = content_keyed_sample(df, n, cap, seed=seed).select(
+        array_to_vector(F.col("vec").cast("array<double>")).alias("__features")
+    )
+    model = KMeans(k=k, seed=seed, maxIter=iters, featuresCol="__features").fit(feats)
+    return (
+        np.array([np.asarray(c) for c in model.clusterCenters()], dtype=np.float64),
+        "mllib",
+    )
 
 
 _SPILL_ROOT: str | None = None

@@ -1,8 +1,9 @@
 """Content-keyed train sampling (r11, VERDICT r10 #7): every trainer's
 over-cap subsample goes through ``session.content_keyed_sample`` —
 membership keys off xxhash64 of the DATA (ids / text), never Spark's
-per-partition ``.sample()`` seeding, and the collected rows are id-sorted
-— so Train(shuffled input) == Train(stable input) bit-for-bit.
+per-partition ``.sample()`` seeding, and ``session.train_sample`` reads
+the rows id-sorted — so Train(shuffled input) == Train(stable input)
+bit-for-bit.
 
 Each test feeds the same rows in a reversed order + different partition
 layout and asserts the trained artifact is IDENTICAL.  (Sub-cap trains
@@ -18,7 +19,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from knowhere_spark.config import IvfConfig, IvfPqConfig, MetricType
-from knowhere_spark.session import content_keyed_sample
+from knowhere_spark.session import content_keyed_sample, train_sample
 
 from conftest import (
     BIN_SCHEMA,
@@ -42,17 +43,32 @@ def test_helper_passthrough_and_invariance(spark):
     # cap doesn't bind -> identity (existing artifacts untouched)
     assert content_keyed_sample(df, 400, 400) is df
     assert content_keyed_sample(df, 400, None) is df
-    # cap binds -> same membership from any layout, id-sorted
+    # cap binds -> same membership from any layout
     a = content_keyed_sample(df, 400, 100).select("id").collect()
     b = content_keyed_sample(_shuffled(df), 400, 100).select("id").collect()
-    ids_a = [r["id"] for r in a]
-    ids_b = [r["id"] for r in b]
+    ids_a = sorted(r["id"] for r in a)
+    ids_b = sorted(r["id"] for r in b)
     assert ids_a == ids_b
-    assert ids_a == sorted(ids_a)
     assert 0 < len(ids_a) < 400
+    # ... and train_sample reads it as the id-sorted matrix
+    S_a = train_sample(df, 400, 100, seed=42)
+    S_b = train_sample(_shuffled(df), 400, 100, seed=42)
+    assert np.array_equal(S_a, S_b)
+    assert np.array_equal(S_a, mat[ids_a].astype(np.float64))
+    # below the cap: arrival order, unless the caller asks for id order
+    rev = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(399, -1, -1)], DENSE_SCHEMA
+    )
+    assert np.array_equal(
+        train_sample(rev, 400, 400, seed=42), mat[::-1].astype(np.float64)
+    )
+    assert np.array_equal(
+        train_sample(rev, 400, 400, seed=42, sort_subcap=True),
+        mat.astype(np.float64),
+    )
     # a different seed draws a different set (the knob is live)
     c = content_keyed_sample(df, 400, 100, seed=7).select("id").collect()
-    assert [r["id"] for r in c] != ids_a
+    assert sorted(r["id"] for r in c) != ids_a
 
 
 def test_ivf_train_shuffle_invariant(spark):

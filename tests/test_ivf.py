@@ -130,3 +130,33 @@ def test_ivf_get_index_meta(data):
     slim = {r["cluster_id"]: r["size"]
             for r in idx.get_index_meta(with_node_ids=False).collect()}
     assert slim == {r["cluster_id"]: r["size"] for r in meta}
+
+
+def test_ivf_mllib_train_cutover(spark, monkeypatch):
+    """Past the driver-memory ceiling the centroids come from MLlib
+    KMeans, and the cell table still comes from the nearest-centroid
+    kernel ``add()`` uses: a row added under a new id lands in the cell
+    its own vector probes first, so searching for it finds it at
+    distance 0 with one probe."""
+    from knowhere_spark.operators.ivf import _assign_cells
+
+    monkeypatch.setattr(IVFFlatIndex, "_DRIVER_TRAIN_MAX_ELEMS", 8)
+    base = gen_dense(400, 8, seed=71)
+    base_df = dense_df(spark, base)
+    idx = IVFFlatIndex.build(base_df, IvfConfig(metric_type="L2", nlist=4, nprobe=1))
+    assert idx.last_metrics["train_backend"] == "mllib"
+    cells = {(r["id"], r["cell_id"]) for r in idx.assignments.collect()}
+    want = {
+        (r["id"], r["cell_id"])
+        for r in _assign_cells(base_df, idx.centroids).collect()
+    }
+    assert cells == want and len(cells) == 400
+
+    added = gen_dense(20, 8, seed=72)
+    added_df = dense_df(spark, added).selectExpr("id + 1000 AS id", "vec")
+    queries = dense_df(spark, added, QUERY_SCHEMA)
+    got = idx.add(added_df).search(queries, k=1, nprobe=1).collect()
+    assert sorted((r["query_id"] + 1000, r["neighbor_id"]) for r in got) == [
+        (1000 + i, 1000 + i) for i in range(20)
+    ]
+    assert all(r["distance"] == 0.0 for r in got), [r["distance"] for r in got]

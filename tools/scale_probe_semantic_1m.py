@@ -74,21 +74,15 @@ def main() -> None:
     results = []
     for n_shards in shard_points:
         cfg = HnswConfig(metric_type="L2", M=16, ef=64)
-        # router-train cost in isolation (the same capped sample +
-        # driver-Lloyd/MLlib cutover build() runs)
-        from knowhere_spark.functions.distance import numpy_kmeans
-        from knowhere_spark.session import collect_vec_matrix
+        # router-train cost in isolation: the call build() makes
+        from knowhere_spark.session import train_centroids
 
-        cap = min(n, 256 * n_shards)
         t0 = time.monotonic()
-        # mirror build()'s r10/r11 content-keyed + id-sorted train exactly
-        from knowhere_spark.session import content_keyed_sample
-
-        samp = content_keyed_sample(big, n, cap, seed=42, sort=False)
-        S0 = collect_vec_matrix(samp.orderBy("id"), "vec")
-        router = numpy_kmeans(S0, n_shards, iters=20, seed=42)
+        train_centroids(
+            big, n, n_shards, 256 * n_shards, len(big.first()["vec"]),
+            seed=42, iters=20, sort_subcap=True,
+        )
         router_train_sec = round(time.monotonic() - t0, 1)
-        del S0, router
 
         t0 = time.monotonic()
         idx = ShardedHNSWIndex.build(
